@@ -11,11 +11,10 @@ here:
 
 Inputs are tile tables (path or DataFrame) — the scale-native landing
 format (see sources/tiles.py) — or, reference-style, GeoTIFF paths
-(a ``.tif`` path or a list of them): those convert through
-sources/geotiff.py when rasterio is available, else through the
-dependency-free mini reader (sources/minitiff.py — classic TIFF or
-BigTIFF, striped or tiled, LZW/deflate/uncompressed, predictor 1/2/3,
-single- or multi-band).
+(a ``.tif`` path or a list of them): those convert through the
+dependency-free reader in sources/minitiff.py (classic TIFF or
+BigTIFF, striped or tiled, LZW/deflate/PackBits/uncompressed,
+predictor 1/2/3, single- or multi-band, COG overview levels).
 Tiling replaces ``max_block_size``: the tile table is
 already blocked, and Spark partitioning replaces the reference's
 parallelpipe workers.
@@ -30,153 +29,38 @@ from raster2points_spark.operators.grid import (
     raster2points,
     validate_band_alignment,
 )
+from raster2points_spark.sources import minitiff
 from raster2points_spark.sources.tiles import read_tiles
 
 
-def tiles_from_rasters(
-    spark: SparkSession,
-    paths: list[str],
-    tile_size: int | None = None,
-    overview_level: int = 0,
-) -> DataFrame:
-    """GeoTIFF paths → tile table, band ids b1..bN positionally across
-    files and samples (the reference's multi-raster convention, extended
-    so one multi-band file contributes one band per sample).  Prefers
-    the full rasterio adapter; falls back to the pure-Python mini reader
-    (classic/BigTIFF, striped or tiled, LZW/deflate/uncompressed,
-    PackBits, predictors 1/2/3, sub-byte 1/2/4-bit samples, COG
-    overview IFDs) when rasterio is
-    absent.
-    ``tile_size=None`` aligns the grid with a tiled file's native tile
-    layout (COG access pattern); striped files default to 512.
-    ``overview_level=k`` reads the k-th COG overview pyramid level
-    instead of full resolution — 1/4^k of the bytes for
-    downsample-shaped queries (mini-reader path; the rasterio adapter
-    takes full-res only and raises otherwise)."""
-    if overview_level:
-        from raster2points_spark.sources.minitiff import minitiff_to_tiles
-
-        return minitiff_to_tiles(
-            spark, paths, tile_size=tile_size, overview_level=overview_level
-        )
-    try:
-        from raster2points_spark.sources.geotiff import geotiff_to_tiles
-
-        return geotiff_to_tiles(spark, paths, tile_size=tile_size or 512)
-    except ImportError:
-        from raster2points_spark.sources.minitiff import minitiff_to_tiles
-
-        return minitiff_to_tiles(spark, paths, tile_size=tile_size)
-
-
-_PREFLIGHT_DIST_THRESHOLD = 256  # path count above which headers parse executor-side
-
-
-def _preflight_headers_distributed(spark: SparkSession, paths: list[str]):
-    """Executor-side twin of the driver header loop: mapInPandas over
-    the path list (the minitiff_catalog shape), returning lightweight
-    records with exactly the fields the pre-flight validation reads.
-    One output row per file — the same driver-sized listing Spark's
-    own file index collects."""
-    from types import SimpleNamespace
-
-    import pandas as pd
-
-    from raster2points_spark.sources.minitiff import read_header
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf["idx"], pdf["path"]):
-                h = read_header(p)
-                rows.append(
-                    {
-                        "idx": int(i),
-                        "width": h.width,
-                        "height": h.height,
-                        "transform": list(h.transform),
-                        "dtype": h.dtype,
-                        "spp": h.samples_per_pixel,
-                        "crs": h.crs,
-                        "path": p,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "idx", "width", "height", "transform", "dtype", "spp",
-                    "crs", "path",
-                ],
-            )
-
-    from raster2points_spark.io import local_df
-
-    files = local_df(spark, list(enumerate(paths)), "idx int, path string")
-    n_parts = max(1, min(len(paths) // 1000 + 1, 256))
-    rows = (
-        files.repartition(n_parts)
-        .mapInPandas(
-            parse,
-            "idx int, width int, height int, transform array<double>, "
-            "dtype string, spp int, crs string, path string",
-        )
-        .collect()
-    )
-    return [
-        SimpleNamespace(
-            path=r.path,
-            width=r.width,
-            height=r.height,
-            transform=list(r.transform),
-            dtype=r.dtype,
-            samples_per_pixel=r.spp,
-            crs=r.crs,
-        )
-        for r in sorted(rows, key=lambda r: r.idx)  # restore path order
-    ]
+def _tif_paths(tiles) -> list[str] | None:
+    """The GeoTIFF paths ``tiles`` names, or None for a tile table."""
+    if isinstance(tiles, (list, tuple)):
+        return list(tiles)
+    if isinstance(tiles, str) and tiles.lower().endswith((".tif", ".tiff")):
+        return [tiles]
+    return None
 
 
 def _paths_preflight(
-    paths: list[str],
-    validate: bool = True,
-    spark: SparkSession | None = None,
-    dist_threshold: int = _PREFLIGHT_DIST_THRESHOLD,
-) -> dict[str, str] | None:
+    paths: list[str], validate: bool = True
+) -> dict[str, minitiff.MiniTiff]:
     """Pre-flight for GeoTIFF PATH inputs: the file headers already
     hold everything validate_band_alignment and band_dtypes would
-    learn from three Spark jobs, and with an opaque mapInPandas tile
-    source those jobs cannot prune to metadata — each one re-runs the
-    full Python decode (measured: the eager pre-flight tripled
-    scan_geotiff_* wall-clock).
+    learn from Spark jobs, and with an opaque mapInPandas tile source
+    those jobs cannot prune to metadata — each one re-runs the full
+    Python decode (measured: the eager pre-flight tripled
+    scan_geotiff_* wall-clock).  Headers parse on the driver: sub-ms
+    local reads, zero Spark jobs.
 
-    Threshold dispatch (VERDICT r12 #4): small lists parse on the
-    driver (sub-ms local reads, zero Spark jobs — the CLI case); above
-    ``dist_threshold`` the header parses run EXECUTOR-side via
-    mapInPandas (``_preflight_headers_distributed``) so a 100k-file
-    mosaic doesn't serialize 100k reads on the driver.  Both paths
-    feed the SAME validation and dtype-map code below.
-
-    Returns the positional band_id → numpy-dtype-name map, or None
-    when the mini reader cannot parse a header (an exotic layout the
-    rasterio adapter might still handle) — the caller then falls back
-    to the Spark-side metadata checks.  Validation failures raise,
-    matching validate_band_alignment's contract: unequal resolutions
-    or non-co-tiling grids (different dims/transform) refuse before
-    any pixel is read."""
-    from raster2points_spark.sources.minitiff import (
-        _DTYPE_NAMES,
-        _band_names,
-        read_header,
-    )
-
-    try:
-        if spark is not None and len(paths) > dist_threshold:
-            hdrs = _preflight_headers_distributed(spark, paths)
-        else:
-            hdrs = [read_header(p) for p in paths]
-    except Exception:
-        return None
-    if validate:  # validate=False still wants the dtype map, not the raises
+    Returns band_id → the full-resolution header of the file providing
+    that band, in positional order (b1..bN across files and samples).
+    A header the reader cannot parse raises the reader's ValueError.
+    Validation failures raise too, matching validate_band_alignment's
+    contract: unequal resolutions or non-co-tiling grids (different
+    dims/transform) refuse before any pixel is read."""
+    hdrs = [minitiff.read_header(p) for p in paths]
+    if validate:  # validate=False still wants the band map, not the raises
         # mixed CRS refuses like mixed resolution: pixel (row, col)
         # grids in different reference systems never co-tile, and a
         # silent zip would join coordinates from different datums.
@@ -205,18 +89,20 @@ def _paths_preflight(
                 f"{sorted(geo)}) — bands would zip tiles from different "
                 "places; resample to a common grid first"
             )
-    out: dict[str, str] = {}
-    for hdr, file_bands in zip(hdrs, _band_names(hdrs, None)):
-        for b in file_bands:
-            out[b] = _DTYPE_NAMES[hdr.dtype.lstrip("<>")]
-    return out
+    return {
+        b: hdr
+        for hdr, file_bands in zip(hdrs, minitiff._band_names(hdrs, None))
+        for b in file_bands
+    }
 
 
 def _as_tiles(spark: SparkSession, tiles, overview_level: int = 0) -> DataFrame:
-    if isinstance(tiles, (list, tuple)):
-        return tiles_from_rasters(spark, list(tiles), overview_level=overview_level)
-    if isinstance(tiles, str) and tiles.lower().endswith((".tif", ".tiff")):
-        return tiles_from_rasters(spark, [tiles], overview_level=overview_level)
+    """Tile table for ``tiles``: GeoTIFF paths decode through the mini
+    reader (``overview_level=k`` reads the k-th COG pyramid level), a
+    parquet path is read, a DataFrame passes through."""
+    paths = _tif_paths(tiles)
+    if paths is not None:
+        return minitiff.minitiff_to_tiles(spark, paths, overview_level=overview_level)
     if overview_level:
         raise ValueError("overview_level is only valid for GeoTIFF path inputs")
     return read_tiles(spark, tiles) if isinstance(tiles, str) else tiles
@@ -249,10 +135,12 @@ def raster2df(
     ``max_block_size`` keeps the reference's memory-bound knob
     (``raster2df(..., max_block_size=4096)`` bounded each processing
     window to block² pixels): here it repartitions the tile table so
-    each TASK handles ≈ max_block_size² pixels.  The pixel count comes
-    from the tile METADATA columns (width·height) — a pruned scan that
-    never touches the data arrays.  Default None = let Spark's file
-    splits decide (the right answer on a real cluster).
+    each TASK handles ≈ max_block_size² pixels.  The pixel count of
+    ``bands[0]`` comes from its file's header for PATH inputs, and
+    from the tile METADATA columns (width·height, a pruned scan that
+    never touches the data arrays) for tile tables.  Default None =
+    let Spark's file splits decide (the right answer on a real
+    cluster).
 
     ``overview_level=k`` (GeoTIFF path inputs only) extracts points
     from the k-th COG pyramid level instead of full resolution —
@@ -260,38 +148,43 @@ def raster2df(
     gdal_translate-on-an-overview serving shape.  Alignment and dtype
     pre-flight still run on the full-res headers (levels inherit
     both)."""
-    paths = None
-    if isinstance(tiles, (list, tuple)):
-        paths = list(tiles)
-    elif isinstance(tiles, str) and tiles.lower().endswith((".tif", ".tiff")):
-        paths = [tiles]
-    if paths is not None and dtypes is None:
+    paths = _tif_paths(tiles)
+    if paths is not None:
         # raises on misaligned rasters ONLY when validate=True; with
-        # validate=False the headers still supply the dtype map
-        pre = _paths_preflight(paths, validate=validate, spark=spark)
-        if pre is not None:
-            unknown = [b for b in bands if b not in pre]
-            if unknown:
-                raise ValueError(
-                    f"unknown band(s) {unknown} — these files provide "
-                    f"{sorted(pre)}"
-                )
-            dtypes = {b: pre[b] for b in bands}
-            validate = False  # already validated driver-side
+        # validate=False the headers still supply the band map
+        hdrs = _paths_preflight(paths, validate=validate)
+        unknown = [b for b in bands if b not in hdrs]
+        if unknown:
+            raise ValueError(
+                f"unknown band(s) {unknown} — these files provide {sorted(hdrs)}"
+            )
+        if dtypes is None:
+            dtypes = {
+                b: minitiff._DTYPE_NAMES[hdrs[b].dtype.lstrip("<>")] for b in bands
+            }
+        validate = False  # already validated driver-side
     tdf = _as_tiles(spark, tiles, overview_level=overview_level)
     if validate:
         validate_band_alignment(tdf, bands)
     if max_block_size:
         import math
 
-        from pyspark.sql import functions as F
+        if paths is not None:
+            # the header, not an aggregate over the decoded tile table
+            # (which would run the full Python decode before the job)
+            hdr = hdrs[bands[0]]
+            if overview_level:
+                hdr = minitiff.read_header(hdr.path, overview=overview_level)
+            n_px = hdr.width * hdr.height
+        else:
+            from pyspark.sql import functions as F
 
-        n_px = (
-            tdf.filter(F.col("band_id") == bands[0])
-            .agg(F.sum(F.col("width").cast("long") * F.col("height")))
-            .first()[0]
-            or 0
-        )
+            n_px = (
+                tdf.filter(F.col("band_id") == bands[0])
+                .agg(F.sum(F.col("width").cast("long") * F.col("height")))
+                .first()[0]
+                or 0
+            )
         parts = max(1, math.ceil(n_px / float(max_block_size) ** 2))
         tdf = tdf.repartition(parts)
     # dtype lookup (metadata-only for columnar tile tables; None for

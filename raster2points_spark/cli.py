@@ -4,7 +4,7 @@ reference (reconstructed): ``raster2csv in1.tif [in2.tif ...] out.csv
 [--col_names ...] [--separator {,|;|t}] [--calc_area]``.
 
 here: tile-table parquet in — or, reference-style, GeoTIFF paths
-(rasterio when available, else the pure-Python mini reader: classic
+(read by the pure-Python mini reader, sources/minitiff.py: classic
 TIFF or BigTIFF, striped or tiled/COG incl. overview IFDs,
 none/LZW/deflate/PackBits compression, predictor 1/2/3, sub-byte
 (1/2/4-bit) samples, single- or multi-band chunky/planar) — CSV/
@@ -150,21 +150,28 @@ def main(argv: list[str] | None = None) -> int:
 
     # eager band validation: a typo'd band silently yields an empty
     # point table otherwise (the library API stays lazy; the CLI is
-    # the user-facing surface, so it checks).  Tiny column scan.
+    # the user-facing surface, so it checks)
     from pyspark.sql import functions as F
 
-    from raster2points_spark.api import _as_tiles
+    from raster2points_spark.api import _as_tiles, _paths_preflight
 
-    present = {
-        r[0] for r in _as_tiles(spark, tiles).select(F.col("band_id")).distinct().collect()
-    }
-    if bands is None:
-        # GeoTIFF default: every band the inputs yield, positionally
-        # across files AND samples (b2 < b10 — numeric-aware sort)
-        bands = sorted(present, key=lambda b: (len(b), b))
+    if tif_mode:
+        # the headers name the bands — positionally across files AND
+        # samples — without decoding a pixel.  No co-tiling check here:
+        # --format geotiff takes inputs of different dims, and
+        # raster2df runs the full pre-flight for csv/parquet.
+        present = list(_paths_preflight(tiles, validate=False))
+    else:
+        # tile table: a column-pruned scan of band_id (b2 < b10 —
+        # numeric-aware sort)
+        present = sorted(
+            {r[0] for r in _as_tiles(spark, tiles).select("band_id").distinct().collect()},
+            key=lambda b: (len(b), b),
+        )
+    bands = bands or present
     missing = [b for b in bands if b not in present]
     if missing:
-        ap.error(f"band(s) not in tile table: {missing}; present: {sorted(present)}")
+        ap.error(f"band(s) not in the inputs: {missing}; present: {present}")
     if args.format == "csv":
         raster2csv(
             spark, tiles, bands, args.output,

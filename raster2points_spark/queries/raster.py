@@ -616,7 +616,7 @@ def raster_downsample(spark, sf_dir):
     exactly as count(value)/avg(value) SQL semantics state.
 
     When the source is a COG that already ships this pyramid, skip the
-    compute entirely: ``tiles_from_rasters(..., overview_level=k)``
+    compute entirely: ``raster2df(..., overview_level=k)``
     reads the precomputed level (1/4^k of the bytes);
     `scan_geotiff_overview` hash-proves overview-read ≡ this operator
     on the committed pyramid fixture."""
@@ -2342,9 +2342,9 @@ _LEVEL_PICK_DIST_THRESHOLD = 256  # survivor count above which level picks run e
 
 def _pick_levels(spark, path_factors, dist_threshold=_LEVEL_PICK_DIST_THRESHOLD):
     """Per-file overview-level picks for a survivor list, threshold-
-    dispatched (VERDICT r13 #4, mirroring api._paths_preflight): at or
-    below ``dist_threshold`` survivors the picks run as a driver loop
-    (sub-ms local header reads, zero Spark jobs); above it they run
+    dispatched (VERDICT r13 #4): at or below ``dist_threshold``
+    survivors the picks run as a driver loop (sub-ms local header
+    reads, zero Spark jobs); above it they run
     executor-side via pick_overviews_distributed so a 100k-survivor
     mosaic parallelizes its header I/O.  Both paths share
     _pick_overview_header, so level choices are identical by
@@ -2423,8 +2423,8 @@ def raster_overview_prune(spark, sf_dir):
         .collect()
     )
     # (b) cheapest sufficient level per survivor (header-only I/O) —
-    # threshold-dispatched like api._paths_preflight: small survivor
-    # lists pick on the driver, large ones executor-side
+    # threshold-dispatched (_pick_levels): small survivor lists pick
+    # on the driver, large ones executor-side
     levels = {
         _os.path.basename(p): lvl
         for p, lvl in _pick_levels(

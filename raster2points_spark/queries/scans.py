@@ -430,8 +430,8 @@ def join_dpp(spark, sf_dir):
 )
 def scan_pysource(spark, sf_dir):
     """Custom Python data source (Spark 4 DataSource API) — the
-    extension seam a REAL GeoTIFF/COG reader would plug into when
-    rasterio is available: the source declares its schema and
+    extension seam a native GeoTIFF/COG reader would plug into: the
+    source declares its schema and
     PARTITIONS (one per tile row here), executors pull each partition
     independently — distributed ingest without a JVM connector.
 

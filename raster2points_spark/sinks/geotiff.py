@@ -68,8 +68,7 @@ def _lzw_encode(data: bytes) -> bytes:
     round-trip is hypothesis-swept in tests/test_sink_geotiff.py.
     Pure Python on tile-sized blocks (the task's own payload), same
     trade as the reader's decoder: correctness-first for the most
-    common GeoTIFF codec, with the rasterio seam as the accelerated
-    path on clusters that have one."""
+    common GeoTIFF codec."""
     CLEAR, EOI = 256, 257
 
     def init():

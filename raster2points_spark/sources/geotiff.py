@@ -1,22 +1,18 @@
-"""GeoTIFF → tile-table adapter (the reference's front door).
+"""Tile-table schema and window grid shared by the GeoTIFF reader.
 
-The reference (wri/raster2points, reconstructed — SURVEY §0) ingests
-GeoTIFFs directly via rasterio block windows.  rasterio is not
-installable in this environment, so this module is the DOCUMENTED SEAM:
-everything that does not need rasterio (window-grid math, schema
-assembly, the distributed job shape) is real and unit-tested; the two
-rasterio call sites are isolated in `_open_raster` / `_read_window`
-and raise a clear ImportError until the library is present.
+The reference (wri/raster2points, reconstructed — SURVEY §0) reads
+GeoTIFFs block window by block window.  Here the reader is
+sources/minitiff.py; this module holds the two pieces it shares with
+the rest of the engine: the tile-table schema its decode emits and the
+block-window generator that lays the tile grid over a raster.
 
 Scale shape: tiling 100 TB of GeoTIFFs is itself a distributed job —
 one task per (file, window-batch), each reading its own windows and
-emitting TILE_ARROW_SCHEMA rows via mapInPandas, landing as parquet.
-No driver-side raster I/O anywhere.
+emitting tile-table rows via mapInPandas.  Only headers are read on
+the driver.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 TILE_SCHEMA_DDL = (
     "band_id string, tile_id long, col_off int, row_off int, width int, "
@@ -31,7 +27,7 @@ def window_grid(
     tile_size: int,
     tile_height: int | None = None,
 ) -> list[dict]:
-    """The reference's block-window generator, rasterio-free: row-major
+    """The reference's block-window generator: row-major
     tile grid covering the raster, edge tiles clipped.  tile_id is the
     row-major index — the same numbering the grid fixtures use.
     ``tile_height`` (default: square = tile_size) lets a tiled TIFF's
@@ -57,89 +53,3 @@ def window_grid(
                 }
             )
     return out
-
-
-def _require_rasterio():
-    try:
-        import rasterio  # noqa: F401
-
-        return rasterio
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "GeoTIFF ingestion needs the 'rasterio' package, which is not "
-            "installed in this environment.  The tile-table parquet format "
-            "(sources/tiles.py) is the supported landing format; convert "
-            "GeoTIFFs where rasterio IS available with geotiff_to_tiles()."
-        ) from e
-
-
-def geotiff_to_tiles(
-    spark: SparkSession,
-    paths: list[str],
-    band_ids: list[str] | None = None,
-    tile_size: int = 512,
-) -> DataFrame:
-    """Distributed GeoTIFF → tile-table conversion: one input row per
-    raster file, mapInPandas tasks window and read their own files.
-
-    Each path becomes one band (band_ids defaults to b1..bN in path
-    order) — the reference's positional multi-raster convention.
-    Requires rasterio on the EXECUTORS (import is inside the task
-    closure); the driver only reads each file's header once for the
-    window grid metadata.
-    """
-    rasterio = _require_rasterio()
-
-    band_ids = band_ids or [f"b{i + 1}" for i in range(len(paths))]
-    if len(band_ids) != len(paths):
-        raise ValueError("band_ids must match paths")
-
-    # driver: header-only pass (width/height/transform/nodata/dtype)
-    meta = []
-    for band_id, path in zip(band_ids, paths):
-        with rasterio.open(path) as src:
-            a, b, c, d, e, f = src.transform.a, src.transform.b, src.transform.c, (
-                src.transform.d
-            ), src.transform.e, src.transform.f
-            for w in window_grid(src.width, src.height, tile_size):
-                meta.append(
-                    (
-                        band_id,
-                        path,
-                        w["tile_id"],
-                        w["col_off"],
-                        w["row_off"],
-                        w["width"],
-                        w["height"],
-                        [a, b, c, d, e, f],
-                        float(src.nodata) if src.nodata is not None else float("nan"),
-                        str(src.dtypes[0]),
-                    )
-                )
-    meta_df = spark.createDataFrame(
-        meta,
-        "band_id string, path string, tile_id long, col_off int, row_off int, "
-        "width int, height int, transform array<double>, nodata double, dtype string",
-    )
-
-    def read_windows(batches):
-        import pandas as pd
-        import rasterio as rio
-        from rasterio.windows import Window
-
-        for pdf in batches:
-            data = []
-            for r in pdf.itertuples(index=False):
-                with rio.open(r.path) as src:
-                    block = src.read(
-                        1, window=Window(r.col_off, r.row_off, r.width, r.height)
-                    )
-                data.append([float(v) for v in block.ravel()])
-            out = pdf.drop(columns=["path"]).copy()
-            out["data"] = data
-            yield out
-
-    # ~one task per tile row-group; executors read only their windows
-    return meta_df.repartition("band_id", "tile_id").mapInPandas(
-        read_windows, schema=TILE_SCHEMA_DDL
-    )

@@ -1,10 +1,10 @@
 """Tile-table source + deterministic grid fixture generator.
 
 The tile table (FIXTURES.md §B / SURVEY §1.2) is the relational
-stand-in for the reference's rasterio block windows — rasterio is not
-installable here, and at 100 TB you would land rasters as tiled
-parquet anyway (one row per block, payload as array<double>), so this
-IS the scale-native format, not a test shim.
+stand-in for the reference's rasterio block windows — at 100 TB you
+would land rasters as tiled parquet anyway (one row per block, payload
+as array<double>), so this IS the scale-native format, not a test
+shim.  GeoTIFF paths convert to it through sources/minitiff.py.
 
 Fixtures (seed 42, numpy+pyarrow only, no Spark needed to generate):
 - ``grid4``  — 4×4 px, 2×2 tiles, hand-specified mask: 5 valid pixels

@@ -1376,12 +1376,11 @@ def test_1bit_fillorder_lsb_rejected(tmp_path):
 
 
 def test_api_overview_level_passthrough(spark):
-    """tiles_from_rasters(overview_level=1) routes through the mini
-    reader and lands the overview grid + scaled transform in the tile
-    table."""
-    from raster2points_spark.api import tiles_from_rasters
+    """_as_tiles(overview_level=1) routes through the mini reader and
+    lands the overview grid + scaled transform in the tile table."""
+    from raster2points_spark.api import _as_tiles
 
-    rows = tiles_from_rasters(spark, [_pyramid_path()], overview_level=1).collect()
+    rows = _as_tiles(spark, [_pyramid_path()], overview_level=1).collect()
     assert len(rows) == 2
     assert rows[0].transform == [1.0, 0.0, 10.0, 0.0, -1.0, 45.0]
 
@@ -1689,16 +1688,21 @@ def test_internal_mask_chain_through_raster2df(spark):
 def test_paths_preflight_validates_driver_side(tmp_path):
     """raster2df PATH inputs validate off the headers with zero Spark
     jobs: misaligned rasters refuse immediately; aligned ones return
-    the positional dtype map.  (The Spark-side metadata checks cannot
-    prune through the opaque mapInPandas decode, so each one re-ran
-    the full Python decode — measured 3x the key's wall-clock.)"""
+    the positional band → header map.  (The Spark-side metadata checks
+    cannot prune through the opaque mapInPandas decode, so each one
+    re-ran the full Python decode — measured 3x the key's wall-clock.)"""
     from raster2points_spark.api import _paths_preflight
+
+    def dtypes(pre):
+        return {b: h.dtype for b, h in pre.items()}
 
     a = str(tmp_path / "a.tif")
     b = str(tmp_path / "b.tif")
     _write_tiff(a, [1.0] * 8, 4, 2)
     _write_tiff(b, [2.0] * 8, 4, 2)
-    assert _paths_preflight([a, b]) == {"b1": "float64", "b2": "float64"}
+    pre = _paths_preflight([a, b])
+    assert dtypes(pre) == {"b1": "<f8", "b2": "<f8"}
+    assert [pre["b1"].path, pre["b2"].path] == [a, b]
 
     coarse = str(tmp_path / "coarse.tif")
     _write_tiff(coarse, [1.0] * 8, 4, 2, pixel_scale=(1.0, 1.0))
@@ -1710,46 +1714,19 @@ def test_paths_preflight_validates_driver_side(tmp_path):
     with pytest.raises(ValueError, match="do not co-tile"):
         _paths_preflight([a, shifted])
 
-    # unparseable header -> None (caller falls back to Spark-side)
+    # unparseable header -> the reader's own ValueError
     junk = str(tmp_path / "junk.tif")
     open(junk, "wb").write(b"not a tiff at all")
-    assert _paths_preflight([a, junk]) is None
+    with pytest.raises(ValueError, match="byte-order mark"):
+        _paths_preflight([a, junk])
 
-    # validate=False: skip the raises but still supply the dtype map
+    # validate=False: skip the raises but still supply the band map
     # (ADVICE r12 — the documented contract is that only validate=True
     # runs the eager pre-flight checks)
-    assert _paths_preflight([a, coarse], validate=False) == {
-        "b1": "float64",
-        "b2": "float64",
+    assert dtypes(_paths_preflight([a, coarse], validate=False)) == {
+        "b1": "<f8",
+        "b2": "<f8",
     }
-
-
-def test_paths_preflight_threshold_dispatch(spark, tmp_path):
-    """Driver-serial and executor-side preflight produce IDENTICAL
-    validation outcomes and dtype maps (VERDICT r12 #4): dist_threshold=0
-    forces every call through the mapInPandas path."""
-    from raster2points_spark.api import _paths_preflight
-
-    a = str(tmp_path / "a.tif")
-    b2 = str(tmp_path / "b2.tif")  # two-band file: positional naming must hold
-    _write_tiff(a, [1.0] * 8, 4, 2)
-    _write_tiff(b2, None, 4, 2, bands=[[2.0] * 8, [3.0] * 8], tile=(4, 4))
-    want = _paths_preflight([a, b2])
-    assert want == {"b1": "float64", "b2": "float64", "b3": "float64"}
-    assert _paths_preflight([a, b2], spark=spark, dist_threshold=0) == want
-
-    coarse = str(tmp_path / "coarse.tif")
-    _write_tiff(coarse, [1.0] * 8, 4, 2, pixel_scale=(1.0, 1.0))
-    with pytest.raises(ValueError, match="unequal resolutions"):
-        _paths_preflight([a, coarse], spark=spark, dist_threshold=0)
-    assert _paths_preflight(
-        [a, coarse], validate=False, spark=spark, dist_threshold=0
-    ) == _paths_preflight([a, coarse], validate=False)
-
-    # executor-side parse failure -> None, same as the driver path
-    junk = str(tmp_path / "junk.tif")
-    open(junk, "wb").write(b"nope")
-    assert _paths_preflight([a, junk], spark=spark, dist_threshold=0) is None
 
 
 def test_raster2df_validate_false_and_unknown_band(spark, tmp_path):
@@ -1772,6 +1749,93 @@ def test_raster2df_validate_false_and_unknown_band(spark, tmp_path):
 
     with pytest.raises(ValueError, match="unknown band"):
         raster2df(spark, [a], ["b1", "b9"])
+
+
+def _jobs_started(spark, action) -> int:
+    """Spark jobs ``action()`` starts, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_raster2df_max_block_size_paths_start_no_job(spark, tmp_path):
+    """For PATH inputs the max_block_size pixel count comes from the
+    header of the file providing bands[0], at the requested overview
+    level: building the frame starts no Spark job (an aggregate over
+    the tile table would run the full Python decode first)."""
+    from raster2points_spark.api import raster2df
+
+    a = str(tmp_path / "a.tif")
+    b = str(tmp_path / "b.tif")
+    _write_tiff(a, [1.0] * 8, 4, 2)
+    _write_tiff(b, [2.0] * 8, 4, 2)
+    pyr = _pyramid_path()
+    built = {}
+
+    def build():
+        # 8 px in 2x2 blocks -> 2 tasks; pyramid level 1 (4x2) -> 2
+        built["paths"] = raster2df(spark, [a, b], ["b1", "b2"], max_block_size=2)
+        built["overview"] = raster2df(
+            spark, [pyr], ["b1"], max_block_size=2, overview_level=1
+        )
+
+    assert _jobs_started(spark, build) == 0
+    for df in built.values():
+        assert "Repartition 2, true" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert built["paths"].count() == 8
+    assert built["overview"].count() == len(
+        raster2df(spark, [pyr], ["b1"], overview_level=1).collect()
+    )
+
+
+def test_cli_decodes_once(spark, tmp_path):
+    """cli.main on GeoTIFF paths learns its bands from the headers, so
+    it starts exactly the jobs api.raster2csv starts on the same files
+    — no extra Spark job over the decode to list band ids."""
+    from raster2points_spark import api, cli
+
+    a = str(tmp_path / "a.tif")
+    b = str(tmp_path / "b.tif")
+    _write_tiff(a, [1.0, 2.0, -9999.0, 4.0, 5.0, 6.0, 7.0, 8.0], 4, 2)
+    _write_tiff(b, [float(v) for v in range(10, 90, 10)], 4, 2)
+    n_api = _jobs_started(
+        spark, lambda: api.raster2csv(spark, [a, b], ["b1", "b2"], str(tmp_path / "api"))
+    )
+    n_cli = _jobs_started(spark, lambda: cli.main([a, b, str(tmp_path / "cli")]))
+    assert n_api > 0
+    assert n_cli == n_api
+
+
+def test_cli_unknown_band_names_present_bands(spark, tmp_path, capsys):
+    """A typo'd --bands is a usage error naming the bands the inputs
+    do provide — from the headers for GeoTIFF inputs, from the tile
+    table's band_id column for tile-parquet inputs."""
+    from raster2points_spark.cli import main
+    from raster2points_spark.sources.minitiff import minitiff_to_tiles
+
+    a = str(tmp_path / "a.tif")
+    b = str(tmp_path / "b.tif")
+    _write_tiff(a, [1.0] * 8, 4, 2)
+    _write_tiff(b, [2.0] * 8, 4, 2)
+    with pytest.raises(SystemExit):
+        main([a, b, str(tmp_path / "out_tif"), "--bands", "b9"])
+    err = capsys.readouterr().err
+    assert "['b9']" in err and "present: ['b1', 'b2']" in err
+
+    tiles = str(tmp_path / "tiles")
+    minitiff_to_tiles(spark, [a, b]).write.parquet(tiles)
+    with pytest.raises(SystemExit):
+        main([tiles, str(tmp_path / "out_tiles"), "--bands", "b1", "b9"])
+    err = capsys.readouterr().err
+    assert "['b9']" in err and "present: ['b1', 'b2']" in err
 
 
 def test_minitiff_catalog_distributed(spark, tmp_path):
@@ -1901,19 +1965,3 @@ def test_raster2df_refuses_mixed_crs(spark, tmp_path):
     _write_tiff(p3, vals, 4, 2, crs=None)
     df = raster2df(spark, [p1, p3], bands=["b1", "b2"])
     assert df.count() > 0
-
-
-def test_distributed_preflight_carries_crs(spark, tmp_path):
-    """The executor-side header pass must surface the same crs field
-    the driver loop does — mixed CRS refuses above the dispatch
-    threshold too."""
-    vals = [float(v) for v in range(8)]
-    paths = []
-    for i in range(4):
-        p = str(tmp_path / f"f{i}.tif")
-        _write_tiff(p, vals, 4, 2, crs=4326 if i < 3 else 32633)
-        paths.append(p)
-    from raster2points_spark.api import _paths_preflight
-
-    with pytest.raises(ValueError, match="different CRSs"):
-        _paths_preflight(paths, spark=spark, dist_threshold=2)

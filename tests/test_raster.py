@@ -206,9 +206,9 @@ def test_missing_band_tile_keeps_mask_rows(spark):
 
 
 def test_geotiff_window_grid():
-    """rasterio-free part of the GeoTIFF adapter: the window grid is
-    the reference's block-window generator — row-major ids, clipped
-    edge tiles, full coverage."""
+    """The window grid the GeoTIFF reader lays over each raster is the
+    reference's block-window generator — row-major ids, clipped edge
+    tiles, full coverage."""
     from raster2points_spark.sources.geotiff import window_grid
 
     grid = window_grid(10, 7, 4)  # 3x2 tiles, ragged edges
@@ -218,21 +218,6 @@ def test_geotiff_window_grid():
     assert sum(g["width"] * g["height"] for g in grid) == 70
     with pytest.raises(ValueError):
         window_grid(0, 7, 4)
-
-
-def test_geotiff_requires_rasterio(spark):
-    """The seam raises a clear error in rasterio-less environments
-    instead of failing deep inside a task."""
-    from raster2points_spark.sources.geotiff import geotiff_to_tiles
-
-    try:
-        import rasterio  # noqa: F401
-
-        pytest.skip("rasterio available — seam not exercisable")
-    except ImportError:
-        pass
-    with pytest.raises(ImportError, match="rasterio"):
-        geotiff_to_tiles(spark, ["/nonexistent.tif"])
 
 
 def test_zonemap_prunes_tiles_before_explode(spark, registry):
