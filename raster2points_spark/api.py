@@ -22,12 +22,15 @@ parallelpipe workers.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 
 from raster2points_spark.operators.grid import (
     band_dtypes,
     raster2points,
     validate_band_alignment,
+    zipped_points,
 )
 from raster2points_spark.sources import minitiff
 from raster2points_spark.sources.tiles import read_tiles
@@ -44,21 +47,19 @@ def _tif_paths(tiles) -> list[str] | None:
 
 def _paths_preflight(
     paths: list[str], validate: bool = True
-) -> dict[str, minitiff.MiniTiff]:
+) -> dict[str, tuple[minitiff.MiniTiff, int]]:
     """Pre-flight for GeoTIFF PATH inputs: the file headers already
     hold everything validate_band_alignment and band_dtypes would
-    learn from Spark jobs, and with an opaque mapInPandas tile source
-    those jobs cannot prune to metadata — each one re-runs the full
-    Python decode (measured: the eager pre-flight tripled
-    scan_geotiff_* wall-clock).  Headers parse on the driver: sub-ms
-    local reads, zero Spark jobs.
+    learn from Spark jobs over a tile table, so the checks run on the
+    driver off the headers: sub-ms local reads, zero Spark jobs.
 
-    Returns band_id → the full-resolution header of the file providing
-    that band, in positional order (b1..bN across files and samples).
-    A header the reader cannot parse raises the reader's ValueError.
-    Validation failures raise too, matching validate_band_alignment's
-    contract: unequal resolutions or non-co-tiling grids (different
-    dims/transform) refuse before any pixel is read."""
+    Returns band_id → (full-resolution header of the file providing
+    that band, the band's sample index in that file), in positional
+    order (b1..bN across files and samples).  A header the reader
+    cannot parse raises the reader's ValueError.  Validation failures
+    raise too, matching validate_band_alignment's contract: unequal
+    resolutions or non-co-tiling grids (different dims/transform)
+    refuse before any pixel is read."""
     hdrs = [minitiff.read_header(p) for p in paths]
     if validate:  # validate=False still wants the band map, not the raises
         # mixed CRS refuses like mixed resolution: pixel (row, col)
@@ -90,9 +91,9 @@ def _paths_preflight(
                 "places; resample to a common grid first"
             )
     return {
-        b: hdr
+        b: (hdr, sample)
         for hdr, file_bands in zip(hdrs, minitiff._band_names(hdrs, None))
-        for b in file_bands
+        for sample, b in enumerate(file_bands)
     }
 
 
@@ -106,6 +107,11 @@ def _as_tiles(spark: SparkSession, tiles, overview_level: int = 0) -> DataFrame:
     if overview_level:
         raise ValueError("overview_level is only valid for GeoTIFF path inputs")
     return read_tiles(spark, tiles) if isinstance(tiles, str) else tiles
+
+
+def _block_tasks(n_px: int, max_block_size: int) -> int:
+    """Tasks that each handle ≈ max_block_size² of ``n_px`` pixels."""
+    return max(1, math.ceil(n_px / float(max_block_size) ** 2))
 
 
 def raster2df(
@@ -126,19 +132,21 @@ def raster2df(
     pre-flight: unequal band resolutions or conflicting per-tile
     geometry raise before any pixel is read.  For PATH inputs the
     pre-flight AND the dtype lookup run driver-side off the file
-    headers (``_paths_preflight``) — zero Spark jobs, where the
-    Spark-side checks against an opaque decode source would each
-    re-run the full Python decode.  ``dtypes`` lets a caller that
-    built the tile table itself (and therefore knows each band's
-    source dtype) skip the metadata lookup job the same way.
+    headers (``_paths_preflight``) — zero Spark jobs — and the points
+    come from ONE mapInArrow decode stage that zips the bands per
+    window and skips windows with no valid band-1 pixel
+    (minitiff.zipped_windows), with no tile-level join.  ``dtypes``
+    lets a caller that built the tile table itself (and therefore
+    knows each band's source dtype) skip the metadata lookup job.
 
     ``max_block_size`` keeps the reference's memory-bound knob
     (``raster2df(..., max_block_size=4096)`` bounded each processing
-    window to block² pixels): here it repartitions the tile table so
-    each TASK handles ≈ max_block_size² pixels.  The pixel count of
-    ``bands[0]`` comes from its file's header for PATH inputs, and
-    from the tile METADATA columns (width·height, a pruned scan that
-    never touches the data arrays) for tile tables.  Default None =
+    window to block² pixels): here it repartitions so each TASK
+    handles ≈ max_block_size² pixels of ``bands[0]``.  PATH inputs
+    repartition the window list before the decode, sized from the
+    header of the file providing ``bands[0]``; tile tables repartition
+    the tile table, sized from its METADATA columns (width·height, a
+    pruned scan that never touches the data arrays).  Default None =
     let Spark's file splits decide (the right answer on a real
     cluster).
 
@@ -148,45 +156,44 @@ def raster2df(
     gdal_translate-on-an-overview serving shape.  Alignment and dtype
     pre-flight still run on the full-res headers (levels inherit
     both)."""
+    if not bands:
+        raise ValueError("need at least one band")
     paths = _tif_paths(tiles)
     if paths is not None:
         # raises on misaligned rasters ONLY when validate=True; with
         # validate=False the headers still supply the band map
-        hdrs = _paths_preflight(paths, validate=validate)
-        unknown = [b for b in bands if b not in hdrs]
+        srcs = _paths_preflight(paths, validate=validate)
+        unknown = [b for b in bands if b not in srcs]
         if unknown:
             raise ValueError(
-                f"unknown band(s) {unknown} — these files provide {sorted(hdrs)}"
+                f"unknown band(s) {unknown} — these files provide {sorted(srcs)}"
             )
         if dtypes is None:
             dtypes = {
-                b: minitiff._DTYPE_NAMES[hdrs[b].dtype.lstrip("<>")] for b in bands
+                b: minitiff._DTYPE_NAMES[srcs[b][0].dtype.lstrip("<>")] for b in bands
             }
-        validate = False  # already validated driver-side
+        read = [srcs[b] for b in bands]
+        if overview_level:
+            read = [(minitiff.read_header(h.path, overview=overview_level), s) for h, s in read]
+        parts = None
+        if max_block_size:
+            parts = _block_tasks(read[0][0].width * read[0][0].height, max_block_size)
+        zipped = minitiff.zipped_windows(spark, read, partitions=parts)
+        return zipped_points(zipped, bands, col_names, calc_area, dtypes=dtypes)
+
     tdf = _as_tiles(spark, tiles, overview_level=overview_level)
     if validate:
         validate_band_alignment(tdf, bands)
     if max_block_size:
-        import math
+        from pyspark.sql import functions as F
 
-        if paths is not None:
-            # the header, not an aggregate over the decoded tile table
-            # (which would run the full Python decode before the job)
-            hdr = hdrs[bands[0]]
-            if overview_level:
-                hdr = minitiff.read_header(hdr.path, overview=overview_level)
-            n_px = hdr.width * hdr.height
-        else:
-            from pyspark.sql import functions as F
-
-            n_px = (
-                tdf.filter(F.col("band_id") == bands[0])
-                .agg(F.sum(F.col("width").cast("long") * F.col("height")))
-                .first()[0]
-                or 0
-            )
-        parts = max(1, math.ceil(n_px / float(max_block_size) ** 2))
-        tdf = tdf.repartition(parts)
+        n_px = (
+            tdf.filter(F.col("band_id") == bands[0])
+            .agg(F.sum(F.col("width").cast("long") * F.col("height")))
+            .first()[0]
+            or 0
+        )
+        tdf = tdf.repartition(_block_tasks(n_px, max_block_size))
     # dtype lookup (metadata-only for columnar tile tables; None for
     # pre-dtype tables) — value columns come out in each band's SOURCE
     # numpy dtype, like the reference's pandas frames (SURVEY §1.1(5))

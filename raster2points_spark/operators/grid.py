@@ -248,24 +248,15 @@ def raster2points(
     Equivalent of raster2points/raster2points.py::raster2df
     (reconstructed), Spark-first and shuffle-minimal: bands are zipped
     at TILE granularity (an equi-join of narrow dense rows on tile_id —
-    64 rows join 64 rows, broadcastable at any band count), then ONE
-    posexplode of the arrays_zip'd payloads melts all bands together.
-    The per-pixel stream is never shuffled: mask, affine, area and the
-    sink all pipeline inside the same stage.  (The reference requires
-    equal resolution across rasters, so co-tiling is a precondition,
-    exactly as there.)
-
-    ``dtypes`` maps band_id → source numpy dtype name; matching value
-    columns are cast from the float64 container type back to the
-    narrowest Spark type (see NUMPY_TO_SPARK_DTYPE) so output schemas
-    stay faithful to the source rasters.
+    64 rows join 64 rows, broadcastable at any band count), then
+    :func:`zipped_points` explodes the zipped payloads.  (The reference
+    requires equal resolution across rasters, so co-tiling is a
+    precondition, exactly as there.)  GeoTIFF path inputs skip the
+    join: sources/minitiff.py::zipped_windows zips the bands inside
+    the decode and feeds :func:`zipped_points` directly.
     """
     if not bands:
         raise ValueError("need at least one band")
-    names = col_names or [f"val{i+1}" for i in range(len(bands))]
-    if len(names) != len(bands):
-        raise ValueError("col_names must match bands")
-
     joined = tiles.filter(F.col("band_id") == bands[0]).select(
         "tile_id",
         "col_off",
@@ -280,20 +271,47 @@ def raster2points(
             "tile_id", F.col("nodata").alias(f"nd{i}"), F.col("data").alias(f"d{i}")
         )
         joined = joined.join(other, "tile_id", "left")
+    return zipped_points(joined, bands, col_names, calc_area, extra_cols, dtypes)
 
-    # A tile entirely absent from a secondary band leaves d{i} NULL, and
+
+def zipped_points(
+    zipped: DataFrame,
+    bands: list[str],
+    col_names: list[str] | None = None,
+    calc_area: bool = False,
+    extra_cols: tuple[str, ...] = (),
+    dtypes: dict[str, str] | None = None,
+) -> DataFrame:
+    """The one explode/mask/affine core: band-zipped window rows
+    (tile_id, col_off, row_off, width, transform, nd0, d0, …, ndN, dN;
+    d{i} the row-major payload of ``bands[i]``, NULL when that band
+    has no such window) → points.  ONE posexplode of the arrays_zip'd
+    payloads melts all bands together; the per-pixel stream is never
+    shuffled — mask, affine, area and the sink all pipeline inside the
+    same stage.
+
+    ``dtypes`` maps band_id → source numpy dtype name; matching value
+    columns are cast from the float64 container type back to the
+    narrowest Spark type (see NUMPY_TO_SPARK_DTYPE) so output schemas
+    stay faithful to the source rasters.
+    """
+    names = col_names or [f"val{i+1}" for i in range(len(bands))]
+    if len(names) != len(bands):
+        raise ValueError("col_names must match bands")
+
+    # A window absent from a secondary band leaves d{i} NULL, and
     # arrays_zip(d0, NULL) is NULL — posexplode would then emit ZERO
-    # rows, silently dropping every band-1 pixel of that tile.  Coalesce
-    # each missing payload to an all-NULL array of the mask band's
-    # length so the contract holds: NoData/absence in bands 2..N keeps
-    # the row with NULL.
+    # rows, silently dropping every band-1 pixel of that window.
+    # Coalesce each missing payload to an all-NULL array of the mask
+    # band's length so the contract holds: NoData/absence in bands 2..N
+    # keeps the row with NULL.
     zip_cols = [F.col("d0")] + [
         F.coalesce(
             F.col(f"d{i}"), F.expr("array_repeat(cast(null AS double), size(d0))")
         ).alias(f"d{i}")
         for i in range(1, len(bands))
     ]
-    ex = joined.select(
+    ex = zipped.select(
         "tile_id",
         "col_off",
         "row_off",

@@ -107,9 +107,9 @@ def scan_geotiff_mini(spark, sf_dir):
     GeoTIFF file (committed golden fixture fixtures/tif/stack2.tif —
     tiled 4x4, deflate-compressed, TWO bands in one file) ingests
     through the dependency-free mini reader into the full
-    raster2df pipeline: header parse → tile grid → mapInPandas
-    window decode → melt → band-1 nodata mask → pixel-center affine
-    coords → band zip.  The oracle is the 7-point golden answer as a
+    raster2df pipeline: header parse → window grid → one mapInArrow
+    stage that decodes each window and zips the bands in it → melt →
+    band-1 nodata mask → pixel-center affine coords.  The oracle is the 7-point golden answer as a
     VALUES literal (DuckDB cannot read TIFFs; the fixture is
     byte-stable via tools/make_tif.py, so the literal IS the file's
     content), making TIFF decode + mask + affine parity a standing
@@ -275,7 +275,7 @@ def scan_geotiff_sparse(spark, sf_dir):
     # both bands come from ONE file on ONE explicit grid, so co-tiling
     # holds by construction and the source dtypes are known from the
     # headers — skip the Spark-side metadata jobs (each would re-run
-    # the Python decode through the opaque mapInPandas source)
+    # the Python decode through the opaque mapInArrow source)
     return raster2df(
         spark,
         mask_t.unionByName(img_t),

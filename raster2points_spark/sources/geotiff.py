@@ -7,9 +7,9 @@ the rest of the engine: the tile-table schema its decode emits and the
 block-window generator that lays the tile grid over a raster.
 
 Scale shape: tiling 100 TB of GeoTIFFs is itself a distributed job —
-one task per (file, window-batch), each reading its own windows and
-emitting tile-table rows via mapInPandas.  Only headers are read on
-the driver.
+the window list is sliced into one partition per core, and each
+mapInArrow task reads its own windows and emits tile-table rows.  Only
+headers are read on the driver.
 """
 
 from __future__ import annotations

@@ -16,12 +16,17 @@ GeoTIFFs/COGs actually use:
   * the GeoTIFF tags that drive the tile-table transform
     (ModelPixelScale 33550, ModelTiepoint 33922, GDAL_NODATA 42113)
 
-``minitiff_to_tiles`` is the distributed conversion: a driver header
-pass lays the window grid (sources/geotiff.py::window_grid), and
-executors read only their own windows' byte ranges via mapInPandas.
-For a tiled TIFF the engine's tile grid aligns 1:1 with the file's
-tile grid by default, so each task decompresses exactly its own blocks
-(the COG access pattern).
+Two distributed conversions share one decode kernel: a driver header
+pass lays the window grid (sources/geotiff.py::window_grid) as a local
+window list, already sliced into one partition per core, and
+``mapInArrow`` tasks read only their own windows' byte ranges into
+float64 ndarrays that cross to the JVM as Arrow list arrays.
+``minitiff_to_tiles`` emits the tile table (one row per band and
+window); ``zipped_windows`` emits the band-zipped rows raster2df
+explodes (one row per window, mask-empty windows skipped before any
+other band is read).  For a tiled TIFF the engine's tile grid aligns
+1:1 with the file's tile grid by default, so each task decompresses
+exactly its own blocks (the COG access pattern).
 
 Also supported since r11:
 
@@ -46,6 +51,7 @@ reports/zstd_probe_r11.txt) and 64-bit-int samples.
 
 from __future__ import annotations
 
+import functools
 import math
 import mmap
 import os
@@ -736,13 +742,13 @@ def _decode_block(hdr: MiniTiff, f, bx: int, by: int, sample: int):
     return a[:vr, :vc]
 
 
-def read_window(
+def _read_window_array(
     hdr: MiniTiff, col_off: int, row_off: int, width: int, height: int, sample: int = 0
 ):
-    """Read one window of one band as a float list (row-major), touching
-    only the strips/tiles that cover it — the same I/O discipline
-    rasterio block reads have, so the mapInPandas task shape is honest
-    about bytes read."""
+    """Read one window of one band as a (height, width) float64 array,
+    touching only the strips/tiles that cover it — the same I/O
+    discipline rasterio block reads have, so a decode task's bytes read
+    are its own windows' blocks."""
     import numpy as np
 
     if width <= 0 or height <= 0:
@@ -775,7 +781,14 @@ def read_window(
                 out[r0 - row_off : r1 - row_off, c0 - col_off : c1 - col_off] = block[
                     r0 - by * bh : r1 - by * bh, c0 - bx * bw : c1 - bx * bw
                 ]
-    return [float(v) for v in out.ravel()]
+    return out
+
+
+def read_window(
+    hdr: MiniTiff, col_off: int, row_off: int, width: int, height: int, sample: int = 0
+) -> list[float]:
+    """:func:`_read_window_array` as a row-major float list."""
+    return _read_window_array(hdr, col_off, row_off, width, height, sample).ravel().tolist()
 
 
 def _band_names(hdrs: list[MiniTiff], band_ids: list | None) -> list[list[str]]:
@@ -828,7 +841,7 @@ def minitiff_to_tiles(
 ) -> DataFrame:
     """Distributed GeoTIFF → tile-table conversion: driver header pass
     → window-grid rows → executors read their own windows via
-    mapInPandas.  Band ids default to b1..bN positionally across files
+    mapInArrow.  Band ids default to b1..bN positionally across files
     and samples (the reference's multi-raster convention).
 
     ``tile_size=None`` (default) aligns the engine grid with a tiled
@@ -881,61 +894,182 @@ def minitiff_to_tiles(
     else:
         hdrs = [_resolve(paths[0])]
     names = _band_names(hdrs, band_ids)
+    srcs: list[tuple[str, int, bool, int]] = []
     for hdr, file_bands in zip(hdrs, names):
-        if tile_size is None:
-            tw, th = (hdr.block_width, hdr.block_height) if hdr.tiled else (512, 512)
-        else:
-            tw = th = tile_size
+        tw, th = _native_tile(hdr) if tile_size is None else (tile_size, tile_size)
         grid = window_grid(hdr.width, hdr.height, tw, tile_height=th)
+        dtype = _DTYPE_NAMES[hdr.dtype.lstrip("<>")]
         for sample, band_id in enumerate(file_bands):
-            for w in grid:
-                meta.append(
-                    (
-                        band_id,
-                        hdr.path,
-                        sample,
-                        hdr.overview,
-                        w["tile_id"],
-                        w["col_off"],
-                        w["row_off"],
-                        w["width"],
-                        w["height"],
-                        hdr.transform,
-                        hdr.nodata,
-                        _DTYPE_NAMES[hdr.dtype.lstrip("<>")],
-                        int(hdr.is_mask),
-                    )
+            srcs.append((hdr.path, hdr.overview, hdr.is_mask, sample))
+            meta.extend(
+                (
+                    band_id,
+                    w["tile_id"],
+                    w["col_off"],
+                    w["row_off"],
+                    w["width"],
+                    w["height"],
+                    hdr.transform,
+                    hdr.nodata,
+                    dtype,
+                    len(srcs) - 1,
                 )
+                for w in grid
+            )
     from raster2points_spark.io import local_df
 
+    # the local window list is already sliced into min(#windows, cores)
+    # partitions; a hash repartition on top would add an exchange that
+    # AQE coalesces back into one decode task
     meta_df = local_df(
         spark,
         meta,
-        "band_id string, path string, sample int, overview int, tile_id long, "
-        "col_off int, row_off int, width int, height int, transform array<double>, "
-        "nodata double, dtype string, msk int",
+        "band_id string, tile_id long, col_off int, row_off int, width int, "
+        "height int, transform array<double>, nodata double, dtype string, src int",
+    )
+    return meta_df.mapInArrow(lambda it: _tile_batches(it, srcs), TILE_SCHEMA_DDL)
+
+
+def _native_tile(hdr: MiniTiff) -> tuple[int, int]:
+    """Default window shape: a tiled file's own TileWidth×TileLength, so
+    each window is one block; 512² for strips."""
+    return (hdr.block_width, hdr.block_height) if hdr.tiled else (512, 512)
+
+
+def _band_window(hdr: MiniTiff, tile: tuple[int, int], tile_id: int):
+    """(col_off, row_off, width, height) of window ``tile_id`` in the
+    row-major grid of ``tile``-shaped windows over ``hdr``'s raster —
+    window_grid's numbering — or None when the grid has no such window."""
+    tw, th = tile
+    per_row = -(-hdr.width // tw)
+    col_off, row_off = tile_id % per_row * tw, tile_id // per_row * th
+    if row_off >= hdr.height:
+        return None
+    return col_off, row_off, min(tw, hdr.width - col_off), min(th, hdr.height - row_off)
+
+
+def _header_reader(srcs):
+    """Per-task header lookup for ``srcs`` entries (path, overview,
+    mask, sample): each header is parsed on first use, then reused."""
+    return functools.cache(
+        lambda i: read_header(srcs[i][0], overview=srcs[i][1], mask=srcs[i][2])
     )
 
-    def read_windows(batches):
-        for pdf in batches:
-            data = []
-            hdr_cache: dict[tuple[str, int, int], MiniTiff] = {}
-            for r in pdf.itertuples(index=False):
-                hdr = hdr_cache.get((r.path, r.overview, r.msk))
-                if hdr is None:
-                    hdr = hdr_cache[(r.path, r.overview, r.msk)] = read_header(
-                        r.path, overview=r.overview, mask=bool(r.msk)
-                    )
-                data.append(
-                    read_window(hdr, r.col_off, r.row_off, r.width, r.height, sample=r.sample)
-                )
-            out = pdf.drop(columns=["path", "sample", "overview", "msk"]).copy()
-            out["data"] = data
-            yield out
 
-    return meta_df.repartition("band_id", "tile_id").mapInPandas(
-        read_windows, schema=TILE_SCHEMA_DDL
+def _payload(a):
+    """One-row Arrow ``list<double>`` over ``a``'s float64 buffer
+    (no per-pixel Python objects), NaN pixels as NULL elements — the
+    tile table's contract; a null list when ``a`` is None."""
+    import pyarrow as pa
+
+    if a is None:
+        return pa.nulls(1, pa.list_(pa.float64()))
+    values = pa.array(a.ravel(), from_pandas=True)
+    return pa.ListArray.from_arrays(pa.array([0, a.size], pa.int32()), values)
+
+
+def _tile_batches(batches, srcs):
+    """mapInArrow kernel of :func:`minitiff_to_tiles`: every window-list
+    row (the tile table's metadata plus ``src``, an index into ``srcs``)
+    becomes one tile-table row carrying its decoded window.  One batch
+    per window, so a task holds one payload at a time."""
+    import pyarrow as pa
+
+    header = _header_reader(srcs)
+    for batch in batches:
+        meta = batch.drop_columns(["src"])
+        cols = [
+            batch.column(n).to_pylist() for n in ("src", "col_off", "row_off", "width", "height")
+        ]
+        for i, (s, c, r, w, h) in enumerate(zip(*cols)):
+            row = meta.slice(i, 1)
+            data = _payload(_read_window_array(header(s), c, r, w, h, srcs[s][3]))
+            yield pa.RecordBatch.from_arrays(
+                [*row.columns, data], names=[*row.schema.names, "data"]
+            )
+
+
+def _zip_batches(batches, srcs, tile):
+    """mapInArrow kernel of :func:`zipped_windows`.  For each window-list
+    row it reads band 1's window and skips the window when no pixel
+    would survive the point filter downstream: NaN pixels arrive as
+    NULL, as does a NaN (undeclared) nodata, and ``value = nodata`` is
+    NULL.  Otherwise it reads the same ``tile_id`` window of every
+    other band and emits
+    one zipped row.  One batch per window, so a task holds one window's
+    payloads at a time."""
+    import numpy as np
+    import pyarrow as pa
+
+    names = ["tile_id", "col_off", "row_off", "width", "transform"]
+    names += [n for i in range(len(srcs)) for n in (f"nd{i}", f"d{i}")]
+    header = _header_reader(srcs)
+    hdr0, sample0 = header(0), srcs[0][3]
+    nd0 = hdr0.nodata
+    transform = pa.array([hdr0.transform], pa.list_(pa.float64()))
+    nodata = [
+        pa.array([header(i).nodata], pa.float64(), from_pandas=True) for i in range(len(srcs))
+    ]
+    for batch in batches:
+        cols = [
+            batch.column(n).to_pylist()
+            for n in ("tile_id", "col_off", "row_off", "width", "height")
+        ]
+        for t, c, r, w, h in zip(*cols):
+            mask = _read_window_array(hdr0, c, r, w, h, sample0)
+            if not (~np.isnan(mask) & (mask != nd0)).any():
+                continue
+            row = [
+                pa.array([t], pa.int64()),
+                pa.array([c], pa.int32()),
+                pa.array([r], pa.int32()),
+                pa.array([w], pa.int32()),
+                transform,
+                nodata[0],
+                _payload(mask),
+            ]
+            for i in range(1, len(srcs)):
+                hdr = header(i)
+                win = _band_window(hdr, tile, t)
+                arr = None if win is None else _read_window_array(hdr, *win, srcs[i][3])
+                row += [nodata[i], _payload(arr)]
+            yield pa.RecordBatch.from_arrays(row, names=names)
+
+
+def zipped_windows(
+    spark: SparkSession, bands: list[tuple[MiniTiff, int]], partitions: int | None = None
+) -> DataFrame:
+    """Band-zipped windows of GeoTIFF bands, decoded in ONE mapInArrow
+    stage: one row per window of band 1's grid that holds at least one
+    valid band-1 pixel, ``tile_id, col_off, row_off, width, transform,
+    nd0, d0, …, ndN, dN`` — the rows operators.grid.zipped_points
+    explodes.  ``bands`` pairs each band's header (at the level to
+    read) with its sample index, band 1 (the mask) first.
+
+    Every band is cut into band 1's window shape and contributes its
+    window with band 1's ``tile_id``; a band whose raster has no such
+    window (``validate=False`` inputs of other dims) contributes a NULL
+    payload, which the explode pads with NULL values — the tile-table
+    join's answer.  ``partitions`` repartitions the window list (not
+    the decoded payloads) before the decode."""
+    from raster2points_spark.io import local_df
+
+    hdr = bands[0][0]
+    tile = _native_tile(hdr)
+    srcs = [(h.path, h.overview, h.is_mask, s) for h, s in bands]
+    wins = local_df(
+        spark,
+        [
+            (w["tile_id"], w["col_off"], w["row_off"], w["width"], w["height"])
+            for w in window_grid(hdr.width, hdr.height, *tile)
+        ],
+        "tile_id long, col_off int, row_off int, width int, height int",
     )
+    if partitions:
+        wins = wins.repartition(partitions)
+    schema = "tile_id long, col_off int, row_off int, width int, transform array<double>, "
+    schema += ", ".join(f"nd{i} double, d{i} array<double>" for i in range(len(srcs)))
+    return wins.mapInArrow(lambda it: _zip_batches(it, srcs, tile), schema)
 
 
 CATALOG_SCHEMA_DDL = (

@@ -1689,12 +1689,12 @@ def test_paths_preflight_validates_driver_side(tmp_path):
     """raster2df PATH inputs validate off the headers with zero Spark
     jobs: misaligned rasters refuse immediately; aligned ones return
     the positional band → header map.  (The Spark-side metadata checks
-    cannot prune through the opaque mapInPandas decode, so each one
+    cannot prune through the opaque Python decode, so each one
     re-ran the full Python decode — measured 3x the key's wall-clock.)"""
     from raster2points_spark.api import _paths_preflight
 
     def dtypes(pre):
-        return {b: h.dtype for b, h in pre.items()}
+        return {b: h.dtype for b, (h, _) in pre.items()}
 
     a = str(tmp_path / "a.tif")
     b = str(tmp_path / "b.tif")
@@ -1702,7 +1702,7 @@ def test_paths_preflight_validates_driver_side(tmp_path):
     _write_tiff(b, [2.0] * 8, 4, 2)
     pre = _paths_preflight([a, b])
     assert dtypes(pre) == {"b1": "<f8", "b2": "<f8"}
-    assert [pre["b1"].path, pre["b2"].path] == [a, b]
+    assert [pre["b1"][0].path, pre["b2"][0].path] == [a, b]
 
     coarse = str(tmp_path / "coarse.tif")
     _write_tiff(coarse, [1.0] * 8, 4, 2, pixel_scale=(1.0, 1.0))
@@ -1965,3 +1965,215 @@ def test_raster2df_refuses_mixed_crs(spark, tmp_path):
     _write_tiff(p3, vals, 4, 2, crs=None)
     df = raster2df(spark, [p1, p3], bands=["b1", "b2"])
     assert df.count() > 0
+
+
+# ---------------------------------------------------------------------------
+# GeoTIFF path inputs decode in one mapInArrow stage (minitiff.zipped_windows)
+
+
+def _fixture(name):
+    import os
+
+    return os.path.join(os.path.dirname(_pyramid_path()), name)
+
+
+def _point_rows(df):
+    """Collected rows, NaN as a marker (NaN != NaN), order-free."""
+    rows = [
+        tuple("NaN" if isinstance(v, float) and v != v else v for v in r)
+        for r in df.collect()
+    ]
+    return sorted(rows, key=repr)
+
+
+def _assert_paths_match_tile_join(spark, paths, bands, **kw):
+    """raster2df on GeoTIFF paths equals the tile-table join path over
+    minitiff_to_tiles of the same files: same schema, same rows."""
+    from raster2points_spark.api import raster2df
+    from raster2points_spark.sources.minitiff import minitiff_to_tiles
+
+    level = kw.pop("overview_level", 0)
+    got = raster2df(spark, paths, bands, overview_level=level, **kw)
+    tiles = minitiff_to_tiles(spark, paths, overview_level=level)
+    want = raster2df(spark, tiles, bands, **{**kw, "validate": False})
+    assert got.dtypes == want.dtypes
+    rows = _point_rows(got)
+    assert rows == _point_rows(want)
+    return rows
+
+
+def _undeclare_nodata(path):
+    """Retag GDAL_NODATA (42113) as GDAL_METADATA (42112), which the
+    reader ignores: the file then declares no nodata."""
+    raw = open(path, "rb").read()
+    tag = struct.pack("<HH", 42113, 2)
+    assert raw.count(tag) == 1
+    open(path, "wb").write(raw.replace(tag, struct.pack("<HH", 42112, 2)))
+
+
+def test_paths_match_tile_join_multisample_stack(spark):
+    rows = _assert_paths_match_tile_join(
+        spark, [_fixture("stack2.tif")], ["b1", "b2"], col_names=["elev", "slope"]
+    )
+    assert len(rows) == 7  # the scan_geotiff_mini golden answer's size
+
+
+def test_paths_match_tile_join_undeclared_nodata_sparse_fill(spark, tmp_path):
+    """No declared nodata: a sparse tile is filled with 0 (GDAL's
+    fill), and 0 is a valid mask value, so its pixels survive."""
+    from raster2points_spark.sources.minitiff import read_header
+
+    w, h = 4, 4
+    mask = [
+        0.0 if (r >= 2 and c >= 2) else float(r * w + c + 1) for r in range(h) for c in range(w)
+    ]
+    p = str(tmp_path / "mask.tif")
+    _write_tiff(p, mask, w, h, nodata="0", tile=(2, 2), sparse=True)
+    _undeclare_nodata(p)
+    hdr = read_header(p)
+    assert hdr.nodata != hdr.nodata and hdr.offsets[3] == 0
+    v = str(tmp_path / "value.tif")
+    _write_tiff(v, [float(i) for i in range(16)], w, h, tile=(2, 2))
+    rows = _assert_paths_match_tile_join(spark, [p, v], ["b1", "b2"])
+    assert len(rows) == 16
+    assert sum(r[2] == 0.0 for r in rows) == 4
+
+
+def test_paths_match_tile_join_nan_nodata(spark, tmp_path):
+    nan = float("nan")
+    w, h = 4, 2
+    p = str(tmp_path / "mask.tif")
+    v = str(tmp_path / "value.tif")
+    _write_tiff(p, [1.0, nan, 3.0, 4.0, nan, nan, 7.0, 8.0], w, h, nodata="nan")
+    _write_tiff(v, [nan, 2.0, 3.0, nan, 5.0, 6.0, -9999.0, 8.0], w, h, nodata="nan")
+    rows = _assert_paths_match_tile_join(spark, [p, v], ["b1", "b2"])
+    assert [r[2] for r in rows if r[3] is None] == [1.0, 4.0]
+    assert len(rows) == 5
+    # the tile table carries NaN pixels and a NaN nodata as NULL
+    from raster2points_spark.sources.minitiff import minitiff_to_tiles
+
+    (t,) = minitiff_to_tiles(spark, [p]).collect()
+    assert t.nodata is None and t.data == [1.0, None, 3.0, 4.0, None, None, 7.0, 8.0]
+
+
+def test_paths_match_tile_join_u1_i2_edge_tiles(spark, tmp_path):
+    """u1 mask, i2 values, a 5x3 raster on 2x2 tiles (clipped edge
+    windows); value columns keep their source dtypes."""
+    w, h = 5, 3
+    p = str(tmp_path / "mask.tif")
+    v = str(tmp_path / "value.tif")
+    _write_tiff(p, [i % 3 for i in range(w * h)], w, h, dtype="u1", nodata="0", tile=(2, 2))
+    _write_tiff(v, [i * 7 - 50 for i in range(w * h)], w, h, dtype="i2", tile=(2, 2),
+                compression=8, predictor=2)
+    rows = _assert_paths_match_tile_join(spark, [p, v], ["b1", "b2"], calc_area=True)
+    assert len(rows) == sum(i % 3 != 0 for i in range(w * h))
+
+
+def test_paths_match_tile_join_overview_level(spark):
+    pyr = _pyramid_path()
+    rows = _assert_paths_match_tile_join(spark, [pyr, pyr], ["b1", "b2"], overview_level=1)
+    assert len(rows) == 8 and all(r[2] == r[3] for r in rows)
+
+
+def test_paths_match_tile_join_validate_false_other_dims(spark, tmp_path):
+    """validate=False on inputs of other dims: band 2 contributes its
+    own tile_id window; where it has none, values come out NULL."""
+    big = str(tmp_path / "big.tif")
+    small = str(tmp_path / "small.tif")
+    _write_tiff(big, [float(i + 1) for i in range(24)], 6, 4, tile=(2, 2))
+    _write_tiff(small, [float(100 + i) for i in range(4)], 2, 2, tile=(2, 2))
+    rows = _assert_paths_match_tile_join(spark, [big, small], ["b1", "b2"], validate=False)
+    assert len(rows) == 24
+    assert sum(r[3] is not None for r in rows) == 4
+
+
+def test_paths_mixed_block_layouts_zip_by_position(spark, tmp_path):
+    """Co-registered bands with different block layouts (tiled mask,
+    striped values) are cut into the mask's windows, so every point
+    carries the value of its own pixel."""
+    from raster2points_spark.api import raster2df
+
+    w, h = 6, 4
+    m = str(tmp_path / "mask.tif")
+    v = str(tmp_path / "value.tif")
+    _write_tiff(m, [float(i + 1) for i in range(w * h)], w, h, tile=(2, 2))
+    _write_tiff(v, [float(1000 + i) for i in range(w * h)], w, h, rows_per_strip=3)
+    rows = raster2df(spark, [m, v], ["b1", "b2"], col_names=["m", "v"]).collect()
+    assert len(rows) == w * h
+    assert all(r.v == r.m + 999.0 for r in rows)
+
+
+def _window_batch(rows):
+    import pyarrow as pa
+
+    cols = list(zip(*rows))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cols[0], pa.int64())] + [pa.array(c, pa.int32()) for c in cols[1:]],
+        names=["tile_id", "col_off", "row_off", "width", "height"],
+    )
+
+
+def test_zip_kernel_skips_mask_empty_windows_without_reading_other_bands(
+    tmp_path, monkeypatch
+):
+    """A window whose mask pixels are all nodata decodes no block of
+    any other band, and emits no row."""
+    from raster2points_spark.sources import minitiff
+
+    w, h = 4, 2
+    m = str(tmp_path / "mask.tif")
+    v = str(tmp_path / "value.tif")
+    # window 0 (cols 0-1) all nodata; window 1 (cols 2-3) valid
+    _write_tiff(m, [-9999.0, -9999.0, 3.0, 4.0, -9999.0, -9999.0, 7.0, 8.0], w, h, tile=(2, 2))
+    _write_tiff(v, [float(i) for i in range(8)], w, h, tile=(2, 2))
+    decoded = []
+    real = minitiff._decode_block
+
+    def counting(hdr, f, bx, by, sample):
+        decoded.append((hdr.path, bx, by))
+        return real(hdr, f, bx, by, sample)
+
+    monkeypatch.setattr(minitiff, "_decode_block", counting)
+    srcs = [(m, 0, False, 0), (v, 0, False, 0)]
+    wins = _window_batch([(0, 0, 0, 2, 2), (1, 2, 0, 2, 2)])
+    batches = list(minitiff._zip_batches(iter([wins]), srcs, (2, 2)))
+    assert [b.column("tile_id").to_pylist() for b in batches] == [[1]]
+    assert sorted(decoded) == sorted([(m, 0, 0), (m, 1, 0), (v, 1, 0)])
+    assert batches[0].column("d1").to_pylist() == [[2.0, 3.0, 6.0, 7.0]]
+
+
+def test_decode_kernels_yield_one_batch_per_window(tmp_path):
+    """A 3-window input batch comes back as several Arrow batches, so
+    a task never holds a whole input batch's payloads at once."""
+    from raster2points_spark.sources import minitiff
+
+    p = str(tmp_path / "a.tif")
+    _write_tiff(p, [float(i + 1) for i in range(12)], 6, 2, tile=(2, 2))
+    wins = _window_batch([(0, 0, 0, 2, 2), (1, 2, 0, 2, 2), (2, 4, 0, 2, 2)])
+    zipped = list(minitiff._zip_batches(iter([wins]), [(p, 0, False, 0)], (2, 2)))
+    assert len(zipped) == 3
+    assert [b.column("d0").to_pylist()[0] for b in zipped][2] == [5.0, 6.0, 11.0, 12.0]
+
+    import pyarrow as pa
+
+    tile_rows = wins.append_column("band_id", pa.array(["b1"] * 3)).append_column(
+        "src", pa.array([0, 0, 0], pa.int32())
+    )
+    tiles = list(minitiff._tile_batches(iter([tile_rows]), [(p, 0, False, 0)]))
+    assert len(tiles) == 3
+    assert tiles[1].column("data").to_pylist() == [[3.0, 4.0, 9.0, 10.0]]
+
+
+def test_raster2df_max_block_size_paths_repartition_window_list(spark, tmp_path):
+    """max_block_size on path inputs repartitions the window list
+    below the decode: no Exchange sits above the MapInArrow, so no
+    decoded payload is shuffled."""
+    from raster2points_spark.api import raster2df
+    from raster2points_spark.plans.inspect import explain_formatted
+
+    a = str(tmp_path / "a.tif")
+    _write_tiff(a, [1.0] * 16, 4, 4, tile=(2, 2))
+    plan = explain_formatted(raster2df(spark, [a, a], ["b1", "b2"], max_block_size=2))
+    tree = plan[: plan.index("\n\n")]
+    assert tree.count("MapInArrow") == 1 and tree.count("Exchange") == 1
+    assert tree.index("MapInArrow") < tree.index("Exchange")

@@ -855,23 +855,28 @@ def test_raster_melt_path_never_shuffles_pixels(spark, registry):
     assert plan.count("+- Exchange (") == 0, "band zip must not shuffle pixels"
 
 
-def test_geotiff_ingest_joins_tiles_not_pixels(spark, registry):
-    # The TIFF front door (scan_geotiff_mini): one MapInPandas stage
-    # does all pixel I/O (no row-at-a-time BatchEvalPython), and the
-    # multi-band zip joins TILE rows — the posexplode (Generate) must
-    # sit ABOVE the join so every Exchange carries packed tile arrays,
-    # never the exploded pixel stream.
+def test_geotiff_path_ingest_is_one_arrow_decode_without_join(spark, registry):
+    # The TIFF front door (scan_geotiff_mini, GeoTIFF PATH inputs): one
+    # MapInArrow stage does all pixel I/O and zips the bands per window,
+    # so the plan is that decode under exactly one posexplode (Generate)
+    # — no join, no Exchange, and no other Python node.
     plan = _formatted_plan(spark, registry["scan_geotiff_mini"].fn(spark, SF001))
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan, "pixel decode must be Arrow-batched"
-    assert plan.count("Generate (") == 1, "exactly one posexplode of the zipped bands"
-    gen = plan.index("Generate (")
-    for join in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin"):
-        pos = plan.find(join)
-        if pos != -1:
-            # formatted plans print the tree root-first, so an
-            # operator ABOVE another prints EARLIER
-            assert gen < pos, f"Generate must sit above the {join} (tile-level zip)"
+    tree = plan[: plan.index("\n\n")]
+    assert tree.count("MapInArrow") == 1
+    for python_node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert python_node not in tree, f"{python_node}: the decode is the one Python node"
+    assert "Join" not in tree and "CartesianProduct" not in tree, "bands zip inside the decode"
+    assert "Exchange" not in tree, "the window list is sliced locally, never shuffled"
+    assert tree.count("Generate") == 1, "exactly one posexplode of the zipped bands"
+    # tile-table inputs (raster_big) keep the tile-level join, and the
+    # posexplode must sit ABOVE it so the join carries packed tile
+    # arrays, never the exploded pixel stream (formatted plans print
+    # root-first, so an operator above another prints earlier)
+    plan = _formatted_plan(spark, registry["raster_big"].fn(spark, SF001))
+    tree = plan[: plan.index("\n\n")]
+    joins = [tree.find(j) for j in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")]
+    assert any(p != -1 for p in joins), "tile tables zip bands with a join"
+    assert all(tree.index("Generate") < p for p in joins if p != -1)
 
 
 def test_utm_forward_zero_shuffle_codegen(spark, registry):
