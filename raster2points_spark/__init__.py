@@ -16,8 +16,20 @@ Public API (mirrors the reference's two entry points,
     from raster2points_spark import raster2df, raster2csv
 """
 
-from raster2points_spark.api import raster2csv, raster2df
-from raster2points_spark.session import get_spark
-
 __all__ = ["raster2df", "raster2csv", "get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    # imported on first use, so that the Python worker daemon
+    # (``_pydaemon``, started as a module of this package) loads only
+    # what pyspark's own daemon loads: no pyarrow, no engine module
+    if name == "get_spark":
+        from raster2points_spark.session import get_spark
+
+        return get_spark
+    if name in ("raster2df", "raster2csv"):
+        from raster2points_spark import api
+
+        return getattr(api, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

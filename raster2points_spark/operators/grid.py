@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: WGS84 semi-major axis, metres — radius used for geodesic pixel area.
@@ -185,46 +185,39 @@ def nodata_filter(pixels: DataFrame, value_col: str = "value") -> DataFrame:
     return pixels.filter(F.col(value_col).isNotNull())
 
 
-def affine_lon(transform: Column, col: Column, row: Column) -> Column:
-    """lon = c + (col+0.5)·a + (row+0.5)·b  (pixel-CENTER, like
-    rasterio.transform.xy(..., offset='center') in the reference)."""
-    return transform[2] + (col + 0.5) * transform[0] + (row + 0.5) * transform[1]
+#: Pixel-centre coordinates from the row-major affine ``transform``
+#: (a, b, c, d, e, f) and a pixel's absolute ``col``/``row``, as SQL text
+#: — the one definition every projection uses:
+#: lon = c + (col+0.5)·a + (row+0.5)·b, lat = f + (col+0.5)·d + (row+0.5)·e
+#: (pixel-CENTER, like rasterio.transform.xy(..., offset='center') in
+#: the reference).
+LON_SQL = "transform[2] + (col + 0.5D) * transform[0] + (row + 0.5D) * transform[1]"
+LAT_SQL = "transform[5] + (col + 0.5D) * transform[3] + (row + 0.5D) * transform[4]"
+
+#: Geodesic pixel area in m² from ``lat`` and ``transform`` (the
+#: reference computes one area per row of pixels; same formula here,
+#: applied per pixel):
+#:     area = |Δlon_rad| · R² · |sin(lat + |Δlat|/2) − sin(lat − |Δlat|/2)|
+#: with R the WGS84 semi-major axis, R² a double literal.
+AREA_SQL = (
+    f"radians(abs(transform[0])) * {WGS84_RADIUS * WGS84_RADIUS!r}D * "
+    "abs(sin(radians(lat + abs(transform[4]) / 2)) - sin(radians(lat - abs(transform[4]) / 2)))"
+)
 
 
-def affine_lat(transform: Column, col: Column, row: Column) -> Column:
-    """lat = f + (col+0.5)·d + (row+0.5)·e."""
-    return transform[5] + (col + 0.5) * transform[3] + (row + 0.5) * transform[4]
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def affine_coords(pixels: DataFrame) -> DataFrame:
-    c, r, tf = F.col("col"), F.col("row"), F.col("transform")
-    return pixels.withColumn("lon", affine_lon(tf, c, r)).withColumn(
-        "lat", affine_lat(tf, c, r)
-    )
-
-
-def geodesic_area(lat: Column, transform: Column) -> Column:
-    """Geodesic pixel area in m² — pure function of latitude (the
-    reference computes one area per row of pixels; same formula here,
-    applied per pixel):
-
-        area = |Δlon_rad| · R² · |sin(lat + |Δlat|/2) − sin(lat − |Δlat|/2)|
-
-    with R the WGS84 semi-major axis and Δlon/Δlat the pixel size
-    from the affine transform.
-    """
-    dlon = F.abs(transform[0])
-    half_dlat = F.abs(transform[4]) / 2
-    r2 = F.lit(WGS84_RADIUS * WGS84_RADIUS)
-    return (
-        F.radians(dlon)
-        * r2
-        * F.abs(F.sin(F.radians(lat + half_dlat)) - F.sin(F.radians(lat - half_dlat)))
-    )
+    """Add pixel-centre ``lon``/``lat`` (LON_SQL/LAT_SQL) to rows that
+    carry ``transform``, ``col`` and ``row``."""
+    return pixels.withColumns({"lon": F.expr(LON_SQL), "lat": F.expr(LAT_SQL)})
 
 
 def geodesic_area_py(lat: float, dlon: float, dlat: float) -> float:
-    """Driver-side twin of :func:`geodesic_area` for golden tests."""
+    """Driver-side twin of AREA_SQL for golden tests."""
     r2 = WGS84_RADIUS * WGS84_RADIUS
     return abs(
         math.radians(abs(dlon))
@@ -290,6 +283,12 @@ def zipped_points(
     shuffled — mask, affine, area and the sink all pipeline inside the
     same stage.
 
+    The plan is three SQL-text projections — the explode (NULL-padding
+    missing payloads), then values, dtype casts, ``col``/``row`` and
+    LON_SQL/LAT_SQL with the band-1 mask as a ``where``, then the
+    output columns with AREA_SQL — so building it costs about a hundred
+    py4j round trips instead of one per Column node.
+
     ``dtypes`` maps band_id → source numpy dtype name; matching value
     columns are cast from the float64 container type back to the
     narrowest Spark type (see NUMPY_TO_SPARK_DTYPE) so output schemas
@@ -304,42 +303,42 @@ def zipped_points(
     # rows, silently dropping every band-1 pixel of that window.
     # Coalesce each missing payload to an all-NULL array of the mask
     # band's length so the contract holds: NoData/absence in bands 2..N
-    # keeps the row with NULL.
-    zip_cols = [F.col("d0")] + [
-        F.coalesce(
-            F.col(f"d{i}"), F.expr("array_repeat(cast(null AS double), size(d0))")
-        ).alias(f"d{i}")
+    # keeps the row with NULL.  arrays_zip names the struct field of a
+    # bare column after it (d0) and of any other expression by its
+    # position (`1`, `2`, …).
+    pads = ["d0"] + [
+        f"coalesce(d{i}, array_repeat(cast(null AS double), size(d0)))"
         for i in range(1, len(bands))
     ]
-    ex = zipped.select(
+    ex = zipped.selectExpr(
         "tile_id",
         "col_off",
         "row_off",
         "width",
         "transform",
-        *[F.col(f"nd{i}") for i in range(len(bands))],
-        F.posexplode(F.arrays_zip(*zip_cols)).alias("pos", "z"),
+        *[f"nd{i}" for i in range(len(bands))],
+        f"posexplode(arrays_zip({', '.join(pads)})) AS (pos, z)",
     )
     vals = []
     for i, (b, name) in enumerate(zip(bands, names)):
-        raw = F.col("z")[f"d{i}"]
-        v = F.when(raw == F.col(f"nd{i}"), F.lit(None)).otherwise(raw)
+        raw = "z.d0" if i == 0 else f"z.`{i}`"
         # NoData compare happens in the container type (double), THEN
         # the survivor is cast back to the band's source dtype
+        v = f"CASE WHEN {raw} = nd{i} THEN NULL ELSE {raw} END"
         if dtypes and b in dtypes:
-            v = v.cast(NUMPY_TO_SPARK_DTYPE[dtypes[b]])
-        vals.append(v.alias(name))
-    px = ex.select(
+            v = f"CAST({v} AS {NUMPY_TO_SPARK_DTYPE[dtypes[b]]})"
+        vals.append(f"{v} AS {_quote(name)}")
+    # col/row are lateral aliases: lon/lat read them in the same select
+    px = ex.selectExpr(
         "tile_id",
         "transform",
-        (F.col("col_off") + F.col("pos") % F.col("width")).alias("col"),
-        (F.col("row_off") + F.floor(F.col("pos") / F.col("width")).cast("int")).alias("row"),
+        "col_off + pos % width AS col",
+        "row_off + CAST(floor(pos / width) AS int) AS row",
         *vals,
-    )
-    px = px.filter(F.col(names[0]).isNotNull())
-    px = affine_coords(px)
-    out_cols = ["lon", "lat", *names]
+        f"{LON_SQL} AS lon",
+        f"{LAT_SQL} AS lat",
+    ).where(f"{_quote(names[0])} IS NOT NULL")
+    out_cols = ["lon", "lat", *map(_quote, names)]
     if calc_area:
-        px = px.withColumn("area", geodesic_area(F.col("lat"), F.col("transform")))
-        out_cols.append("area")
-    return px.select(*out_cols, *extra_cols)
+        out_cols.append(f"{AREA_SQL} AS area")
+    return px.selectExpr(*out_cols, *extra_cols)

@@ -14,8 +14,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from raster2points_spark.operators.grid import (
+    AREA_SQL,
     affine_coords,
-    geodesic_area,
     grid_unpivot,
     nodata_filter,
     raster2points,
@@ -385,7 +385,7 @@ def geodesic_area_q(spark, sf_dir):
         "tile_id",
         "row",
         "col",
-        F.round(geodesic_area(F.col("lat"), F.col("transform")), 0).alias("area_m2"),
+        F.round(F.expr(AREA_SQL), 0).alias("area_m2"),
     )
 
 

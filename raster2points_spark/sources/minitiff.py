@@ -844,10 +844,14 @@ def minitiff_to_tiles(
     mapInArrow.  Band ids default to b1..bN positionally across files
     and samples (the reference's multi-raster convention).
 
-    ``tile_size=None`` (default) aligns the engine grid with a tiled
+    ``tile_size=None`` (default) aligns the engine grid with the FIRST
     file's native TileWidth×TileLength so each task decompresses exactly
-    its own file blocks (the COG access pattern); striped files default
-    to 512.  Multi-band files expand to one tile-table band per sample.
+    its own file blocks (the COG access pattern); a striped first file
+    gives 512.  Every file of the call is cut on that one grid, so a
+    ``tile_id`` names the same window in every band, whatever each
+    file's own block layout — the zip by ``tile_id`` in raster2points
+    relies on it.  Multi-band files expand to one tile-table band per
+    sample.
 
     ``overview_level=k`` reads the k-th COG overview IFD instead of the
     full-resolution image — for downsample-shaped queries this touches
@@ -895,8 +899,8 @@ def minitiff_to_tiles(
         hdrs = [_resolve(paths[0])]
     names = _band_names(hdrs, band_ids)
     srcs: list[tuple[str, int, bool, int]] = []
+    tw, th = _native_tile(hdrs[0]) if tile_size is None else (tile_size, tile_size)
     for hdr, file_bands in zip(hdrs, names):
-        tw, th = _native_tile(hdr) if tile_size is None else (tile_size, tile_size)
         grid = window_grid(hdr.width, hdr.height, tw, tile_height=th)
         dtype = _DTYPE_NAMES[hdr.dtype.lstrip("<>")]
         for sample, band_id in enumerate(file_bands):

@@ -2103,6 +2103,28 @@ def test_paths_mixed_block_layouts_zip_by_position(spark, tmp_path):
     assert all(r.v == r.m + 999.0 for r in rows)
 
 
+def test_tile_table_mixed_block_layouts_match_paths(spark, tmp_path):
+    """minitiff_to_tiles cuts every file of one call on the first file's
+    window shape, so the tile-table route passes the co-tiling check
+    and zips a tiled mask and a striped value band pixel by pixel,
+    exactly like the path route."""
+    from raster2points_spark.api import raster2df
+    from raster2points_spark.sources.minitiff import minitiff_to_tiles
+
+    w, h = 6, 4
+    m = str(tmp_path / "mask.tif")
+    v = str(tmp_path / "value.tif")
+    _write_tiff(m, [float(i + 1) for i in range(w * h)], w, h, tile=(2, 2))
+    _write_tiff(v, [float(1000 + i) for i in range(w * h)], w, h, rows_per_strip=3)
+    kw = {"col_names": ["m", "v"], "calc_area": True}
+    got = raster2df(spark, minitiff_to_tiles(spark, [m, v]), ["b1", "b2"], **kw)
+    want = raster2df(spark, [m, v], ["b1", "b2"], **kw)
+    assert got.dtypes == want.dtypes
+    rows = _point_rows(got)
+    assert len(rows) == w * h
+    assert rows == _point_rows(want)
+
+
 def _window_batch(rows):
     import pyarrow as pa
 
