@@ -25,12 +25,13 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from raster2points_spark.operators.grid import (
     band_dtypes,
+    project_points,
     raster2points,
     validate_band_alignment,
-    zipped_points,
 )
 from raster2points_spark.sources import minitiff
 from raster2points_spark.sources.tiles import read_tiles
@@ -133,9 +134,13 @@ def raster2df(
     geometry raise before any pixel is read.  For PATH inputs the
     pre-flight AND the dtype lookup run driver-side off the file
     headers (``_paths_preflight``) — zero Spark jobs — and the points
-    come from ONE mapInArrow decode stage that zips the bands per
-    window and skips windows with no valid band-1 pixel
-    (minitiff.zipped_windows), with no tile-level join.  ``dtypes``
+    come from ONE mapInArrow decode stage (minitiff.zipped_windows):
+    each task masks band 1, reads the other bands at the same pixels
+    and applies NoData and the affine in numpy, so the JVM gets
+    finished points and runs one projection over them (dtype casts,
+    names, area) — no tile-level join, no per-pixel explode.  Windows
+    with no valid band-1 pixel are skipped before any other band is
+    read.  ``dtypes``
     lets a caller that built the tile table itself (and therefore
     knows each band's source dtype) skip the metadata lookup job.
 
@@ -178,15 +183,15 @@ def raster2df(
         parts = None
         if max_block_size:
             parts = _block_tasks(read[0][0].width * read[0][0].height, max_block_size)
-        zipped = minitiff.zipped_windows(spark, read, partitions=parts)
-        return zipped_points(zipped, bands, col_names, calc_area, dtypes=dtypes)
+        pts = minitiff.zipped_windows(spark, read, partitions=parts)
+        if calc_area:  # AREA_SQL reads the transform of the level read
+            pts = pts.withColumn("transform", F.lit(list(read[0][0].transform)))
+        return project_points(pts, bands, col_names, calc_area, dtypes=dtypes)
 
     tdf = _as_tiles(spark, tiles, overview_level=overview_level)
     if validate:
         validate_band_alignment(tdf, bands)
     if max_block_size:
-        from pyspark.sql import functions as F
-
         n_px = (
             tdf.filter(F.col("band_id") == bands[0])
             .agg(F.sum(F.col("width").cast("long") * F.col("height")))

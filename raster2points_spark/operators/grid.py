@@ -7,15 +7,24 @@ reconstructed; /root/reference was empty, SURVEY §0) is:
     read bands 2..N for same window → [geodesic area] → pandas chunk →
     concat / CSV append
 
-Here each stage is a DataFrame transformation over the tile table
-(§1.2 schema: one row per tile, dense payload as array<double>), so
-Catalyst pipelines the whole thing per-partition — the "chunked
-streaming" the reference hand-codes with parallelpipe workers is just
-Spark partition execution.  Nothing ever materializes a full raster:
-at 100 TB the tile table is millions of rows, and every operator here
-is embarrassingly parallel per tile except the multi-band zip, which
-is an equi-join on tile_id — co-partitionable by tile_id (bucketed
-layout at scale ⇒ shuffle-free).
+The point formula exists twice here, and the two forms are pinned to
+each other bit for bit (tests/test_properties.py):
+
+* as SQL text (LON_SQL/LAT_SQL, the ``CASE`` NoData test) for TILE
+  TABLES (§1.2 schema: one row per tile, dense payload as
+  array<double>), whose pixels already sit in the JVM.  Each stage is
+  a DataFrame transformation, so Catalyst pipelines the whole thing
+  per partition; every operator is embarrassingly parallel per tile
+  except the multi-band zip, an equi-join on tile_id —
+  co-partitionable by tile_id (bucketed layout at scale ⇒
+  shuffle-free) — ahead of one posexplode;
+* in numpy (:func:`points_from_windows`) for GeoTIFF PATHS, whose
+  decode task already holds every band's window as an array: it masks
+  and places the pixels there and hands Spark finished point batches,
+  so only surviving points cross into the JVM.
+
+Both routes end in :func:`project_points` (dtype casts, output names,
+AREA_SQL).  Nothing ever materializes a full raster.
 """
 
 from __future__ import annotations
@@ -194,6 +203,53 @@ def nodata_filter(pixels: DataFrame, value_col: str = "value") -> DataFrame:
 LON_SQL = "transform[2] + (col + 0.5D) * transform[0] + (row + 0.5D) * transform[1]"
 LAT_SQL = "transform[5] + (col + 0.5D) * transform[3] + (row + 0.5D) * transform[4]"
 
+
+def valid_pixels(a, nodata: float):
+    """Boolean array: the pixels of float64 ``a`` that hold data — not
+    NaN and not ``nodata`` (NaN when none is declared), compared in
+    float64 like the SQL ``CASE``."""
+    import numpy as np
+
+    return ~np.isnan(a) & (a != nodata)
+
+
+def points_from_windows(mask, others, nodata, transform, col_off, row_off):
+    """LON_SQL/LAT_SQL and the band-1 mask in numpy: one window's
+    points as an Arrow batch ``lon, lat, v0, …, vN`` (float64).
+
+    ``mask`` is band 1's window as a 2-D float64 array whose top-left
+    pixel is (``col_off``, ``row_off``) of the raster; ``others`` holds
+    bands 2..N over the same pixels (same shape, or None when a band
+    has no such window); ``nodata`` has one entry per band, band 1's
+    first.  Only pixels that :func:`valid_pixels` keeps in band 1
+    become rows, in row-major order like the posexplode; NaN or
+    ``nodata`` values of bands 2..N, and every value of a missing
+    window, come out NULL.  lon/lat use LON_SQL/LAT_SQL's operation
+    order on the same doubles, so both routes place a pixel at the
+    same bits."""
+    import numpy as np
+    import pyarrow as pa
+
+    idx = np.flatnonzero(valid_pixels(mask, nodata[0]))  # row-major, like pos
+    h, w = mask.shape
+    col = np.arange(w) + col_off + 0.5
+    row = np.arange(h) + row_off + 0.5
+    a, b, c, d, e, f = transform
+    # (c + col·a) + row·b per pixel, LON_SQL's order, as one grid add
+    lon = (c + col * a)[None, :] + (row * b)[:, None]
+    lat = (f + col * d)[None, :] + (row * e)[:, None]
+    arrays = [pa.array(x.ravel()[idx]) for x in (lon, lat, mask)]
+    for other, nd in zip(others, nodata[1:]):
+        if other is None:
+            arrays.append(pa.nulls(len(idx), pa.float64()))
+        else:
+            v = other.ravel()[idx]
+            arrays.append(pa.array(v, mask=~valid_pixels(v, nd)))
+    return pa.RecordBatch.from_arrays(
+        arrays, names=["lon", "lat", *(f"v{i}" for i in range(len(arrays) - 2))]
+    )
+
+
 #: Geodesic pixel area in m² from ``lat`` and ``transform`` (the
 #: reference computes one area per row of pixels; same formula here,
 #: applied per pixel):
@@ -208,6 +264,11 @@ AREA_SQL = (
 def _quote(name: str) -> str:
     """``name`` as a SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def affine_coords(pixels: DataFrame) -> DataFrame:
@@ -234,7 +295,7 @@ def raster2points(
     extra_cols: tuple[str, ...] = (),
     dtypes: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Full reference pipeline over a tile table: band 1 masks, bands
+    """Full reference pipeline over a TILE TABLE: band 1 masks, bands
     2..N contribute nullable value columns, output
     (lon, lat, val…[, area][, extra_cols]).
 
@@ -244,9 +305,13 @@ def raster2points(
     64 rows join 64 rows, broadcastable at any band count), then
     :func:`zipped_points` explodes the zipped payloads.  (The reference
     requires equal resolution across rasters, so co-tiling is a
-    precondition, exactly as there.)  GeoTIFF path inputs skip the
-    join: sources/minitiff.py::zipped_windows zips the bands inside
-    the decode and feeds :func:`zipped_points` directly.
+    precondition, exactly as there.)  A joined tile whose window
+    (col_off, row_off, width) differs from band 1's raises, once per
+    tile, instead of zipping pixels from different places — the case
+    ``validate=False`` lets through for rasters of other dims.  A
+    shorter or taller tile of the same width zips correctly by
+    position.  GeoTIFF path inputs take no part in this: their decode
+    emits points itself (sources/minitiff.py::zipped_windows).
     """
     if not bands:
         raise ValueError("need at least one band")
@@ -259,12 +324,27 @@ def raster2points(
         F.col("nodata").alias("nd0"),
         F.col("data").alias("d0"),
     )
+    cols = ["tile_id", "col_off", "row_off", "width", "transform", "nd0", "d0"]
     for i, b in enumerate(bands[1:], 1):
         other = tiles.filter(F.col("band_id") == b).select(
-            "tile_id", F.col("nodata").alias(f"nd{i}"), F.col("data").alias(f"d{i}")
+            "tile_id",
+            F.col("nodata").alias(f"nd{i}"),
+            F.col("data").alias(f"d{i}"),
+            *(F.col(c).alias(f"{c}{i}") for c in ("col_off", "row_off", "width")),
         )
         joined = joined.join(other, "tile_id", "left")
-    return zipped_points(joined, bands, col_names, calc_area, extra_cols, dtypes)
+        same = f"col_off{i} = col_off AND row_off{i} = row_off AND width{i} = width"
+        msg = (
+            "format_string('band %s tile %d covers (col_off, row_off, width) (%d, %d, %d), band"
+            f" %s (%d, %d, %d); bands must be co-tiled', {_sql_str(b)}, tile_id, col_off{i},"
+            f" row_off{i}, width{i}, {_sql_str(bands[0])}, col_off, row_off, width)"
+        )
+        cols += [
+            f"nd{i}",
+            f"CASE WHEN col_off{i} IS NULL OR ({same}) THEN d{i} ELSE raise_error({msg}) END"
+            f" AS d{i}",
+        ]
+    return zipped_points(joined.selectExpr(*cols), bands, col_names, calc_area, extra_cols, dtypes)
 
 
 def zipped_points(
@@ -275,29 +355,21 @@ def zipped_points(
     extra_cols: tuple[str, ...] = (),
     dtypes: dict[str, str] | None = None,
 ) -> DataFrame:
-    """The one explode/mask/affine core: band-zipped window rows
-    (tile_id, col_off, row_off, width, transform, nd0, d0, …, ndN, dN;
-    d{i} the row-major payload of ``bands[i]``, NULL when that band
-    has no such window) → points.  ONE posexplode of the arrays_zip'd
-    payloads melts all bands together; the per-pixel stream is never
-    shuffled — mask, affine, area and the sink all pipeline inside the
-    same stage.
+    """The JVM explode/mask/affine core of the tile-table route:
+    band-zipped window rows (tile_id, col_off, row_off, width,
+    transform, nd0, d0, …, ndN, dN; d{i} the row-major payload of
+    ``bands[i]``, NULL when that band has no such window) → points.
+    ONE posexplode of the arrays_zip'd payloads melts all bands
+    together; the per-pixel stream is never shuffled — mask, affine,
+    area and the sink all pipeline inside the same stage.  Its numpy
+    twin is :func:`points_from_windows`.
 
-    The plan is three SQL-text projections — the explode (NULL-padding
-    missing payloads), then values, dtype casts, ``col``/``row`` and
-    LON_SQL/LAT_SQL with the band-1 mask as a ``where``, then the
-    output columns with AREA_SQL — so building it costs about a hundred
-    py4j round trips instead of one per Column node.
-
-    ``dtypes`` maps band_id → source numpy dtype name; matching value
-    columns are cast from the float64 container type back to the
-    narrowest Spark type (see NUMPY_TO_SPARK_DTYPE) so output schemas
-    stay faithful to the source rasters.
+    The plan is SQL-text projections — the explode (NULL-padding
+    missing payloads), then the NoData ``CASE`` per band, ``col``/``row``
+    and LON_SQL/LAT_SQL with the band-1 mask as a ``where``, then
+    :func:`project_points` — so building it costs about a hundred py4j
+    round trips instead of one per Column node.
     """
-    names = col_names or [f"val{i+1}" for i in range(len(bands))]
-    if len(names) != len(bands):
-        raise ValueError("col_names must match bands")
-
     # A window absent from a secondary band leaves d{i} NULL, and
     # arrays_zip(d0, NULL) is NULL — posexplode would then emit ZERO
     # rows, silently dropping every band-1 pixel of that window.
@@ -319,15 +391,12 @@ def zipped_points(
         *[f"nd{i}" for i in range(len(bands))],
         f"posexplode(arrays_zip({', '.join(pads)})) AS (pos, z)",
     )
-    vals = []
-    for i, (b, name) in enumerate(zip(bands, names)):
-        raw = "z.d0" if i == 0 else f"z.`{i}`"
-        # NoData compare happens in the container type (double), THEN
-        # the survivor is cast back to the band's source dtype
-        v = f"CASE WHEN {raw} = nd{i} THEN NULL ELSE {raw} END"
-        if dtypes and b in dtypes:
-            v = f"CAST({v} AS {NUMPY_TO_SPARK_DTYPE[dtypes[b]]})"
-        vals.append(f"{v} AS {_quote(name)}")
+    # NoData compare happens in the container type (double);
+    # project_points casts survivors back to the band's source dtype
+    vals = [
+        f"CASE WHEN {raw} = nd{i} THEN NULL ELSE {raw} END AS v{i}"
+        for i, raw in enumerate(["z.d0", *(f"z.`{i}`" for i in range(1, len(bands)))])
+    ]
     # col/row are lateral aliases: lon/lat read them in the same select
     px = ex.selectExpr(
         "tile_id",
@@ -337,8 +406,38 @@ def zipped_points(
         *vals,
         f"{LON_SQL} AS lon",
         f"{LAT_SQL} AS lat",
-    ).where(f"{_quote(names[0])} IS NOT NULL")
-    out_cols = ["lon", "lat", *map(_quote, names)]
+    ).where("v0 IS NOT NULL")
+    return project_points(px, bands, col_names, calc_area, extra_cols, dtypes)
+
+
+def project_points(
+    px: DataFrame,
+    bands: list[str],
+    col_names: list[str] | None = None,
+    calc_area: bool = False,
+    extra_cols: tuple[str, ...] = (),
+    dtypes: dict[str, str] | None = None,
+) -> DataFrame:
+    """The output projection both routes share: masked points (``lon,
+    lat, v0, …, vN`` float64 with NoData already NULL, plus
+    ``transform`` when ``calc_area``) → ``lon, lat, <col_names>[,
+    area][, extra_cols]``, in one ``selectExpr``.
+
+    ``dtypes`` maps band_id → source numpy dtype name; matching value
+    columns are cast from the float64 container type back to the
+    narrowest Spark type (see NUMPY_TO_SPARK_DTYPE) so output schemas
+    stay faithful to the source rasters.  Area is AREA_SQL, per
+    surviving point, in the JVM.
+    """
+    names = col_names or [f"val{i+1}" for i in range(len(bands))]
+    if len(names) != len(bands):
+        raise ValueError("col_names must match bands")
+    cols = ["lon", "lat"]
+    for i, (b, name) in enumerate(zip(bands, names)):
+        v = f"v{i}"
+        if dtypes and b in dtypes:
+            v = f"CAST({v} AS {NUMPY_TO_SPARK_DTYPE[dtypes[b]]})"
+        cols.append(f"{v} AS {_quote(name)}")
     if calc_area:
-        out_cols.append(f"{AREA_SQL} AS area")
-    return px.selectExpr(*out_cols, *extra_cols)
+        cols.append(f"{AREA_SQL} AS area")
+    return px.selectExpr(*cols, *extra_cols)

@@ -20,13 +20,15 @@ Two distributed conversions share one decode kernel: a driver header
 pass lays the window grid (sources/geotiff.py::window_grid) as a local
 window list, already sliced into one partition per core, and
 ``mapInArrow`` tasks read only their own windows' byte ranges into
-float64 ndarrays that cross to the JVM as Arrow list arrays.
-``minitiff_to_tiles`` emits the tile table (one row per band and
-window); ``zipped_windows`` emits the band-zipped rows raster2df
-explodes (one row per window, mask-empty windows skipped before any
-other band is read).  For a tiled TIFF the engine's tile grid aligns
-1:1 with the file's tile grid by default, so each task decompresses
-exactly its own blocks (the COG access pattern).
+float64 ndarrays.  ``minitiff_to_tiles`` emits the tile table (one row
+per band and window, each window an Arrow list array).
+``zipped_windows`` emits finished points for raster2df: the band-1
+mask, NoData and the pixel-centre affine run in numpy inside the task
+(operators.grid.points_from_windows), so only surviving points cross
+to the JVM, and mask-empty windows are skipped before any other band
+is read.  For a tiled TIFF the engine's tile grid aligns 1:1 with the
+file's tile grid by default, so each task decompresses exactly its
+own blocks (the COG access pattern).
 
 Also supported since r11:
 
@@ -940,18 +942,6 @@ def _native_tile(hdr: MiniTiff) -> tuple[int, int]:
     return (hdr.block_width, hdr.block_height) if hdr.tiled else (512, 512)
 
 
-def _band_window(hdr: MiniTiff, tile: tuple[int, int], tile_id: int):
-    """(col_off, row_off, width, height) of window ``tile_id`` in the
-    row-major grid of ``tile``-shaped windows over ``hdr``'s raster —
-    window_grid's numbering — or None when the grid has no such window."""
-    tw, th = tile
-    per_row = -(-hdr.width // tw)
-    col_off, row_off = tile_id % per_row * tw, tile_id // per_row * th
-    if row_off >= hdr.height:
-        return None
-    return col_off, row_off, min(tw, hdr.width - col_off), min(th, hdr.height - row_off)
-
-
 def _header_reader(srcs):
     """Per-task header lookup for ``srcs`` entries (path, overview,
     mask, sample): each header is parsed on first use, then reused."""
@@ -963,11 +953,9 @@ def _header_reader(srcs):
 def _payload(a):
     """One-row Arrow ``list<double>`` over ``a``'s float64 buffer
     (no per-pixel Python objects), NaN pixels as NULL elements — the
-    tile table's contract; a null list when ``a`` is None."""
+    tile table's contract."""
     import pyarrow as pa
 
-    if a is None:
-        return pa.nulls(1, pa.list_(pa.float64()))
     values = pa.array(a.ravel(), from_pandas=True)
     return pa.ListArray.from_arrays(pa.array([0, a.size], pa.int32()), values)
 
@@ -993,87 +981,83 @@ def _tile_batches(batches, srcs):
             )
 
 
-def _zip_batches(batches, srcs, tile):
+def _read_clipped(
+    hdr: MiniTiff, col_off: int, row_off: int, width: int, height: int, sample: int
+):
+    """Band ``hdr``'s pixels at another band's window (col_off, row_off,
+    width, height): read clipped to this raster's extent and NaN-padded
+    back to the window's shape, or None when the window lies wholly
+    outside the raster (``validate=False`` inputs of other dims)."""
+    import numpy as np
+
+    w, h = min(width, hdr.width - col_off), min(height, hdr.height - row_off)
+    if w <= 0 or h <= 0:
+        return None
+    a = _read_window_array(hdr, col_off, row_off, w, h, sample)
+    if (h, w) == (height, width):
+        return a
+    out = np.full((height, width), np.nan)
+    out[:h, :w] = a
+    return out
+
+
+def _zip_batches(batches, srcs):
     """mapInArrow kernel of :func:`zipped_windows`.  For each window-list
     row it reads band 1's window and skips the window when no pixel
-    would survive the point filter downstream: NaN pixels arrive as
-    NULL, as does a NaN (undeclared) nodata, and ``value = nodata`` is
-    NULL.  Otherwise it reads the same ``tile_id`` window of every
-    other band and emits
-    one zipped row.  One batch per window, so a task holds one window's
-    payloads at a time."""
-    import numpy as np
-    import pyarrow as pa
+    holds data (operators.grid.valid_pixels).  Otherwise it reads every
+    other band at the same pixels (:func:`_read_clipped`) and yields
+    the window's points (operators.grid.points_from_windows).  One
+    batch per window, so a task holds one window's arrays at a time."""
+    from raster2points_spark.operators.grid import points_from_windows, valid_pixels
 
-    names = ["tile_id", "col_off", "row_off", "width", "transform"]
-    names += [n for i in range(len(srcs)) for n in (f"nd{i}", f"d{i}")]
     header = _header_reader(srcs)
-    hdr0, sample0 = header(0), srcs[0][3]
-    nd0 = hdr0.nodata
-    transform = pa.array([hdr0.transform], pa.list_(pa.float64()))
-    nodata = [
-        pa.array([header(i).nodata], pa.float64(), from_pandas=True) for i in range(len(srcs))
-    ]
+    hdrs = [header(i) for i in range(len(srcs))]
+    nodata = [h.nodata for h in hdrs]
     for batch in batches:
-        cols = [
-            batch.column(n).to_pylist()
-            for n in ("tile_id", "col_off", "row_off", "width", "height")
-        ]
-        for t, c, r, w, h in zip(*cols):
-            mask = _read_window_array(hdr0, c, r, w, h, sample0)
-            if not (~np.isnan(mask) & (mask != nd0)).any():
+        cols = [batch.column(n).to_pylist() for n in ("col_off", "row_off", "width", "height")]
+        for c, r, w, h in zip(*cols):
+            mask = _read_window_array(hdrs[0], c, r, w, h, srcs[0][3])
+            if not valid_pixels(mask, nodata[0]).any():
                 continue
-            row = [
-                pa.array([t], pa.int64()),
-                pa.array([c], pa.int32()),
-                pa.array([r], pa.int32()),
-                pa.array([w], pa.int32()),
-                transform,
-                nodata[0],
-                _payload(mask),
+            others = [
+                _read_clipped(hdrs[i], c, r, w, h, srcs[i][3]) for i in range(1, len(srcs))
             ]
-            for i in range(1, len(srcs)):
-                hdr = header(i)
-                win = _band_window(hdr, tile, t)
-                arr = None if win is None else _read_window_array(hdr, *win, srcs[i][3])
-                row += [nodata[i], _payload(arr)]
-            yield pa.RecordBatch.from_arrays(row, names=names)
+            yield points_from_windows(mask, others, nodata, hdrs[0].transform, c, r)
 
 
 def zipped_windows(
     spark: SparkSession, bands: list[tuple[MiniTiff, int]], partitions: int | None = None
 ) -> DataFrame:
-    """Band-zipped windows of GeoTIFF bands, decoded in ONE mapInArrow
-    stage: one row per window of band 1's grid that holds at least one
-    valid band-1 pixel, ``tile_id, col_off, row_off, width, transform,
-    nd0, d0, …, ndN, dN`` — the rows operators.grid.zipped_points
-    explodes.  ``bands`` pairs each band's header (at the level to
-    read) with its sample index, band 1 (the mask) first.
+    """Points of GeoTIFF bands, decoded in ONE mapInArrow stage:
+    ``lon, lat, v0, …, vN`` (float64) for every pixel whose band-1
+    value holds data, NaN and NoData values of bands 2..N as NULL —
+    the input of operators.grid.project_points.  ``bands`` pairs each
+    band's header (at the level to read) with its sample index, band 1
+    (the mask) first.
 
-    Every band is cut into band 1's window shape and contributes its
-    window with band 1's ``tile_id``; a band whose raster has no such
-    window (``validate=False`` inputs of other dims) contributes a NULL
-    payload, which the explode pads with NULL values — the tile-table
-    join's answer.  ``partitions`` repartitions the window list (not
-    the decoded payloads) before the decode."""
+    The window list is band 1's native block grid (:func:`_native_tile`);
+    every other band is read at the same pixel positions, so bands of
+    other block layouts or, with ``validate=False``, other dims zip
+    pixel by pixel — pixels a band does not cover come out NULL.
+    Windows with no valid band-1 pixel are skipped before any other
+    band is read.  ``partitions`` repartitions the window list (not the
+    decoded points) before the decode."""
     from raster2points_spark.io import local_df
 
     hdr = bands[0][0]
-    tile = _native_tile(hdr)
     srcs = [(h.path, h.overview, h.is_mask, s) for h, s in bands]
     wins = local_df(
         spark,
         [
-            (w["tile_id"], w["col_off"], w["row_off"], w["width"], w["height"])
-            for w in window_grid(hdr.width, hdr.height, *tile)
+            (w["col_off"], w["row_off"], w["width"], w["height"])
+            for w in window_grid(hdr.width, hdr.height, *_native_tile(hdr))
         ],
-        "tile_id long, col_off int, row_off int, width int, height int",
+        "col_off int, row_off int, width int, height int",
     )
     if partitions:
         wins = wins.repartition(partitions)
-    schema = "tile_id long, col_off int, row_off int, width int, transform array<double>, "
-    schema += ", ".join(f"nd{i} double, d{i} array<double>" for i in range(len(srcs)))
-    return wins.mapInArrow(lambda it: _zip_batches(it, srcs, tile), schema)
+    schema = ", ".join(["lon double", "lat double", *(f"v{i} double" for i in range(len(srcs)))])
+    return wins.mapInArrow(lambda it: _zip_batches(it, srcs), schema)
 
 
 CATALOG_SCHEMA_DDL = (

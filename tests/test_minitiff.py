@@ -2087,6 +2087,44 @@ def test_paths_match_tile_join_validate_false_other_dims(spark, tmp_path):
     assert sum(r[3] is not None for r in rows) == 4
 
 
+def test_paths_zip_other_dims_by_pixel_position(spark, tmp_path):
+    """validate=False, a 6x4 mask and a 5x3 value raster on 2x2 tiles:
+    band 2 is read at band 1's pixels, so every point carries the value
+    of its own (row, col), and NULL where the value raster has no such
+    pixel.  The tile-table route zips by tile_id, and here tile 2 is
+    (4, 0, 2 wide) in band 1 but (4, 0, 1 wide) in band 2, so it refuses
+    instead of zipping pixels from different places."""
+    from raster2points_spark.api import raster2df
+    from raster2points_spark.sources.minitiff import minitiff_to_tiles
+
+    m = str(tmp_path / "mask.tif")
+    v = str(tmp_path / "value.tif")
+    _write_tiff(m, [float(i + 1) for i in range(24)], 6, 4, tile=(2, 2))
+    _write_tiff(v, [100.0 + r * 10 + c for r in range(3) for c in range(5)], 5, 3, tile=(2, 2))
+    rows = raster2df(spark, [m, v], ["b1", "b2"], col_names=["m", "v"], validate=False).collect()
+    assert len(rows) == 24
+    for r in rows:
+        row, col = divmod(int(r.m) - 1, 6)
+        assert r.v == (100.0 + row * 10 + col if row < 3 and col < 5 else None), r
+    tiles = minitiff_to_tiles(spark, [m, v])
+    with pytest.raises(Exception, match="bands must be co-tiled"):
+        raster2df(spark, tiles, ["b1", "b2"], validate=False).collect()
+
+
+def test_paths_match_tile_join_validate_false_shorter_band(spark, tmp_path):
+    """A value raster as wide as the mask but shorter cuts into tiles
+    of the mask's offsets and widths, so the tile-table route zips it
+    by position too (its payloads are just shorter), and both routes
+    give NULL below its last row."""
+    m = str(tmp_path / "mask.tif")
+    v = str(tmp_path / "value.tif")
+    _write_tiff(m, [float(i + 1) for i in range(24)], 6, 4, tile=(2, 2))
+    _write_tiff(v, [float(100 + i) for i in range(18)], 6, 3, tile=(2, 2))
+    rows = _assert_paths_match_tile_join(spark, [m, v], ["b1", "b2"], validate=False)
+    assert len(rows) == 24
+    assert all(r[3] == (r[2] + 99.0 if r[2] <= 18 else None) for r in rows)
+
+
 def test_paths_mixed_block_layouts_zip_by_position(spark, tmp_path):
     """Co-registered bands with different block layouts (tiled mask,
     striped values) are cut into the mask's windows, so every point
@@ -2158,10 +2196,11 @@ def test_zip_kernel_skips_mask_empty_windows_without_reading_other_bands(
     monkeypatch.setattr(minitiff, "_decode_block", counting)
     srcs = [(m, 0, False, 0), (v, 0, False, 0)]
     wins = _window_batch([(0, 0, 0, 2, 2), (1, 2, 0, 2, 2)])
-    batches = list(minitiff._zip_batches(iter([wins]), srcs, (2, 2)))
-    assert [b.column("tile_id").to_pylist() for b in batches] == [[1]]
+    batches = list(minitiff._zip_batches(iter([wins]), srcs))
+    assert len(batches) == 1
     assert sorted(decoded) == sorted([(m, 0, 0), (m, 1, 0), (v, 1, 0)])
-    assert batches[0].column("d1").to_pylist() == [[2.0, 3.0, 6.0, 7.0]]
+    assert batches[0].column("v0").to_pylist() == [3.0, 4.0, 7.0, 8.0]
+    assert batches[0].column("v1").to_pylist() == [2.0, 3.0, 6.0, 7.0]
 
 
 def test_decode_kernels_yield_one_batch_per_window(tmp_path):
@@ -2172,9 +2211,9 @@ def test_decode_kernels_yield_one_batch_per_window(tmp_path):
     p = str(tmp_path / "a.tif")
     _write_tiff(p, [float(i + 1) for i in range(12)], 6, 2, tile=(2, 2))
     wins = _window_batch([(0, 0, 0, 2, 2), (1, 2, 0, 2, 2), (2, 4, 0, 2, 2)])
-    zipped = list(minitiff._zip_batches(iter([wins]), [(p, 0, False, 0)], (2, 2)))
+    zipped = list(minitiff._zip_batches(iter([wins]), [(p, 0, False, 0)]))
     assert len(zipped) == 3
-    assert [b.column("d0").to_pylist()[0] for b in zipped][2] == [5.0, 6.0, 11.0, 12.0]
+    assert [b.column("v0").to_pylist() for b in zipped][2] == [5.0, 6.0, 11.0, 12.0]
 
     import pyarrow as pa
 

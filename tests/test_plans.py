@@ -857,9 +857,10 @@ def test_raster_melt_path_never_shuffles_pixels(spark, registry):
 
 def test_geotiff_path_ingest_is_one_arrow_decode_without_join(spark, registry):
     # The TIFF front door (scan_geotiff_mini, GeoTIFF PATH inputs): one
-    # MapInArrow stage does all pixel I/O and zips the bands per window,
-    # so the plan is that decode under exactly one posexplode (Generate)
-    # — no join, no Exchange, and no other Python node.
+    # MapInArrow stage does all pixel I/O, zips the bands per window and
+    # emits finished points, so the plan is that decode under one
+    # projection — no explode (Generate), no join, no Exchange, and no
+    # other Python node.
     plan = _formatted_plan(spark, registry["scan_geotiff_mini"].fn(spark, SF001))
     tree = plan[: plan.index("\n\n")]
     assert tree.count("MapInArrow") == 1
@@ -867,7 +868,7 @@ def test_geotiff_path_ingest_is_one_arrow_decode_without_join(spark, registry):
         assert python_node not in tree, f"{python_node}: the decode is the one Python node"
     assert "Join" not in tree and "CartesianProduct" not in tree, "bands zip inside the decode"
     assert "Exchange" not in tree, "the window list is sliced locally, never shuffled"
-    assert tree.count("Generate") == 1, "exactly one posexplode of the zipped bands"
+    assert "Generate" not in tree, "the decode emits points; nothing explodes pixels"
     # tile-table inputs (raster_big) keep the tile-level join, and the
     # posexplode must sit ABOVE it so the join carries packed tile
     # arrays, never the exploded pixel stream (formatted plans print

@@ -490,3 +490,98 @@ def test_fn_cast_guard_superset_of_castable(spark):
     ).collect()
     for r in rows:
         assert r["guarded"] == r["plain"], (repr(r["s"]), r["guarded"], r["plain"])
+
+
+# --- the two copies of the point formula: numpy kernel vs SQL explode ---
+
+_finite = st.floats(-1e6, 1e6, allow_nan=False, allow_infinity=False)
+_rotation = _finite.filter(lambda x: x != 0.0)
+
+
+@st.composite
+def _point_windows(draw):
+    """Windows of one random raster stack: each is (col_off, row_off,
+    band arrays as float64 — None for a missing secondary window —, and
+    the row count each secondary band really covers, fewer than the
+    window's for a band clipped at its raster's edge)."""
+    import numpy as np
+
+    dtype = draw(st.sampled_from(["u1", "i2", "f4"]))
+    values = {
+        "u1": st.integers(0, 255),
+        "i2": st.integers(-32768, 32767),
+        "f4": st.floats(width=32, allow_infinity=False),  # NaN included
+    }[dtype]
+    n_bands = draw(st.integers(1, 3))
+    a, c, e, f = (draw(_finite) for _ in range(4))
+    transform = [a, draw(_rotation), c, draw(_rotation), e, f]
+    windows = []
+    for _ in range(draw(st.integers(1, 3))):
+        h, w = draw(st.integers(1, 4)), draw(st.integers(1, 4))
+        offs = draw(st.integers(0, 10**6)), draw(st.integers(0, 10**6))
+        bands, covered = [], []
+        for i in range(n_bands):
+            raw = draw(st.lists(values, min_size=h * w, max_size=h * w))
+            arr, rows = np.array(raw, dtype=dtype).astype("f8").reshape(h, w), h
+            kind = draw(st.sampled_from(["full", "missing", "short"])) if i else "full"
+            if kind == "missing":
+                arr, rows = None, 0
+            elif kind == "short" and h > 1:
+                rows = draw(st.integers(1, h - 1))
+                arr[rows:] = np.nan
+            bands.append(arr)
+            covered.append(rows)
+        windows.append((*offs, bands, covered))
+    # nodata per band: undeclared, NaN, or a value that occurs in the data
+    seen = [float(x) for _, _, bs, _ in windows for b in bs if b is not None for x in b.ravel()]
+    nodata = [draw(st.one_of(st.none(), st.just(math.nan), st.sampled_from(seen)))
+              for _ in range(n_bands)]
+    return transform, nodata, windows
+
+
+def _bits(row):
+    import struct
+
+    return tuple(None if v is None else struct.pack(">d", v) for v in row)
+
+
+@given(case=_point_windows())
+@settings(max_examples=15, deadline=None)  # each example runs one Spark job
+def test_kernel_points_match_sql_explode_bit_for_bit(spark, case):
+    """operators.grid.points_from_windows (the GeoTIFF-path kernel) and
+    zipped_points (the tile-table explode) emit the same rows, bit for
+    bit in lon, lat and every value: rotated transforms, offsets, edge
+    windows, NaN/nodata pixels, NaN or undeclared nodata, missing and
+    clipped secondary windows, u1/i2/f4 sources.  The tile-table row
+    follows its contract: NaN pixels as NULL elements, a clipped band
+    as a payload of only the rows it covers."""
+    import numpy as np
+    import pyarrow as pa
+
+    from raster2points_spark.operators.grid import points_from_windows, zipped_points
+
+    transform, nodata, windows = case
+    n = len(nodata)
+    # the kernel reads an undeclared nodata as NaN, like the TIFF header
+    nd_np = [math.nan if nd is None else nd for nd in nodata]
+    kernel = pa.Table.from_batches(
+        [points_from_windows(b[0], b[1:], nd_np, transform, co, ro) for co, ro, b, _ in windows]
+    )
+    want = sorted(map(_bits, zip(*kernel.to_pydict().values())), key=repr)
+
+    def payload(arr, rows):
+        if arr is None:
+            return None
+        return [None if np.isnan(x) else float(x) for x in arr[:rows].ravel()]
+
+    rows = []
+    for t, (co, ro, bands, covered) in enumerate(windows):
+        row = [t, co, ro, bands[0].shape[1], transform]
+        for arr, nd, k in zip(bands, nodata, covered):
+            row += [nd, payload(arr, k)]
+        rows.append(row)
+    schema = "tile_id long, col_off int, row_off int, width int, transform array<double>, "
+    schema += ", ".join(f"nd{i} double, d{i} array<double>" for i in range(n))
+    zipped = spark.createDataFrame(rows, schema)
+    got = zipped_points(zipped, [f"b{i}" for i in range(n)]).collect()
+    assert sorted(map(_bits, got), key=repr) == want

@@ -71,7 +71,7 @@ SHOWCASE = [
     ("agg_salted_twophase", "skew-safe aggregate: partial+final on (key, salt) behind one Exchange, re-aggregate on the bare key behind a second - the literal two-phase plan"),
     ("raster_focal_mean", "stencil scatter-gather: each valid pixel scatters to its k neighborhood centers, ONE partial-aggregated hashpartitioning Exchange gathers - no per-offset self-join of the pixel relation"),
     ("ml_kmeans_lloyd", "iterative loop discipline: the final plan reads the localCheckpoint'd relation (Scan ExistingRDD) - per-round lineage TRUNCATED so plan depth is constant in iteration count; centroids broadcast inside each round"),
-    ("scan_geotiff_mini", "TIFF ingest job shape: driver reads HEADERS only; MapInPandas tasks do all pixel I/O, each seeking exactly its own tiles' byte ranges (COG access pattern); the band zip joins TILE rows (packed arrays - Generate sits ABOVE the join) so every Exchange carries tile-granularity rows, and the exploded pixel stream itself is never shuffled"),
+    ("scan_geotiff_mini", "TIFF ingest job shape: driver reads HEADERS only; ONE MapInArrow stage over a local window list does all pixel I/O, each task seeking exactly its own windows' byte ranges (COG access pattern), zipping the bands per window and emitting finished points (band-1 mask, NoData, affine in numpy) - no join, no Exchange, no Generate; the JVM runs one projection (casts, names)"),
     ("fn_utm_forward", "real geodesy as a zero-shuffle projection: the whole Snyder transverse-Mercator series is ONE codegen stage fused into the tile melt - no Exchange anywhere; at 100 TB the reprojection cost is pure map-side compute proportional to pixels"),
     ("raster_focal_gaussian_sep", "separable convolution: TWO scatter-gather passes (Generate x2 above the melt's posexplode), each a partial-aggregated hashpartitioning Exchange of 5x rows - never the direct form's single 25x scatter; shuffle volume 2k vs k^2 for any k-tap separable kernel"),
     ("stat_ks_test", "exact two-sample KS over the COLLAPSED value axis: per-distinct-value counts partial-aggregate map-side; the single-partition ECDF window touches |distinct prices| rows, never the fact; totals are a 1-row broadcast; final max-reduce to one row"),
