@@ -12,8 +12,10 @@ All diagnostics go to stderr.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
 import time
 
@@ -176,6 +178,40 @@ HEADLINE = [
     "raster_focal_gaussian_sep",
     "stat_ks_test",
 ]
+
+
+def bench_detail_path(repo: str, cpus: int, host_cpus: int, rnd: str | None = None) -> str:
+    """The detail file a run at ``cpus`` cores on a ``host_cpus``-core
+    host writes.
+
+    The round tag is ``rnd`` (SPARK_GRAFT_ROUND) when set, else inferred
+    from the newest committed ``BENCH_r{N}.json``.  A full-core run
+    writes the round file ``reports/bench_r{N}_detail.json`` of the round
+    being run: N+1 once round N's detail file exists (a hard-coded
+    default silently overwrote the PRIOR round's detail), N while it
+    does not (a rerun after ``BENCH_r{N}.json`` landed is still round
+    N).  A run below the host's core count is a scaling sample, not a
+    round: it never creates or advances a round file and writes
+    ``reports/bench_r{N}_c{cpus}_detail.json`` of the newest benched
+    round, like ``BENCH_r16_c8.json``.
+    """
+    full_core = cpus >= host_cpus
+    if not rnd:
+        benched = [
+            int(m.group(1))
+            for f in glob.glob(os.path.join(repo, "BENCH_r*.json"))
+            if (m := re.search(r"BENCH_r(\d+)\.json$", f))
+        ]
+        n = max(benched, default=0)
+        round_done = os.path.exists(os.path.join(repo, "reports", f"bench_r{n}_detail.json"))
+        if not full_core:
+            rnd = f"r{max(n, 1)}"
+        elif n > 0 and not round_done:
+            rnd = f"r{n}"
+        else:
+            rnd = f"r{n + 1}"
+    name = f"bench_{rnd}_detail.json" if full_core else f"bench_{rnd}_c{cpus}_detail.json"
+    return os.path.join(repo, "reports", name)
 
 
 def main() -> int:
@@ -383,39 +419,16 @@ def main() -> int:
     # stdout gets ONE COMPACT line (<256 bytes).  Round 6 lesson: the
     # driver truncates long stdout (BENCH_r06 captured only the tail of
     # a ~4 KB line → "parsed": null, zero driver-side perf evidence).
-    # Detail file round tag: SPARK_GRAFT_ROUND when set, else inferred
-    # as newest committed BENCH_r{N}.json + 1 (the round being run) —
-    # a hard-coded default silently overwrote the PRIOR round's detail
-    # when the driver ran bench without the env var.
     repo = os.path.dirname(os.path.abspath(__file__))
-    rnd = os.environ.get("SPARK_GRAFT_ROUND")
-    if not rnd:
-        import glob as _glob
-        import re as _re
-
-        benched = [
-            int(m.group(1))
-            for f in _glob.glob(os.path.join(repo, "BENCH_r*.json"))
-            if (m := _re.search(r"BENCH_r(\d+)\.json$", f))
-        ]
-        n = max(benched, default=0)
-        # A BENCH_r{n} whose detail file hasn't been written yet means
-        # THIS run is still round n (a rerun after the driver landed
-        # the BENCH file), not round n+1 — naively inferring n+1 would
-        # mislabel this round's evidence as next round's and leave the
-        # real detail file stale (r8 ADVICE).
-        if n > 0 and not os.path.exists(
-            os.path.join(repo, "reports", f"bench_r{n}_detail.json")
-        ):
-            rnd = f"r{n}"
-        else:
-            rnd = f"r{n + 1}"
+    detail_path = bench_detail_path(
+        repo, cpus, len(os.sched_getaffinity(0)), os.environ.get("SPARK_GRAFT_ROUND")
+    )
+    if not os.environ.get("SPARK_GRAFT_ROUND"):
         print(
-            f"bench: round tag inferred as {rnd} from BENCH_r*.json "
+            f"bench: round tag inferred from BENCH_r*.json for {os.path.basename(detail_path)} "
             f"(set SPARK_GRAFT_ROUND to override)",
             file=sys.stderr,
         )
-    detail_path = os.path.join(repo, "reports", f"bench_{rnd}_detail.json")
     os.makedirs(os.path.dirname(detail_path), exist_ok=True)
     # Same-day sample history (VERDICT r12 #5): every run of this
     # round APPENDS its summary to the detail's "same_day_samples"
