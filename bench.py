@@ -22,7 +22,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from raster2points_spark.registry import load_all
+from raster2points_spark.runner import noop, run_key, warm
 from raster2points_spark.session import get_spark
+
+# Watchdog: single-node runs occasionally hit a pathological stall
+# (observed 180s on a query whose steady state is 3s).  Any sequential
+# run exceeding RUN_CAP_S is cancelled; the other passes still supply
+# a sample.
+RUN_CAP_S = 75.0
 
 # Representative spread: scan, filter, agg, star join, window, asof,
 # raster pipeline, and (as they land) LLM-pipeline ops.
@@ -214,6 +221,16 @@ def bench_detail_path(repo: str, cpus: int, host_cpus: int, rnd: str | None = No
     return os.path.join(repo, "reports", name)
 
 
+def _split(r: dict) -> dict:
+    """A run_key record without its action result, seconds rounded."""
+    return {
+        "build_s": round(r["build_s"], 3),
+        "exec_s": round(r["exec_s"], 3),
+        "build_jobs": r["build_jobs"],
+        "exec_jobs": r["exec_jobs"],
+    }
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
@@ -225,67 +242,43 @@ def main() -> int:
     registry = load_all()
     spark = get_spark("bench")
 
-    # Warm the JVM (codegen), the parquet reader and the Python worker
-    # pool so per-query numbers measure the plan, not cold-start.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    try:
-        from pyspark.sql import functions as F
-        from pyspark.sql.functions import pandas_udf
-
-        from raster2points_spark.io import table
-
-        table(spark, sf_dir, "lineitem").select("l_orderkey").limit(10).collect()
-
-        @pandas_udf("double")
-        def _warm(v):
-            return v * 1.0
-
-        spark.range(100).select(_warm(F.col("id").cast("double"))).collect()
-    except Exception as exc:  # pragma: no cover
-        print(f"bench: warmup partial: {exc}", file=sys.stderr)
+    warm(spark, sf_dir)
+    keys = [k for k in HEADLINE if k in registry]
 
     # Three full passes over the list, best-of per key: this host has
     # bursty multi-second "slow eras" (co-tenant CPU steal, GC) that
     # hit ADJACENT runs, so back-to-back repeats of one key can all
     # land in the same era.  Separating the samples by whole passes
     # decorrelates them; the min is the steady-state number.
-    # Watchdog: single-node runs occasionally hit a pathological stall
-    # (observed 180s on a query whose steady state is 3s).  Cancel any
-    # run exceeding RUN_CAP_S — the other pass still supplies a sample.
-    import threading
-
-    RUN_CAP_S = float(os.environ.get("SPARK_GRAFT_BENCH_RUN_CAP", "75"))
-
-    runs_by_key: dict[str, list[float]] = {}
-    for _pass in range(3):
-        for key in HEADLINE:
-            spec = registry.get(key)
-            if spec is None:
-                continue
-            done = threading.Event()
-            timer = threading.Timer(
-                RUN_CAP_S, lambda: done.is_set() or spark.sparkContext.cancelAllJobs()
-            )
-            timer.start()
-            try:
-                t0 = time.time()
-                df = spec.fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                runs_by_key.setdefault(key, []).append(time.time() - t0)
-            except Exception as exc:  # pragma: no cover - bench robustness
-                print(f"bench: {key} pass {_pass} FAILED: {exc}", file=sys.stderr)
-            finally:
-                done.set()
-                timer.cancel()
     # NOTE on cache hygiene: unlike tools/diff_oracle.py (210 keys, one
-    # session — clears the cache between keys), bench deliberately does
-    # NOT clearCache between runs.  Spark's CacheManager matches
+    # session — clears the cache between keys), bench deliberately runs
+    # warm (run_key cold=False).  Spark's CacheManager matches
     # identical logical plans, so passes 2/3 of keys that persist()
     # reused intermediates (dedup_near's signature index, sim_ivf's
     # assignment index, graph_pagerank's out-degrees) run warm — which
     # is the steady-state-service semantic min-of-3 documents above.
     # Clearing between runs was measured to cost those keys 1.7-2.2x
     # (r6 trial) by re-charging index builds to every pass.
+    import threading
+
+    runs_by_key: dict[str, list[float]] = {}
+    splits_by_key: dict[str, list[dict]] = {}
+    for _pass in range(3):
+        for key in keys:
+            done = threading.Event()
+            timer = threading.Timer(
+                RUN_CAP_S, lambda: done.is_set() or spark.sparkContext.cancelAllJobs()
+            )
+            timer.start()
+            try:
+                r = run_key(spark, key, sf_dir, noop, cold=False)
+                runs_by_key.setdefault(key, []).append(r["build_s"] + r["exec_s"])
+                splits_by_key.setdefault(key, []).append(_split(r))
+            except Exception as exc:  # pragma: no cover - bench robustness
+                print(f"bench: {key} pass {_pass} FAILED: {exc}", file=sys.stderr)
+            finally:
+                done.set()
+                timer.cancel()
 
     timings: dict[str, float] = {}
     total = 0.0
@@ -373,15 +366,10 @@ def main() -> int:
     # throughput — what a real multi-tenant service sees.
     batched_sec = None
     batched_passes: list[float] = []
+    batched_splits: dict[str, list[dict]] = {}
     batched_err = 0
     try:
         from concurrent.futures import ThreadPoolExecutor
-
-        def _run_one(key: str) -> None:
-            spec = registry.get(key)
-            if spec is None:
-                return
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
         # pool=16 measured best on local[32] (r8: 12.5-14.4 s vs
         # 14.8-16.7 s at pool=8, warmed, min/typ of repeated passes) —
@@ -402,13 +390,18 @@ def main() -> int:
         for _pass in range(2):
             bt0 = time.time()
             with ThreadPoolExecutor(max_workers=16) as pool:
-                futures = [pool.submit(_run_one, k) for k in HEADLINE]
-                errs = [f.exception() for f in futures]
+                futures = {
+                    k: pool.submit(run_key, spark, k, sf_dir, noop, cold=False) for k in keys
+                }
+                errs = {k: f.exception() for k, f in futures.items()}
             batched_passes.append(round(time.time() - bt0, 3))
-            batched_err += sum(1 for e in errs if e is not None)
+            batched_err += sum(1 for e in errs.values() if e is not None)
+            for k, f in futures.items():
+                if errs[k] is None:
+                    batched_splits.setdefault(k, []).append(_split(f.result()))
         batched_sec = min(batched_passes)
         print(
-            f"bench: batched passes {batched_passes}s over {len(HEADLINE)} keys "
+            f"bench: batched passes {batched_passes}s over {len(keys)} keys "
             f"(pool=16, headline=min={batched_sec}s, {batched_err} errors)",
             file=sys.stderr,
         )
@@ -543,6 +536,11 @@ def main() -> int:
                     for k in timings
                     if k in runs_by_key
                 },
+                # the same runs split into plan build (spec.fn) and the
+                # noop write, with each phase's Spark job count
+                # (runner.run_key), and the batched passes' split per key
+                "query_splits": {k: splits_by_key[k] for k in timings},
+                "batched_splits": batched_splits,
                 "comparator": {
                     "engine": "duckdb",
                     "total_sec": round(sum(duck_timings.values()), 3),

@@ -37,19 +37,6 @@ from pyspark.sql import functions as F
 #: WGS84 semi-major axis, metres — radius used for geodesic pixel area.
 WGS84_RADIUS = 6378137.0
 
-TILE_COLS = (
-    "band_id",
-    "tile_id",
-    "col_off",
-    "row_off",
-    "width",
-    "height",
-    "transform",
-    "nodata",
-    "dtype",
-    "data",
-)
-
 #: numpy source dtype → narrowest Spark SQL type that holds it.  The
 #: tile payload travels as array<double> (the container type); value
 #: columns are cast back so e.g. a uint8 land-cover raster emits an

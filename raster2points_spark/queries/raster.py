@@ -2337,35 +2337,6 @@ def raster_extent_prune(spark, sf_dir):
     )
 
 
-_LEVEL_PICK_DIST_THRESHOLD = 256  # survivor count above which level picks run executor-side
-
-
-def _pick_levels(spark, path_factors, dist_threshold=_LEVEL_PICK_DIST_THRESHOLD):
-    """Per-file overview-level picks for a survivor list, threshold-
-    dispatched (VERDICT r13 #4): at or below ``dist_threshold``
-    survivors the picks run as a driver loop (sub-ms local header
-    reads, zero Spark jobs); above it they run
-    executor-side via pick_overviews_distributed so a 100k-survivor
-    mosaic parallelizes its header I/O.  Both paths share
-    _pick_overview_header, so level choices are identical by
-    construction (pinned by test_overview_prune_dispatch_parity).
-    Returns {path: level} keyed by the FULL input path (ADVICE r14:
-    basename keying silently collided same-named files in different
-    directories); callers that want basenames take them themselves."""
-    from raster2points_spark.sources.minitiff import (
-        pick_overview,
-        pick_overviews_distributed,
-    )
-
-    pairs = list(path_factors)
-    if len(pairs) > dist_threshold:
-        return {
-            r.path: r.level
-            for r in pick_overviews_distributed(spark, pairs).collect()
-        }
-    return {p: pick_overview(p, f) for p, f in pairs}
-
-
 @register(
     "raster_overview_prune",
     oracle="""
@@ -2395,14 +2366,16 @@ def raster_overview_prune(spark, sf_dir):
     golden VALUES answer derivable from the committed fixtures by hand.
 
     Scale shape: catalog prune ∝ headers; level pick ∝ surviving
-    headers (pooled reads); pixel I/O ∝ surviving tiles at the CHOSEN
-    level ∩ bbox — the two-level prune of raster_extent_prune with the
-    pyramid as a third, multiplicative lever."""
+    headers (a driver loop of header reads); pixel I/O ∝ surviving
+    tiles at the CHOSEN level ∩ bbox — the two-level prune of
+    raster_extent_prune with the pyramid as a third, multiplicative
+    lever."""
     import os as _os
 
     from raster2points_spark.sources.minitiff import (
         minitiff_catalog,
         minitiff_to_tiles,
+        pick_overview,
     )
     from raster2points_spark.queries._util import REPO_ROOT
 
@@ -2422,14 +2395,10 @@ def raster_overview_prune(spark, sf_dir):
         .select("file", ((F.col("x1") - F.col("x0")) / F.col("width")).alias("res"))
         .collect()
     )
-    # (b) cheapest sufficient level per survivor (header-only I/O) —
-    # threshold-dispatched (_pick_levels): small survivor lists pick
-    # on the driver, large ones executor-side
+    # (b) cheapest sufficient level per survivor (header-only I/O)
     levels = {
-        _os.path.basename(p): lvl
-        for p, lvl in _pick_levels(
-            spark, [(_os.path.join(d, r.file), target_res / r.res) for r in hit]
-        ).items()
+        r.file: pick_overview(_os.path.join(d, r.file), target_res / r.res)
+        for r in hit
     }
     # (c) one tile read per distinct level, union — each branch reads
     # only that level's blocks and tags rows with the level it chose

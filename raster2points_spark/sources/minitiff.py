@@ -839,7 +839,6 @@ def minitiff_to_tiles(
     tile_size: int | None = None,
     overview_level: int = 0,
     internal_mask: bool = False,
-    decimation: float | None = None,
 ) -> DataFrame:
     """Distributed GeoTIFF → tile-table conversion: driver header pass
     → window-grid rows → executors read their own windows via
@@ -867,24 +866,9 @@ def minitiff_to_tiles(
     so unioning it with the image band and running the standard
     mask-first chain drops masked pixels exactly like a separate mask
     raster would.
-
-    ``decimation=f`` selects each file's overview PER FILE via
-    :func:`pick_overview` (the coarsest level whose decimation ≤ f —
-    GDAL's rule), so a mixed mosaic where some files carry pyramids
-    and some don't still reads the cheapest valid level of each;
-    mutually exclusive with an explicit ``overview_level``.
     """
-    if decimation is not None and overview_level:
-        raise ValueError("pass overview_level OR decimation, not both")
 
     def _resolve(p: str) -> MiniTiff:
-        # level selection + final header parse in ONE worker call:
-        # the old shape ran pick_overview serially on the driver and
-        # then re-parsed the same headers in the pool — doubling
-        # header I/O and serializing storage latency at
-        # thousands-of-COGs scale (ADVICE r12)
-        if decimation is not None:
-            return _pick_overview_header(p, decimation, mask=internal_mask)
         return read_header(p, overview=overview_level, mask=internal_mask)
 
     meta = []
@@ -1068,24 +1052,6 @@ CATALOG_SCHEMA_DDL = (
 )
 
 
-def _pick_overview_header(path: str, factor: float, mask: bool = False) -> MiniTiff:
-    """Level selection AND the selected level's header in one pass:
-    parse full-res once, scan the pyramid for the coarsest level whose
-    decimation ≤ ``factor``, and return THAT level's header — reusing
-    the already-parsed header instead of a second read (the serial
-    pick-then-reparse shape doubled header I/O, ADVICE r12)."""
-    full = read_header(path, overview=0)
-    best_k, best_dec, best_h = 0, 1.0, full
-    for k in range(1, full.n_overviews + 1):
-        h = read_header(path, overview=k)
-        dec = full.width / h.width
-        if dec <= factor + 1e-9 and dec > best_dec:
-            best_k, best_dec, best_h = k, dec, h
-    if mask:  # mask SubIFD hangs off the chosen level; needs its own parse
-        return read_header(path, overview=best_k, mask=True)
-    return best_h
-
-
 def pick_overview(path: str, factor: float) -> int:
     """Select the COG overview level for a requested decimation
     factor: the COARSEST IFD whose decimation (full_width /
@@ -1093,36 +1059,13 @@ def pick_overview(path: str, factor: float) -> int:
     selection rule, so a factor-4 query reads the 1/16-bytes level
     when the pyramid has one and degrades toward full resolution when
     it doesn't.  factor < 2 (or no overviews) → 0 (full res)."""
-    return _pick_overview_header(path, factor).overview
-
-
-def pick_overviews_distributed(spark: SparkSession, path_factors) -> DataFrame:
-    """Executor-side twin of :func:`pick_overview` for large mosaics:
-    ``path_factors`` is a list of (path, decimation_factor) pairs; the
-    per-file pyramid scan (header-only I/O, a few KB per file) runs as
-    mapInPandas over the pair list — the `minitiff_catalog` shape — so
-    a 100k-survivor catalog doesn't serialize 100k header
-    reads in a driver loop (VERDICT r13 #4).  Returns (path, level);
-    the result is metadata-sized (one row per file), the same
-    driver-sized listing Spark's own file index collects.  Level
-    choices are IDENTICAL to the driver-side pick_overview — both
-    paths share `_pick_overview_header`."""
-    import pandas as pd
-
-    def parse(batches):
-        for pdf in batches:
-            rows = [
-                {"path": p, "level": _pick_overview_header(p, float(f)).overview}
-                for p, f in zip(pdf["path"], pdf["factor"])
-            ]
-            yield pd.DataFrame(rows, columns=["path", "level"])
-
-    from raster2points_spark.io import local_df
-
-    pairs = list(path_factors)
-    files = local_df(spark, pairs, "path string, factor double")
-    n_parts = max(1, min(len(pairs) // 1000 + 1, 256))
-    return files.repartition(n_parts).mapInPandas(parse, "path string, level int")
+    full = read_header(path, overview=0)
+    best_k, best_dec = 0, 1.0
+    for k in range(1, full.n_overviews + 1):
+        dec = full.width / read_header(path, overview=k).width
+        if dec <= factor + 1e-9 and dec > best_dec:
+            best_k, best_dec = k, dec
+    return best_k
 
 
 def minitiff_catalog(spark: SparkSession, paths: list[str]) -> DataFrame:

@@ -1922,31 +1922,6 @@ def test_pick_overview_matches_gdal_rule(tmp_path):
     assert pick_overview(flat, 16.0) == 0
 
 
-def test_minitiff_to_tiles_decimation_per_file(spark, tmp_path):
-    """decimation=f picks each file's overview independently: a file
-    with a pyramid reads its level, a flat file stays full-res, and
-    the two coexist in one tile table with correct per-file dims."""
-    from pyspark.sql import functions as F
-
-    from raster2points_spark.sources.minitiff import minitiff_to_tiles
-
-    pyr = str(tmp_path / "pyr.tif")
-    _write_tiff(pyr, [float(i) for i in range(32)], 8, 4, compression=8)
-    _append_overview(pyr, [float(i) for i in range(8)], 4, 2, compression=8)
-    flat = str(tmp_path / "flat.tif")
-    _write_tiff(flat, [1.0] * 8, 4, 2)
-
-    tiles = minitiff_to_tiles(spark, [pyr, flat], tile_size=16, decimation=2.0)
-    px = tiles.groupBy("band_id").agg(F.sum(F.size("data")).alias("n")).collect()
-    n = {r.band_id: r.n for r in px}
-    assert n == {"b1": 8, "b2": 8}  # pyramid read at 4x2; flat at full 4x2
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="not both"):
-        minitiff_to_tiles(spark, [pyr], overview_level=1, decimation=2.0)
-
-
 def test_raster2df_refuses_mixed_crs(spark, tmp_path):
     """VERDICT r13 #2: the eager pre-flight refuses mixed-CRS inputs
     the way it refuses mixed resolution — pixel grids in different

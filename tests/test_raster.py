@@ -246,35 +246,6 @@ def test_zonemap_prunes_tiles_before_explode(spark, registry):
     assert row.n == 348 and float(row.min_v) == 25.0
 
 
-def test_overview_prune_dispatch_parity(spark):
-    """VERDICT r13 #4: the executor-side level pick must choose the
-    SAME levels as the driver loop — force the distributed path with
-    threshold 0 and compare against threshold-infinity."""
-    import os
-
-    from raster2points_spark.queries.raster import _pick_levels
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    d = os.path.join(repo, "fixtures", "tif")
-    pairs = [
-        (os.path.join(d, "pyramid.tif"), 2.0),
-        (os.path.join(d, "pyramid.tif"), 4.5),
-        (os.path.join(d, "sparse_mask.tif"), 4.0),
-        (os.path.join(d, "elev.tif"), 1.0),
-    ]
-    driver = _pick_levels(spark, pairs, dist_threshold=10**9)
-    dist = _pick_levels(spark, pairs, dist_threshold=0)
-    assert driver == dist
-    # keys are FULL paths (ADVICE r14: basename keying collided
-    # same-named files across directories)
-    assert set(dist) == {p for p, _ in pairs}
-    # and the picks themselves are the GDAL rule: pyramid.tif has
-    # 2x/4x levels, sparse_mask/elev have none
-    assert dist[os.path.join(d, "sparse_mask.tif")] == 0
-    assert dist[os.path.join(d, "elev.tif")] == 0
-    assert dist[os.path.join(d, "pyramid.tif")] in (1, 2)
-
-
 def test_utm_forward_matches_independent_python(spark, registry):
     """fn_utm_forward vs a THIRD implementation of the Snyder series
     (Python math module, independent libm path from both Spark's JVM

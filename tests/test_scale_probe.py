@@ -211,3 +211,46 @@ def test_xraster_grid_is_tile_exact(spark, monkeypatch):
     ).collect()[0]
     assert agg["n"] == 128 * 128
     assert agg["mc"] == 127 and agg["mr"] == 127
+
+
+def test_ladder_failure_paths(capsys):
+    """_ladder fails a key whose rows predicate is false even when its
+    runtime passes, and a key whose rows change between the first run
+    and the retry: that one prints its own line and reads inf, so a
+    worst-growth summary over the ratios fails as well."""
+    import math
+
+    from scale_probe import _ladder, _runtime_gate_fails
+
+    def clean():
+        return [1.0, 3.0, 9.0], [5, 50, 5]
+
+    ratios, ok = _ladder("k_rows", clean, _runtime_gate_fails, lambda r: r[2] == 500, 10, (11, 12))
+    assert not ok
+    assert ratios == [3.0, 3.0]
+    out = capsys.readouterr().out
+    assert out == "k_rows         1.00s     3.00s     9.00s         3.0x          3.0x\n"
+
+    calls = []
+
+    def unstable():
+        calls.append(1)
+        return [0.2, 8.0, 320.0], [1, 2, len(calls)]
+
+    ratios, ok = _ladder("k_unstable", unstable, _runtime_gate_fails, lambda r: True, 10, (11, 12))
+    assert len(calls) == 2 and not ok
+    assert all(math.isinf(r) for r in ratios)
+    out = capsys.readouterr().out.splitlines()
+    assert out[0] == "k_unstable ROWS CHANGED BETWEEN RUNS: [1, 2, 1] vs [1, 2, 2] — nondeterministic"
+    assert "gate retry" not in "\n".join(out)
+
+    calls.clear()
+
+    def spike_then_quiet():
+        calls.append(1)
+        return ([1.1, 29.7, 28.3] if len(calls) == 1 else [1.2, 11.9, 27.0]), [1, 2, 3]
+
+    ratios, ok = _ladder("k_retry", spike_then_quiet, _runtime_gate_fails, lambda r: True, 10, (11, 12))
+    assert ok and len(calls) == 2
+    out = capsys.readouterr().out.splitlines()
+    assert out[1] == "  ^ gate retry: first sample 1.10s 29.70s 28.30s; gated on the retry ladder as measured"

@@ -13,8 +13,9 @@ the CURRENT core count — run it twice:
     python tools/core_scaling.py --merge /tmp/cs8.txt /tmp/cs32.txt \
         > reports/core_scaling_r16.txt
 
-Each key runs --runs times (default 3) through the noop sink; the
-per-key MIN is reported (cold first run excluded by construction).
+Each key runs --runs times (default 3) through the noop sink, each
+run on a cleared cache (``runner.run_key`` cold); the per-key MIN is
+reported.
 The merge step pairs the two files into the 8c/32c ratio table.
 """
 
@@ -24,7 +25,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -105,7 +105,7 @@ def main() -> int:
         print(f"{'TOTAL':28s} {s8:8.2f} {s32:8.2f} {s8 / s32:6.2f}")
         return 0
 
-    from raster2points_spark.registry import load_all
+    from raster2points_spark.runner import noop, run_key
     from raster2points_spark.session import get_spark
 
     src = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -113,18 +113,13 @@ def main() -> int:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     spark = get_spark("core_scaling")
     spark.range(1000).selectExpr("sum(id)").collect()
-    reg = load_all()
     timings: dict[str, float | None] = {}
     for key in args.keys or KEYS:
         runs = []
         for r in range(args.runs):
-            spark.catalog.clearCache()
-            t0 = time.time()
             try:
-                reg[key].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(round(time.time() - t0, 3))
+                rec = run_key(spark, key, sf_dir, noop, cold=True)
+                runs.append(round(rec["build_s"] + rec["exec_s"], 3))
             except Exception as exc:  # pragma: no cover
                 print(f"{key} run {r} FAILED: {exc}", file=sys.stderr)
         timings[key] = min(runs) if runs else None

@@ -26,12 +26,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from diff_oracle import canon_rows  # reuse the driver-mirroring canonicalizer
 from raster2points_spark.registry import load_all
+from raster2points_spark.runner import run_key
 from raster2points_spark.session import get_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -46,15 +46,12 @@ def main() -> int:
 
     passed, failed = [], []
     for k in keys:
-        spec = registry[k]
         rows = []
         try:
             for parts in ("32", "7"):
-                spark.catalog.clearCache()
                 spark.conf.set("spark.sql.shuffle.partitions", parts)
-                t0 = time.time()
-                pdf = spec.fn(spark, SF).toPandas()
-                rows.append((parts, canon_rows(pdf), time.time() - t0))
+                r = run_key(spark, k, SF, lambda df: df.toPandas(), cold=True)
+                rows.append((parts, canon_rows(r["result"]), r["build_s"] + r["exec_s"]))
         except Exception as ex:
             failed.append(k)
             print(f"!! {k}: run failed: {ex}")

@@ -3,7 +3,9 @@
 Runs every registered query's Spark plan AND its DuckDB oracle SQL on
 the same parquet (default sf0.01), then compares row-count + column
 names + order-insensitive canonical rows (the driver sorts columns by
-name before hashing — mirrored here).
+name before hashing — mirrored here).  Each frame also goes through
+the driver's ``sort_values`` over all columns, so a cell type the
+driver's canonicalizer cannot order fails here first.
 
 Usage:
     python tools/diff_oracle.py [--sf /root/testdata/sf0.01] [keys...]
@@ -27,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from raster2points_spark.io import TABLES
 from raster2points_spark.registry import load_all
+from raster2points_spark.runner import run_key
 from raster2points_spark.session import get_spark
 
 NULL = "∅"
@@ -139,45 +142,40 @@ def main() -> int:
         # intermediates (basket_rules, source_vocab_overlap, dedup_*)
         # and cannot unpersist them before the returned lazy plan is
         # consumed.  Those caches are dead once the key's comparison is
-        # done — drop them so a 210-key session doesn't accumulate
-        # pinned executor storage.
-        spark.catalog.clearCache()
+        # done — every run is cold, so a 210-key session doesn't
+        # accumulate pinned executor storage.
         spec = registry.get(k)
         if spec is None:
             print(f"?? {k}: not registered")
             failed.append(k)
             continue
-        if spec.check != "oracle" or spec.oracle is None:
-            # still exercise the Spark side for rows-only/smoke
-            try:
-                t0 = time.time()
-                n = spec.fn(spark, args.sf).count()
-                print(f"-- {k}: rows-only, spark rows={n} ({time.time()-t0:.1f}s)")
-                skipped.append(k)
-            except Exception:
-                print(f"XX {k}: SPARK ERROR (rows-only)")
-                traceback.print_exc()
-                failed.append(k)
-            continue
+        # rows-only/smoke keys still exercise the Spark side
+        oracle = spec.check == "oracle" and spec.oracle is not None
         try:
-            t0 = time.time()
-            sdf = spec.fn(spark, args.sf).toPandas()
-            t_spark = time.time() - t0
+            action = (lambda df: df.toPandas()) if oracle else (lambda df: df.count())
+            r = run_key(spark, k, args.sf, action, cold=True)
         except Exception:
-            print(f"XX {k}: SPARK ERROR")
+            print(f"XX {k}: SPARK ERROR" + ("" if oracle else " (rows-only)"))
             traceback.print_exc()
             failed.append(k)
             continue
+        sdf, t_spark = r["result"], r["build_s"] + r["exec_s"]
+        if not oracle:
+            print(f"-- {k}: rows-only, spark rows={sdf} ({t_spark:.1f}s)")
+            skipped.append(k)
+            continue
         try:
-            t0 = time.time()
+            t0 = time.perf_counter()
             odf = con.execute(spec.oracle).df()
-            t_duck = time.time() - t0
+            t_duck = time.perf_counter() - t0
         except Exception:
             print(f"XX {k}: ORACLE ERROR")
             traceback.print_exc()
             failed.append(k)
             continue
         try:
+            for df in (sdf, odf):
+                df.sort_values(by=sorted(df.columns))
             problems = compare(k, sdf, odf)
         except TypeError as e:
             problems = [f"canonicalizer: {e}"]

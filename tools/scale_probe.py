@@ -38,6 +38,11 @@ PIXEL decades (512² → 1600² → 5120², the gridbig recipe) through the
 ``queries.raster._probe_tiles`` env seam — the raster family's own
 decade axis.
 
+Every timed point is one warm ``.count()`` through
+``runner.run_key`` (plan build + action), and every decade ladder runs
+through one helper, ``_ladder``, which re-measures a gate-tripping
+ladder once (``_noise_retry``) and prints both samples.
+
 Usage: python tools/scale_probe.py [--x10] [--x100] [--xdedup]
 [--xemb] [--xraster] [keys...]
 (writes stdout; redirect to reports/scale_probe_rN.txt to commit
@@ -49,11 +54,10 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from raster2points_spark.registry import load_all
+from raster2points_spark.runner import run_key
 from raster2points_spark.session import get_spark
 
 SFS = [
@@ -185,6 +189,33 @@ X100_REL_KEYS = [
 ]
 
 
+def _memo_dir(src: str, tag: str, prefix: str, write) -> str:
+    """A synthetic slice built once: ``write(tmp)`` fills a temp dir,
+    renamed to ``/tmp/{prefix}_{digest}``.  The digest covers the source
+    file's path, mtime and size plus the recipe ``tag``, so a changed
+    source or recipe builds afresh (the same invalidation contract as
+    the stream-slice and join_dpp caches); when two processes build the
+    same slice at once, the first rename wins."""
+    import hashlib
+    import shutil
+
+    st = os.stat(src)
+    digest = hashlib.md5(
+        f"{os.path.abspath(src)}:{st.st_mtime}:{st.st_size}:{tag}".encode()
+    ).hexdigest()[:10]
+    out = os.path.join("/tmp", f"{prefix}_{digest}")
+    if os.path.isdir(out):
+        return out
+    tmp = f"{out}.tmp.{os.getpid()}"
+    os.makedirs(tmp, exist_ok=True)
+    write(tmp)
+    try:
+        os.rename(tmp, out)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
 def build_x10_rel(src_dir: str, copies_n: int = 10) -> str:
     """Materialize the synthetic ``copies_n``×-sf0.1 RELATIONAL slice:
     key-offset copies of lineitem/orders/customer/part/supplier (each
@@ -193,22 +224,10 @@ def build_x10_rel(src_dir: str, copies_n: int = 10) -> str:
     ``copies_n``×, mirroring build_x10's event/user axis),
     nation/region copied unchanged (fixed-size dims per the TPC-H
     spec).  Cached on source mtime+size like build_x10."""
-    import hashlib
     import shutil
 
     import duckdb
 
-    li = os.path.join(src_dir, "lineitem.parquet")
-    st = os.stat(li)
-    digest = hashlib.md5(
-        f"{os.path.abspath(li)}:{st.st_mtime}:{st.st_size}:x{copies_n}relv1".encode()
-    ).hexdigest()[:10]
-    out = os.path.join("/tmp", f"r2p_x10rel_{digest}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    con = duckdb.connect()
     K = f"CROSS JOIN (SELECT unnest(range(0, {copies_n})) AS k) k"
     # strides exceed every key's max at sf0.1 (orderkey<=6e5, custkey
     # <=1.5e4, partkey<=2e4, suppkey<=1e3) so copies never collide
@@ -239,74 +258,61 @@ def build_x10_rel(src_dir: str, copies_n: int = 10) -> str:
                  s_name, s_nationkey, s_acctbal
           FROM read_parquet('{src_dir}/supplier.parquet') {K}""",
     }
-    for name, sql in copies.items():
-        con.execute(f"COPY ({sql}) TO '{tmp}/{name}.parquet' (FORMAT parquet)")
-    for name in ("nation", "region"):
-        shutil.copy(
-            os.path.join(src_dir, f"{name}.parquet"),
-            os.path.join(tmp, f"{name}.parquet"),
-        )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    def write(tmp):
+        con = duckdb.connect()
+        for name, sql in copies.items():
+            con.execute(f"COPY ({sql}) TO '{tmp}/{name}.parquet' (FORMAT parquet)")
+        for name in ("nation", "region"):
+            shutil.copy(
+                os.path.join(src_dir, f"{name}.parquet"),
+                os.path.join(tmp, f"{name}.parquet"),
+            )
+
+    li = os.path.join(src_dir, "lineitem.parquet")
+    return _memo_dir(li, f"x{copies_n}relv1", "r2p_x10rel", write)
 
 
 def build_x10(src_dir: str) -> str:
     """Materialize the synthetic 10×-sf0.1 slice, cached on source
     mtime+size (same invalidation contract as the stream-slice and
     join_dpp caches)."""
-    import hashlib
-
     import duckdb
 
     ev = os.path.join(src_dir, "events.parquet")
-    st = os.stat(ev)
-    digest = hashlib.md5(
-        f"{os.path.abspath(ev)}:{st.st_mtime}:{st.st_size}:x10v1".encode()
-    ).hexdigest()[:10]
-    out = os.path.join("/tmp", f"r2p_x10_{digest}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    con = duckdb.connect()
-    # id/user offsets keep per-user sequence lengths identical while the
-    # user universe grows 10× — the behavioral family's natural scale axis
-    con.execute(
-        f"""
-        COPY (
-          SELECT event_id + k.k * 10000000 AS event_id, ts,
-                 user_id + k.k * 1000000 AS user_id, event_type, value, props
-          FROM read_parquet('{ev}')
-          CROSS JOIN (SELECT unnest(range(0, 10)) AS k) k
-        ) TO '{tmp}/events.parquet' (FORMAT parquet)
-        """
-    )
-    # tag-suffix the copies: the chunk/text universe grows ~10× instead of
-    # collapsing into exact duplicates (which would change the workload)
     doc = os.path.join(src_dir, "documents.parquet")
-    con.execute(
-        f"""
-        COPY (
-          SELECT doc_id + k.k * 1000000 AS doc_id,
-                 text || ' copytag' || cast(k.k AS varchar) AS text,
-                 lang, source,
-                 cast(length(text || ' copytag' || cast(k.k AS varchar)) AS bigint)
-                   AS n_chars
-          FROM read_parquet('{doc}')
-          CROSS JOIN (SELECT unnest(range(0, 10)) AS k) k
-        ) TO '{tmp}/documents.parquet' (FORMAT parquet)
-        """
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    def write(tmp):
+        con = duckdb.connect()
+        # id/user offsets keep per-user sequence lengths identical while the
+        # user universe grows 10× — the behavioral family's natural scale axis
+        con.execute(
+            f"""
+            COPY (
+              SELECT event_id + k.k * 10000000 AS event_id, ts,
+                     user_id + k.k * 1000000 AS user_id, event_type, value, props
+              FROM read_parquet('{ev}')
+              CROSS JOIN (SELECT unnest(range(0, 10)) AS k) k
+            ) TO '{tmp}/events.parquet' (FORMAT parquet)
+            """
+        )
+        # tag-suffix the copies: the chunk/text universe grows ~10× instead of
+        # collapsing into exact duplicates (which would change the workload)
+        con.execute(
+            f"""
+            COPY (
+              SELECT doc_id + k.k * 1000000 AS doc_id,
+                     text || ' copytag' || cast(k.k AS varchar) AS text,
+                     lang, source,
+                     cast(length(text || ' copytag' || cast(k.k AS varchar)) AS bigint)
+                       AS n_chars
+              FROM read_parquet('{doc}')
+              CROSS JOIN (SELECT unnest(range(0, 10)) AS k) k
+            ) TO '{tmp}/documents.parquet' (FORMAT parquet)
+            """
+        )
+
+    return _memo_dir(ev, "x10v1", "r2p_x10", write)
 
 
 def build_x10_dedup(src_dir: str, copies_n: int = 10) -> str:
@@ -326,46 +332,31 @@ def build_x10_dedup(src_dir: str, copies_n: int = 10) -> str:
     copy, while the universe grows ``copies_n``× — the same
     key-offset axis build_x10_rel uses for the relational decade.
     """
-    import hashlib
-
     import duckdb
 
     doc = os.path.join(src_dir, "documents.parquet")
-    st = os.stat(doc)
-    digest = hashlib.md5(
-        f"{os.path.abspath(doc)}:{st.st_mtime}:{st.st_size}:dedup{copies_n}v1".encode()
-    ).hexdigest()[:10]
-    out = os.path.join("/tmp", f"r2p_xdedup_{digest}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT doc_id + k.k * 1000000 AS doc_id,
-                 array_to_string(
-                   list_transform(string_split(text, ' '),
-                                  x -> 'c' || cast(k.k AS varchar) || x),
-                   ' ') AS text,
-                 lang, source,
-                 cast(length(array_to_string(
-                   list_transform(string_split(text, ' '),
-                                  x -> 'c' || cast(k.k AS varchar) || x),
-                   ' ')) AS bigint) AS n_chars
-          FROM read_parquet('{doc}')
-          CROSS JOIN (SELECT unnest(range(0, {copies_n})) AS k) k
-        ) TO '{tmp}/documents.parquet' (FORMAT parquet)
-        """
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    def write(tmp):
+        duckdb.connect().execute(
+            f"""
+            COPY (
+              SELECT doc_id + k.k * 1000000 AS doc_id,
+                     array_to_string(
+                       list_transform(string_split(text, ' '),
+                                      x -> 'c' || cast(k.k AS varchar) || x),
+                       ' ') AS text,
+                     lang, source,
+                     cast(length(array_to_string(
+                       list_transform(string_split(text, ' '),
+                                      x -> 'c' || cast(k.k AS varchar) || x),
+                       ' ')) AS bigint) AS n_chars
+              FROM read_parquet('{doc}')
+              CROSS JOIN (SELECT unnest(range(0, {copies_n})) AS k) k
+            ) TO '{tmp}/documents.parquet' (FORMAT parquet)
+            """
+        )
+
+    return _memo_dir(doc, f"dedup{copies_n}v1", "r2p_xdedup", write)
 
 
 # the near-dup / content-dedup flagships probed over the dedup-fair
@@ -380,6 +371,27 @@ X_DEDUP_KEYS = [
     "dedup_containment",
     "text_tfidf",
 ]
+
+
+def _dedup_rows_linear(key: str, rows: list[int]) -> bool:
+    """Result cardinality over the dedup-fair decades: copies are
+    bijective renames, so the EXACT keys (inverted-index
+    jaccard/containment, hash dedup, tf-idf) must land on exactly
+    10x/100x rows — any deviation means candidate generation leaked
+    across copy universes.  dedup_near is hash-dependent: salted
+    shingles hash to different band minima, so a borderline pair's LSH
+    recall re-rolls per copy (measured: 2559/2560 at x10 — one
+    within-copy band miss, zero cross-copy pairs; the exact verify
+    makes EXTRA rows impossible).  It gets the recall trade it already
+    declares: >= 98% of linear, never above linear."""
+
+    def lin(n, k):
+        exp = k * rows[0]
+        if key == "dedup_near":
+            return int(0.98 * exp) <= n <= exp
+        return n == exp
+
+    return lin(rows[1], 10) and lin(rows[2], 100)
 
 
 def build_xraster(n: int) -> str:
@@ -441,59 +453,45 @@ def build_xemb(src_dir: str, copies_n: int = 10) -> str:
     anchors from copy 0, which is fine for capacity/runtime shape but
     not a semantic-quality measurement.
     """
-    import hashlib
-
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     src = os.path.join(src_dir, "embeddings.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        f"{os.path.abspath(src)}:{st.st_mtime}:{st.st_size}:emb{copies_n}v1".encode()
-    ).hexdigest()[:10]
-    out = os.path.join("/tmp", f"r2p_xemb_{digest}")
-    if os.path.isdir(out):
-        return out
-    tmp = f"{out}.tmp.{os.getpid()}"
-    os.makedirs(tmp, exist_ok=True)
-    t = pq.read_table(src)
-    vec_id = t.column("vec_id").to_numpy()
-    label = t.column("label").to_numpy()
-    emb = np.asarray(t.column("embedding").to_pylist(), dtype=np.float32)
-    d = emb.shape[1]
-    ids, labs, mats = [], [], []
-    for k in range(copies_n):
-        if k == 0:
-            rot = emb
-        else:
-            q, r = np.linalg.qr(
-                np.random.default_rng(k).standard_normal((d, d))
-            )
-            # canonicalize QR sign so the rotation is deterministic
-            q = q * np.sign(np.diag(r))
-            rot = (emb @ q.astype(np.float32)).astype(np.float32)
-        ids.append(vec_id + k * 1_000_000)
-        labs.append(label)
-        mats.append(rot)
-    allm = np.concatenate(mats)
-    tbl = pa.table(
-        {
-            "vec_id": pa.array(np.concatenate(ids), type=pa.int64()),
-            "embedding": pa.FixedSizeListArray.from_arrays(
-                pa.array(allm.reshape(-1), type=pa.float32()), d
-            ).cast(pa.list_(pa.float32())),
-            "label": pa.array(np.concatenate(labs), type=pa.int32()),
-        }
-    )
-    pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"))
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        import shutil
 
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    def write(tmp):
+        t = pq.read_table(src)
+        vec_id = t.column("vec_id").to_numpy()
+        label = t.column("label").to_numpy()
+        emb = np.asarray(t.column("embedding").to_pylist(), dtype=np.float32)
+        d = emb.shape[1]
+        ids, labs, mats = [], [], []
+        for k in range(copies_n):
+            if k == 0:
+                rot = emb
+            else:
+                q, r = np.linalg.qr(
+                    np.random.default_rng(k).standard_normal((d, d))
+                )
+                # canonicalize QR sign so the rotation is deterministic
+                q = q * np.sign(np.diag(r))
+                rot = (emb @ q.astype(np.float32)).astype(np.float32)
+            ids.append(vec_id + k * 1_000_000)
+            labs.append(label)
+            mats.append(rot)
+        allm = np.concatenate(mats)
+        tbl = pa.table(
+            {
+                "vec_id": pa.array(np.concatenate(ids), type=pa.int64()),
+                "embedding": pa.FixedSizeListArray.from_arrays(
+                    pa.array(allm.reshape(-1), type=pa.float32()), d
+                ).cast(pa.list_(pa.float32())),
+                "label": pa.array(np.concatenate(labs), type=pa.int32()),
+            }
+        )
+        pq.write_table(tbl, os.path.join(tmp, "embeddings.parquet"))
+
+    return _memo_dir(src, f"emb{copies_n}v1", "r2p_xemb", write)
 
 
 # embedding-family keys probed over the rotation decades.  "const"
@@ -598,6 +596,54 @@ def _noise_retry(measure, gate_fails):
     return t2, rows, times, None
 
 
+def _timed_counts(spark, key: str, points):
+    """A ``measure`` for :func:`_ladder`: one warm ``.count()`` of
+    ``key`` per ladder point through ``runner.run_key``.  A point is
+    ``(sf_dir, env)``; ``env`` is set before the run (the raster probe's
+    grid seam) and left for the caller to clear."""
+
+    def measure():
+        ts, rs = [], []
+        for sf_dir, env in points:
+            os.environ.update(env)
+            r = run_key(spark, key, sf_dir, lambda df: df.count(), cold=False)
+            ts.append(r["build_s"] + r["exec_s"])
+            rs.append(r["result"])
+        return ts, rs
+
+    return measure
+
+
+def _ladder(key, measure, gate_fails, rows_ok, width, ratio_widths, tail=None, what="ladder"):
+    """One key's decade ladder: measure it (re-measured once by
+    :func:`_noise_retry` when the gate trips), print its row and return
+    ``(ratios, ok)`` — the per-step growth ratios and whether the key
+    passes.  It fails when the gate trips on the ladder as measured or
+    ``rows_ok(rows)`` is false.  Rows that change between the first run
+    and the retry are nondeterminism, never noise: that prints its own
+    line and fails with every ratio read as inf, so a worst-growth
+    summary fails too."""
+    times, rows, first, row_mis = _noise_retry(measure, gate_fails)
+    if row_mis is not None:
+        print(f"{key:{width}s} ROWS CHANGED BETWEEN RUNS: {rows} vs {row_mis} — nondeterministic")
+    ratios = [b / max(a, 1e-9) for a, b in zip(times, times[1:])]
+    print(
+        f"{key:{width}s} "
+        + " ".join(f"{t:8.2f}s" for t in times)
+        + "".join(f" {r:{w}.1f}x" for r, w in zip(ratios, ratio_widths))
+        + (tail(rows) if tail else "")
+    )
+    if first is not None:
+        print(
+            f"  ^ gate retry: first sample "
+            f"{' '.join(f'{t:.2f}s' for t in first)}; "
+            f"gated on the retry {what} as measured"
+        )
+    if row_mis is not None:
+        return [math.inf] * len(ratios), False
+    return ratios, not gate_fails(times) and rows_ok(rows)
+
+
 def main() -> int:
     args = sys.argv[1:]
     x10 = "--x10" in args
@@ -610,19 +656,18 @@ def main() -> int:
     ]
     keys = args or DEFAULT_KEYS
     spark = get_spark("scale_probe")
-    reg = load_all()
+    sf01 = SFS[2][1]
+
+    def warm_count(key, sf_dir=sf01):
+        run_key(spark, key, sf_dir, lambda df: df.count(), cold=False)
+
     # warm the session (JVM, codegen, FS caches) so sf0.001 numbers
     # aren't dominated by cold-start
-    reg["scan_parquet"].fn(spark, SFS[0][1]).count()
+    warm_count("scan_parquet", SFS[0][1])
     print(f"{'key':22s} {'sf0.001':>9s} {'sf0.01':>9s} {'sf0.1':>9s} {'x(0.01->0.1)':>13s}")
     worst = 0.0
     for key in keys:
-        times = []
-        for _, sf_dir in SFS:
-            t0 = time.time()
-            df = reg[key].fn(spark, sf_dir)
-            df.count()
-            times.append(time.time() - t0)
+        times, _ = _timed_counts(spark, key, [(d, {}) for _, d in SFS])()
         ratio = times[2] / max(times[1], 1e-9)
         worst = max(worst, ratio)
         print(
@@ -632,75 +677,46 @@ def main() -> int:
         f"\n10x data per step; worst 0.01->0.1 growth {worst:.1f}x "
         f"({'SUB-linear everywhere' if worst < 10 else 'SUPER-LINEAR KEY PRESENT'})"
     )
+    # Runtime gate of the three-point decades (_runtime_gate_fails):
+    # per-step growth approaches linear (10x work for 10x corpus IS
+    # perfect scaling once fixed cost amortizes; 15x allows the
+    # fixed-32-core single-node ceiling — measured core-bound, not
+    # spill-bound: 256 shuffle partitions at x100 is SLOWER than 32
+    # (68s vs 55s, pure scheduling overhead), so a cluster absorbs the
+    # step with more executors, not more partitions).  The two decades
+    # together must stay sub-linear: < 100x ABSOLUTE runtime growth for
+    # a 100x corpus (r9: was the product of two floored step ratios,
+    # which under-counted).
+    def decades(keys, points, width, ratio_widths, rows_ok, tail):
+        """Each key's three-point ladder over ``points``; True when any
+        key fails.  A warm run at the first point comes first: the
+        fresh-JVM / FS-cache cost otherwise lands entirely on the
+        baseline and fakes a super-linear first step."""
+        fail = False
+        for key in keys:
+            os.environ.update(points[0][1])
+            warm_count(key, points[0][0])
+            measure = _timed_counts(spark, key, points)
+            _, ok = _ladder(
+                key, measure, _runtime_gate_fails, lambda rows: rows_ok(key, rows), width,
+                ratio_widths, lambda rows: tail(key, rows),
+            )
+            fail |= not ok
+        return fail
+
     dd_fail = False
     if xdedup:
-        dd10 = build_x10_dedup(SFS[2][1], copies_n=10)
-        dd100 = build_x10_dedup(SFS[2][1], copies_n=100)
+        dd10 = build_x10_dedup(sf01, copies_n=10)
+        dd100 = build_x10_dedup(sf01, copies_n=100)
         print(f"\n--xdedup: dedup-fair doc decades at {dd10} / {dd100}")
         print(
             f"{'key':22s} {'sf0.1':>9s} {'x10':>9s} {'x100':>9s} "
             f"{'x(0.1->x10)':>12s} {'x(x10->x100)':>13s} {'rows linear':>12s}"
         )
-        for key in X_DEDUP_KEYS:
-            # warm pass at sf0.1 first: the fresh-JVM / FS-cache cost
-            # otherwise lands entirely on the baseline and fakes a
-            # super-linear first step
-            reg[key].fn(spark, SFS[2][1]).count()
-
-            def measure(key=key):
-                ts, rs = [], []
-                for sf_dir in (SFS[2][1], dd10, dd100):
-                    t0 = time.time()
-                    rs.append(reg[key].fn(spark, sf_dir).count())
-                    ts.append(time.time() - t0)
-                return ts, rs
-
-            times, rows, first, row_mis = _noise_retry(measure, _runtime_gate_fails)
-            if row_mis is not None:
-                dd_fail = True
-                print(f"{key:22s} ROWS CHANGED BETWEEN RUNS: {rows} vs {row_mis} — nondeterministic")
-            r1 = times[1] / max(times[0], 1e-9)
-            r2 = times[2] / max(times[1], 1e-9)
-            # Result cardinality: copies are bijective renames, so the
-            # EXACT keys (inverted-index jaccard/containment, hash
-            # dedup, tf-idf) must land on exactly 10x/100x rows — any
-            # deviation means candidate generation leaked across copy
-            # universes.  dedup_near is hash-dependent: salted shingles
-            # hash to different band minima, so a borderline pair's
-            # LSH recall re-rolls per copy (measured: 2559/2560 at x10
-            # — one within-copy band miss, zero cross-copy pairs; the
-            # exact verify makes EXTRA rows impossible).  Allow it the
-            # recall trade it already declares: >= 98% of linear, never
-            # above linear.
-            def _lin(n, k):
-                exp = k * rows[0]
-                if key == "dedup_near":
-                    return n <= exp and n >= int(0.98 * exp)
-                return n == exp
-
-            linear = _lin(rows[1], 10) and _lin(rows[2], 100)
-            # Runtime gate: per-step growth approaches linear (10x work
-            # for 10x corpus IS perfect scaling once fixed cost
-            # amortizes; 15x allows the fixed-32-core single-node
-            # ceiling — measured core-bound, not spill-bound: 256
-            # shuffle partitions at x100 is SLOWER than 32 (68s vs
-            # 55s, pure scheduling overhead), so a cluster absorbs
-            # the step with more executors, not more partitions).  The
-            # two decades together must stay sub-linear: < 100x
-            # ABSOLUTE runtime growth for a 100x corpus (r9: was the
-            # product of two floored step ratios, which under-counted).
-            if _runtime_gate_fails(times) or not linear:
-                dd_fail = True
-            print(
-                f"{key:22s} {times[0]:8.2f}s {times[1]:8.2f}s {times[2]:8.2f}s "
-                f"{r1:11.1f}x {r2:12.1f}x {'yes' if linear else 'NO':>12s}"
-            )
-            if first is not None:
-                print(
-                    f"  ^ gate retry: first sample "
-                    f"{' '.join(f'{t:.2f}s' for t in first)}; "
-                    f"gated on the retry ladder as measured"
-                )
+        dd_fail = decades(
+            X_DEDUP_KEYS, [(d, {}) for d in (sf01, dd10, dd100)], 22, (11, 12), _dedup_rows_linear,
+            lambda key, rows: f" {'yes' if _dedup_rows_linear(key, rows) else 'NO':>12s}",
+        )
         print(
             f"\ndedup decades: result rows linear per corpus decade (exact keys "
             f"bit-exact at 10x/100x; LSH recall >= 98% of linear, never above — "
@@ -710,43 +726,19 @@ def main() -> int:
 
     emb_fail = False
     if xemb:
-        em10 = build_xemb(SFS[2][1], copies_n=10)
-        em100 = build_xemb(SFS[2][1], copies_n=100)
+        em10 = build_xemb(sf01, copies_n=10)
+        em100 = build_xemb(sf01, copies_n=100)
         print(f"\n--xemb: rotation-fair embedding decades at {em10} / {em100}")
         print(
             f"{'key':24s} {'sf0.1':>9s} {'x10':>9s} {'x100':>9s} "
             f"{'x(0.1->x10)':>12s} {'x(x10->x100)':>13s} {'rows':>22s}"
         )
-        for key, mode in X_EMB_KEYS:
-            reg[key].fn(spark, SFS[2][1]).count()  # warm baseline
-
-            def measure(key=key):
-                ts, rs = [], []
-                for sf_dir in (SFS[2][1], em10, em100):
-                    t0 = time.time()
-                    rs.append(reg[key].fn(spark, sf_dir).count())
-                    ts.append(time.time() - t0)
-                return ts, rs
-
-            times, rows, first, row_mis = _noise_retry(measure, _runtime_gate_fails)
-            if row_mis is not None:
-                emb_fail = True
-                print(f"{key:24s} ROWS CHANGED BETWEEN RUNS: {rows} vs {row_mis} — nondeterministic")
-            r1 = times[1] / max(times[0], 1e-9)
-            r2 = times[2] / max(times[1], 1e-9)
-            rows_ok = mode != "const" or (rows[0] == rows[1] == rows[2])
-            if _runtime_gate_fails(times) or not rows_ok:
-                emb_fail = True
-            print(
-                f"{key:24s} {times[0]:8.2f}s {times[1]:8.2f}s {times[2]:8.2f}s "
-                f"{r1:11.1f}x {r2:12.1f}x {str(rows):>22s}"
-            )
-            if first is not None:
-                print(
-                    f"  ^ gate retry: first sample "
-                    f"{' '.join(f'{t:.2f}s' for t in first)}; "
-                    f"gated on the retry ladder as measured"
-                )
+        modes = dict(X_EMB_KEYS)
+        emb_fail = decades(
+            list(modes), [(d, {}) for d in (sf01, em10, em100)], 24, (11, 12),
+            lambda key, rows: modes[key] != "const" or rows[0] == rows[1] == rows[2],
+            lambda key, rows: f" {str(rows):>22s}",
+        )
         print(
             f"\nembedding decades: fixed-top-k keys constant-row; runtime "
             f"{'sub-linear overall (< 100x for 100x vectors)' if not emb_fail else 'GATE FAILED'}"
@@ -754,7 +746,10 @@ def main() -> int:
 
     raster_fail = False
     if xraster:
-        paths = {n: build_xraster(n) for n, _ in X_RASTER_SIZES}
+        points = [
+            (sf01, {"SPARK_GRAFT_RASTER_GRID": build_xraster(n), "SPARK_GRAFT_RASTER_W": str(n)})
+            for n, _ in X_RASTER_SIZES
+        ]
         print(
             f"\n--xraster: synthetic pixel decades at "
             f"{', '.join(f'{t}={n}x{n}' for n, t in X_RASTER_SIZES)}"
@@ -764,47 +759,15 @@ def main() -> int:
             f"{'x(1->10)':>9s} {'x(10->100)':>11s} {'rows':>26s}"
         )
         try:
-            for key in X_RASTER_KEYS:
-                # warm at x1 so fresh codegen/FS cost stays off the baseline
-                os.environ["SPARK_GRAFT_RASTER_GRID"] = paths[512]
-                os.environ["SPARK_GRAFT_RASTER_W"] = "512"
-                reg[key].fn(spark, SFS[2][1]).count()
-
-                def measure(key=key):
-                    ts, rs = [], []
-                    for n, _tag in X_RASTER_SIZES:
-                        os.environ["SPARK_GRAFT_RASTER_GRID"] = paths[n]
-                        os.environ["SPARK_GRAFT_RASTER_W"] = str(n)
-                        t0 = time.time()
-                        rs.append(reg[key].fn(spark, SFS[2][1]).count())
-                        ts.append(time.time() - t0)
-                    return ts, rs
-
-                times, rows, first, row_mis = _noise_retry(measure, _runtime_gate_fails)
-                if row_mis is not None:
-                    raster_fail = True
-                    print(f"{key:26s} ROWS CHANGED BETWEEN RUNS: {rows} vs {row_mis} — nondeterministic")
-                r1 = times[1] / max(times[0], 1e-9)
-                r2 = times[2] / max(times[1], 1e-9)
-                # rows track valid-pixel count (deterministic per size):
-                # each ~10x pixel decade must grow result rows ~10x —
-                # a flat or super-linear row count means the key
-                # silently truncated or blew up its pair space
-                rows_ok = all(
-                    8.0 <= rows[i + 1] / max(rows[i], 1) <= 12.5 for i in range(2)
-                )
-                if _runtime_gate_fails(times) or not rows_ok:
-                    raster_fail = True
-                print(
-                    f"{key:26s} {times[0]:8.2f}s {times[1]:8.2f}s {times[2]:8.2f}s "
-                    f"{r1:8.1f}x {r2:10.1f}x {str(rows):>26s}"
-                )
-                if first is not None:
-                    print(
-                        f"  ^ gate retry: first sample "
-                        f"{' '.join(f'{t:.2f}s' for t in first)}; "
-                        f"gated on the retry ladder as measured"
-                    )
+            # rows track valid-pixel count (deterministic per size):
+            # each ~10x pixel decade must grow result rows ~10x — a
+            # flat or super-linear row count means the key silently
+            # truncated or blew up its pair space
+            raster_fail = decades(
+                X_RASTER_KEYS, points, 26, (8, 10),
+                lambda key, rows: all(8.0 <= b / max(a, 1) <= 12.5 for a, b in zip(rows, rows[1:])),
+                lambda key, rows: f" {str(rows):>26s}",
+            )
         finally:
             os.environ.pop("SPARK_GRAFT_RASTER_GRID", None)
             os.environ.pop("SPARK_GRAFT_RASTER_W", None)
@@ -822,70 +785,37 @@ def main() -> int:
     # r11 chain runs tripped a DIFFERENT single key on a one-off
     # sample — flow_direction 16x then tpch_q6 22x — each green on
     # re-measure); the retry pair must itself pass as measured
-    def _pair_measure(key, dirs):
-        def m():
-            times, rows = [], []
-            for sf_dir in dirs:
-                t0 = time.time()
-                rows.append(reg[key].fn(spark, sf_dir).count())
-                times.append(time.time() - t0)
-            return times, rows
-
-        return m
-
-    def _pair_gate_fails(times):
-        return times[1] / max(times[0], 1e-9) >= 10
-
-    def _pair_row(key, dirs, width=22):
-        times, rows, first, row_mis = _noise_retry(_pair_measure(key, dirs), _pair_gate_fails)
-        if row_mis is not None:
-            # r11 ADVICE: a rows mismatch between the two runs is a
-            # distinct failure (nondeterminism), not super-linear
-            # growth — flag it as such and fail the section via inf
-            print(f"{key:{width}s} ROWS CHANGED BETWEEN RUNS: {rows} vs {row_mis} — nondeterministic")
-            return math.inf
-        ratio = times[1] / max(times[0], 1e-9)
-        print(f"{key:{width}s} {times[0]:8.2f}s {times[1]:8.2f}s {ratio:11.1f}x")
-        if first is not None:
-            print(
-                f"  ^ gate retry: first sample "
-                f"{' '.join(f'{t:.2f}s' for t in first)}; "
-                f"gated on the retry pair as measured"
+    def pair_section(title, keys, dirs, width, header, what):
+        print(f"\n{title} slice at {dirs[1]}")
+        print(f"{'key':{width}s} {header}")
+        worst = 0.0
+        for key in keys:
+            (ratio,), _ = _ladder(
+                key, _timed_counts(spark, key, [(d, {}) for d in dirs]),
+                lambda t: t[1] / max(t[0], 1e-9) >= 10, lambda rows: True, width, (11,),
+                what="pair",
             )
-        return ratio
-
-    x10_dir = build_x10(SFS[2][1])
-    print(f"\n--x10: synthetic 10x-sf0.1 slice at {x10_dir}")
-    print(f"{'key':22s} {'sf0.1':>9s} {'x10':>9s} {'x(0.1->x10)':>12s}")
-    worst10 = 0.0
-    for key in X10_KEYS:
-        worst10 = max(worst10, _pair_row(key, (SFS[2][1], x10_dir)))
-    print(
-        f"\nworst 0.1->x10 growth {worst10:.1f}x "
-        f"({'SUB-linear everywhere' if worst10 < 10 else 'SUPER-LINEAR KEY PRESENT'})"
-    )
-
-    rel_dir = build_x10_rel(SFS[2][1])
-    print(f"\n--x10 relational: synthetic 10x-sf0.1 slice at {rel_dir}")
-    print(f"{'key':26s} {'sf0.1':>9s} {'x10':>9s} {'x(0.1->x10)':>12s}")
-    worst_rel = 0.0
-    for key in X10_REL_KEYS:
-        worst_rel = max(worst_rel, _pair_row(key, (SFS[2][1], rel_dir), width=26))
-    print(
-        f"\nworst relational 0.1->x10 growth {worst_rel:.1f}x "
-        f"({'SUB-linear everywhere' if worst_rel < 10 else 'SUPER-LINEAR KEY PRESENT'})"
-    )
-
-    if x100:
-        rel100_dir = build_x10_rel(SFS[2][1], copies_n=100)
-        print(f"\n--x100 relational: synthetic 100x-sf0.1 slice at {rel100_dir}")
-        print(f"{'key':26s} {'x10':>9s} {'x100':>9s} {'x(x10->x100)':>13s}")
-        worst100 = 0.0
-        for key in X100_REL_KEYS:
-            worst100 = max(worst100, _pair_row(key, (rel_dir, rel100_dir), width=26))
+            worst = max(worst, ratio)
         print(
-            f"\nworst relational x10->x100 growth {worst100:.1f}x "
-            f"({'SUB-linear everywhere' if worst100 < 10 else 'SUPER-LINEAR KEY PRESENT'})"
+            f"\nworst {what} growth {worst:.1f}x "
+            f"({'SUB-linear everywhere' if worst < 10 else 'SUPER-LINEAR KEY PRESENT'})"
+        )
+        return worst
+
+    header = f"{'sf0.1':>9s} {'x10':>9s} {'x(0.1->x10)':>12s}"
+    worst10 = pair_section(
+        "--x10: synthetic 10x-sf0.1", X10_KEYS, (sf01, build_x10(sf01)), 22, header, "0.1->x10"
+    )
+    rel_dir = build_x10_rel(sf01)
+    worst_rel = pair_section(
+        "--x10 relational: synthetic 10x-sf0.1", X10_REL_KEYS, (sf01, rel_dir), 26,
+        header, "relational 0.1->x10",
+    )
+    if x100:
+        worst100 = pair_section(
+            "--x100 relational: synthetic 100x-sf0.1", X100_REL_KEYS,
+            (rel_dir, build_x10_rel(sf01, copies_n=100)), 26,
+            f"{'x10':>9s} {'x100':>9s} {'x(x10->x100)':>13s}", "relational x10->x100",
         )
         if worst100 >= 10:
             return 1
