@@ -60,7 +60,13 @@ def run_key(spark: SparkSession, key: str, sf_dir: str, action, cold: bool) -> d
 
     ``cold=True`` clears the cache first, so relations a previous run
     persisted are rebuilt; ``cold=False`` keeps them, and a key that
-    persists intermediates then runs on a cache hit.
+    persists intermediates then runs on a cache hit.  Clearing the
+    catalog cache leaves the RDDs that keys ``localCheckpoint()``, so a
+    cold run also unpersists every RDD the context still holds.  That
+    is safe only because the previous key's frames are dead: a
+    localCheckpointed frame cannot be recomputed once its blocks are
+    gone, so no caller, in this thread or another, may still use a
+    frame an earlier call built when a ``cold`` call starts.
 
     Each phase runs under its own job group (job groups are per
     thread, so concurrent calls from a thread pool count apart).
@@ -71,6 +77,8 @@ def run_key(spark: SparkSession, key: str, sf_dir: str, action, cold: bool) -> d
     sc = spark.sparkContext
     if cold:
         spark.catalog.clearCache()
+        for rdd in list(sc._jsc.getPersistentRDDs().values()):
+            rdd.unpersist(True)
     group = f"run_key-{key}-{uuid.uuid4().hex}"
     try:
         sc.setJobGroup(f"{group}-build", key)

@@ -1,5 +1,5 @@
-"""runner.run_key: the cache rule (cold clears, warm keeps) and the
-per-phase job counts."""
+"""runner.run_key: the cache rule (cold clears the catalog cache and
+localCheckpointed RDDs, warm keeps them) and the per-phase job counts."""
 
 from __future__ import annotations
 
@@ -25,6 +25,17 @@ def test_cold_run_drops_what_a_persisting_key_left_cached(spark):
     # cold: they are dropped before the key is built
     run_key(spark, "agg_groupby", SF0001, noop, cold=True)
     assert not cached & _persisted(spark)
+
+
+def test_cold_run_drops_what_a_key_left_local_checkpointed(spark):
+    # graph_pagerank localCheckpoint()s its ranks every round; the
+    # catalog cache never lists those RDDs, so clearCache alone keeps them
+    before = _persisted(spark)
+    run_key(spark, "graph_pagerank", SF0001, noop, cold=False)
+    left = _persisted(spark) - before
+    assert left, "graph_pagerank no longer localCheckpoints; pick another key"
+    run_key(spark, "agg_groupby", SF0001, noop, cold=True)
+    assert not left & _persisted(spark)
 
 
 def test_catalog_collect_counts_as_build_jobs(spark):
