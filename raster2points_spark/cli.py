@@ -11,12 +11,15 @@ none/LZW/deflate/PackBits compression, predictor 1/2/3, sub-byte
 Parquet directory out:
 
     python -m raster2points_spark.cli TILES_PARQUET OUT_DIR \
-        --bands b1 b2 [--col-names elev slope] [--separator ';'] \
+        [--bands b1 b2] [--col-names elev slope] [--separator ';'] \
         [--calc-area] [--format csv|parquet]
 
     python -m raster2points_spark.cli in1.tif in2.tif OUT_DIR \
-        [--col-names elev slope] ...    # bands default to b1..bN
-                                        # across files AND samples
+        [--col-names elev slope] ...
+
+``--bands`` defaults to every band the inputs provide: b1..bN across
+files AND samples for GeoTIFF paths, the tile table's band ids (b2
+before b10) for a tile table.
 
 ``--format geotiff`` COG-ifies instead: each selected band is
 re-written as its own tiled deflate GeoTIFF (optional write-time
@@ -45,7 +48,7 @@ def main(argv: list[str] | None = None) -> int:
         help="one tile-table parquet path, or N GeoTIFF paths (one band each)",
     )
     ap.add_argument("output")
-    ap.add_argument("--bands", nargs="+", default=None)
+    ap.add_argument("--bands", nargs="+", default=None, help="default: every band")
     ap.add_argument("--col-names", nargs="+", default=None)
     ap.add_argument("--separator", default=",", choices=[",", ";", "t"])
     ap.add_argument("--calc-area", action="store_true")
@@ -132,157 +135,116 @@ def main(argv: list[str] | None = None) -> int:
             f"(f8/f4), got {args.dtype}"
         )
 
-    tif_mode = all(p.lower().endswith((".tif", ".tiff")) for p in args.inputs)
-    if len(args.inputs) > 1 and not tif_mode:
-        ap.error("multiple inputs are only supported for GeoTIFF paths")
-    if args.overview_level and not tif_mode:
-        ap.error("--overview-level needs GeoTIFF inputs")
     if args.overview_level and args.format == "geotiff":
         ap.error("--overview-level applies to extraction (csv/parquet), "
                  "not COG-ification; use --overviews to WRITE pyramids")
-    tiles = args.inputs if tif_mode else args.inputs[0]
-    bands = args.bands
-    if bands is None and not tif_mode:
-        ap.error("--bands is required for tile-table input")
-
+    # api._tif_paths tells GeoTIFF paths from a tile table, and
+    # raster2df checks the bands; their ValueErrors are usage errors
+    tiles = args.inputs[0] if len(args.inputs) == 1 else args.inputs
     sep = "\t" if args.separator == "t" else args.separator
     spark = get_spark("raster2points_cli")
+    try:
+        if args.format == "csv":
+            raster2csv(
+                spark, tiles, args.bands, args.output,
+                col_names=args.col_names, calc_area=args.calc_area, separator=sep,
+                max_block_size=args.max_block_size,
+                overview_level=args.overview_level,
+            )
+        elif args.format == "parquet":
+            df = raster2df(
+                spark, tiles, args.bands, col_names=args.col_names,
+                calc_area=args.calc_area, max_block_size=args.max_block_size,
+                overview_level=args.overview_level,
+            )
+            df.write.mode("overwrite").parquet(args.output)
+        else:
+            _cogify(spark, tiles, args)
+    except ValueError as e:
+        ap.error(str(e))
+    return 0
 
-    # eager band validation: a typo'd band silently yields an empty
-    # point table otherwise (the library API stays lazy; the CLI is
-    # the user-facing surface, so it checks)
+
+def _cogify(spark, tiles, args) -> None:
+    """COG-ify: re-write each selected band as its own tiled (+ optional
+    pyramid) GeoTIFF — gdal_translate's COG path, distributed (one
+    write task per band/file).  Grids come from the band catalog, so
+    GeoTIFF inputs are decoded once, by the write."""
     from pyspark.sql import functions as F
 
-    from raster2points_spark.api import _as_tiles, _paths_preflight
+    from raster2points_spark.api import _as_tiles, _tif_paths, band_catalog, select_bands
+    from raster2points_spark.io import local_df
+    from raster2points_spark.operators.grid import grid_unpivot
+    from raster2points_spark.sinks.geotiff import write_geotiffs
 
-    if tif_mode:
-        # the headers name the bands — positionally across files AND
-        # samples — without decoding a pixel.  No co-tiling check here:
-        # --format geotiff takes inputs of different dims, and
-        # raster2df runs the full pre-flight for csv/parquet.
-        present = list(_paths_preflight(tiles, validate=False))
-    else:
-        # tile table: a column-pruned scan of band_id (b2 < b10 —
-        # numeric-aware sort)
-        present = sorted(
-            {r[0] for r in _as_tiles(spark, tiles).select("band_id").distinct().collect()},
-            key=lambda b: (len(b), b),
+    if _tif_paths(tiles) is None:  # a tile parquet is read once
+        tiles = _as_tiles(spark, tiles)
+    catalog = band_catalog(spark, tiles)
+    bands = select_bands(catalog, args.bands)
+    meta = [catalog[b] for b in bands]
+    # each output band needs a single grid: a tile table whose band
+    # carries several transforms would leave the origin to chance
+    torn = [b for b, m in zip(bands, meta) if len(m.transforms) != 1]
+    if torn:
+        raise ValueError(
+            f"band(s) {torn} carry more than one transform across "
+            "their tiles — each output band needs a single grid; "
+            "split or re-grid the tile table first"
         )
-    bands = bands or present
-    missing = [b for b in bands if b not in present]
-    if missing:
-        ap.error(f"band(s) not in the inputs: {missing}; present: {present}")
-    if args.format == "csv":
-        raster2csv(
-            spark, tiles, bands, args.output,
-            col_names=args.col_names, calc_area=args.calc_area, separator=sep,
-            max_block_size=args.max_block_size,
-            overview_level=args.overview_level,
+    # all output files share ONE pixel scale; mixed-resolution inputs
+    # would silently get band 1's grid — refuse, like the raster2df
+    # pre-flight (COG-ify each resolution group alone, or resample
+    # first: raster_mosaic_hetero shows the pattern)
+    a, e = meta[0].resolutions[0]
+    mixed = [b for b, m in zip(bands, meta) if m.resolutions != [(a, e)]]
+    if mixed:
+        raise ValueError(
+            f"mixed pixel scales across bands ({mixed} differ from "
+            f"{(a, -e)}); COG-ify each resolution group separately"
         )
-    elif args.format == "parquet":
-        df = raster2df(
-            spark, tiles, bands, col_names=args.col_names,
-            calc_area=args.calc_area, max_block_size=args.max_block_size,
-            overview_level=args.overview_level,
+    names = dict(zip(bands, args.col_names)) if args.col_names else {}
+    # per-file dims: each band keeps ITS OWN raster's extent
+    # (write_geotiffs' optional width/height origin columns) — a
+    # smaller input must not roundtrip nodata-padded to the global max
+    origins = local_df(
+        spark,
+        [
+            (names.get(b, b), m.transforms[0][2], m.transforms[0][5], m.width, m.height)
+            for b, m in zip(bands, meta)
+        ],
+        "file_id string, lon0 double, lat0 double, width int, height int",
+    )
+    tiles_df = _as_tiles(spark, tiles).filter(F.col("band_id").isin(bands))
+    px = grid_unpivot(tiles_df).filter(F.col("value").isNotNull())
+    pixels = px.select(
+        F.col("band_id").alias("file_id"),
+        F.lit(1).alias("band"),
+        "row",
+        "col",
+        F.col("value").cast("double").alias("value"),
+    ).replace(names, subset=["file_id"])
+    manifest = write_geotiffs(
+        pixels,
+        args.output,
+        width=max(m.width for m in meta),
+        height=max(m.height for m in meta),
+        pixel_scale=(float(a), float(-e)),
+        origins=origins,
+        nodata=args.nodata_out,
+        dtype=args.dtype,
+        compression=args.compression,
+        tile=(args.tile_size, args.tile_size),
+        sparse=args.sparse,
+        bigtiff=args.bigtiff,
+        overviews=args.overviews,
+        predictor=args.predictor,
+        crs_epsg=args.crs,
+    )
+    for r in sorted(manifest.collect(), key=lambda r: r.file_id):
+        print(
+            f"{r.path}: {r.width}x{r.height}, {r.n_valid} valid px, "
+            f"{r.n_tiles} tiles ({r.n_sparse} sparse), {r.n_bytes} bytes"
         )
-        df.write.mode("overwrite").parquet(args.output)
-    else:
-        # COG-ify: re-write each selected band as its own tiled
-        # (+ optional pyramid) GeoTIFF — gdal_translate's COG path,
-        # distributed (one write task per band/file)
-        from raster2points_spark.operators.grid import grid_unpivot
-        from raster2points_spark.sinks.geotiff import write_geotiffs
-
-        tiles_df = _as_tiles(spark, tiles).filter(F.col("band_id").isin(bands))
-        names = dict(zip(bands, args.col_names)) if args.col_names else {}
-        meta = tiles_df.groupBy("band_id").agg(
-            F.max(F.col("col_off") + F.col("width")).alias("w"),
-            F.max(
-                F.col("row_off") + (F.size("data") / F.col("width")).cast("int")
-            ).alias("h"),
-            F.first("transform").alias("t"),
-            F.countDistinct("transform").alias("nt"),
-        ).collect()
-        # F.first('transform') assumes all of a band's tiles share one
-        # transform; generic tile-table parquet can violate that, and
-        # an arbitrary tile's origin would silently win — refuse, like
-        # the co-tiling check in operators/grid.py
-        torn = [r.band_id for r in meta if r.nt != 1]
-        if torn:
-            ap.error(
-                f"band(s) {torn} carry more than one transform across "
-                "their tiles — each output band needs a single grid; "
-                "split or re-grid the tile table first"
-            )
-        width = max(r.w for r in meta)
-        height = max(r.h for r in meta)
-        a, e = meta[0].t[0], meta[0].t[4]
-        # all output files share ONE pixel scale; mixed-resolution
-        # inputs would silently get band 1's grid — refuse, like the
-        # raster2df pre-flight (COG-ify each resolution group alone,
-        # or resample first: raster_mosaic_hetero shows the pattern)
-        mixed = [r.band_id for r in meta if (r.t[0], r.t[4]) != (a, e)]
-        if mixed:
-            ap.error(
-                f"mixed pixel scales across bands ({mixed} differ from "
-                f"{(a, -e)}); COG-ify each resolution group separately"
-            )
-        # per-file dims: each band keeps ITS OWN raster's extent
-        # (write_geotiffs' optional width/height origin columns) — a
-        # smaller input must not roundtrip nodata-padded to the
-        # global max
-        from raster2points_spark.io import local_df
-
-        origins = local_df(
-            spark,
-            [
-                (
-                    names.get(r.band_id, r.band_id),
-                    float(r.t[2]),
-                    float(r.t[5]),
-                    int(r.w),
-                    int(r.h),
-                )
-                for r in meta
-            ],
-            "file_id string, lon0 double, lat0 double, width int, height int",
-        )
-        px = grid_unpivot(tiles_df).filter(F.col("value").isNotNull())
-        if names:
-            mapping = F.create_map(*[F.lit(x) for kv in names.items() for x in kv])
-            file_col = F.coalesce(mapping[F.col("band_id")], F.col("band_id"))
-        else:
-            file_col = F.col("band_id")
-        pixels = px.select(
-            file_col.alias("file_id"),
-            F.lit(1).alias("band"),
-            "row",
-            "col",
-            F.col("value").cast("double").alias("value"),
-        )
-        manifest = write_geotiffs(
-            pixels,
-            args.output,
-            width=int(width),
-            height=int(height),
-            pixel_scale=(float(a), float(-e)),
-            origins=origins,
-            nodata=args.nodata_out,
-            dtype=args.dtype,
-            compression=args.compression,
-            tile=(args.tile_size, args.tile_size),
-            sparse=args.sparse,
-            bigtiff=args.bigtiff,
-            overviews=args.overviews,
-            predictor=args.predictor,
-            crs_epsg=args.crs,
-        )
-        for r in sorted(manifest.collect(), key=lambda r: r.file_id):
-            print(
-                f"{r.path}: {r.width}x{r.height}, {r.n_valid} valid px, "
-                f"{r.n_tiles} tiles ({r.n_sparse} sparse), {r.n_bytes} bytes"
-            )
-    return 0
 
 
 if __name__ == "__main__":

@@ -55,91 +55,30 @@ NUMPY_TO_SPARK_DTYPE = {
 }
 
 
-def band_dtypes(tiles: DataFrame, bands: list[str]) -> dict[str, str] | None:
-    """Per-band source dtype from tile METADATA (pruned scan of two
-    columns, one tiny collect — never touches the payload).  Returns
-    None when the table predates the ``dtype`` column.  Raises if a
-    band is declared with conflicting dtypes (corrupt table) or an
-    unknown dtype name."""
-    if "dtype" not in tiles.columns:
-        return None
-    rows = (
-        tiles.filter(F.col("band_id").isin(list(bands)))
-        .select("band_id", "dtype")
-        .distinct()
-        .collect()
-    )
-    out: dict[str, str] = {}
-    for r in rows:
-        if r.band_id in out and out[r.band_id] != r.dtype:
-            raise ValueError(
-                f"band {r.band_id!r} declares conflicting dtypes "
-                f"({out[r.band_id]!r} vs {r.dtype!r})"
-            )
-        if r.dtype not in NUMPY_TO_SPARK_DTYPE:
-            raise ValueError(f"band {r.band_id!r} has unknown dtype {r.dtype!r}")
-        out[r.band_id] = r.dtype
-    return out
-
-
 def validate_band_alignment(tiles: DataFrame, bands: list[str]) -> None:
-    """Reference parity: raster2df refuses rasters of unequal
-    resolution before reading any pixel (reconstructed
-    raster2points/raster2points.py::raster2df — it validates resolution
-    and intersects extents up front).  Here the equivalent is two
-    METADATA-ONLY aggregations over the tile table (payload column
-    never scanned; column pruning keeps this a few-KB job):
-
-    1. every requested band carries exactly ONE (dx, dy) resolution,
-       and all bands agree;
-    2. a tile_id shared by several bands has identical geometry
-       (col_off, row_off, width, height, transform) in each — a silent
-       positional-zip of differently-placed tiles would produce wrong
-       points, so it is an error, not a NULL.
-
-    Tiles entirely MISSING from a secondary band are fine (the
-    documented keep-with-NULL contract); only conflicting geometry
-    raises.
+    """Co-tiling check over a tile table: a tile_id shared by several
+    of ``bands`` must have identical geometry (col_off, row_off, width,
+    height, transform) in each — a silent positional zip of
+    differently placed tiles would produce wrong points, so it is an
+    error, not a NULL.  One METADATA-only aggregate with one shuffle
+    (the payload column is never scanned): the geometries of a tile_id
+    differ iff their min and max differ.  Tiles entirely MISSING from a
+    secondary band are fine (the documented keep-with-NULL contract).
+    Resolutions are checked off the band catalog (api.band_catalog).
     """
-    sel = tiles.filter(F.col("band_id").isin(list(bands)))
-    res = (
-        sel.select(
-            "band_id",
-            F.col("transform")[0].alias("dx"),
-            F.col("transform")[4].alias("dy"),
-        )
-        .distinct()
-        .collect()
-    )
-    per_band: dict[str, set] = {}
-    for r in res:
-        per_band.setdefault(r.band_id, set()).add((r.dx, r.dy))
-    for b, s in sorted(per_band.items()):
-        if len(s) > 1:
-            raise ValueError(f"band {b!r} mixes pixel resolutions: {sorted(s)}")
-    distinct_res = {next(iter(s)) for s in per_band.values()}
-    if len(distinct_res) > 1:
-        raise ValueError(
-            "bands have unequal resolutions: "
-            + ", ".join(f"{b}={next(iter(s))}" for b, s in sorted(per_band.items()))
-        )
+    geom = F.struct("col_off", "row_off", "width", "height", "transform")
     bad = (
-        sel.groupBy("tile_id")
-        .agg(
-            F.countDistinct(
-                F.struct(
-                    "col_off", "row_off", "width", "height", F.col("transform").cast("string")
-                )
-            ).alias("n_geom")
-        )
-        .filter(F.col("n_geom") > 1)
+        tiles.filter(F.col("band_id").isin(list(bands)))
+        .groupBy("tile_id")
+        .agg(F.min(geom).alias("lo"), F.max(geom).alias("hi"))
+        .filter(~F.col("lo").eqNullSafe(F.col("hi")))
         .limit(1)
         .collect()
     )
     if bad:
         raise ValueError(
             f"tile {bad[0].tile_id} has conflicting geometry across bands "
-            f"{sorted(per_band)} — bands must be co-tiled (same offsets/size/"
+            f"{sorted(bands)} — bands must be co-tiled (same offsets/size/"
             "transform per tile_id)"
         )
 

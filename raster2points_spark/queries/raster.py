@@ -2450,7 +2450,7 @@ def raster_overview_prune(spark, sf_dir):
 def raster_mosaic_hetero(spark, sf_dir):
     """[r13] Heterogeneous-resolution mosaic — the GDAL VRT shape
     (VERDICT r12 #3): the eager pre-flight refuses mixed-resolution
-    inputs (reference parity, api._paths_preflight); THIS key is the
+    inputs (reference parity, api.band_catalog); THIS key is the
     composed escape hatch it points at.  (a) the finer raster is
     resampled to the coarser grid by inverse-affine bucketing (floor
     to target cell + box MEAN of valid source pixels — GDAL 'average',

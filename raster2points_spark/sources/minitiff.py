@@ -229,15 +229,6 @@ class MiniTiff:
     has_mask: bool = False  # this IFD carries a FILETYPE_MASK SubIFD
     is_mask: bool = False  # this header IS an internal mask IFD
 
-    # --- compatibility aliases for the original strip-only surface ---
-    @property
-    def rows_per_strip(self) -> int:
-        return self.block_height
-
-    @property
-    def strip_offsets(self) -> list[int]:
-        return self.offsets
-
     @property
     def blocks_across(self) -> int:
         return (self.width + self.block_width - 1) // self.block_width

@@ -488,8 +488,8 @@ def test_header_parse_golden(tiny_tif):
     hdr = read_header(path)
     assert (hdr.width, hdr.height) == (w, h)
     assert hdr.dtype == "<f8"
-    assert hdr.rows_per_strip == 2
-    assert len(hdr.strip_offsets) == 2
+    assert hdr.block_height == 2
+    assert len(hdr.offsets) == 2
     # affine from scale (0.5, 0.5) + tiepoint (0,0)->(10,45)
     assert hdr.transform == [0.5, 0.0, 10.0, 0.0, -0.5, 45.0]
     assert hdr.nodata == -9999.0
@@ -1685,48 +1685,46 @@ def test_internal_mask_chain_through_raster2df(spark):
     assert (11.75, 43.75) not in by_coord  # mask zero over sparse tile
 
 
-def test_paths_preflight_validates_driver_side(tmp_path):
-    """raster2df PATH inputs validate off the headers with zero Spark
-    jobs: misaligned rasters refuse immediately; aligned ones return
-    the positional band → header map.  (The Spark-side metadata checks
-    cannot prune through the opaque Python decode, so each one
-    re-ran the full Python decode — measured 3x the key's wall-clock.)"""
-    from raster2points_spark.api import _paths_preflight
-
-    def dtypes(pre):
-        return {b: h.dtype for b, (h, _) in pre.items()}
+def test_band_catalog_reads_paths_driver_side(spark, tmp_path):
+    """GeoTIFF path inputs get their band catalog from the headers with
+    zero Spark jobs: aligned rasters give the positional band → record
+    map; misaligned ones refuse in raster2df before any pixel is read.
+    (Spark-side metadata checks cannot prune through the opaque Python
+    decode, so each one re-ran the full decode.)"""
+    from raster2points_spark.api import band_catalog, raster2df
 
     a = str(tmp_path / "a.tif")
     b = str(tmp_path / "b.tif")
     _write_tiff(a, [1.0] * 8, 4, 2)
     _write_tiff(b, [2.0] * 8, 4, 2)
-    pre = _paths_preflight([a, b])
-    assert dtypes(pre) == {"b1": "<f8", "b2": "<f8"}
-    assert [pre["b1"][0].path, pre["b2"][0].path] == [a, b]
+    got = {}
+    assert _jobs_started(spark, lambda: got.update(band_catalog(spark, [a, b]))) == 0
+    assert list(got) == ["b1", "b2"]
+    assert {k: v.dtype for k, v in got.items()} == {"b1": "float64", "b2": "float64"}
+    assert [got["b1"].src[0].path, got["b2"].src[0].path] == [a, b]
+    assert (got["b1"].width, got["b1"].height, got["b1"].n_px) == (4, 2, 8)
+    assert got["b1"].resolutions == [(0.5, -0.5)]
 
     coarse = str(tmp_path / "coarse.tif")
     _write_tiff(coarse, [1.0] * 8, 4, 2, pixel_scale=(1.0, 1.0))
     with pytest.raises(ValueError, match="unequal resolutions"):
-        _paths_preflight([a, coarse])
+        raster2df(spark, [a, coarse])
 
     shifted = str(tmp_path / "shifted.tif")
     _write_tiff(shifted, [1.0] * 8, 4, 2, tiepoint=(0.0, 0.0, 0.0, 99.0, 45.0, 0.0))
     with pytest.raises(ValueError, match="do not co-tile"):
-        _paths_preflight([a, shifted])
+        raster2df(spark, [a, shifted])
 
     # unparseable header -> the reader's own ValueError
     junk = str(tmp_path / "junk.tif")
     open(junk, "wb").write(b"not a tiff at all")
     with pytest.raises(ValueError, match="byte-order mark"):
-        _paths_preflight([a, junk])
+        band_catalog(spark, [a, junk])
 
-    # validate=False: skip the raises but still supply the band map
+    # validate=False: skip the raises but still read the band map
     # (ADVICE r12 — the documented contract is that only validate=True
     # runs the eager pre-flight checks)
-    assert dtypes(_paths_preflight([a, coarse], validate=False)) == {
-        "b1": "<f8",
-        "b2": "<f8",
-    }
+    assert raster2df(spark, [a, coarse], validate=False).columns == ["lon", "lat", "val1", "val2"]
 
 
 def test_raster2df_validate_false_and_unknown_band(spark, tmp_path):
@@ -1812,6 +1810,111 @@ def test_cli_decodes_once(spark, tmp_path):
     n_cli = _jobs_started(spark, lambda: cli.main([a, b, str(tmp_path / "cli")]))
     assert n_api > 0
     assert n_cli == n_api
+
+
+def test_cli_tile_table_starts_the_jobs_of_raster2csv(spark, tmp_path):
+    """cli.main on a tile-table parquet passes its bands through to
+    raster2csv, whose band catalog checks them: no band-listing job of
+    its own, so it starts exactly the jobs api.raster2csv starts."""
+    from raster2points_spark import api, cli
+    from raster2points_spark.queries._util import GRID_DIR
+
+    grid = f"{GRID_DIR}/grid4.parquet"
+    n_api = _jobs_started(
+        spark, lambda: api.raster2csv(spark, grid, ["b1", "b2"], str(tmp_path / "api"))
+    )
+    n_cli = _jobs_started(
+        spark, lambda: cli.main([grid, str(tmp_path / "cli"), "--bands", "b1", "b2"])
+    )
+    assert n_api > 0
+    assert n_cli == n_api
+
+
+def test_raster2df_tile_table_reads_one_catalog(spark, tmp_path):
+    """Over a tile table raster2df builds with one metadata aggregate
+    (the band catalog) plus the per-tile_id geometry check, with or
+    without max_block_size, and the frame it builds is the same."""
+    from raster2points_spark import api
+    from raster2points_spark.operators.grid import validate_band_alignment
+    from raster2points_spark.queries._util import GRID_DIR
+
+    tiles = api._as_tiles(spark, f"{GRID_DIR}/grid4.parquet")
+    n_meta = _jobs_started(spark, lambda: api.band_catalog(spark, tiles))
+    n_meta += _jobs_started(spark, lambda: validate_band_alignment(tiles, ["b1", "b2"]))
+    built = {}
+    assert _jobs_started(spark, lambda: built.update(df=api.raster2df(spark, tiles))) == n_meta
+    assert _jobs_started(
+        spark, lambda: built.update(blocks=api.raster2df(spark, tiles, max_block_size=2))
+    ) == n_meta
+    assert built["df"].columns == ["lon", "lat", "val1", "val2"]
+    assert sorted(built["df"].collect()) == sorted(built["blocks"].collect())
+    # 16 px of b1 in 2x2 blocks -> 4 tasks
+    assert "Repartition 4, true" in built["blocks"]._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_tile_table_unknown_band_names_present_bands(spark):
+    """A band the tile table lacks raises at build time, naming the
+    bands it has, as GeoTIFF paths do; validate=False with dtypes skips
+    the catalog and keeps the lazy keep-with-NULL contract."""
+    from raster2points_spark.api import raster2df
+    from raster2points_spark.queries._util import GRID_DIR
+
+    grid = f"{GRID_DIR}/grid4.parquet"
+    with pytest.raises(ValueError, match=r"unknown band\(s\) \['b9'\]; present: \['b1', 'b2'\]"):
+        raster2df(spark, grid, ["b1", "b9"])
+    rows = raster2df(spark, grid, ["b1", "b9"], validate=False, dtypes={}).collect()
+    assert len(rows) == 5 and all(r.val2 is None for r in rows)
+
+
+def test_list_inputs_must_be_geotiff_paths(spark, tmp_path, capsys):
+    """api._tif_paths is the one rule that tells GeoTIFF paths from a
+    tile table: a list holds GeoTIFF paths only, and anything else in
+    it is refused by that rule, not by the TIFF header parser."""
+    from raster2points_spark.api import raster2df
+    from raster2points_spark.cli import main
+    from raster2points_spark.queries._util import GRID_DIR
+
+    a = str(tmp_path / "a.tif")
+    _write_tiff(a, [1.0] * 8, 4, 2)
+    grid = f"{GRID_DIR}/grid4.parquet"
+    with pytest.raises(ValueError, match=r"must be GeoTIFF paths \(\.tif/\.tiff\)"):
+        raster2df(spark, [a, grid], ["b1", "b2"])
+    with pytest.raises(SystemExit):
+        main([grid, grid, str(tmp_path / "out")])
+    assert "must be GeoTIFF paths" in capsys.readouterr().err
+
+
+def test_cli_cogify_decodes_each_window_once(spark, tmp_path, monkeypatch):
+    """--format geotiff on GeoTIFF paths takes every band's grid from
+    the headers: no Spark job runs before the manifest write, and the
+    write's plan holds the one decode of each window."""
+    import os
+
+    from raster2points_spark.cli import main
+    from raster2points_spark.sinks import geotiff
+
+    a = str(tmp_path / "a.tif")
+    b = str(tmp_path / "b.tif")
+    _write_tiff(a, [1.0, 2.0, -9999.0, 4.0, 5.0, 6.0, 7.0, 8.0], 4, 2)
+    _write_tiff(b, [float(v) for v in range(10, 90, 10)], 4, 2)
+    sc = spark.sparkContext
+    seen = {}
+    write_geotiffs = geotiff.write_geotiffs
+
+    def write(*args, **kw):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        seen["jobs_before"] = len(sc.statusTracker().getJobIdsForGroup(group))
+        seen["manifest"] = write_geotiffs(*args, **kw)
+        return seen["manifest"]
+
+    monkeypatch.setattr(geotiff, "write_geotiffs", write)
+    out = str(tmp_path / "cogs")
+    n = _jobs_started(spark, lambda: main([a, b, out, "--format", "geotiff", "--tile-size", "16"]))
+    assert seen["jobs_before"] == 0 and n > 0
+    plan = seen["manifest"]._jdf.queryExecution().executedPlan().toString()
+    assert plan.split("== Initial Plan ==")[0].count("MapInArrow") == 1
+    assert sorted(os.listdir(out)) == ["b1.tif", "b2.tif"]
 
 
 def test_cli_unknown_band_names_present_bands(spark, tmp_path, capsys):

@@ -101,8 +101,8 @@ def test_dtype_preservation(spark):
 
 
 def test_dtype_conflict_raises(spark):
-    from raster2points_spark.operators.grid import band_dtypes
-
+    """The band catalog's dtypes refuse a band declared with two
+    dtypes, or with one no Spark type holds, before any pixel."""
     tf = [0.5, 0.0, 10.0, 0.0, -0.5, 45.0]
     schema = (
         "band_id string, tile_id long, col_off int, row_off int, width int, "
@@ -117,19 +117,17 @@ def test_dtype_conflict_raises(spark):
         schema,
     )
     with pytest.raises(ValueError, match="conflicting dtypes"):
-        band_dtypes(conflicting, ["b1"])
+        raster2df(spark, conflicting, ["b1"])
     unknown = spark.createDataFrame(
         [("b1", 0, 0, 0, 1, 1, tf, -9999.0, "complex128", [1.0])], schema
     )
     with pytest.raises(ValueError, match="unknown dtype"):
-        band_dtypes(unknown, ["b1"])
+        raster2df(spark, unknown, ["b1"])
 
 
 def test_alignment_validation(spark):
     """Reference parity: unequal resolutions / conflicting tile
     geometry fail eagerly; the aligned fixture passes unchanged."""
-    from raster2points_spark.operators.grid import validate_band_alignment
-
     schema = (
         "band_id string, tile_id long, col_off int, row_off int, width int, "
         "height int, transform array<double>, nodata double, dtype string, "
@@ -166,9 +164,9 @@ def test_alignment_validation(spark):
         schema,
     )
     with pytest.raises(ValueError, match="mixes pixel resolutions"):
-        validate_band_alignment(bad_mix, ["b1"])
-    # the committed aligned fixture passes (and raster2df still works)
-    validate_band_alignment(_read_grid4(spark), ["b1", "b2"])
+        raster2df(spark, bad_mix, bands=["b1"])
+    # the committed aligned fixture passes
+    assert raster2df(spark, _read_grid4(spark), ["b1", "b2"]).count() == 5
 
 
 def _read_grid4(spark):
