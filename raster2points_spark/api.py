@@ -30,6 +30,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,7 +95,7 @@ def band_catalog(spark: SparkSession, tiles) -> dict[str, Band]:
         hdrs = [minitiff.read_header(p) for p in paths]
         return {
             b: Band(h.width, h.height, (tuple(h.transform),), h.crs,
-                    minitiff._DTYPE_NAMES[h.dtype.lstrip("<>")], h.width * h.height, (h, s))
+                    np.dtype(h.dtype).name, h.width * h.height, (h, s))
             for h, names in zip(hdrs, minitiff._band_names(hdrs, None))
             for s, b in enumerate(names)
         }

@@ -36,6 +36,7 @@ from __future__ import annotations
 import argparse
 
 from raster2points_spark.api import raster2csv, raster2df
+from raster2points_spark.io import write_parquet
 from raster2points_spark.session import get_spark
 
 
@@ -157,7 +158,7 @@ def main(argv: list[str] | None = None) -> int:
                 calc_area=args.calc_area, max_block_size=args.max_block_size,
                 overview_level=args.overview_level,
             )
-            df.write.mode("overwrite").parquet(args.output)
+            write_parquet(df, args.output)
         else:
             _cogify(spark, tiles, args)
     except ValueError as e:

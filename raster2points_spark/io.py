@@ -26,10 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-# dimension tables small enough to broadcast at ANY scale factor —
-# region/nation are fixed-size (5/25 rows) even at 100 TB.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
 
 # Some corpus generations store events.ts as parquet TIMESTAMP(NANOS),
 # which Spark 4 refuses to read as a timestamp ([PARQUET_TYPE_ILLEGAL]).

@@ -1,8 +1,3 @@
 """Plan-inspection utilities (see :mod:`.inspect`)."""
 
-from raster2points_spark.plans.inspect import (  # noqa: F401
-    count_op,
-    explain_formatted,
-    pushed_filters,
-    read_schemas,
-)
+from raster2points_spark.plans.inspect import explain_formatted  # noqa: F401

@@ -13,24 +13,3 @@ def explain_formatted(df: DataFrame) -> str:
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
 
-
-def count_op(df: DataFrame, op: str) -> int:
-    """Occurrences of a physical operator name in the plan
-    (e.g. 'Exchange', 'BroadcastHashJoin', 'SortMergeJoin')."""
-    return explain_formatted(df).count(op)
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    return [
-        line.strip()
-        for line in explain_formatted(df).splitlines()
-        if "PushedFilters" in line
-    ]
-
-
-def read_schemas(df: DataFrame) -> list[str]:
-    return [
-        line.strip()
-        for line in explain_formatted(df).splitlines()
-        if "ReadSchema" in line
-    ]

@@ -51,13 +51,14 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # saves (measured at sf0.1's 1-5 MB files); above it the serial scan
 # task dominates (measured at the 51 MB 100x embeddings slice)
 _LIGHT_FLOOR = 16 << 20
+# fan-out ceiling: above it the scan itself has enough splits
+_FANOUT_MAX = 64 << 20
 
 
 def t_fanout(
     spark: SparkSession,
     sf_dir: str,
     name: str,
-    threshold: int = 64 << 20,
     heavy: bool = True,
 ) -> DataFrame:
     """Table load with a size-gated fan-out for CPU-heavy projections.
@@ -65,7 +66,7 @@ def t_fanout(
     A tiny parquet file is one row group → one scan task, so an
     md5/minhash/dot-product pipeline over it runs single-threaded no
     matter how many cores exist.  When the file is smaller than
-    ``threshold`` we repartition to the default parallelism — the
+    ``_FANOUT_MAX`` we repartition to the default parallelism — the
     shuffle moves <64 MB, negligible next to the compute it unlocks.
     At real scale the gate is false and the plan is untouched (the
     scan itself provides parallelism; an unconditional repartition
@@ -93,7 +94,7 @@ def t_fanout(
     df = t(spark, sf_dir, name)
     floor = 0 if heavy else _LIGHT_FLOOR
     try:
-        if floor <= os.path.getsize(os.path.join(sf_dir, f"{name}.parquet")) < threshold:
+        if floor <= os.path.getsize(os.path.join(sf_dir, f"{name}.parquet")) < _FANOUT_MAX:
             return df.repartition(spark.sparkContext.defaultParallelism)
     except OSError:
         pass

@@ -1278,25 +1278,6 @@ def _srp_sign_exprs_duck() -> list[str]:
     return out
 
 
-def _srp_band_exprs_duck() -> list[str]:
-    out = []
-    for band, rows in enumerate(_srp_weights()):
-        bits = []
-        for k, row in enumerate(rows):
-            arr = "[" + ", ".join(str(w) for w in row) + "]"
-            s = (
-                f"list_aggregate(list_transform(generate_series(1, {_SRP_DIM}), "
-                f"i -> ({arr})[i] * ei[i]), 'sum')"
-            )
-            bits.append(
-                f"CASE WHEN {s} >= 0 THEN {1 << (_SRP_BAND_BITS - 1 - k)} ELSE 0 END"
-            )
-        out.append(
-            f"cast({band * (1 << _SRP_BAND_BITS)} + " + " + ".join(bits) + " AS bigint)"
-        )
-    return out
-
-
 @register(
     "dedup_embed",
     oracle=f"""

@@ -378,11 +378,12 @@ def stream_foreach_batch(spark, sf_dir):
 # google.protobuf, which is absent (ModuleNotFoundError: No module
 # named 'google'; the end-to-end attempt dies with
 # "TransformWithStateInPySpark driver worker exited unexpectedly").
-# EVIDENCE: tools/tws_probe.py runs the real minimal StatefulProcessor
-# stream and records the exact failure — committed as
-# reports/streaming_probe_r7.txt.  stream_custom_state covers the same
-# workload on the applyInPandasWithState API; the probe's docstring
-# documents the exact swap once protobuf is available.
+# EVIDENCE: reports/streaming_probe_r14.txt records a real minimal
+# StatefulProcessor stream and its exact failure.  stream_custom_state
+# covers the same workload on the applyInPandasWithState API; once
+# protobuf is available, swap its applyInPandasWithState call for
+# groupBy(...).transformWithStateInPandas(StatefulProcessor subclass,
+# outputStructType=..., outputMode="Update", timeMode="None").
 
 
 @register(

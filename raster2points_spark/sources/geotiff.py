@@ -1,10 +1,9 @@
-"""Tile-table schema and window grid shared by the GeoTIFF reader.
+"""Window grid of the GeoTIFF reader.
 
 The reference (wri/raster2points, reconstructed — SURVEY §0) reads
 GeoTIFFs block window by block window.  Here the reader is
-sources/minitiff.py; this module holds the two pieces it shares with
-the rest of the engine: the tile-table schema its decode emits and the
-block-window generator that lays the tile grid over a raster.
+sources/minitiff.py; this module holds the block-window generator that
+lays the tile grid over a raster.
 
 Scale shape: tiling 100 TB of GeoTIFFs is itself a distributed job —
 the window list is sliced into one partition per core, and each
@@ -13,13 +12,6 @@ headers are read on the driver.
 """
 
 from __future__ import annotations
-
-TILE_SCHEMA_DDL = (
-    "band_id string, tile_id long, col_off int, row_off int, width int, "
-    "height int, transform array<double>, nodata double, dtype string, "
-    "data array<double>"
-)
-
 
 def window_grid(
     raster_width: int,

@@ -19,9 +19,10 @@ GeoTIFFs/COGs actually use:
 Two distributed conversions share one decode kernel: a driver header
 pass lays the window grid (sources/geotiff.py::window_grid) as a local
 window list, already sliced into one partition per core, and
-``mapInArrow`` tasks read only their own windows' byte ranges into
-float64 ndarrays.  ``minitiff_to_tiles`` emits the tile table (one row
-per band and window, each window an Arrow list array).
+``mapInArrow`` tasks, given the driver's parsed headers, read only
+their own windows' byte ranges into float64 ndarrays.
+``minitiff_to_tiles`` emits the tile table (one row per band and
+window, each window an Arrow list array).
 ``zipped_windows`` emits finished points for raster2df: the band-1
 mask, NoData and the pixel-centre affine run in numpy inside the task
 (operators.grid.points_from_windows), so only surviving points cross
@@ -48,12 +49,11 @@ Also supported since r11:
 
 Still out of scope (raise ValueError with the offending tag):
 JPEG/zstd/webp compression (need native codec libraries — see
-reports/zstd_probe_r11.txt) and 64-bit-int samples.
+reports/zstd_probe_r14.txt) and 64-bit-int samples.
 """
 
 from __future__ import annotations
 
-import functools
 import math
 import mmap
 import os
@@ -61,9 +61,11 @@ import struct
 import zlib
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
-from raster2points_spark.sources.geotiff import TILE_SCHEMA_DDL, window_grid
+from raster2points_spark.sources.geotiff import window_grid
+from raster2points_spark.sources.tiles import TILE_SCHEMA_DDL
 
 # TIFF tag ids
 _NEW_SUBFILE_TYPE = 254
@@ -174,19 +176,6 @@ _DTYPES = {
     (2, 32): "i4",
     (3, 32): "f4",
     (3, 64): "f8",
-}
-
-# short code -> the numpy NAME the tile table's dtype column uses
-# (operators/grid.py NUMPY_TO_SPARK_DTYPE keys)
-_DTYPE_NAMES = {
-    "i1": "int8",
-    "u1": "uint8",
-    "u2": "uint16",
-    "u4": "uint32",
-    "i2": "int16",
-    "i4": "int32",
-    "f4": "float32",
-    "f8": "float64",
 }
 
 _TYPE_SIZES = {
@@ -650,8 +639,6 @@ def _decode_block(hdr: MiniTiff, f, bx: int, by: int, sample: int):
     values for that block's VALID region (edge tiles clipped).  One
     seek + one read of exactly the block's byte range — the same I/O
     unit rasterio/GDAL block reads use."""
-    import numpy as np
-
     per_plane = hdr.blocks_down * hdr.blocks_across
     plane_idx = by * hdr.blocks_across + bx
     if hdr.planar_config == 2:
@@ -742,8 +729,6 @@ def _read_window_array(
     touching only the strips/tiles that cover it — the same I/O
     discipline rasterio block reads have, so a decode task's bytes read
     are its own windows' blocks."""
-    import numpy as np
-
     if width <= 0 or height <= 0:
         raise ValueError(f"bad window size {width}x{height}")
     if (
@@ -875,13 +860,13 @@ def minitiff_to_tiles(
     else:
         hdrs = [_resolve(paths[0])]
     names = _band_names(hdrs, band_ids)
-    srcs: list[tuple[str, int, bool, int]] = []
+    bands: list[tuple[MiniTiff, int]] = []
     tw, th = _native_tile(hdrs[0]) if tile_size is None else (tile_size, tile_size)
     for hdr, file_bands in zip(hdrs, names):
         grid = window_grid(hdr.width, hdr.height, tw, tile_height=th)
-        dtype = _DTYPE_NAMES[hdr.dtype.lstrip("<>")]
+        dtype = np.dtype(hdr.dtype).name
         for sample, band_id in enumerate(file_bands):
-            srcs.append((hdr.path, hdr.overview, hdr.is_mask, sample))
+            bands.append((hdr, sample))
             meta.extend(
                 (
                     band_id,
@@ -893,7 +878,7 @@ def minitiff_to_tiles(
                     hdr.transform,
                     hdr.nodata,
                     dtype,
-                    len(srcs) - 1,
+                    len(bands) - 1,
                 )
                 for w in grid
             )
@@ -908,21 +893,13 @@ def minitiff_to_tiles(
         "band_id string, tile_id long, col_off int, row_off int, width int, "
         "height int, transform array<double>, nodata double, dtype string, src int",
     )
-    return meta_df.mapInArrow(lambda it: _tile_batches(it, srcs), TILE_SCHEMA_DDL)
+    return meta_df.mapInArrow(lambda it: _tile_batches(it, bands), TILE_SCHEMA_DDL)
 
 
 def _native_tile(hdr: MiniTiff) -> tuple[int, int]:
     """Default window shape: a tiled file's own TileWidth×TileLength, so
     each window is one block; 512² for strips."""
     return (hdr.block_width, hdr.block_height) if hdr.tiled else (512, 512)
-
-
-def _header_reader(srcs):
-    """Per-task header lookup for ``srcs`` entries (path, overview,
-    mask, sample): each header is parsed on first use, then reused."""
-    return functools.cache(
-        lambda i: read_header(srcs[i][0], overview=srcs[i][1], mask=srcs[i][2])
-    )
 
 
 def _payload(a):
@@ -935,14 +912,14 @@ def _payload(a):
     return pa.ListArray.from_arrays(pa.array([0, a.size], pa.int32()), values)
 
 
-def _tile_batches(batches, srcs):
+def _tile_batches(batches, bands):
     """mapInArrow kernel of :func:`minitiff_to_tiles`: every window-list
-    row (the tile table's metadata plus ``src``, an index into ``srcs``)
-    becomes one tile-table row carrying its decoded window.  One batch
-    per window, so a task holds one payload at a time."""
+    row (the tile table's metadata plus ``src``, an index into
+    ``bands``, the driver's (header, sample) pairs) becomes one
+    tile-table row carrying its decoded window.  One batch per window,
+    so a task holds one payload at a time."""
     import pyarrow as pa
 
-    header = _header_reader(srcs)
     for batch in batches:
         meta = batch.drop_columns(["src"])
         cols = [
@@ -950,7 +927,7 @@ def _tile_batches(batches, srcs):
         ]
         for i, (s, c, r, w, h) in enumerate(zip(*cols)):
             row = meta.slice(i, 1)
-            data = _payload(_read_window_array(header(s), c, r, w, h, srcs[s][3]))
+            data = _payload(_read_window_array(bands[s][0], c, r, w, h, bands[s][1]))
             yield pa.RecordBatch.from_arrays(
                 [*row.columns, data], names=[*row.schema.names, "data"]
             )
@@ -963,8 +940,6 @@ def _read_clipped(
     width, height): read clipped to this raster's extent and NaN-padded
     back to the window's shape, or None when the window lies wholly
     outside the raster (``validate=False`` inputs of other dims)."""
-    import numpy as np
-
     w, h = min(width, hdr.width - col_off), min(height, hdr.height - row_off)
     if w <= 0 or h <= 0:
         return None
@@ -976,28 +951,26 @@ def _read_clipped(
     return out
 
 
-def _zip_batches(batches, srcs):
-    """mapInArrow kernel of :func:`zipped_windows`.  For each window-list
-    row it reads band 1's window and skips the window when no pixel
-    holds data (operators.grid.valid_pixels).  Otherwise it reads every
-    other band at the same pixels (:func:`_read_clipped`) and yields
-    the window's points (operators.grid.points_from_windows).  One
-    batch per window, so a task holds one window's arrays at a time."""
+def _zip_batches(batches, bands):
+    """mapInArrow kernel of :func:`zipped_windows` over the driver's
+    (header, sample) pairs.  For each window-list row it reads band 1's
+    window and skips the window when no pixel holds data
+    (operators.grid.valid_pixels).  Otherwise it reads every other band
+    at the same pixels (:func:`_read_clipped`) and yields the window's
+    points (operators.grid.points_from_windows).  One batch per window,
+    so a task holds one window's arrays at a time."""
     from raster2points_spark.operators.grid import points_from_windows, valid_pixels
 
-    header = _header_reader(srcs)
-    hdrs = [header(i) for i in range(len(srcs))]
-    nodata = [h.nodata for h in hdrs]
+    (hdr, sample), others = bands[0], bands[1:]
+    nodata = [h.nodata for h, _ in bands]
     for batch in batches:
         cols = [batch.column(n).to_pylist() for n in ("col_off", "row_off", "width", "height")]
         for c, r, w, h in zip(*cols):
-            mask = _read_window_array(hdrs[0], c, r, w, h, srcs[0][3])
+            mask = _read_window_array(hdr, c, r, w, h, sample)
             if not valid_pixels(mask, nodata[0]).any():
                 continue
-            others = [
-                _read_clipped(hdrs[i], c, r, w, h, srcs[i][3]) for i in range(1, len(srcs))
-            ]
-            yield points_from_windows(mask, others, nodata, hdrs[0].transform, c, r)
+            rest = [_read_clipped(o, c, r, w, h, s) for o, s in others]
+            yield points_from_windows(mask, rest, nodata, hdr.transform, c, r)
 
 
 def zipped_windows(
@@ -1020,7 +993,6 @@ def zipped_windows(
     from raster2points_spark.io import local_df
 
     hdr = bands[0][0]
-    srcs = [(h.path, h.overview, h.is_mask, s) for h, s in bands]
     wins = local_df(
         spark,
         [
@@ -1031,8 +1003,8 @@ def zipped_windows(
     )
     if partitions:
         wins = wins.repartition(partitions)
-    schema = ", ".join(["lon double", "lat double", *(f"v{i} double" for i in range(len(srcs)))])
-    return wins.mapInArrow(lambda it: _zip_batches(it, srcs), schema)
+    schema = ", ".join(["lon double", "lat double", *(f"v{i} double" for i in range(len(bands)))])
+    return wins.mapInArrow(lambda it: _zip_batches(it, bands), schema)
 
 
 CATALOG_SCHEMA_DDL = (
@@ -1089,7 +1061,7 @@ def minitiff_catalog(spark: SparkSession, paths: list[str]) -> DataFrame:
                         "width": h.width,
                         "height": h.height,
                         "n_bands": h.samples_per_pixel,
-                        "dtype": _DTYPE_NAMES[h.dtype.lstrip("<>")],
+                        "dtype": np.dtype(h.dtype).name,
                         "compression": h.compression,
                         "tiled": h.tiled,
                         "bits": h.bits_per_sample,

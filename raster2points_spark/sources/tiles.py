@@ -71,6 +71,11 @@ TILE_ARROW_SCHEMA = pa.schema(
         ("data", pa.list_(pa.float64())),
     ]
 )
+TILE_SCHEMA_DDL = (
+    "band_id string, tile_id long, col_off int, row_off int, width int, "
+    "height int, transform array<double>, nodata double, dtype string, "
+    "data array<double>"
+)
 
 
 def _tile_rows(
@@ -141,8 +146,10 @@ def ensure_grid_fixtures(out_dir: str) -> dict[str, str]:
 def read_tiles(spark: SparkSession, path: str) -> DataFrame:
     """Tile-table source.  At 100 TB this would be a directory
     partitioned by band_id/tile range; a plain parquet read keeps
-    column pruning (e.g. tile_stats never reads ``transform``)."""
-    return spark.read.parquet(path)
+    column pruning (e.g. tile_stats never reads ``transform``).  The
+    fixed schema spares the schema-inference job; a table written
+    without the ``dtype`` column reads it as NULL."""
+    return spark.read.schema(TILE_SCHEMA_DDL).parquet(path)
 
 
 def gridbig_table(n: int = 512, tile: int = 64) -> pa.Table:

@@ -1852,6 +1852,39 @@ def test_raster2df_tile_table_reads_one_catalog(spark, tmp_path):
     assert "Repartition 4, true" in built["blocks"]._jdf.queryExecution().optimizedPlan().toString()
 
 
+def test_raster2df_tile_path_starts_the_jobs_of_its_frame(spark):
+    """read_tiles passes the fixed tile schema, so it starts no
+    schema-inference job: raster2df over a tile-parquet path starts
+    exactly the jobs it starts over the already-read frame."""
+    from raster2points_spark import api
+    from raster2points_spark.queries._util import GRID_DIR
+    from raster2points_spark.sources.tiles import read_tiles
+
+    grid = f"{GRID_DIR}/grid4.parquet"
+    read = {}
+    assert _jobs_started(spark, lambda: read.update(tiles=read_tiles(spark, grid))) == 0
+    assert read["tiles"].schema == spark.read.parquet(grid).schema
+    n_frame = _jobs_started(spark, lambda: api.raster2df(spark, read["tiles"]))
+    assert _jobs_started(spark, lambda: api.raster2df(spark, grid)) == n_frame
+
+
+def test_tile_table_without_dtype_column_converts(spark, tmp_path):
+    """A tile table written before the dtype column existed reads
+    dtype as NULL and converts to the same points."""
+    import pyarrow.parquet as pq
+
+    from raster2points_spark.api import raster2df
+    from raster2points_spark.queries._util import GRID_DIR
+    from raster2points_spark.sources.tiles import grid4_table
+
+    old = str(tmp_path / "grid4_no_dtype.parquet")
+    pq.write_table(grid4_table().drop_columns(["dtype"]), old)
+    rows = raster2df(spark, old, ["b1", "b2"]).collect()
+    assert len(rows) == 5
+    want = raster2df(spark, f"{GRID_DIR}/grid4.parquet", ["b1", "b2"]).collect()
+    assert sorted(rows) == sorted(want)
+
+
 def test_tile_table_unknown_band_names_present_bands(spark):
     """A band the tile table lacks raises at build time, naming the
     bands it has, as GeoTIFF paths do; validate=False with dtypes skips
@@ -2272,9 +2305,9 @@ def test_zip_kernel_skips_mask_empty_windows_without_reading_other_bands(
         return real(hdr, f, bx, by, sample)
 
     monkeypatch.setattr(minitiff, "_decode_block", counting)
-    srcs = [(m, 0, False, 0), (v, 0, False, 0)]
+    bands = [(minitiff.read_header(m), 0), (minitiff.read_header(v), 0)]
     wins = _window_batch([(0, 0, 0, 2, 2), (1, 2, 0, 2, 2)])
-    batches = list(minitiff._zip_batches(iter([wins]), srcs))
+    batches = list(minitiff._zip_batches(iter([wins]), bands))
     assert len(batches) == 1
     assert sorted(decoded) == sorted([(m, 0, 0), (m, 1, 0), (v, 1, 0)])
     assert batches[0].column("v0").to_pylist() == [3.0, 4.0, 7.0, 8.0]
@@ -2289,7 +2322,7 @@ def test_decode_kernels_yield_one_batch_per_window(tmp_path):
     p = str(tmp_path / "a.tif")
     _write_tiff(p, [float(i + 1) for i in range(12)], 6, 2, tile=(2, 2))
     wins = _window_batch([(0, 0, 0, 2, 2), (1, 2, 0, 2, 2), (2, 4, 0, 2, 2)])
-    zipped = list(minitiff._zip_batches(iter([wins]), [(p, 0, False, 0)]))
+    zipped = list(minitiff._zip_batches(iter([wins]), [(minitiff.read_header(p), 0)]))
     assert len(zipped) == 3
     assert [b.column("v0").to_pylist() for b in zipped][2] == [5.0, 6.0, 11.0, 12.0]
 
@@ -2298,9 +2331,41 @@ def test_decode_kernels_yield_one_batch_per_window(tmp_path):
     tile_rows = wins.append_column("band_id", pa.array(["b1"] * 3)).append_column(
         "src", pa.array([0, 0, 0], pa.int32())
     )
-    tiles = list(minitiff._tile_batches(iter([tile_rows]), [(p, 0, False, 0)]))
+    tiles = list(minitiff._tile_batches(iter([tile_rows]), [(minitiff.read_header(p), 0)]))
     assert len(tiles) == 3
     assert tiles[1].column("data").to_pylist() == [[3.0, 4.0, 9.0, 10.0]]
+
+
+def test_decode_kernels_parse_no_header(tmp_path, monkeypatch):
+    """The decode kernels read pixels with the headers the driver
+    parsed: with the header parser broken they decode the same
+    windows, skips and tiles."""
+    import pyarrow as pa
+
+    from raster2points_spark.sources import minitiff
+
+    m = str(tmp_path / "mask.tif")
+    v = str(tmp_path / "value.tif")
+    _write_tiff(m, [-9999.0, -9999.0, 3.0, 4.0, -9999.0, -9999.0, 7.0, 8.0], 4, 2, tile=(2, 2))
+    _write_tiff(v, [float(i) for i in range(8)], 4, 2, tile=(2, 2))
+    bands = [(minitiff.read_header(m), 0), (minitiff.read_header(v), 0)]
+    wins = _window_batch([(0, 0, 0, 2, 2), (1, 2, 0, 2, 2)])
+    tile_rows = wins.append_column("src", pa.array([0, 1], pa.int32()))
+
+    def run():
+        return (
+            [b.to_pylist() for b in minitiff._zip_batches(iter([wins]), bands)],
+            [b.to_pylist() for b in minitiff._tile_batches(iter([tile_rows]), bands)],
+        )
+
+    want = run()
+
+    def broken(*args, **kwargs):
+        raise AssertionError("a decode kernel parsed a header")
+
+    monkeypatch.setattr(minitiff, "read_header", broken)
+    assert run() == want
+    assert len(want[0]) == 1 and len(want[1]) == 2
 
 
 def test_raster2df_max_block_size_paths_repartition_window_list(spark, tmp_path):

@@ -8,8 +8,7 @@ evidence lived only in `tests/` — invisible to the per-round driver
 record (r8 VERDICT #4).  This tool re-runs each key's quantitative pin
 and emits one PASS/FAIL line per key WITH the measured quantity and
 its bound, so the non-oracle tail carries committed, machine-readable
-evidence (`reports/nonoracle_pins_r{N}.txt`, written by
-tools/verify_all.sh each round).
+evidence (`reports/nonoracle_pins_r{N}.txt`, this tool's stdout).
 
 The pin set is self-syncing: the tool HARD-FAILS if its keys drift
 from the registry's actual non-oracle set, and
