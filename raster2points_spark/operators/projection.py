@@ -6,12 +6,11 @@ EPSG codes.  Pure codegen trigonometry: every builder returns a
 Column expression that fuses into the calling plan's map stage (zero
 shuffles — fn_utm_forward's plan-pinned property).
 
-The registered key `fn_utm_forward` (queries/raster.py) keeps its
-expressions inline because its DuckDB oracle needs the SAME decimal
-constants injected into SQL text; this module is the reusable library
-surface (and the r15 seam for `fn_utm_inverse` / grid reprojection).
-`*_py` twins mirror each builder operation-for-operation for
-independent-implementation tests (tests/test_projection.py).
+The registered key `fn_utm_forward` (queries/raster.py) calls
+`utm_forward`, and its DuckDB oracle injects this module's constants
+into the SQL text as decimal literals.  `*_py` twins mirror each
+builder operation-for-operation for independent-implementation tests
+(tests/test_projection.py, tests/test_raster.py).
 
 Reference parity: [R] raster2points delegates CRS handling to
 rasterio/PROJ; here the projection math itself is an engine operator.
@@ -24,9 +23,8 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# WGS84 ellipsoid + UTM conventions (same derivations as the
-# fn_utm_forward literals; computed once, used by both the Column
-# builders and the Python twins).
+# WGS84 ellipsoid + UTM conventions (computed once, used by the Column
+# builders, the Python twins and fn_utm_forward's oracle).
 A = 6378137.0
 FLAT = 1.0 / 298.257223563
 E2 = FLAT * (2.0 - FLAT)

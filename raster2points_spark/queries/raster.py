@@ -20,6 +20,19 @@ from raster2points_spark.operators.grid import (
     nodata_filter,
     raster2points,
 )
+from raster2points_spark.operators.projection import (
+    A,
+    E2,
+    EP2,
+    FALSE_EASTING,
+    K0,
+    M0,
+    M2,
+    M4,
+    M6,
+    utm_forward,
+    utm_zone_central_meridian,
+)
 from raster2points_spark.io import local_df
 from raster2points_spark.registry import register
 from raster2points_spark.sources.tiles import ensure_grid_fixtures, read_tiles
@@ -63,6 +76,13 @@ def _probe_tiles(spark, sf_dir):
     if p:
         return read_tiles(spark, p), int(os.environ["SPARK_GRAFT_RASTER_W"])
     return _tiles(spark, sf_dir), 64
+
+
+def _band_pixels(tiles, band="b1", valid=True):
+    """One band of a tile table melted to pixels; ``valid`` drops its
+    NoData pixels (the mask every masked-band key starts from)."""
+    px = grid_unpivot(tiles.filter(F.col("band_id") == band))
+    return nodata_filter(px) if valid else px
 
 
 @register(
@@ -329,8 +349,7 @@ def nodata_filter_q(spark, sf_dir):
 )
 def affine_coords_q(spark, sf_dir):
     """Pixel→geo projection of the masked band (pixel centers)."""
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
-    px = affine_coords(px)
+    px = affine_coords(_band_pixels(_tiles(spark, sf_dir)))
     return px.select(
         "tile_id",
         "row",
@@ -355,8 +374,8 @@ def band_zip_join_q(spark, sf_dir):
     """Positional multi-band alignment; band-2 NoData keeps the row
     with NULL (reference contract)."""
     tl = _tiles(spark, sf_dir)
-    b1 = nodata_filter(grid_unpivot(tl.filter(F.col("band_id") == "b1")))
-    b2 = grid_unpivot(tl.filter(F.col("band_id") == "b2"))
+    b1 = _band_pixels(tl)
+    b2 = _band_pixels(tl, "b2", valid=False)
     return b1.join(
         b2.select("tile_id", "pos", F.col("value").alias("val2")), ["tile_id", "pos"], "left"
     ).select("tile_id", "row", "col", F.col("value").alias("val1"), "val2")
@@ -378,9 +397,7 @@ def band_zip_join_q(spark, sf_dir):
 def geodesic_area_q(spark, sf_dir):
     """WGS84 pixel area (R² = 6378137² = 40680631590769).  Rounded to
     whole m² — sin() differs between JVM and libm in the last ulp."""
-    px = affine_coords(
-        nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
-    )
+    px = affine_coords(_band_pixels(_tiles(spark, sf_dir)))
     return px.select(
         "tile_id",
         "row",
@@ -402,8 +419,8 @@ def geodesic_area_q(spark, sf_dir):
 def col_rename_q(spark, sf_dir):
     """User-supplied column names (reference ``col_names`` param)."""
     tl = _tiles(spark, sf_dir)
-    b1 = nodata_filter(grid_unpivot(tl.filter(F.col("band_id") == "b1")))
-    b2 = grid_unpivot(tl.filter(F.col("band_id") == "b2"))
+    b1 = _band_pixels(tl)
+    b2 = _band_pixels(tl, "b2", valid=False)
     return b1.join(
         b2.select("tile_id", "pos", F.col("value").alias("slope")), ["tile_id", "pos"], "left"
     ).select("tile_id", "row", "col", F.col("value").alias("elevation"), "slope")
@@ -424,7 +441,7 @@ def chunk_union_q(spark, sf_dir):
     """The reference's chunked pd.concat, relationalized: unionAll of
     per-chunk results is free in Spark (partitions concatenate
     logically; no data moves)."""
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
+    px = _band_pixels(_tiles(spark, sf_dir))
     lo = px.filter(F.col("tile_id") < 8).select("value")
     hi = px.filter(F.col("tile_id") >= 8).select("value")
     return lo.unionAll(hi).agg(F.count("*").alias("n"), F.round(F.sum("value"), 3).alias("s"))
@@ -620,7 +637,7 @@ def raster_downsample(spark, sf_dir):
     reads the precomputed level (1/4^k of the bytes);
     `scan_geotiff_overview` hash-proves overview-read ≡ this operator
     on the committed pyramid fixture."""
-    px = grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1"))
+    px = _band_pixels(_tiles(spark, sf_dir), valid=False)
     return (
         px.groupBy(
             F.floor(F.col("col") / 2).cast("int").alias("c2"),
@@ -667,7 +684,7 @@ def raster_focal_mean(spark, sf_dir):
     exactly the valid pixels.  Scatter-gather generalizes to any
     kernel footprint; at 100 TB the shuffle carries 9×|valid| rows
     pre-combined map-side."""
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
+    px = _band_pixels(_tiles(spark, sf_dir))
     valid = px.select("col", "row", "value")
     offsets = F.expr(
         "explode(flatten(transform(array(-1, 0, 1), "
@@ -694,9 +711,9 @@ def raster_focal_mean(spark, sf_dir):
     )
 
 
-@register(
-    "raster_slope",
-    oracle=f"""
+# DuckDB twin of _gradient: band 1's central differences per valid
+# pixel, n counting the 4 contributions that landed on it.
+_GRAD = f"""
     {_PX}
     , valid AS (
         SELECT col, row, value FROM pix
@@ -719,28 +736,16 @@ def raster_focal_mean(spark, sf_dir):
           ON ctr.col = c.col AND ctr.row = c.row
         GROUP BY c.col, c.row
     )
-    SELECT col, row, round(dzdx, 6) AS dzdx, round(dzdy, 6) AS dzdy,
-           round(sqrt(dzdx * dzdx + dzdy * dzdy), 6) AS slope
-    FROM grad WHERE n = 4
-    """,
-)
-def raster_slope(spark, sf_dir):
-    """Per-pixel gradient magnitude (slope) by central differences —
-    the terrain-analysis sibling of raster_focal_mean, and the second
-    stencil kernel proving the scatter-gather pattern generalizes:
-    each valid pixel scatters a SIGNED, axis-tagged contribution to
-    the 4 centers it influences; one groupBy(col,row) gathers
-    dz/dx = (v(x+1) - v(x-1))/2 and dz/dy, and sqrt of the squared
-    sums is the slope.
+"""
 
-    Same scale shape as focal_mean: a 4-row in-row explode (pure
-    projection), one partial-aggregated shuffle of 4x|valid| rows,
-    a semi-join mask against valid centers; interior-only output via
-    the n = 4 completeness gate (border pixels lack a neighbor on
-    some axis — emitting them would silently bias the gradient).
-    """
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
-    valid = px.select("col", "row", "value")
+
+def _gradient(valid):
+    """Central-difference gradient (dzdx, dzdy) of the interior valid
+    pixels: each pixel scatters a signed, axis-tagged contribution to
+    its 4 neighbours, one groupBy(col, row) gathers them, a semi-join
+    keeps valid centres, and n = 4 keeps the pixels with every
+    neighbour (a border pixel would bias the gradient)."""
+    valid = valid.select("col", "row", "value")
     offsets = F.expr(
         "explode(array("
         "struct(-1 as dc, 0 as dr, 'x' as axis, 1.0D as w),"
@@ -764,7 +769,35 @@ def raster_slope(spark, sf_dir):
             F.count("*").alias("n"),
         )
     )
-    return grad.filter(F.col("n") == 4).select(
+    return grad.filter(F.col("n") == 4)
+
+
+@register(
+    "raster_slope",
+    oracle=f"""
+    {_GRAD}
+    SELECT col, row, round(dzdx, 6) AS dzdx, round(dzdy, 6) AS dzdy,
+           round(sqrt(dzdx * dzdx + dzdy * dzdy), 6) AS slope
+    FROM grad WHERE n = 4
+    """,
+)
+def raster_slope(spark, sf_dir):
+    """Per-pixel gradient magnitude (slope) by central differences —
+    the terrain-analysis sibling of raster_focal_mean, and the second
+    stencil kernel proving the scatter-gather pattern generalizes:
+    each valid pixel scatters a SIGNED, axis-tagged contribution to
+    the 4 centers it influences; one groupBy(col,row) gathers
+    dz/dx = (v(x+1) - v(x-1))/2 and dz/dy, and sqrt of the squared
+    sums is the slope.
+
+    Same scale shape as focal_mean: a 4-row in-row explode (pure
+    projection), one partial-aggregated shuffle of 4x|valid| rows,
+    a semi-join mask against valid centers; interior-only output via
+    the n = 4 completeness gate (border pixels lack a neighbor on
+    some axis — emitting them would silently bias the gradient).
+    """
+    grad = _gradient(_band_pixels(_tiles(spark, sf_dir)))
+    return grad.select(
         "col",
         "row",
         F.round("dzdx", 6).alias("dzdx"),
@@ -830,7 +863,7 @@ def raster_focal_gaussian_sep(spark, sf_dir):
     order, on any partitioning (the unquantized form diverged by one
     ulp at a round(,6) boundary across partition counts —
     determinism_r14)."""
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b2")))
+    px = _band_pixels(_tiles(spark, sf_dir), "b2")
     valid = px.select(
         "col",
         "row",
@@ -904,8 +937,7 @@ def fn_haversine(spark, sf_dir):
     to meter precision (3 dp of km) to absorb last-ulp libm
     divergence.
     """
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
-    px = affine_coords(px)
+    px = affine_coords(_band_pixels(_tiles(spark, sf_dir)))
     lat0 = F.lit(44.0)
     lon0 = F.lit(11.0)
     hav = (
@@ -922,23 +954,10 @@ def fn_haversine(spark, sf_dir):
     )
 
 
-# WGS84 / transverse-Mercator constants for fn_utm_forward, computed
-# once in Python and injected as identical decimal literals into BOTH
-# engines' expressions (same parse → same doubles).  Snyder (1987),
-# "Map Projections — A Working Manual", eqs 8-9..8-13; UTM zone 27N
-# (central meridian 21°W) covers the fixture's 20-17°W pixel centers
-# (eastern pixels sit ~4.2° from the CM — standard UTM overedge; the
-# series stays sub-cm there).
-_UTM_A = 6378137.0
-_UTM_F = 1.0 / 298.257223563
-_UTM_E2 = _UTM_F * (2.0 - _UTM_F)
-_UTM_EP2 = _UTM_E2 / (1.0 - _UTM_E2)
-_UTM_K0 = 0.9996
-_UTM_LON0 = -21.0
-_UTM_M0 = 1.0 - _UTM_E2 / 4.0 - 3.0 * _UTM_E2**2 / 64.0 - 5.0 * _UTM_E2**3 / 256.0
-_UTM_M2 = 3.0 * _UTM_E2 / 8.0 + 3.0 * _UTM_E2**2 / 32.0 + 45.0 * _UTM_E2**3 / 1024.0
-_UTM_M4 = 15.0 * _UTM_E2**2 / 256.0 + 45.0 * _UTM_E2**3 / 1024.0
-_UTM_M6 = 35.0 * _UTM_E2**3 / 3072.0
+# UTM zone 27N (central meridian 21°W) covers the fixture's 20-17°W
+# pixel centers (eastern pixels sit ~4.2° from the CM — standard UTM
+# overedge; the series stays sub-cm there).
+_ZONE_CM = utm_zone_central_meridian(27)
 
 
 @register(
@@ -953,22 +972,22 @@ _UTM_M6 = 35.0 * _UTM_E2**3 / 3072.0
     ),
     base AS (
         SELECT tile_id, row, col, phi,
-               {_UTM_A!r} / sqrt(1.0 - {_UTM_E2!r} * sin(phi) * sin(phi)) AS nn,
+               {A!r} / sqrt(1.0 - {E2!r} * sin(phi) * sin(phi)) AS nn,
                tan(phi) * tan(phi) AS t,
-               {_UTM_EP2!r} * cos(phi) * cos(phi) AS c,
-               (lam - radians({_UTM_LON0!r})) * cos(phi) AS a,
-               {_UTM_A!r} * ({_UTM_M0!r} * phi - {_UTM_M2!r} * sin(2.0 * phi)
-                   + {_UTM_M4!r} * sin(4.0 * phi) - {_UTM_M6!r} * sin(6.0 * phi)) AS m
+               {EP2!r} * cos(phi) * cos(phi) AS c,
+               (lam - radians({_ZONE_CM!r})) * cos(phi) AS a,
+               {A!r} * ({M0!r} * phi - {M2!r} * sin(2.0 * phi)
+                   + {M4!r} * sin(4.0 * phi) - {M6!r} * sin(6.0 * phi)) AS m
         FROM pts
     )
     SELECT tile_id, row, col,
-           round(500000.0 + {_UTM_K0!r} * nn * (a
+           round({FALSE_EASTING!r} + {K0!r} * nn * (a
                + (1.0 - t + c) * (a * a * a) / 6.0
-               + (5.0 - 18.0 * t + t * t + 72.0 * c - 58.0 * {_UTM_EP2!r})
+               + (5.0 - 18.0 * t + t * t + 72.0 * c - 58.0 * {EP2!r})
                  * (a * a * a * a * a) / 120.0), 3) AS easting,
-           round({_UTM_K0!r} * (m + nn * tan(phi) * ((a * a) / 2.0
+           round({K0!r} * (m + nn * tan(phi) * ((a * a) / 2.0
                + (5.0 - t + 9.0 * c + 4.0 * c * c) * (a * a * a * a) / 24.0
-               + (61.0 - 58.0 * t + t * t + 600.0 * c - 330.0 * {_UTM_EP2!r})
+               + (61.0 - 58.0 * t + t * t + 600.0 * c - 330.0 * {EP2!r})
                  * (a * a * a * a * a * a) / 720.0)), 3) AS northing
     FROM base
     """,
@@ -980,49 +999,19 @@ def fn_utm_forward(spark, sf_dir):
     reprojection math behind gdalwarp, completing the r14 CRS story
     (the catalog now reads/writes projected-CRS geokeys; this key
     computes the projected coordinates themselves).  Sub-mm series
-    accuracy within the zone; both engines evaluate the identical
-    double-precision expression tree from identical injected decimal
-    constants, rounded to mm (3 dp of m) to absorb last-ulp libm
-    divergence — same discipline as fn_haversine.
+    accuracy within the zone.  Spark evaluates
+    operators/projection.utm_forward; the oracle states the same
+    expression tree with projection's constants injected as decimal
+    literals (same parse → same doubles), rounded to mm (3 dp of m)
+    to absorb last-ulp libm divergence — same discipline as
+    fn_haversine.
 
     Scale shape: pure per-row trigonometry fused into the scan stage
     (zero shuffles, whole-stage codegen JVM-side) — at 100 TB this is
     the map-side projection step of every reproject/mosaic pipeline,
     cost ∝ pixels with no data movement."""
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
-    px = affine_coords(px)
-    phi = F.radians(F.col("lat"))
-    lam = F.radians(F.col("lon"))
-    sin_phi, cos_phi, tan_phi = F.sin(phi), F.cos(phi), F.tan(phi)
-    nn = F.lit(_UTM_A) / F.sqrt(F.lit(1.0) - F.lit(_UTM_E2) * sin_phi * sin_phi)
-    t_ = tan_phi * tan_phi
-    c = F.lit(_UTM_EP2) * cos_phi * cos_phi
-    a = (lam - F.radians(F.lit(_UTM_LON0))) * cos_phi
-    m = F.lit(_UTM_A) * (
-        F.lit(_UTM_M0) * phi
-        - F.lit(_UTM_M2) * F.sin(2.0 * phi)
-        + F.lit(_UTM_M4) * F.sin(4.0 * phi)
-        - F.lit(_UTM_M6) * F.sin(6.0 * phi)
-    )
-    easting = F.lit(500000.0) + F.lit(_UTM_K0) * nn * (
-        a
-        + (F.lit(1.0) - t_ + c) * (a * a * a) / 6.0
-        + (F.lit(5.0) - 18.0 * t_ + t_ * t_ + 72.0 * c - F.lit(58.0) * F.lit(_UTM_EP2))
-        * (a * a * a * a * a)
-        / 120.0
-    )
-    northing = F.lit(_UTM_K0) * (
-        m
-        + nn
-        * tan_phi
-        * (
-            (a * a) / 2.0
-            + (F.lit(5.0) - t_ + 9.0 * c + 4.0 * c * c) * (a * a * a * a) / 24.0
-            + (F.lit(61.0) - 58.0 * t_ + t_ * t_ + 600.0 * c - F.lit(330.0) * F.lit(_UTM_EP2))
-            * (a * a * a * a * a * a)
-            / 720.0
-        )
-    )
+    px = affine_coords(_band_pixels(_tiles(spark, sf_dir)))
+    easting, northing = utm_forward(F.col("lon"), F.col("lat"), _ZONE_CM)
     return px.select(
         "tile_id",
         "row",
@@ -1055,8 +1044,8 @@ def raster_band_math(spark, sf_dir):
     engines (ANSI-safe, no try_divide asymmetry).
     """
     tl = _tiles(spark, sf_dir)
-    b1 = nodata_filter(grid_unpivot(tl.filter(F.col("band_id") == "b1")))
-    b2 = nodata_filter(grid_unpivot(tl.filter(F.col("band_id") == "b2")))
+    b1 = _band_pixels(tl)
+    b2 = _band_pixels(tl, "b2")
     return (
         b1.select("tile_id", "pos", "row", "col", F.col("value").alias("v1"))
         .join(b2.select("tile_id", "pos", F.col("value").alias("v2")), ["tile_id", "pos"])
@@ -1110,7 +1099,7 @@ def raster_fill_idw(spark, sf_dir):
     holes with zero valid neighbors stay absent, exactly like the
     oracle.  Diagonal neighbors weigh 1/√2: true IDW, not a box mean.
     """
-    px = grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1"))
+    px = _band_pixels(_tiles(spark, sf_dir), valid=False)
     b = px.select("col", "row", "value")
     holes = b.filter(F.col("value").isNull()).select(
         F.col("col").alias("ccol"), F.col("row").alias("crow")
@@ -1142,28 +1131,7 @@ def raster_fill_idw(spark, sf_dir):
 @register(
     "raster_hillshade",
     oracle=f"""
-    {_PX}
-    , valid AS (
-        SELECT col, row, value FROM pix
-        WHERE band_id = 'b1' AND value IS NOT NULL
-    ),
-    offsets AS (
-        SELECT * FROM (VALUES (-1, 0, 'x', 1.0), (1, 0, 'x', -1.0),
-                              (0, -1, 'y', 1.0), (0, 1, 'y', -1.0)) t(dc, dr, axis, w)
-    ),
-    contrib AS (
-        SELECT v.col + o.dc AS col, v.row + o.dr AS row, o.axis, o.w * v.value AS wv
-        FROM valid v CROSS JOIN offsets o
-    ),
-    grad AS (
-        SELECT c.col, c.row,
-               sum(CASE WHEN axis = 'x' THEN wv END) / 2 AS dzdx,
-               sum(CASE WHEN axis = 'y' THEN wv END) / 2 AS dzdy,
-               count(*) AS n
-        FROM contrib c SEMI JOIN (SELECT DISTINCT col, row FROM valid) ctr
-          ON ctr.col = c.col AND ctr.row = c.row
-        GROUP BY c.col, c.row
-    )
+    {_GRAD}
     SELECT col, row,
            round(greatest(0.0,
                cos(radians(45.0)) * cos(atan(sqrt(dzdx*dzdx + dzdy*dzdy)))
@@ -1185,31 +1153,7 @@ def raster_hillshade(spark, sf_dir):
     double formula; 3-dp round on the 0-255 scale absorbs libm ulp
     skew.
     """
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
-    valid = px.select("col", "row", "value")
-    offsets = F.expr(
-        "explode(array("
-        "struct(-1 as dc, 0 as dr, 'x' as axis, 1.0D as w),"
-        "struct( 1 as dc, 0 as dr, 'x' as axis, -1.0D as w),"
-        "struct(0 as dc, -1 as dr, 'y' as axis, 1.0D as w),"
-        "struct(0 as dc,  1 as dr, 'y' as axis, -1.0D as w)))"
-    )
-    contrib = valid.select("col", "row", "value", offsets.alias("o")).select(
-        (F.col("col") + F.col("o.dc")).alias("ccol"),
-        (F.col("row") + F.col("o.dr")).alias("crow"),
-        F.col("o.axis").alias("axis"),
-        (F.col("o.w") * F.col("value")).alias("wv"),
-    )
-    centers = valid.select(F.col("col").alias("ccol"), F.col("row").alias("crow"))
-    grad = (
-        contrib.join(centers, ["ccol", "crow"], "left_semi")
-        .groupBy(F.col("ccol").alias("col"), F.col("crow").alias("row"))
-        .agg(
-            (F.sum(F.when(F.col("axis") == "x", F.col("wv"))) / 2).alias("dzdx"),
-            (F.sum(F.when(F.col("axis") == "y", F.col("wv"))) / 2).alias("dzdy"),
-            F.count("*").alias("n"),
-        )
-    )
+    grad = _gradient(_band_pixels(_tiles(spark, sf_dir)))
     slope_rad = F.atan(
         F.sqrt(F.col("dzdx") * F.col("dzdx") + F.col("dzdy") * F.col("dzdy"))
     )
@@ -1219,7 +1163,7 @@ def raster_hillshade(spark, sf_dir):
     shade = (
         F.cos(alt) * F.cos(slope_rad) + F.sin(alt) * F.sin(slope_rad) * F.cos(az - aspect)
     )
-    return grad.filter(F.col("n") == 4).select(
+    return grad.select(
         "col",
         "row",
         F.round(F.greatest(F.lit(0.0), shade) * 255, 3).alias("shade"),
@@ -1257,8 +1201,8 @@ def raster_zonal_stats(spark, sf_dir):
     both sides.
     """
     tl = _tiles(spark, sf_dir)
-    b1 = nodata_filter(grid_unpivot(tl.filter(F.col("band_id") == "b1")))
-    b2 = nodata_filter(grid_unpivot(tl.filter(F.col("band_id") == "b2")))
+    b1 = _band_pixels(tl)
+    b2 = _band_pixels(tl, "b2")
     joined = b1.join(
         b2.select("tile_id", "pos", F.col("value").alias("zone_val")),
         ["tile_id", "pos"],
@@ -1335,7 +1279,7 @@ def raster_reproject_nn(spark, sf_dir):
     bitwise.  Empty target cells are absent rows (sparse semantics,
     as everywhere in the melted-raster model).
     """
-    px = nodata_filter(grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1")))
+    px = _band_pixels(_tiles(spark, sf_dir))
     src = affine_coords(px).select("row", "col", "value", "lon", "lat")
     mapped = src.select(
         "row",
@@ -1435,9 +1379,7 @@ def raster_resample_bilinear(spark, sf_dir):
     key — the 4×|target| probe relation is the small side and AQE
     broadcasts it per partition of the source.
     """
-    px = nodata_filter(
-        grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1"))
-    )
+    px = _band_pixels(_tiles(spark, sf_dir))
     valid = px.select("col", "row", "value")
     n2 = _BL_N * _BL_N
     tgt = (
@@ -1544,7 +1486,7 @@ def raster_region_label(spark, sf_dir):
     interval/run-compression variant, same propagation spine.
     """
     src, gw = _probe_tiles(spark, sf_dir)
-    px = nodata_filter(grid_unpivot(src.filter(F.col("band_id") == "b1")))
+    px = _band_pixels(src)
     vp = px.select(
         (F.col("row").cast("bigint") * gw + F.col("col")).alias("pid"),
         "col",
@@ -1593,6 +1535,60 @@ def raster_region_label(spark, sf_dir):
     return lbl.select("col", "row", "cls", "lbl")
 
 
+# The 8 D8 directions: dir, column/row step, and the step's length
+# (diagonals √2), once for Spark and once for the DuckDB oracles.
+_D8 = (
+    "array(struct(0 as dir,  1 as dc,  0 as dr, cast(1.0 as double) as dist), "
+    "struct(1 as dir,  1 as dc,  1 as dr, sqrt(cast(2.0 as double)) as dist), "
+    "struct(2 as dir,  0 as dc,  1 as dr, cast(1.0 as double) as dist), "
+    "struct(3 as dir, -1 as dc,  1 as dr, sqrt(cast(2.0 as double)) as dist), "
+    "struct(4 as dir, -1 as dc,  0 as dr, cast(1.0 as double) as dist), "
+    "struct(5 as dir, -1 as dc, -1 as dr, sqrt(cast(2.0 as double)) as dist), "
+    "struct(6 as dir,  0 as dc, -1 as dr, cast(1.0 as double) as dist), "
+    "struct(7 as dir,  1 as dc, -1 as dr, sqrt(cast(2.0 as double)) as dist))"
+)
+_D8_OFFS = """offs AS (
+      SELECT * FROM (VALUES
+        (0,  1,  0, CAST(1.0 AS DOUBLE)), (1,  1,  1, sqrt(CAST(2.0 AS DOUBLE))),
+        (2,  0,  1, CAST(1.0 AS DOUBLE)), (3, -1,  1, sqrt(CAST(2.0 AS DOUBLE))),
+        (4, -1,  0, CAST(1.0 AS DOUBLE)), (5, -1, -1, sqrt(CAST(2.0 AS DOUBLE))),
+        (6,  0, -1, CAST(1.0 AS DOUBLE)), (7,  1, -1, sqrt(CAST(2.0 AS DOUBLE)))
+      ) AS o(dir, dc, dr, dist)
+    )"""
+
+
+def _d8_steepest(valid, by):
+    """Each valid pixel's steepest D8 neighbour: the 8 directions
+    explode in-row, an equi-join on the shifted (col, row) finds the
+    neighbour, and rank 1 of (grad DESC, dir) per ``by`` picks it.
+    ``valid`` holds col, row and value, plus pid when the neighbour's
+    pid should come along as down_pid."""
+    down = [F.col("pid").alias("down_pid")] if "pid" in valid.columns else []
+    cand = valid.select(
+        *[c for c in valid.columns if c != "value"],
+        F.col("value").alias("cv"),
+        F.explode(F.expr(_D8)).alias("o"),
+    )
+    nbr = valid.select(
+        *down,
+        F.col("col").alias("ncol"),
+        F.col("row").alias("nrow"),
+        F.col("value").alias("nv"),
+    )
+    grads = cand.join(
+        nbr,
+        (F.col("ncol") == F.col("col") + F.col("o.dc"))
+        & (F.col("nrow") == F.col("row") + F.col("o.dr")),
+    ).select(
+        *by,
+        *(["down_pid"] if down else []),
+        F.col("o.dir").alias("dir"),
+        ((F.col("cv") - F.col("nv")) / F.col("o.dist")).alias("grad"),
+    )
+    w = Window.partitionBy(*by).orderBy(F.col("grad").desc(), "dir")
+    return grads.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+
+
 @register(
     "raster_flow_direction",
     oracle=f"""
@@ -1600,14 +1596,7 @@ def raster_region_label(spark, sf_dir):
     , valid AS (
       SELECT col, row, value FROM pix WHERE band_id = 'b1' AND value IS NOT NULL
     ),
-    offs AS (
-      SELECT * FROM (VALUES
-        (0,  1,  0, CAST(1.0 AS DOUBLE)), (1,  1,  1, sqrt(CAST(2.0 AS DOUBLE))),
-        (2,  0,  1, CAST(1.0 AS DOUBLE)), (3, -1,  1, sqrt(CAST(2.0 AS DOUBLE))),
-        (4, -1,  0, CAST(1.0 AS DOUBLE)), (5, -1, -1, sqrt(CAST(2.0 AS DOUBLE))),
-        (6,  0, -1, CAST(1.0 AS DOUBLE)), (7,  1, -1, sqrt(CAST(2.0 AS DOUBLE)))
-      ) AS o(dir, dc, dr, dist)
-    ),
+    {_D8_OFFS},
     grads AS (
       SELECT c.col, c.row, o.dir,
              (c.value - n.value) / o.dist AS grad
@@ -1646,42 +1635,9 @@ def raster_flow_direction(spark, sf_dir):
     over fewer candidates.
     """
     src, _gw = _probe_tiles(spark, sf_dir)
-    px = nodata_filter(grid_unpivot(src.filter(F.col("band_id") == "b1")))
+    px = _band_pixels(src)
     valid = px.select("col", "row", "value").persist()
-    cand = valid.select(
-        "col",
-        "row",
-        F.col("value").alias("cv"),
-        F.explode(
-            F.expr(
-                "array(struct(0 as dir,  1 as dc,  0 as dr, cast(1.0 as double) as dist), "
-                "struct(1 as dir,  1 as dc,  1 as dr, sqrt(cast(2.0 as double)) as dist), "
-                "struct(2 as dir,  0 as dc,  1 as dr, cast(1.0 as double) as dist), "
-                "struct(3 as dir, -1 as dc,  1 as dr, sqrt(cast(2.0 as double)) as dist), "
-                "struct(4 as dir, -1 as dc,  0 as dr, cast(1.0 as double) as dist), "
-                "struct(5 as dir, -1 as dc, -1 as dr, sqrt(cast(2.0 as double)) as dist), "
-                "struct(6 as dir,  0 as dc, -1 as dr, cast(1.0 as double) as dist), "
-                "struct(7 as dir,  1 as dc, -1 as dr, sqrt(cast(2.0 as double)) as dist))"
-            )
-        ).alias("o"),
-    )
-    nbr = valid.select(
-        F.col("col").alias("ncol"),
-        F.col("row").alias("nrow"),
-        F.col("value").alias("nv"),
-    )
-    grads = cand.join(
-        nbr,
-        (F.col("ncol") == F.col("col") + F.col("o.dc"))
-        & (F.col("nrow") == F.col("row") + F.col("o.dr")),
-    ).select(
-        "col",
-        "row",
-        F.col("o.dir").alias("dir"),
-        ((F.col("cv") - F.col("nv")) / F.col("o.dist")).alias("grad"),
-    )
-    w = Window.partitionBy("col", "row").orderBy(F.col("grad").desc(), "dir")
-    best = grads.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    best = _d8_steepest(valid, ["col", "row"])
     return valid.join(
         best.select(
             F.col("col").alias("bcol"),
@@ -1711,14 +1667,7 @@ def _flow_accum_oracle() -> str:
       SELECT cast(row AS bigint) * 64 + col AS pid, col, row, value
       FROM pix WHERE band_id = 'b1' AND value IS NOT NULL
     )""",
-        """offs AS (
-      SELECT * FROM (VALUES
-        (0,  1,  0, CAST(1.0 AS DOUBLE)), (1,  1,  1, sqrt(CAST(2.0 AS DOUBLE))),
-        (2,  0,  1, CAST(1.0 AS DOUBLE)), (3, -1,  1, sqrt(CAST(2.0 AS DOUBLE))),
-        (4, -1,  0, CAST(1.0 AS DOUBLE)), (5, -1, -1, sqrt(CAST(2.0 AS DOUBLE))),
-        (6,  0, -1, CAST(1.0 AS DOUBLE)), (7,  1, -1, sqrt(CAST(2.0 AS DOUBLE)))
-      ) AS o(dir, dc, dr, dist)
-    )""",
+        _D8_OFFS,
         """grads AS (
       SELECT c.pid, n.pid AS down_pid, o.dir,
              (c.value - n.value) / o.dist AS grad
@@ -1777,51 +1726,16 @@ def raster_flow_accumulation(spark, sf_dir):
     states the same sum; the groupBy form is what scales.)
     """
     src, gw = _probe_tiles(spark, sf_dir)
-    px = nodata_filter(grid_unpivot(src.filter(F.col("band_id") == "b1")))
+    px = _band_pixels(src)
     valid = px.select(
         (F.col("row").cast("bigint") * gw + F.col("col")).alias("pid"),
         "col",
         "row",
         "value",
     ).persist()
-    cand = valid.select(
-        "pid",
-        "col",
-        "row",
-        F.col("value").alias("cv"),
-        F.explode(
-            F.expr(
-                "array(struct(0 as dir,  1 as dc,  0 as dr, cast(1.0 as double) as dist), "
-                "struct(1 as dir,  1 as dc,  1 as dr, sqrt(cast(2.0 as double)) as dist), "
-                "struct(2 as dir,  0 as dc,  1 as dr, cast(1.0 as double) as dist), "
-                "struct(3 as dir, -1 as dc,  1 as dr, sqrt(cast(2.0 as double)) as dist), "
-                "struct(4 as dir, -1 as dc,  0 as dr, cast(1.0 as double) as dist), "
-                "struct(5 as dir, -1 as dc, -1 as dr, sqrt(cast(2.0 as double)) as dist), "
-                "struct(6 as dir,  0 as dc, -1 as dr, cast(1.0 as double) as dist), "
-                "struct(7 as dir,  1 as dc, -1 as dr, sqrt(cast(2.0 as double)) as dist))"
-            )
-        ).alias("o"),
-    )
-    nbr = valid.select(
-        F.col("pid").alias("down_pid"),
-        F.col("col").alias("ncol"),
-        F.col("row").alias("nrow"),
-        F.col("value").alias("nv"),
-    )
-    grads = cand.join(
-        nbr,
-        (F.col("ncol") == F.col("col") + F.col("o.dc"))
-        & (F.col("nrow") == F.col("row") + F.col("o.dr")),
-    ).select(
-        "pid",
-        "down_pid",
-        F.col("o.dir").alias("dir"),
-        ((F.col("cv") - F.col("nv")) / F.col("o.dist")).alias("grad"),
-    )
-    w = Window.partitionBy("pid").orderBy(F.col("grad").desc(), "dir")
     edges = (
-        grads.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("grad") > 0))
+        _d8_steepest(valid, ["pid"])
+        .filter(F.col("grad") > 0)
         .select("pid", "down_pid")
         .persist()
     )
@@ -2016,9 +1930,7 @@ def raster_contour_cells(spark, sf_dir):
     exactly as the semi-join mask drops the focal halo.  The
     16-row histogram collapses map-side.
     """
-    px = nodata_filter(
-        grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1"))
-    )
+    px = _band_pixels(_tiles(spark, sf_dir))
     offsets = F.expr(
         "explode(array(struct(0 as dc, 0 as dr), struct(1 as dc, 0 as dr), "
         "struct(0 as dc, 1 as dr), struct(1 as dc, 1 as dr)))"
@@ -2086,9 +1998,7 @@ def spatial_point_in_polygon(spark, sf_dir):
     degeneracy), making the odd/even parity exact in both engines —
     the crossing test is the same float expression twinned.
     """
-    px = nodata_filter(
-        grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1"))
-    )
+    px = _band_pixels(_tiles(spark, sf_dir))
     pts = px.select(
         (F.col("col") + 0.5).alias("x"), (F.col("row") + 0.5).alias("y"), "value"
     )
@@ -2191,9 +2101,7 @@ def raster_mosaic_priority(spark, sf_dir):
     (R1b).  Output: per-source pixel accounting — how much of the
     mosaic each acquisition won.
     """
-    px = nodata_filter(
-        grid_unpivot(_tiles(spark, sf_dir).filter(F.col("band_id") == "b1"))
-    ).select("col", "row", "value")
+    px = _band_pixels(_tiles(spark, sf_dir)).select("col", "row", "value")
     acq1 = px.select("col", "row", "value", F.lit(1).alias("src"))
     acq2 = px.select(
         (F.col("col") + 8).alias("col"),
@@ -2515,6 +2423,37 @@ def raster_mosaic_hetero(spark, sf_dir):
     )
 
 
+_SINK_W = 32
+
+
+def _sink_roundtrip(spark, name, pixels, origins, files, overview_level=0, **opts):
+    """Write ``pixels`` as _SINK_W² GeoTIFFs (16x16 tiles, 0.5° pixels)
+    under SCRATCH/``name`` — the noop write of the manifest is the
+    sink's action — then read ``files`` back at ``overview_level``
+    through the standard unpivot -> nodata -> affine chain.  Returns
+    the points and the files' paths."""
+    import os as _os
+
+    from raster2points_spark.sinks.geotiff import write_geotiffs
+    from raster2points_spark.sources.minitiff import minitiff_to_tiles
+
+    out_dir = _os.path.join(SCRATCH, name)
+    manifest = write_geotiffs(
+        pixels,
+        out_dir,
+        width=_SINK_W,
+        height=_SINK_W,
+        pixel_scale=(0.5, 0.5),
+        origins=origins,
+        tile=(16, 16),
+        **opts,
+    )
+    manifest.write.format("noop").mode("overwrite").save()
+    paths = [_os.path.join(out_dir, f + ".tif") for f in files]
+    tiles = minitiff_to_tiles(spark, paths, band_ids=files, overview_level=overview_level)
+    return affine_coords(nodata_filter(grid_unpivot(tiles))), paths
+
+
 @register(
     "sink_geotiff",
     oracle="""
@@ -2555,13 +2494,7 @@ def sink_geotiff(spark, sf_dir):
     (scan_raster_catalog reads these files' headers right back).
     Absent cells and NaNs encode as nodata — the write twin of the
     reader's mask-first semantics."""
-    import os as _os
-
-    from raster2points_spark.queries._util import SCRATCH
-    from raster2points_spark.sinks.geotiff import write_geotiffs
-    from raster2points_spark.sources.minitiff import minitiff_to_tiles
-
-    w = h = 32
+    w = h = _SINK_W
     ids = F.col("id")
     pixels = (
         spark.range(2 * w * h)
@@ -2589,27 +2522,7 @@ def sink_geotiff(spark, sf_dir):
         (10.0 + 20 * F.col("id")).cast("double").alias("lon0"),
         F.lit(45.0).alias("lat0"),
     )
-    out_dir = _os.path.join(SCRATCH, "sink_geotiff")
-    manifest = write_geotiffs(
-        pixels,
-        out_dir,
-        width=w,
-        height=h,
-        pixel_scale=(0.5, 0.5),
-        origins=origins,
-        nodata=-9999.0,
-        dtype="f8",
-        tile=(16, 16),
-        sparse=True,
-    )
-    # the write IS an action (sink semantics, like sink_parquet's
-    # write_parquet): materialize the manifest once, then re-read
-    manifest.write.format("noop").mode("overwrite").save()
-    files = ["t0", "t1"]
-    tiles = minitiff_to_tiles(
-        spark, [_os.path.join(out_dir, f + ".tif") for f in files], band_ids=files
-    )
-    px = affine_coords(nodata_filter(grid_unpivot(tiles)))
+    px, _ = _sink_roundtrip(spark, "sink_geotiff", pixels, origins, ["t0", "t1"], sparse=True)
     return px.groupBy(F.col("band_id").alias("file")).agg(
         F.count("*").alias("n_valid"),
         F.round(F.sum("value"), 3).alias("sum_val"),
@@ -2659,13 +2572,7 @@ def sink_geotiff_pyramid(spark, sf_dir):
     write task derives its own file's pyramid in-memory (bounded by
     the file, never the dataset) instead of a separate full-dataset
     downsample job."""
-    import os as _os
-
-    from raster2points_spark.queries._util import SCRATCH
-    from raster2points_spark.sinks.geotiff import write_geotiffs
-    from raster2points_spark.sources.minitiff import minitiff_to_tiles
-
-    w = h = 32
+    w = h = _SINK_W
     ids = F.col("id")
     pixels = (
         spark.range(w * h)
@@ -2690,23 +2597,10 @@ def sink_geotiff_pyramid(spark, sf_dir):
         F.lit(10.0).alias("lon0"),
         F.lit(45.0).alias("lat0"),
     )
-    out_dir = _os.path.join(SCRATCH, "sink_geotiff_pyramid")
-    manifest = write_geotiffs(
-        pixels,
-        out_dir,
-        width=w,
-        height=h,
-        pixel_scale=(0.5, 0.5),
-        origins=origins,
-        tile=(16, 16),
-        sparse=True,
-        overviews=1,
+    px, _ = _sink_roundtrip(
+        spark, "sink_geotiff_pyramid", pixels, origins, ["p0"],
+        overview_level=1, sparse=True, overviews=1,
     )
-    manifest.write.format("noop").mode("overwrite").save()
-    tiles = minitiff_to_tiles(
-        spark, [_os.path.join(out_dir, "p0.tif")], band_ids=["p0"], overview_level=1
-    )
-    px = affine_coords(nodata_filter(grid_unpivot(tiles)))
     return px.select("lon", "lat", F.round("value", 6).alias("value"))
 
 
@@ -2742,16 +2636,9 @@ def sink_geotiff_lzw(spark, sf_dir):
 
     At 100 TB: codec choice is per-task CPU/byte trade, plan shape
     identical to sink_geotiff — one shuffle, one file per task."""
-    import os as _os
+    from raster2points_spark.sources.minitiff import minitiff_catalog
 
-    from raster2points_spark.queries._util import SCRATCH
-    from raster2points_spark.sinks.geotiff import write_geotiffs
-    from raster2points_spark.sources.minitiff import (
-        minitiff_catalog,
-        minitiff_to_tiles,
-    )
-
-    w = h = 32
+    w = h = _SINK_W
     ids = F.col("id")
     pixels = (
         spark.range(w * h)
@@ -2775,24 +2662,11 @@ def sink_geotiff_lzw(spark, sf_dir):
         F.lit(10.0).alias("lon0"),
         F.lit(45.0).alias("lat0"),
     )
-    out_dir = _os.path.join(SCRATCH, "sink_geotiff_lzw")
-    manifest = write_geotiffs(
-        pixels,
-        out_dir,
-        width=w,
-        height=h,
-        pixel_scale=(0.5, 0.5),
-        origins=origins,
-        tile=(16, 16),
-        compression="lzw",
-        predictor=3,
-        crs_epsg=32633,
+    px, paths = _sink_roundtrip(
+        spark, "sink_geotiff_lzw", pixels, origins, ["z0"],
+        compression="lzw", predictor=3, crs_epsg=32633,
     )
-    manifest.write.format("noop").mode("overwrite").save()
-    path = _os.path.join(out_dir, "z0.tif")
-    tiles = minitiff_to_tiles(spark, [path], band_ids=["z0"])
-    px = affine_coords(nodata_filter(grid_unpivot(tiles)))
-    meta = minitiff_catalog(spark, [path]).select("compression", "crs")
+    meta = minitiff_catalog(spark, paths).select("compression", "crs")
     return (
         px.groupBy("lat")
         .agg(

@@ -375,11 +375,16 @@ def read_header(path: str, overview: int = 0, mask: bool = False) -> MiniTiff:
         try:
             buf = mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
         except (ValueError, OSError):  # empty file / unmappable fs
-            return _parse_header(path, f.read(), overview, mask)
+            buf = f.read()
     try:
         return _parse_header(path, buf, overview, mask)
+    except struct.error as e:
+        # an IFD, entry or tag array that runs past EOF: a truncated
+        # file, reported like every other malformed header
+        raise ValueError(f"{path}: truncated TIFF header ({e})") from e
     finally:
-        buf.close()
+        if isinstance(buf, mmap.mmap):
+            buf.close()
 
 
 def _mask_subifd_tags(buf, bo: str, big: bool, parent_tags: dict):
@@ -664,8 +669,16 @@ def _decode_block(hdr: MiniTiff, f, bx: int, by: int, sample: int):
 
     f.seek(hdr.offsets[idx])
     raw = f.read(hdr.byte_counts[idx])
+    if len(raw) < hdr.byte_counts[idx]:
+        raise ValueError(
+            f"{hdr.path}: block {idx} truncated ({len(raw)} of "
+            f"{hdr.byte_counts[idx]} bytes at offset {hdr.offsets[idx]})"
+        )
     if hdr.compression in _DEFLATE:
-        raw = zlib.decompress(raw)
+        try:
+            raw = zlib.decompress(raw)
+        except zlib.error as e:
+            raise ValueError(f"{hdr.path}: block {idx}: bad deflate data ({e})") from e
     elif hdr.compression == _LZW:
         raw = _lzw_decode(raw)
     elif hdr.compression == _PACKBITS:

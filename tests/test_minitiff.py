@@ -2381,3 +2381,50 @@ def test_raster2df_max_block_size_paths_repartition_window_list(spark, tmp_path)
     tree = plan[: plan.index("\n\n")]
     assert tree.count("MapInArrow") == 1 and tree.count("Exchange") == 1
     assert tree.index("MapInArrow") < tree.index("Exchange")
+
+
+def test_truncated_fixtures_raise_value_error(tmp_path):
+    """Every committed GeoTIFF cut short at several points either reads
+    whole or raises ValueError, never struct.error or zlib.error, which
+    cli.main would turn into a traceback instead of a usage error.
+    Each cut is read twice: through its own header, and through the
+    intact file's header (a block whose bytes run past EOF)."""
+    import dataclasses
+    import glob
+    import os
+
+    from raster2points_spark.sources.minitiff import _read_window_array, read_header
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = sorted(glob.glob(os.path.join(repo, "fixtures", "tif", "*.tif")))
+    assert len(paths) == 6
+    cut = str(tmp_path / "cut.tif")
+    for p in paths:
+        data = open(p, "rb").read()
+        whole = read_header(p)
+        n = len(data)
+        for at in sorted({0, 7, 8, 12, n - 1} | {n * k // 8 for k in range(1, 8)}):
+            with open(cut, "wb") as f:
+                f.write(data[:at])
+            try:
+                h = read_header(cut)
+            except ValueError:
+                h = None
+            for hdr in (h, dataclasses.replace(whole, path=cut)):
+                if hdr is None:
+                    continue
+                try:
+                    a = _read_window_array(hdr, 0, 0, hdr.width, hdr.height, 0)
+                except ValueError:
+                    continue
+                assert a.shape == (hdr.height, hdr.width), (p, at)
+    # a deflate block whose bytes are all there but corrupt names the block
+    p = os.path.join(repo, "fixtures", "tif", "elev.tif")
+    whole = read_header(p)
+    data = bytearray(open(p, "rb").read())
+    off, cnt = whole.offsets[0], whole.byte_counts[0]
+    data[off : off + cnt] = bytes(cnt)
+    with open(cut, "wb") as f:
+        f.write(data)
+    with pytest.raises(ValueError, match="block 0: bad deflate data"):
+        _read_window_array(read_header(cut), 0, 0, whole.width, whole.height, 0)

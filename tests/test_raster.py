@@ -245,52 +245,26 @@ def test_zonemap_prunes_tiles_before_explode(spark, registry):
 
 
 def test_utm_forward_matches_independent_python(spark, registry):
-    """fn_utm_forward vs a THIRD implementation of the Snyder series
-    (Python math module, independent libm path from both Spark's JVM
-    StrictMath and DuckDB): every pixel's easting/northing must agree
-    to the key's own mm rounding."""
-    from raster2points_spark.queries.raster import (
-        _UTM_A, _UTM_E2, _UTM_EP2, _UTM_K0, _UTM_LON0,
-        _UTM_M0, _UTM_M2, _UTM_M4, _UTM_M6, _tiles,
-    )
-    from raster2points_spark.operators.grid import (
-        affine_coords, grid_unpivot, nodata_filter,
-    )
-    import pyspark.sql.functions as F
-
-    def fwd(lat, lon):
-        phi, lam = math.radians(lat), math.radians(lon)
-        n = _UTM_A / math.sqrt(1 - _UTM_E2 * math.sin(phi) ** 2)
-        t_ = math.tan(phi) ** 2
-        c = _UTM_EP2 * math.cos(phi) ** 2
-        a = (lam - math.radians(_UTM_LON0)) * math.cos(phi)
-        m = _UTM_A * (
-            _UTM_M0 * phi - _UTM_M2 * math.sin(2 * phi)
-            + _UTM_M4 * math.sin(4 * phi) - _UTM_M6 * math.sin(6 * phi)
-        )
-        x = 500000 + _UTM_K0 * n * (
-            a + (1 - t_ + c) * a**3 / 6
-            + (5 - 18 * t_ + t_**2 + 72 * c - 58 * _UTM_EP2) * a**5 / 120
-        )
-        y = _UTM_K0 * (
-            m + n * math.tan(phi) * (
-                a * a / 2 + (5 - t_ + 9 * c + 4 * c * c) * a**4 / 24
-                + (61 - 58 * t_ + t_**2 + 600 * c - 330 * _UTM_EP2) * a**6 / 720
-            )
-        )
-        return x, y
+    """fn_utm_forward vs the Python twin of the Snyder series
+    (operators/projection.utm_forward_py: Python math module, an
+    independent libm path from both Spark's JVM StrictMath and DuckDB):
+    every pixel's easting/northing must agree to the key's own mm
+    rounding."""
+    from raster2points_spark.queries.raster import _band_pixels, _tiles
+    from raster2points_spark.operators.grid import affine_coords
+    from raster2points_spark.operators.projection import utm_forward_py
 
     sf = "/root/testdata/sf0.001"
     got = {
         (r.tile_id, r.row, r.col): (r.easting, r.northing)
         for r in registry["fn_utm_forward"].fn(spark, sf).collect()
     }
-    pts = affine_coords(
-        nodata_filter(grid_unpivot(_tiles(spark, sf).filter(F.col("band_id") == "b1")))
-    ).select("tile_id", "row", "col", "lon", "lat").collect()
+    pts = affine_coords(_band_pixels(_tiles(spark, sf))).select(
+        "tile_id", "row", "col", "lon", "lat"
+    ).collect()
     assert len(pts) == len(got) > 0
     for p in pts:
-        x, y = fwd(p.lat, p.lon)
+        x, y = utm_forward_py(p.lon, p.lat, -21.0)
         gx, gy = got[(p.tile_id, p.row, p.col)]
         assert abs(gx - x) < 2e-3 and abs(gy - y) < 2e-3, (p, (x, y), (gx, gy))
         # zone plausibility: the fixture sits east of the 21°W CM

@@ -7,6 +7,11 @@ name before hashing — mirrored here).  Each frame also goes through
 the driver's ``sort_values`` over all columns, so a cell type the
 driver's canonicalizer cannot order fails here first.
 
+Each passing key's ``ok`` line ends with the sha256 of its canonical
+Spark rows, so two runs (before and after a refactor, say) compare by
+diffing those digests:
+``grep ^ok run.txt | awk '{print $2, $NF}'``.
+
 Usage:
     python tools/diff_oracle.py [--sf /root/testdata/sf0.01] [keys...]
 """
@@ -14,6 +19,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import hashlib
 import math
 import os
 import sys
@@ -185,7 +191,11 @@ def main() -> int:
                 print(f"   {p}")
             failed.append(k)
         else:
-            print(f"ok {k}: {len(sdf)} rows (spark {t_spark:.1f}s, duck {t_duck:.1f}s)")
+            digest = hashlib.sha256(repr(canon_rows(sdf)).encode()).hexdigest()
+            print(
+                f"ok {k}: {len(sdf)} rows (spark {t_spark:.1f}s, duck {t_duck:.1f}s)"
+                f" sha256={digest}"
+            )
             passed.append(k)
 
     print(f"\n{len(passed)} passed, {len(failed)} failed, {len(skipped)} rows-only")
