@@ -3,9 +3,10 @@
 Scale notes (the 100 TB story per operator):
 - dedup_exact: hash-groupBy — map-side partial agg, shuffle carries one
   row per distinct hash, not per doc.
-- dedup_jaccard: shingle equi-join — docs pair ONLY when they share a
-  3-gram shingle (inverted-index join), never an O(n²) cross join;
-  set sizes are per-row size(array), not an extra explode+groupBy.
+- dedup_jaccard / dedup_containment: shingle equi-join — docs pair
+  ONLY when they share a 3-gram shingle (inverted-index join), never
+  an O(n²) cross join; set sizes are a groupBy(doc_id) count of the
+  df-capped index, joined to the pairs unhinted.
 - dedup_near: hand-rolled MinHash+LSH — signatures are per-row
   array_min(transform(...)) projections (zero token-level shuffle),
   band-bucket join generates candidates, exact verify intersects the
@@ -119,12 +120,17 @@ _SHINGLES_DUCK = (
 )
 
 
-@register(
-    "dedup_jaccard",
-    oracle=f"""
-    WITH sh AS (
+_SH_INNER_DUCK = f"""sh AS (
         SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents
-    ),
+    )"""
+
+_SH_CTE_DUCK = "\n    WITH " + _SH_INNER_DUCK + "\n"
+
+# CTE chain sh → df → kept → sizes, inter(doc_a, doc_b, n_inter): the
+# df-capped shingle inverted index and its self-join, shared by
+# dedup_jaccard and dedup_containment (_shingle_overlap is the Spark twin).
+_OVERLAP_CTES_DUCK = f"""
+    WITH {_SH_INNER_DUCK},
     df AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
     kept AS (SELECT s.doc_id, s.shingle FROM sh s JOIN df USING (shingle)),
     sizes AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
@@ -133,43 +139,35 @@ _SHINGLES_DUCK = (
         FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2
     )
-    SELECT doc_a, doc_b,
-           round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 4) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= 0.4
-    """,
-)
-def dedup_jaccard(spark, sf_dir):
-    """Near-dup pairs by 3-gram shingle Jaccard >= 0.4 over the
-    document-frequency-capped shingle universe.
+"""
 
-    Inverted-index join: only docs sharing a shingle ever meet, so the
-    shuffle is proportional to shared-shingle pairs, not |docs|².  Two
-    100 TB guards (both absent in r1, flagged by the judge):
 
-    - Shingles appearing in > MAX_SHINGLE_DF documents are dropped from
-      the index BEFORE the self-join — one ubiquitous shingle ("in the")
-      otherwise generates O(df²) candidate pairs.  Jaccard is computed
-      over the same capped universe on both engines, so the oracle
-      still hash-matches.
-    - Set sizes join the (one-row-per-doc) pair relation WITHOUT a
-      broadcast hint: at corpus scale the sizes table does not fit in
-      an executor, so this must stay a shuffle join; AQE demotes it to
-      broadcast automatically when it is genuinely small.
-    """
-    # persist: the exploded shingle index feeds both the df-cap
-    # aggregation and the self-join — one tokenize+shingle pass.
-    # (A count-window over shingle would cap in "one" shuffle, but
-    # window exec sorts every partition and gets no map-side combine —
-    # measured 20-40% slower than groupBy+join at sf0.1.)
-    sh = (
+def _shingle_index(spark, sf_dir):
+    """(doc_id, shingle) per distinct 3-gram shingle of each document,
+    persisted: one tokenize+shingle pass feeds every consumer."""
+    return (
         t_fanout(spark, sf_dir, "documents")
         .withColumn("toks", F.expr(TOKS_SPARK))
         .select("doc_id", F.explode(F.expr(_SHINGLES_SPARK)).alias("shingle"))
         .persist()
     )
+
+
+def _shingle_overlap(spark, sf_dir):
+    """``(inter, sizes)`` over the df-capped shingle inverted index:
+    ``inter`` holds (doc_a, doc_b, n_inter) for every pair sharing a
+    kept shingle (doc_a < doc_b), ``sizes`` (doc_id, n) each document's
+    kept-shingle count.
+
+    Shingles appearing in > MAX_SHINGLE_DF documents are dropped BEFORE
+    the self-join — one ubiquitous shingle ("in the") otherwise
+    generates O(df²) candidate pairs; both engines measure over the
+    same capped universe, so the oracles still hash-match.  (A
+    count-window over shingle would cap in "one" shuffle, but window
+    exec sorts every partition and gets no map-side combine — measured
+    20-40% slower than groupBy+join at sf0.1.)
+    """
+    sh = _shingle_index(spark, sf_dir)
     df_ok = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("df"))
@@ -185,6 +183,33 @@ def dedup_jaccard(spark, sf_dir):
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("n_inter"))
     )
+    return inter, sizes
+
+
+@register(
+    "dedup_jaccard",
+    oracle=_OVERLAP_CTES_DUCK
+    + """
+    SELECT doc_a, doc_b,
+           round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 4) AS jaccard
+    FROM inter
+    JOIN sizes sa ON sa.doc_id = doc_a
+    JOIN sizes sb ON sb.doc_id = doc_b
+    WHERE n_inter * 1.0 / (sa.n + sb.n - n_inter) >= 0.4
+    """,
+)
+def dedup_jaccard(spark, sf_dir):
+    """Near-dup pairs by 3-gram shingle Jaccard >= 0.4 over the
+    document-frequency-capped shingle universe (_shingle_overlap).
+
+    Inverted-index join: only docs sharing a shingle ever meet, so the
+    shuffle is proportional to shared-shingle pairs, not |docs|².  Set
+    sizes join the (one-row-per-doc) pair relation WITHOUT a broadcast
+    hint: at corpus scale the sizes table does not fit in an executor,
+    so this must stay a shuffle join; AQE demotes it to broadcast
+    automatically when it is genuinely small.
+    """
+    inter, sizes = _shingle_overlap(spark, sf_dir)
     jac = F.col("n_inter") * F.lit(1.0) / (F.col("sa.n") + F.col("sb.n") - F.col("n_inter"))
     return (
         inter.join(sizes.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
@@ -221,12 +246,6 @@ _BAND_UNION_DUCK = " UNION ALL ".join(
     f"SELECT doc_id, {b} AS band_idx, concat_ws(':', {cols}) AS band_val FROM sigs"
     for b, cols in _BANDS
 )
-
-_SH_INNER_DUCK = f"""sh AS (
-        SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents
-    )"""
-
-_SH_CTE_DUCK = "\n    WITH " + _SH_INNER_DUCK + "\n"
 
 # CTE chain sh → ... → near(doc_a, doc_b, jaccard): the full MinHash-LSH
 # near-dup pair pipeline, shared by dedup_near and dedup_components.
@@ -325,9 +344,11 @@ def dedup_near(spark, sf_dir):
     )
 
 
-@register(
-    "dedup_components",
-    oracle="WITH RECURSIVE "
+# Recursive-CTE transitive closure of the near-dup pair graph, ending
+# in comp(doc_id, keep_id): keep_id is the component's min doc_id.
+# Shared by dedup_components and pipeline_dedup_full.
+_COMPONENTS_CTES = (
+    "WITH RECURSIVE "
     + _SH_INNER_DUCK
     + ", "
     + _NEAR_PAIR_CTES
@@ -342,10 +363,13 @@ def dedup_near(spark, sf_dir):
         SELECT doc, doc AS lab FROM nodes
         UNION
         SELECT e.d AS doc, w.lab FROM walk w JOIN edges e ON e.s = w.doc
-    )
-    SELECT doc AS doc_id, min(lab) AS keep_id FROM walk GROUP BY doc
-    """,
+    ),
+    comp AS (SELECT doc AS doc_id, min(lab) AS keep_id FROM walk GROUP BY doc)
+"""
 )
+
+
+@register("dedup_components", oracle=_COMPONENTS_CTES + "    SELECT doc_id, keep_id FROM comp\n")
 def dedup_components(spark, sf_dir):
     """Transitive near-dup clustering: connected components over the
     MinHash-LSH pair graph, survivor = min doc_id per component — the
@@ -485,6 +509,11 @@ def _simhash_exprs(hash_col: str, shift: str) -> tuple[list[str], str]:
 
 _SH_VOTES_DUCK, _SH_ASSEMBLE_DUCK = _simhash_exprs("h", "({h} >> {j})")
 
+# 60-bit token hash of ``w`` from its md5: Spark parses the hex digits
+# with conv, DuckDB with a 0x-prefixed cast — the same value on both.
+_TOKEN_HASH_SPARK = "cast(conv(substring(md5(w), 1, 15), 16, 10) AS bigint)"
+_TOKEN_HASH_DUCK = "cast(concat('0x', substr(md5(w), 1, 15)) AS bigint)"
+
 # Spark-side per-row votes: fold the per-doc hash ARRAY with
 # aggregate() — zero shuffles (the v1 explode+distinct+groupBy shape
 # cost two).  The assemble expr is shift-agnostic, reuse DuckDB's twin.
@@ -503,7 +532,7 @@ _SH_ASSEMBLE_SPARK = _SH_ASSEMBLE_DUCK
         SELECT DISTINCT doc_id, unnest({TOKS_DUCK}) AS w FROM documents
     ),
     hashed AS (
-        SELECT doc_id, cast(concat('0x', substr(md5(w), 1, 15)) AS bigint) AS h FROM tok
+        SELECT doc_id, {_TOKEN_HASH_DUCK} AS h FROM tok
     ),
     votes AS (
         SELECT doc_id, {", ".join(_SH_VOTES_DUCK)} FROM hashed GROUP BY doc_id
@@ -527,7 +556,7 @@ def dedup_simhash(spark, sf_dir):
         .filter(F.size("tokd") > 0)
         .withColumn(
             "harr",
-            F.expr("transform(tokd, w -> cast(conv(substring(md5(w), 1, 15), 16, 10) AS bigint))"),
+            F.expr(f"transform(tokd, w -> {_TOKEN_HASH_SPARK})"),
         )
     )
     votes = docs.select("doc_id", *[F.expr(v) for v in _SH_AGG_ARR_SPARK])
@@ -538,9 +567,12 @@ def dedup_simhash(spark, sf_dir):
 # Similarity search (embeddings are unit-norm [V] so cosine == dot)
 # ---------------------------------------------------------------------------
 
-_DOT_SPARK = (
-    "aggregate(zip_with(pe, ce, (x, y) -> x * y), cast(0.0 AS double), (acc, v) -> acc + v)"
-)
+def _dot(a: str, b: str) -> str:
+    """Dot product of two array<double> columns, folded in index order."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 AS double), (acc, v) -> acc + v)"
+
+
+_DOT_SPARK = _dot("pe", "ce")
 
 
 def _knn_pairs(spark, sf_dir, n_probes=5, k=10, prune_buckets=64, force_prune=None):
@@ -600,13 +632,19 @@ def _knn_pairs(spark, sf_dir, n_probes=5, k=10, prune_buckets=64, force_prune=No
     return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
-_KNN_ORACLE_CTE = """
+_EMB_UNNEST_CTE = """
     WITH e AS (
         SELECT vec_id, label,
                generate_subscripts(embedding, 1) AS pos,
                cast(unnest(embedding) AS double) AS v
         FROM embeddings
-    ),
+    )
+"""
+
+
+_KNN_ORACLE_CTE = (
+    _EMB_UNNEST_CTE
+    + """,
     p AS (SELECT vec_id AS probe_id, pos, v FROM e WHERE vec_id < 5),
     dots AS (
         SELECT p.probe_id, c.vec_id, any_value(c.label) AS label,
@@ -620,6 +658,7 @@ _KNN_ORACLE_CTE = """
         FROM dots
     )
 """
+)
 
 
 @register(
@@ -1155,16 +1194,6 @@ def mm_frame_sample(spark, sf_dir):
 # Embedding-space dedup + IVF similarity (scale-path variants)
 # ---------------------------------------------------------------------------
 
-_EMB_UNNEST_CTE = """
-    WITH e AS (
-        SELECT vec_id, label,
-               generate_subscripts(embedding, 1) AS pos,
-               cast(unnest(embedding) AS double) AS v
-        FROM embeddings
-    )
-"""
-
-
 # Sign-random-projection LSH for dedup_embed: md5-seeded integer
 # hyperplanes over the 64-dim embedding, arranged as an OR-construction
 # of _SRP_BANDS independent bands of _SRP_BAND_BITS bits each (the same
@@ -1373,9 +1402,7 @@ def dedup_embed(spark, sf_dir):
     )
     a = bkt.alias("a")
     b = bkt.alias("b")
-    dot = F.expr(
-        "aggregate(zip_with(a.e, b.e, (x, y) -> x * y), cast(0.0 AS double), (acc, v) -> acc + v)"
-    )
+    dot = F.expr(_dot("a.e", "b.e"))
     return (
         a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .select(
@@ -1441,14 +1468,54 @@ def _ivf_train_ctes() -> str:
     return ctes
 
 
-_IVF_ORACLE = (
-    _EMB_UNNEST_CTE
-    + _ivf_train_ctes()
-    + f"""
-    ,
+# IVF assignment shared by sim_ivf and dedup_semantic_cluster: every
+# vector picks the nearest of the codebook's slot-0 representatives
+# (one per id-stride group g), then the nearest centroid WITHIN that
+# group — n·2√k dots instead of a flat n·k scan.  Both argmaxes are
+# max_by HASH AGGREGATES (map-side partial combine), never row_number
+# windows, and the candidate relations carry only (vec_id, group or
+# centroid id, d): the 64-dim arrays are projected away BEFORE the
+# argmax shuffle.  _argkey packs the (d DESC, id ASC) order into ONE
+# exact bigint (d is 4-dp-rounded, so round(d·10⁴) is integral; ids <
+# 2^40; a struct max_by key forces SortAggregate, a bigint key
+# hash-aggregates) — the oracle's row_number ORDER BY d DESC, id
+# semantics, exactly.
+def _argkey(idcol: str) -> str:
+    return f"cast(round(d * 10000) AS bigint) * 1099511627776L - {idcol}"
+
+
+def _ivf_coarse(emb, cent):
+    """(vec_id, g): each vector's nearest representative group.  ``emb``
+    is (vec_id, e) and ``cent`` (cid, g, slot, ce); the ⌈√k⌉
+    representatives are broadcast — small even at 100 TB-scale k."""
+    reps = cent.filter(F.col("slot") == 0).select("g", "ce")
+    return (
+        emb.crossJoin(F.broadcast(reps))
+        .select("vec_id", F.round(F.expr(_dot("e", "ce")), 4).alias("d"), "g")
+        .groupBy("vec_id")
+        .agg(F.expr(f"max_by(g, {_argkey('g')})").alias("g"))
+    )
+
+
+def _ivf_fine_dots(emb, coarse, group_cents):
+    """(vec_id, d, cid): each vector's 4-dp dots with the centroids of
+    its coarse group — an equi-join on the group id, ≤ stride
+    candidates per vector.  ``group_cents`` is (g, cid, ce)."""
+    return (
+        coarse.join(emb, "vec_id")
+        .join(group_cents, "g")
+        .select("vec_id", F.round(F.expr(_dot("e", "ce")), 4).alias("d"), "cid")
+    )
+
+
+def _ivf_assign_ctes(codebook: str) -> str:
+    """DuckDB twin of _ivf_coarse + _ivf_fine_dots: cent → reps → cdots
+    → coarse → fdots(vec_id, cid, d) over ``e`` (_EMB_UNNEST_CTE),
+    ``ks.stride`` and the ``codebook`` CTE (cid, pos, v)."""
+    return f"""
     cent AS (
         SELECT cid, cid // ks.stride AS g, pos, v
-        FROM tc{_IVF_LLOYD_ROUNDS} CROSS JOIN ks
+        FROM {codebook} CROSS JOIN ks
     ),
     reps AS (
         SELECT g, pos, v FROM cent CROSS JOIN ks WHERE cid % ks.stride = 0
@@ -1471,7 +1538,15 @@ _IVF_ORACLE = (
         JOIN coarse co ON co.vec_id = e.vec_id
         JOIN cent c ON c.g = co.g AND c.pos = e.pos
         GROUP BY 1, 2
-    ),
+    )"""
+
+
+_IVF_ORACLE = (
+    _EMB_UNNEST_CTE
+    + _ivf_train_ctes()
+    + ",\n"
+    + _ivf_assign_ctes(f"tc{_IVF_LLOYD_ROUNDS}")
+    + """,
     franked AS (
         SELECT vec_id, cid,
                row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid) AS frn
@@ -1611,32 +1686,20 @@ def sim_ivf(spark, sf_dir):
         .persist()
     )
 
-    def _argkey(idcol: str) -> str:
-        return f"cast(round(d * 10000) AS bigint) * 1099511627776L - {idcol}"
     cent = cent_t.select(
         "cid",
         F.expr(f"cid div {stride}").alias("g"),
         (F.col("cid") % stride).alias("slot"),
         "ce",
     )
-    adot = F.expr("aggregate(zip_with(e, ce, (x, y) -> x * y), cast(0.0 AS double), (acc, v) -> acc + v)")
-
-    reps = cent.filter(F.col("slot") == 0).select("g", "ce")
-    coarse = (
-        emb.crossJoin(F.broadcast(reps))
-        .select("vec_id", F.round(adot, 4).alias("d"), "g")
-        .groupBy("vec_id")
-        .agg(F.expr(f"max_by(g, {_argkey('g')})").alias("g"))
-    )
+    coarse = _ivf_coarse(emb, cent)
     # fine dots for the chosen group: feeds BOTH the rn=1 assignment
     # (the IVF index) and the probes' rn<=2 cluster choice
     w_fine = Window.partitionBy("vec_id").orderBy(F.col("d").desc(), F.col("cid"))
     franked = (
-        coarse.join(emb, "vec_id")
         # cent descends from the checkpointed trained codebook (no
         # stats) — hint the k-row broadcast Catalyst can no longer infer
-        .join(F.broadcast(cent.select("g", "cid", "ce")), "g")
-        .select("vec_id", F.round(adot, 4).alias("d"), "cid")
+        _ivf_fine_dots(emb, coarse, F.broadcast(cent.select("g", "cid", "ce")))
         .withColumn("frn", F.row_number().over(w_fine))
         # index rows (frn=1 for every vector) + the probes' second
         # cluster; at scale the frn=2 tail exists only for the probe set
@@ -1660,7 +1723,7 @@ def sim_ivf(spark, sf_dir):
         .select(F.col("vec_id").alias("probe_id"), "cid")
         .join(emb.select(F.col("vec_id").alias("probe_id"), F.col("e").alias("pe")), "probe_id")
     )
-    pdot = F.expr("aggregate(zip_with(pe, e, (x, y) -> x * y), cast(0.0 AS double), (acc, v) -> acc + v)")
+    pdot = F.expr(_dot("pe", "e"))
     w_rank = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("vec_id"))
     return (
         assign.join(F.broadcast(probes), "cid")
@@ -1702,8 +1765,8 @@ def text_bpe_tokens(spark, sf_dir):
 
 # token hash twins (same md5→bigint parity trick as minhash/simhash);
 # fold keeps the accumulator < 2^35 via mod-at-every-step (ANSI-safe).
-_TH_SPARK = "cast(conv(substring(md5(w), 1, 15), 16, 10) AS bigint) % 1000000007"
-_TH_DUCK = "cast(concat('0x', substr(md5(w), 1, 15)) AS bigint) % 1000000007"
+_TH_SPARK = f"{_TOKEN_HASH_SPARK} % 1000000007"
+_TH_DUCK = f"{_TOKEN_HASH_DUCK} % 1000000007"
 
 
 @register(
@@ -1801,108 +1864,26 @@ def text_langid_ngram(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "pipeline_clean_corpus",
-    oracle=f"""
-    WITH survivors AS (
-        SELECT min(doc_id) AS doc_id
-        FROM documents GROUP BY md5(text)
-    ),
+def _quality_gate_duck(kept: str) -> str:
+    """DuckDB twin of _quality_gate: the documents whose doc_id the
+    ``kept`` CTE lists, scored and gated."""
+    return f"""
     scored AS (
         SELECT d.doc_id, d.lang, d.source,
                len({TOKS_DUCK}) AS n_tokens,
                len(list_distinct({TOKS_DUCK})) * 1.0
                    / nullif(len({TOKS_DUCK}), 0) AS ttr
-        FROM documents d JOIN survivors s ON s.doc_id = d.doc_id
+        FROM documents d JOIN {kept} k ON k.doc_id = d.doc_id
     )
     SELECT doc_id, lang, source, n_tokens, round(ttr, 4) AS ttr
     FROM scored
     WHERE n_tokens >= 5 AND ttr >= 0.3
-    """,
-)
-def pipeline_clean_corpus(spark, sf_dir):
-    """Flagship composition: the training-data cleaning pipeline as ONE
-    declarative plan — exact-dedup survivors (hash-groupBy, min doc_id
-    wins) joined back to the corpus, then a quality gate (>=5 tokens,
-    type-token ratio >= 0.3).  Catalyst fuses the whole thing: the
-    survivor set is an aggregate over md5(text), the join is by key,
-    and the quality features are per-row projections — at 100 TB this
-    is one shuffle for the dedup, one for the join, nothing else.
     """
-    docs = t(spark, sf_dir, "documents")
-    survivors = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    toks = F.expr(TOKS_SPARK)
-    n_tok = F.size(toks)
-    scored = (
-        docs.join(survivors.select("doc_id"), "doc_id")
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            n_tok.alias("n_tokens"),
-            (F.size(F.array_distinct(toks)) * F.lit(1.0) / F.nullif(n_tok, F.lit(0))).alias(
-                "ttr_raw"
-            ),
-        )
-    )
-    return (
-        scored.filter((F.col("n_tokens") >= 5) & (F.col("ttr_raw") >= 0.3))
-        .select("doc_id", "lang", "source", "n_tokens", F.round("ttr_raw", 4).alias("ttr"))
-    )
 
 
-@register(
-    "pipeline_dedup_full",
-    oracle="WITH RECURSIVE "
-    + _SH_INNER_DUCK
-    + ", "
-    + _NEAR_PAIR_CTES
-    + f""",
-    edges AS (
-        SELECT doc_a AS s, doc_b AS d FROM near
-        UNION ALL
-        SELECT doc_b, doc_a FROM near
-    ),
-    nodes AS (SELECT DISTINCT s AS doc FROM edges),
-    walk AS (
-        SELECT doc, doc AS lab FROM nodes
-        UNION
-        SELECT e.d AS doc, w.lab FROM walk w JOIN edges e ON e.s = w.doc
-    ),
-    comp AS (SELECT doc AS doc_id, min(lab) AS keep_id FROM walk GROUP BY doc),
-    exact AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-    kept AS (
-        SELECT e.doc_id FROM exact e
-        LEFT JOIN comp c ON c.doc_id = e.doc_id AND c.doc_id <> c.keep_id
-        WHERE c.doc_id IS NULL
-    ),
-    scored AS (
-        SELECT d.doc_id, d.lang, d.source,
-               len({TOKS_DUCK}) AS n_tokens,
-               len(list_distinct({TOKS_DUCK})) * 1.0
-                   / nullif(len({TOKS_DUCK}), 0) AS ttr
-        FROM documents d JOIN kept k ON k.doc_id = d.doc_id
-    )
-    SELECT doc_id, lang, source, n_tokens, round(ttr, 4) AS ttr
-    FROM scored
-    WHERE n_tokens >= 5 AND ttr >= 0.3
-    """,
-)
-def pipeline_dedup_full(spark, sf_dir):
-    """The COMPLETE training-corpus dedup pipeline in one key: exact
-    dedup (hash-groupBy survivors) → MinHash-LSH near-dup pairs →
-    transitive closure (dedup_components) → drop every non-survivor
-    component member → quality gate.  This is the composition a real
-    100 TB cleaning job runs; pairwise stages alone over-keep (A~B~C
-    chains elect two survivors without the closure).  All stages are
-    the already-verified operators — the key checks their composition
-    end-to-end against a single declarative recursive-CTE oracle.
-    """
-    docs = t(spark, sf_dir, "documents")
-    exact = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    comp = dedup_components(spark, sf_dir)
-    non_survivors = comp.filter(F.col("doc_id") != F.col("keep_id")).select("doc_id")
-    kept = exact.join(non_survivors, "doc_id", "left_anti")
+def _quality_gate(docs, kept):
+    """The documents whose doc_id ``kept`` lists, gated on quality (>= 5
+    tokens, type-token ratio >= 0.3): per-row projections only."""
     toks = F.expr(TOKS_SPARK)
     n_tok = F.size(toks)
     scored = docs.join(kept, "doc_id").select(
@@ -1918,6 +1899,58 @@ def pipeline_dedup_full(spark, sf_dir):
         scored.filter((F.col("n_tokens") >= 5) & (F.col("ttr_raw") >= 0.3))
         .select("doc_id", "lang", "source", "n_tokens", F.round("ttr_raw", 4).alias("ttr"))
     )
+
+
+@register(
+    "pipeline_clean_corpus",
+    oracle="""
+    WITH survivors AS (
+        SELECT min(doc_id) AS doc_id
+        FROM documents GROUP BY md5(text)
+    ),"""
+    + _quality_gate_duck("survivors"),
+)
+def pipeline_clean_corpus(spark, sf_dir):
+    """Flagship composition: the training-data cleaning pipeline as ONE
+    declarative plan — exact-dedup survivors (hash-groupBy, min doc_id
+    wins) joined back to the corpus, then a quality gate (>=5 tokens,
+    type-token ratio >= 0.3).  Catalyst fuses the whole thing: the
+    survivor set is an aggregate over md5(text), the join is by key,
+    and the quality features are per-row projections — at 100 TB this
+    is one shuffle for the dedup, one for the join, nothing else.
+    """
+    docs = t(spark, sf_dir, "documents")
+    survivors = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
+    return _quality_gate(docs, survivors.select("doc_id"))
+
+
+@register(
+    "pipeline_dedup_full",
+    oracle=_COMPONENTS_CTES
+    + """,
+    exact AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
+    kept AS (
+        SELECT e.doc_id FROM exact e
+        LEFT JOIN comp c ON c.doc_id = e.doc_id AND c.doc_id <> c.keep_id
+        WHERE c.doc_id IS NULL
+    ),"""
+    + _quality_gate_duck("kept"),
+)
+def pipeline_dedup_full(spark, sf_dir):
+    """The COMPLETE training-corpus dedup pipeline in one key: exact
+    dedup (hash-groupBy survivors) → MinHash-LSH near-dup pairs →
+    transitive closure (dedup_components) → drop every non-survivor
+    component member → quality gate.  This is the composition a real
+    100 TB cleaning job runs; pairwise stages alone over-keep (A~B~C
+    chains elect two survivors without the closure).  All stages are
+    the already-verified operators — the key checks their composition
+    end-to-end against a single declarative recursive-CTE oracle.
+    """
+    docs = t(spark, sf_dir, "documents")
+    exact = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
+    comp = dedup_components(spark, sf_dir)
+    non_survivors = comp.filter(F.col("doc_id") != F.col("keep_id")).select("doc_id")
+    return _quality_gate(docs, exact.join(non_survivors, "doc_id", "left_anti"))
 
 
 @register(
@@ -2182,16 +2215,13 @@ def dedup_sorted_neighborhood(spark, sf_dir):
 # between "raw crawl" and "training tokens" not yet covered above.
 # ---------------------------------------------------------------------------
 
-_GOPHER_STOPWORDS = "'the','a','and','of','to','in','is'"
-
-
 def gopher_stop_hits():
     """Distinct-stopword hit count over the ``toks`` column — shared by
     text_gopher_rules and pipeline_train_ready so the gate cannot
     silently diverge from the standalone operator."""
     return F.size(
         F.expr(
-            f"filter(array_distinct(toks), x -> array_contains(array({_GOPHER_STOPWORDS}), x))"
+            f"filter(array_distinct(toks), x -> array_contains(array({_STOPWORDS}), x))"
         )
     )
 
@@ -2217,7 +2247,7 @@ def gopher_symbol_ratio(n_tokens):
                round(len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
                      * 1.0 / len(toks), 4) AS frac_alpha_words,
                len(list_filter(list_distinct(toks),
-                               x -> list_contains([{_GOPHER_STOPWORDS}], x)))
+                               x -> list_contains([{_STOPWORDS}], x)))
                    AS n_stop_hits,
                round(len(regexp_replace(text, '[a-z0-9\\s]', '', 'g'))
                      * 1.0 / len(toks), 4) AS symbol_word_ratio
@@ -2540,7 +2570,7 @@ def embed_quantize(spark, sf_dir):
         FROM feat
         WHERE len(toks) >= 5
           AND len(list_filter(list_distinct(toks),
-                              x -> list_contains([{_GOPHER_STOPWORDS}], x))) >= 1
+                              x -> list_contains([{_STOPWORDS}], x))) >= 1
           AND len(regexp_replace(text, '[a-z0-9\\s]', '', 'g')) * 1.0 / len(toks) <= 0.6
     ),
     deduped AS (
@@ -3339,13 +3369,36 @@ def dedup_edit_distance(spark, sf_dir):
     )
 
 
+def _chunks(spark, sf_dir, *keep):
+    """(doc_id, *keep, chunk_no, chunk): every document split on single
+    spaces into consecutive 5-word chunks, numbered from 0."""
+    w = t_fanout(spark, sf_dir, "documents", heavy=False).select(
+        "doc_id", *keep, F.split("text", " ").alias("words")
+    )
+    return w.select(
+        "doc_id",
+        *keep,
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.ceil(F.size("words") / F.lit(5.0)).cast("int") - 1),
+                lambda i: F.array_join(F.slice("words", i * 5 + 1, 5), " "),
+            )
+        ).alias("chunk_no", "chunk"),
+    )
+
+
+# DuckDB twin of _chunks (source kept): c(doc_id, source, chunk_no, chunk)
+_CHUNKS_DUCK = """
+    WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS words FROM documents),
+    c AS (SELECT doc_id, source, i - 1 AS chunk_no,
+                 array_to_string(words[(i-1)*5+1:i*5], ' ') AS chunk
+          FROM w, unnest(generate_series(1, cast(ceil(len(words)/5.0) AS int))) t(i))"""
+
+
 @register(
     "dedup_chunks",
-    oracle="""
-    WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-    c AS (SELECT doc_id, i - 1 AS chunk_no,
-                 array_to_string(words[(i-1)*5+1:i*5], ' ') AS chunk
-          FROM w, unnest(generate_series(1, cast(ceil(len(words)/5.0) AS int))) t(i)),
+    oracle=_CHUNKS_DUCK
+    + """,
     k AS (SELECT doc_id, chunk_no, chunk,
                  row_number() OVER (PARTITION BY chunk ORDER BY doc_id, chunk_no) AS rn
           FROM c)
@@ -3371,18 +3424,7 @@ def dedup_chunks(spark, sf_dir):
     seen earlier reassemble to NULL (matching the oracle's FILTERed
     string_agg).
     """
-    w = t_fanout(spark, sf_dir, "documents", heavy=False).select(
-        "doc_id", F.split("text", " ").alias("words")
-    )
-    c = w.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.ceil(F.size("words") / F.lit(5.0)).cast("int") - 1),
-                lambda i: F.array_join(F.slice("words", i * 5 + 1, 5), " "),
-            )
-        ).alias("chunk_no", "chunk"),
-    )
+    c = _chunks(spark, sf_dir)
     from pyspark.sql import Window
 
     rn = F.row_number().over(
@@ -4016,20 +4058,35 @@ def text_repetition_ratio(spark, sf_dir):
     return feat.withColumn("passes", F.col("dup_bigram_frac") <= 0.2)
 
 
+# The D×D Gram matrix X'X: every embedding row's outer product, built
+# IN-ROW and exploded as (c.i, c.j, c.p) cells for a map-side-combined
+# groupBy(i, j) (embed_gram_matrix, embed_power_iteration).  The DuckDB
+# twin states the same sum as an exploded self-join, g(i, j, gv).
+def _gram_cells(spark, sf_dir):
+    return t_fanout(spark, sf_dir, "embeddings").select(
+        F.explode(
+            F.expr(
+                "flatten(transform(embedding, (vi, i) -> "
+                "transform(embedding, (vj, j) -> "
+                "struct(i + 1 as i, j + 1 as j, "
+                "cast(vi as double) * cast(vj as double) as p))))"
+            )
+        ).alias("c")
+    )
+
+
+_GRAM_CTES_DUCK = """ex AS (
+      SELECT vec_id, unnest(generate_series(1, len(embedding))) AS i,
+             cast(unnest(embedding) AS double) AS vi
+      FROM embeddings),
+    g AS (
+      SELECT a.i, b.i AS j, sum(a.vi * b.vi) AS gv
+      FROM ex a JOIN ex b USING (vec_id) GROUP BY 1, 2)"""
+
+
 @register(
     "embed_gram_matrix",
-    oracle="""
-    WITH ex AS (
-      SELECT vec_id,
-             unnest(generate_series(1, len(embedding))) AS i,
-             unnest(embedding) AS vi
-      FROM embeddings
-    )
-    SELECT a.i, b.i AS j,
-           round(sum(cast(a.vi AS double) * cast(b.vi AS double)), 4) AS g
-    FROM ex a JOIN ex b USING (vec_id)
-    GROUP BY 1, 2
-    """,
+    oracle="WITH " + _GRAM_CTES_DUCK + "\n    SELECT i, j, round(gv, 4) AS g FROM g\n",
 )
 def embed_gram_matrix(spark, sf_dir):
     """Gram matrix X'X over the embedding corpus — the D×D sufficient
@@ -4045,17 +4102,7 @@ def embed_gram_matrix(spark, sf_dir):
     would shuffle n·D rows).  Products accumulate in double; 4-dp
     round absorbs cross-engine addition order.
     """
-    e = t_fanout(spark, sf_dir, "embeddings")
-    cells = e.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(embedding, (vi, i) -> "
-                "transform(embedding, (vj, j) -> "
-                "struct(i + 1 as i, j + 1 as j, "
-                "cast(vi as double) * cast(vj as double) as p))))"
-            )
-        ).alias("c")
-    )
+    cells = _gram_cells(spark, sf_dir)
     return cells.groupBy(F.col("c.i").alias("i"), F.col("c.j").alias("j")).agg(
         F.round(F.sum("c.p"), 4).alias("g")
     )
@@ -4097,18 +4144,8 @@ def agg_hll_partial_merge(spark, sf_dir):
 
 @register(
     "dedup_containment",
-    oracle=f"""
-    WITH sh AS (
-        SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents
-    ),
-    df AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
-    kept AS (SELECT s.doc_id, s.shingle FROM sh s JOIN df USING (shingle)),
-    sizes AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    oracle=_OVERLAP_CTES_DUCK
+    + """
     SELECT doc_a, doc_b,
            round(n_inter * 1.0 / sa.n, 4) AS c_ab,
            round(n_inter * 1.0 / sb.n, 4) AS c_ba
@@ -4128,37 +4165,10 @@ def dedup_containment(spark, sf_dir):
     look like this.  Pairs flagged when either direction ≥ 0.8; both
     directions reported so the caller keeps the superset doc.
 
-    Same scale spine as dedup_jaccard: df-capped inverted-index
-    equi-join (never all-pairs), candidate volume ∝ shared-shingle
-    pairs, sizes joined unhinted (AQE broadcasts when genuinely
-    small).  The shingle index is persisted once and feeds the df-cap,
-    sizes and the self-join — one tokenize pass.
+    Same spine as dedup_jaccard (_shingle_overlap): df-capped
+    inverted-index equi-join, never all-pairs, sizes joined unhinted.
     """
-    sh = (
-        t_fanout(spark, sf_dir, "documents")
-        .withColumn("toks", F.expr(TOKS_SPARK))
-        .select("doc_id", F.explode(F.expr(_SHINGLES_SPARK)).alias("shingle"))
-        .persist()
-    )
-    df_ok = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    kept = sh.join(df_ok, "shingle").persist()
-    sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = kept.alias("a")
-    b = kept.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
+    inter, sizes = _shingle_overlap(spark, sf_dir)
     c_ab = F.col("n_inter") * F.lit(1.0) / F.col("sa.n")
     c_ba = F.col("n_inter") * F.lit(1.0) / F.col("sb.n")
     return (
@@ -4174,54 +4184,22 @@ def dedup_containment(spark, sf_dir):
     )
 
 
-@register(
-    "text_bigram_ppl",
-    oracle=f"""
-    WITH toks AS (SELECT doc_id, {TOKS_DUCK} AS tk FROM documents),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(generate_series(1, len(tk) - 1),
-                                   i -> tk[i] || ' ' || tk[i+1])) AS bigram,
-             unnest(list_transform(generate_series(1, len(tk) - 1),
-                                   i -> tk[i])) AS w1
-      FROM toks WHERE len(tk) >= 2
-    ),
-    c2 AS (SELECT bigram, count(*) AS n2 FROM bg GROUP BY 1),
-    uni AS (SELECT unnest(tk) AS w FROM toks),
-    c1 AS (SELECT w, count(*) AS n1 FROM uni GROUP BY 1),
-    v AS (SELECT count(*) AS vsz FROM c1)
-    SELECT doc_id, count(*) AS n_bigrams,
-           round(pow(2.0, -sum(log2((n2 + 0.5) / (n1 + 0.5 * vsz))) / count(*)), 4)
-             AS ppl
-    FROM bg JOIN c2 USING (bigram) JOIN c1 ON w1 = w CROSS JOIN v
-    GROUP BY doc_id
-    """,
-)
-def text_bigram_ppl(spark, sf_dir):
-    """Per-document BIGRAM language-model perplexity with add-0.5
-    smoothing — the order-2 upgrade of text_unigram_ppl: scores
-    word-ORDER plausibility, so shuffled or template-stitched text
-    that fools a unigram filter scores high here.  The quality gate
-    LLM corpora (CCNet's LM filter) actually use.
+def _bigram_lm(toks):
+    """Add-0.5 smoothed bigram LM over the persisted (doc_id, tk) token
+    relation: returns ``(probe, ppl)``, where ``probe`` is every in-row
+    bigram (doc_id, bigram, w1) joined to its corpus bigram count n2,
+    its first word's unigram count n1 and the vocabulary size vsz, and
+    ``ppl`` is the perplexity aggregate over a group of probe rows.
 
-    Spark shape: bigrams are built IN-ROW (zip of the token array with
-    its own tail — a pure codegen projection, no token-level shuffle
-    to construct them), then ONE explode feeds both the corpus bigram
-    counts and the per-doc probe.  The model relations (bigram counts,
-    unigram counts, |V|) join back UNHINTED — at 100 TB a bigram
-    vocabulary outgrows any executor, so these must stay shuffle
-    joins; AQE demotes to broadcast while small.  The 1-row vocab size
-    is a crossJoin of a 1-row aggregate (constant-size broadcast).
-
-    Determinism: probabilities are exact rationals evaluated
-    identically; the per-doc log2 sum is order-dependent only at the
-    1e-13 relative level, absorbed by the 4-dp round (ppl ≈ 30).
+    Bigrams are built IN-ROW (zip of the token array with its own tail
+    — a pure codegen projection, no token-level shuffle to construct
+    them), then ONE explode feeds both the corpus bigram counts and the
+    per-doc probe.  The model relations join back UNHINTED — at 100 TB
+    a bigram vocabulary outgrows any executor, so these must stay
+    shuffle joins; AQE demotes to broadcast while small.  The 1-row
+    vocab size is a crossJoin of a 1-row aggregate (constant-size
+    broadcast).
     """
-    toks = (
-        t_fanout(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(TOKS_SPARK).alias("tk"))
-        .persist()
-    )
     bg = (
         toks.filter(F.size("tk") >= 2)
         .select(
@@ -4238,22 +4216,74 @@ def text_bigram_ppl(spark, sf_dir):
         .persist()
     )
     c2 = bg.groupBy("bigram").agg(F.count("*").alias("n2"))
-    uni = toks.select(F.explode("tk").alias("w"))
-    c1 = uni.groupBy("w").agg(F.count("*").alias("n1"))
+    c1 = toks.select(F.explode("tk").alias("w")).groupBy("w").agg(F.count("*").alias("n1"))
     v = c1.agg(F.count("*").alias("vsz"))
     logp = F.log2((F.col("n2") + 0.5) / (F.col("n1") + 0.5 * F.col("vsz")))
-    return (
-        bg.join(c2, "bigram")
-        .join(c1, F.col("w1") == F.col("w"))
-        .crossJoin(F.broadcast(v))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_bigrams"),
-            F.round(
-                F.pow(F.lit(2.0), -F.sum(logp) / F.count("*")), 4
-            ).alias("ppl"),
-        )
+    probe = bg.join(c2, "bigram").join(c1, F.col("w1") == F.col("w")).crossJoin(F.broadcast(v))
+    return probe, F.pow(F.lit(2.0), -F.sum(logp) / F.count("*"))
+
+
+# DuckDB twin of _bigram_lm over a toks(doc_id, tk) CTE, ending in
+# bgppl(doc_id, n_bigrams, ppl) for every document with >= 2 tokens.
+_BIGRAM_LM_DUCK = """
+    bg AS (
+      SELECT doc_id,
+             unnest(list_transform(generate_series(1, len(tk) - 1),
+                                   i -> tk[i] || ' ' || tk[i+1])) AS bigram,
+             unnest(list_transform(generate_series(1, len(tk) - 1),
+                                   i -> tk[i])) AS w1
+      FROM toks WHERE len(tk) >= 2
+    ),
+    c2 AS (SELECT bigram, count(*) AS n2 FROM bg GROUP BY 1),
+    uni AS (SELECT unnest(tk) AS w FROM toks),
+    c1 AS (SELECT w, count(*) AS n1 FROM uni GROUP BY 1),
+    v AS (SELECT count(*) AS vsz FROM c1),
+    bgppl AS (
+      SELECT doc_id, count(*) AS n_bigrams,
+             pow(2.0, -sum(log2((n2 + 0.5) / (n1 + 0.5 * vsz))) / count(*)) AS ppl
+      FROM bg JOIN c2 USING (bigram) JOIN c1 ON w1 = w CROSS JOIN v
+      GROUP BY doc_id
+    )"""
+
+
+@register(
+    "text_bigram_ppl",
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {TOKS_DUCK} AS tk FROM documents),"""
+    + _BIGRAM_LM_DUCK
+    + """
+    SELECT doc_id, n_bigrams, round(ppl, 4) AS ppl FROM bgppl
+    """,
+)
+def text_bigram_ppl(spark, sf_dir):
+    """Per-document BIGRAM language-model perplexity with add-0.5
+    smoothing — the order-2 upgrade of text_unigram_ppl: scores
+    word-ORDER plausibility, so shuffled or template-stitched text
+    that fools a unigram filter scores high here.  The quality gate
+    LLM corpora (CCNet's LM filter) actually use.
+
+    Spark shape: see _bigram_lm.
+
+    Determinism: probabilities are exact rationals evaluated
+    identically; the per-doc log2 sum is order-dependent only at the
+    1e-13 relative level, absorbed by the 4-dp round (ppl ≈ 30).
+    """
+    toks = (
+        t_fanout(spark, sf_dir, "documents")
+        .select("doc_id", F.expr(TOKS_SPARK).alias("tk"))
+        .persist()
     )
+    probe, ppl = _bigram_lm(toks)
+    return probe.groupBy("doc_id").agg(
+        F.count("*").alias("n_bigrams"), F.round(ppl, 4).alias("ppl")
+    )
+
+
+# Embeddings as double lists, ev(vec_id, v), and the sim_* probe set.
+_EV_DUCK = "ev AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)"
+_EV_PROBES_DUCK = f"""
+    WITH {_EV_DUCK},
+    probes AS (SELECT vec_id AS probe_id, v AS pv FROM ev WHERE vec_id < 5)"""
 
 
 # k-means (Lloyd) shared constants: k=8 seeded from the first 8
@@ -4270,8 +4300,7 @@ _KM_DIST_DUCK = (
 
 def _kmeans_oracle() -> str:
     ctes = [
-        "ev AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings)",
+        _EV_DUCK,
         "cent0 AS (SELECT vec_id AS cid, v AS c FROM ev WHERE vec_id < 8)",
     ]
     for i in range(_KM_ITERS):
@@ -4409,13 +4438,7 @@ _PI_ITERS = 4
 
 def _power_iter_oracle() -> str:
     ctes = [
-        """ex AS (
-      SELECT vec_id, unnest(generate_series(1, len(embedding))) AS i,
-             cast(unnest(embedding) AS double) AS vi
-      FROM embeddings)""",
-        """g AS (
-      SELECT a.i, b.i AS j, sum(a.vi * b.vi) AS gv
-      FROM ex a JOIN ex b USING (vec_id) GROUP BY 1, 2)""",
+        _GRAM_CTES_DUCK,
         "v0 AS (SELECT unnest(generate_series(1, 64)) AS j, 0.125 AS val)",
     ]
     for k in range(_PI_ITERS):
@@ -4476,19 +4499,9 @@ def embed_power_iteration(spark, sf_dir):
     merge order) and the 4-dp round absorbs 1e-12 summation-order
     skew (re-verified at every shipped SF + shuffle-partition sweep).
     """
-    e = t_fanout(spark, sf_dir, "embeddings")
-    cells = e.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(embedding, (vi, i) -> "
-                "transform(embedding, (vj, j) -> "
-                "struct(i + 1 as i, j + 1 as j, "
-                "cast(vi as double) * cast(vj as double) as p))))"
-            )
-        ).alias("c")
-    )
     # the Gram aggregation itself is untouched (FP-sensitive: feeds 4
     # unrounded iterations — see the r15 note declining numpy here)
+    cells = _gram_cells(spark, sf_dir)
     g = cells.groupBy(F.col("c.i").alias("i"), F.col("c.j").alias("j")).agg(
         F.sum("c.p").alias("gv")
     )
@@ -4649,12 +4662,8 @@ def feature_loo_encoding(spark, sf_dir):
 
 @register(
     "sim_mips",
-    oracle=f"""
-    WITH ev AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    probes AS (SELECT vec_id AS probe_id, v AS pv FROM ev WHERE vec_id < 5),
+    oracle=_EV_PROBES_DUCK
+    + """,
     pairs AS (
       SELECT p.probe_id, e.vec_id,
              list_sum(list_transform(generate_series(1, 64),
@@ -4707,10 +4716,7 @@ def sim_mips(spark, sf_dir):
         .select(
             "probe_id",
             "vec_id",
-            F.expr(
-                "aggregate(zip_with(av, pv, (x, y) -> x * y), "
-                "cast(0.0 AS double), (a, z) -> a + z)"
-            ).alias("aug_ip"),
+            F.expr(_dot("av", "pv")).alias("aug_ip"),
         )
     )
     w = Window.partitionBy("probe_id").orderBy(F.col("aug_ip").desc(), "vec_id")
@@ -4724,13 +4730,7 @@ def sim_mips(spark, sf_dir):
         .select(
             "probe_id",
             "vec_id",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, pv0, (x, y) -> x * y), "
-                    "cast(0.0 AS double), (a, z) -> a + z)"
-                ),
-                4,
-            ).alias("ip"),
+            F.round(F.expr(_dot("v", "pv0")), 4).alias("ip"),
             "rn",
         )
     )
@@ -4838,8 +4838,7 @@ _KC_DIST_DUCK = (
 def _kcenter_oracle() -> str:
     d = _KC_DIST_DUCK.format
     ctes = [
-        "ev AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))"
-        " AS v FROM embeddings)",
+        _EV_DUCK,
         "c0 AS (SELECT vec_id, v FROM ev WHERE vec_id = 0)",
         f"m0 AS (SELECT e.vec_id, {d(a='e', b='c')} AS dd"
         " FROM ev e CROSS JOIN c0 c)",
@@ -4940,13 +4939,12 @@ def sample_kcenter(spark, sf_dir):
 
 @register(
     "text_readability",
-    oracle=r"""
+    oracle=rf"""
     WITH m AS (
       SELECT doc_id,
              len(list_filter(string_split_regex(text, '[.!?]+\s+'),
                              x -> trim(x) <> '')) AS n_sent,
-             len(list_filter(string_split(lower(text), ' '), x -> x <> ''))
-               AS n_words,
+             len({TOKS_DUCK}) AS n_words,
              len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syll
       FROM documents
     )
@@ -4977,9 +4975,7 @@ def text_readability(spark, sf_dir):
         F.size(
             F.expr(r"filter(split(text, '[.!?]+\\s+'), x -> trim(x) != '')")
         ).alias("n_sent"),
-        F.size(
-            F.expr("filter(split(lower(text), ' '), x -> x != '')")
-        ).alias("n_words"),
+        F.size(F.expr(TOKS_SPARK)).alias("n_words"),
         F.size(F.expr("regexp_extract_all(lower(text), '[aeiouy]+', 0)")).alias(
             "n_syll"
         ),
@@ -5000,12 +4996,8 @@ def text_readability(spark, sf_dir):
 
 @register(
     "sim_matryoshka_eval",
-    oracle="""
-    WITH ev AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ),
-    probes AS (SELECT vec_id AS probe_id, v AS pv FROM ev WHERE vec_id < 5),
+    oracle=_EV_PROBES_DUCK
+    + """,
     pairs AS (
       SELECT p.probe_id, e.vec_id,
              list_sum(list_transform(generate_series(1, 64),
@@ -5064,14 +5056,8 @@ def sim_matryoshka_eval(spark, sf_dir):
         .select(
             "probe_id",
             "vec_id",
-            F.expr(
-                "aggregate(zip_with(v, pv, (x, y) -> x * y), "
-                "cast(0.0 AS double), (a, z) -> a + z)"
-            ).alias("ip_full"),
-            F.expr(
-                "aggregate(zip_with(slice(v, 1, 16), slice(pv, 1, 16), "
-                "(x, y) -> x * y), cast(0.0 AS double), (a, z) -> a + z)"
-            ).alias("ip_16"),
+            F.expr(_dot("v", "pv")).alias("ip_full"),
+            F.expr(_dot("slice(v, 1, 16)", "slice(pv, 1, 16)")).alias("ip_16"),
         )
     )
     wf = Window.partitionBy("probe_id").orderBy(F.col("ip_full").desc(), "vec_id")
@@ -5102,12 +5088,9 @@ def sim_matryoshka_eval(spark, sf_dir):
 
 @register(
     "pipeline_quality_ensemble",
-    oracle=r"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS tk,
-             text
-      FROM documents
-    ),
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, {TOKS_DUCK} AS tk, text FROM documents),"""
+    + r"""
     base AS (
       SELECT doc_id, text, tk, len(tk) AS n_words,
              1.0 - len(list_distinct(tk)) / CAST(len(tk) AS DOUBLE) AS dup_frac,
@@ -5115,25 +5098,9 @@ def sim_matryoshka_eval(spark, sf_dir):
                              x -> trim(x) <> '')) AS n_sent,
              len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syll
       FROM toks WHERE len(tk) > 0
-    ),
-    bg AS (
-      SELECT doc_id,
-             unnest(list_transform(generate_series(1, len(tk) - 1),
-                                   i -> tk[i] || ' ' || tk[i+1])) AS bigram,
-             unnest(list_transform(generate_series(1, len(tk) - 1),
-                                   i -> tk[i])) AS w1
-      FROM toks WHERE len(tk) >= 2
-    ),
-    c2 AS (SELECT bigram, count(*) AS n2 FROM bg GROUP BY 1),
-    uni AS (SELECT unnest(tk) AS w FROM toks),
-    c1 AS (SELECT w, count(*) AS n1 FROM uni GROUP BY 1),
-    v AS (SELECT count(*) AS vsz FROM c1),
-    ppl AS (
-      SELECT b.doc_id,
-             pow(2.0, -sum(log2((n2 + 0.5) / (n1 + 0.5 * vsz))) / count(*)) AS ppl
-      FROM bg b JOIN c2 USING (bigram) JOIN c1 ON w1 = w CROSS JOIN v
-      GROUP BY b.doc_id
-    ),
+    ),"""
+    + _BIGRAM_LM_DUCK
+    + """,
     scored AS (
       SELECT b.doc_id, b.n_words, b.dup_frac,
              CASE WHEN b.n_sent > 0
@@ -5141,7 +5108,7 @@ def sim_matryoshka_eval(spark, sf_dir):
                        + 11.8 * (b.n_syll / CAST(b.n_words AS DOUBLE)) - 15.59
              END AS fk_grade,
              p.ppl
-      FROM base b LEFT JOIN ppl p ON p.doc_id = b.doc_id
+      FROM base b LEFT JOIN bgppl p ON p.doc_id = b.doc_id
     )
     SELECT doc_id,
            (CASE WHEN n_words BETWEEN 10 AND 5000 THEN 0 ELSE 1 END
@@ -5201,34 +5168,8 @@ def pipeline_quality_ensemble(spark, sf_dir):
             "n_syll"
         ),
     )
-    bg = (
-        toks.filter(F.size("tk") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(arrays_zip(slice(tk, 1, size(tk) - 1), "
-                    "slice(tk, 2, size(tk) - 1)), "
-                    "z -> struct(concat_ws(' ', z.`0`, z.`1`) AS bigram, z.`0` AS w1))"
-                )
-            ).alias("p"),
-        )
-        .select("doc_id", "p.bigram", "p.w1")
-        .persist()
-    )
-    c2 = bg.groupBy("bigram").agg(F.count("*").alias("n2"))
-    c1 = toks.select(F.explode("tk").alias("w")).groupBy("w").agg(
-        F.count("*").alias("n1")
-    )
-    v = c1.agg(F.count("*").alias("vsz"))
-    logp = F.log2((F.col("n2") + 0.5) / (F.col("n1") + 0.5 * F.col("vsz")))
-    ppl = (
-        bg.join(c2, "bigram")
-        .join(c1, F.col("w1") == F.col("w"))
-        .crossJoin(F.broadcast(v))
-        .groupBy(F.col("doc_id").alias("p_doc"))
-        .agg(F.pow(F.lit(2.0), -F.sum(logp) / F.count("*")).alias("ppl"))
-    )
+    probe, ppl_agg = _bigram_lm(toks)
+    ppl = probe.groupBy(F.col("doc_id").alias("p_doc")).agg(ppl_agg.alias("ppl"))
     fk = F.when(
         F.col("n_sent") > 0,
         0.39 * (F.col("n_words") / F.col("n_sent").cast("double"))
@@ -5261,11 +5202,9 @@ def pipeline_quality_ensemble(spark, sf_dir):
 
 @register(
     "text_novelty",
-    oracle=f"""
-    WITH sh AS (
-        SELECT doc_id, unnest({_SHINGLES_DUCK}) AS shingle FROM documents
-    ),
-    df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1)
+    oracle=_SH_CTE_DUCK
+    + """
+    , df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1)
     SELECT s.doc_id,
            cast(count(*) AS bigint) AS n_shingles,
            cast(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS bigint)
@@ -5291,12 +5230,7 @@ def text_novelty(spark, sf_dir):
     AQE demotes while small).  Counts are exact integers; one double
     division.
     """
-    sh = (
-        t_fanout(spark, sf_dir, "documents")
-        .withColumn("toks", F.expr(TOKS_SPARK))
-        .select("doc_id", F.explode(F.expr(_SHINGLES_SPARK)).alias("shingle"))
-        .persist()
-    )
+    sh = _shingle_index(spark, sf_dir)
     df = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     uniq = F.when(F.col("df") == 1, 1).otherwise(0)
     return (
@@ -5377,11 +5311,8 @@ def shuffle_shards(spark, sf_dir):
 
 @register(
     "text_boilerplate",
-    oracle="""
-    WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS words FROM documents),
-    c AS (SELECT doc_id, source, i - 1 AS chunk_no,
-                 array_to_string(words[(i-1)*5+1:i*5], ' ') AS chunk
-          FROM w, unnest(generate_series(1, cast(ceil(len(words)/5.0) AS int))) t(i)),
+    oracle=_CHUNKS_DUCK
+    + """,
     df AS (SELECT source, chunk, count(DISTINCT doc_id) AS ndocs
            FROM c GROUP BY 1, 2),
     j AS (SELECT c.doc_id, c.chunk_no, c.chunk, (df.ndocs >= 3) AS boiler
@@ -5412,23 +5343,9 @@ def text_boilerplate(spark, sf_dir):
     the verification row narrow; counts + ratio are the curation
     metrics a pipeline thresholds on.
     """
-    from pyspark.sql import Window  # noqa: F401  (parallel to dedup_chunks)
-
-    w = t_fanout(spark, sf_dir, "documents", heavy=False).select(
-        "doc_id", "source", F.split("text", " ").alias("words")
-    )
     # persisted: the chunk relation feeds both the df aggregate and the
     # join-back — without it the chunking explode runs twice.
-    c = w.select(
-        "doc_id",
-        "source",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.ceil(F.size("words") / F.lit(5.0)).cast("int") - 1),
-                lambda i: F.array_join(F.slice("words", i * 5 + 1, 5), " "),
-            )
-        ).alias("chunk_no", "chunk"),
-    ).persist()
+    c = _chunks(spark, sf_dir, "source").persist()
     df = c.groupBy("source", "chunk").agg(
         F.countDistinct("doc_id").alias("ndocs")
     )
@@ -6102,32 +6019,11 @@ def embed_pq(spark, sf_dir):
         FROM (SELECT greatest(8, cast(ceil(count(*) / 250.0) AS bigint)) AS k
               FROM embeddings)
     ),
-    cent AS (
-        SELECT vec_id AS cid, vec_id // ks.stride AS g, pos, v
-        FROM e CROSS JOIN ks WHERE vec_id < ks.k
-    ),
-    reps AS (
-        SELECT g, pos, v FROM cent CROSS JOIN ks WHERE cid % ks.stride = 0
-    ),
-    cdots AS (
-        SELECT e.vec_id, r.g, round(sum(e.v * r.v), 4) AS d
-        FROM e JOIN reps r ON r.pos = e.pos
-        GROUP BY 1, 2
-    ),
-    coarse AS (
-        SELECT vec_id, g FROM (
-            SELECT vec_id, g,
-                   row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, g) AS rn
-            FROM cdots
-        ) WHERE rn = 1
-    ),
-    fdots AS (
-        SELECT e.vec_id, c.cid, round(sum(e.v * c.v), 4) AS d
-        FROM e
-        JOIN coarse co ON co.vec_id = e.vec_id
-        JOIN cent c ON c.g = co.g AND c.pos = e.pos
-        GROUP BY 1, 2
-    ),
+    tc0 AS (
+        SELECT vec_id AS cid, pos, v FROM e CROSS JOIN ks WHERE vec_id < ks.k
+    ),"""
+    + _ivf_assign_ctes("tc0")
+    + """,
     assign AS (
         SELECT vec_id, cid FROM (
             SELECT vec_id, cid,
@@ -6229,39 +6125,11 @@ def dedup_semantic_cluster(spark, sf_dir):
         )
         .persist()
     )
-    adot = F.expr(
-        "aggregate(zip_with(e, ce, (x, y) -> x * y), cast(0.0 AS double), (acc, v) -> acc + v)"
-    )
-    # Both argmaxes are max_by HASH AGGREGATES (map-side partial
-    # combine), never row_number windows, and the candidate relations
-    # carry only (vec_id, group/anchor id, d) — the 64-dim arrays are
-    # projected away BEFORE the argmax shuffle and joined back by id
-    # afterwards.  The (d DESC, id ASC) ordering is packed into ONE
-    # exact bigint (d is 4-dp-rounded, so round(d·10⁴) is integral;
-    # ids < 2^40; a struct max_by key forces SortAggregate, a bigint
-    # key hash-aggregates) — the oracle's row_number ORDER BY d DESC,
-    # id semantics, exactly.
-    def _argkey(idcol: str) -> str:
-        return (
-            f"cast(round(d * 10000) AS bigint) * 1099511627776L - {idcol}"
-        )
-
-    # coarse level: ⌈√k⌉ representatives (slot 0 of each stride group)
-    # — small enough to broadcast even at 100 TB-scale k (√k rows)
-    reps = cent.filter(F.col("slot") == 0).select("g", "ce")
-    coarse = (
-        emb.crossJoin(F.broadcast(reps))
-        .select("vec_id", F.round(adot, 4).alias("d"), "g")
-        .groupBy("vec_id")
-        .agg(F.expr(f"max_by(g, {_argkey('g')})").alias("g"))
-    )
-    # fine level: equi-join on the chosen group id — ≤ stride anchor
-    # candidates per vector, never the whole codebook; unhinted so AQE
-    # broadcasts the anchor side only while it is genuinely small
+    coarse = _ivf_coarse(emb, cent)
+    # fine level: unhinted so AQE broadcasts the anchor side only while
+    # it is genuinely small
     assign = (
-        coarse.join(emb, "vec_id")
-        .join(cent.select("g", "cid", "ce"), "g")
-        .select("vec_id", F.round(adot, 4).alias("d"), "cid")
+        _ivf_fine_dots(emb, coarse, cent.select("g", "cid", "ce"))
         .groupBy("vec_id")
         .agg(F.expr(f"max_by(cid, {_argkey('cid')})").alias("cid"))
         .join(emb, "vec_id")
@@ -6288,9 +6156,7 @@ def dedup_semantic_cluster(spark, sf_dir):
     )
     x = assign.alias("x")
     y = assign.alias("y")
-    pair_cos = F.expr(
-        "aggregate(zip_with(x.e, y.e, (p, q) -> p * q), cast(0.0 AS double), (acc, v) -> acc + v)"
-    )
+    pair_cos = F.expr(_dot("x.e", "y.e"))
     dropped = (
         x.join(
             y,
@@ -6804,7 +6670,7 @@ def fn_uuid_name(spark, sf_dir):
     oracle=f"""
     WITH gated AS (
       SELECT doc_id, text, lang, source, n_chars,
-             len(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS n_tokens
+             len({TOKS_DUCK}) AS n_tokens
       FROM documents
       WHERE n_chars BETWEEN 50 AND 2000
     ),
@@ -6883,37 +6749,15 @@ def pipeline_rag_index(spark, sf_dir):
 from raster2points_spark.registry import REGISTRY as _REG
 
 
-@register(
-    "dedup_near_recall",
-    oracle=None,  # set below — composes the two member oracles verbatim
-)
-def dedup_near_recall(spark, sf_dir):
-    """LSH QUALITY made a first-class query: recall of the banded
-    MinHash candidate pipeline (dedup_near) against the exhaustive
-    inverted-index truth (dedup_jaccard) at the same τ — the
-    accuracy/cost trade of the sub-quadratic path measured IN-ENGINE,
-    where a data engineer can re-run it on their own corpus slice
-    before trusting LSH for a 100 TB dedup.
-
-    Composes the two REGISTERED queries verbatim (same plans the
-    individual keys prove) and joins their pair sets: n_true,
-    n_found, recall.  The oracle composes the same two oracle SQLs
-    as CTEs, so the metric itself is hash-checked cross-engine.
-    Scale: both members are already bucketed/blocked; the final join
-    is pair-key equi over two tiny pair relations.
-    """
-    # persisted: TWO consumers (the semi-join probe and the n_true
-    # count) would otherwise each re-run the full dedup_jaccard
-    # inverted-index plan — the truth is a tiny pair relation (r15)
-    truth = (
-        _REG["dedup_jaccard"].fn(spark, sf_dir).select("doc_a", "doc_b").persist()
-    )
-    lsh = _REG["dedup_near"].fn(spark, sf_dir).select(
-        F.col("doc_a").alias("la"), F.col("doc_b").alias("lb")
-    )
-    found = truth.join(
-        lsh, (F.col("la") == F.col("doc_a")) & (F.col("lb") == F.col("doc_b")), "left_semi"
-    )
+def _pair_recall(truth, approx):
+    """(n_true, n_found, recall) of the approximate pair relation
+    ``approx`` against ``truth``: both hold the same two keys, under
+    other names in ``approx``.  ``truth`` is persisted: the semi-join
+    probe and the n_true count both read it, and it is a tiny pair
+    relation whose exhaustive plan would otherwise run twice (r15)."""
+    truth = truth.persist()
+    (a, b), (x, y) = truth.columns, approx.columns
+    found = truth.join(approx, (F.col(x) == F.col(a)) & (F.col(y) == F.col(b)), "left_semi")
     n_true = truth.agg(F.count("*").cast("bigint").alias("n_true"))
     return (
         found.agg(F.count("*").cast("bigint").alias("n_found"))
@@ -6926,29 +6770,63 @@ def dedup_near_recall(spark, sf_dir):
     )
 
 
-# compose the member oracles verbatim so the recall metric is itself
-# oracle-checked (any drift in either member's SQL twin shows here too)
-_REG["dedup_near_recall"].oracle = f"""
+def _pair_recall_oracle(truth_sql: str, approx_sql: str, a: str, b: str) -> str:
+    """DuckDB twin of _pair_recall over two member oracles' (a, b) pairs."""
+    return f"""
     WITH truth AS (
-      SELECT doc_a, doc_b FROM ({_REG["dedup_jaccard"].oracle})
+      SELECT {a}, {b} FROM ({truth_sql})
     ),
-    lsh AS (
-      SELECT doc_a, doc_b FROM ({_REG["dedup_near"].oracle})
+    approx AS (
+      SELECT {a}, {b} FROM ({approx_sql})
     )
     SELECT (SELECT cast(count(*) AS bigint) FROM truth) AS n_true,
            cast(count(*) AS bigint) AS n_found,
            round(count(*) * 1.0 / (SELECT count(*) FROM truth), 4) AS recall
     FROM truth t
     WHERE EXISTS (
-      SELECT 1 FROM lsh l WHERE l.doc_a = t.doc_a AND l.doc_b = t.doc_b
+      SELECT 1 FROM approx l WHERE l.{a} = t.{a} AND l.{b} = t.{b}
     )
 """
-_REG["dedup_near_recall"].check = "oracle"
+
+
+# Both recall oracles compose the member oracles verbatim, so the
+# metric is itself oracle-checked (any drift in either member's SQL
+# twin shows here too).
+@register(
+    "dedup_near_recall",
+    oracle=_pair_recall_oracle(
+        _REG["dedup_jaccard"].oracle, _REG["dedup_near"].oracle, "doc_a", "doc_b"
+    ),
+)
+def dedup_near_recall(spark, sf_dir):
+    """LSH QUALITY made a first-class query: recall of the banded
+    MinHash candidate pipeline (dedup_near) against the exhaustive
+    inverted-index truth (dedup_jaccard) at the same τ — the
+    accuracy/cost trade of the sub-quadratic path measured IN-ENGINE,
+    where a data engineer can re-run it on their own corpus slice
+    before trusting LSH for a 100 TB dedup.
+
+    Composes the two REGISTERED queries verbatim (same plans the
+    individual keys prove) and joins their pair sets: n_true,
+    n_found, recall.  Scale: both members are already
+    bucketed/blocked; the final join is pair-key equi over two tiny
+    pair relations.
+    """
+    truth = _REG["dedup_jaccard"].fn(spark, sf_dir).select("doc_a", "doc_b")
+    lsh = _REG["dedup_near"].fn(spark, sf_dir).select(
+        F.col("doc_a").alias("la"), F.col("doc_b").alias("lb")
+    )
+    return _pair_recall(truth, lsh)
 
 
 @register(
     "sim_ivf_recall",
-    oracle=None,  # set below — composes the two member oracles verbatim
+    oracle=_pair_recall_oracle(
+        f"SELECT * FROM ({_REG['sim_knn'].oracle}) WHERE rn <= 5",
+        _REG["sim_ivf"].oracle,
+        "probe_id",
+        "vec_id",
+    ),
 )
 def sim_ivf_recall(spark, sf_dir):
     """[r12] IVF QUALITY made a first-class query (VERDICT r11 #6 —
@@ -6961,53 +6839,14 @@ def sim_ivf_recall(spark, sf_dir):
 
     Composes the two REGISTERED queries verbatim (identical plans to
     the individual keys) and semi-joins their (probe, neighbor) pair
-    sets: n_true, n_found, recall.  The oracle composes the same two
-    member oracle SQLs as CTEs, so any drift in either member's twin
-    shows here too.  Scale: both members are broadcast-probe shapes;
-    the final semi-join is equi over two ≤25-row pair relations."""
-    # persisted: TWO consumers (the semi-join probe and the n_true
-    # count) would otherwise each re-run the full exhaustive sim_knn
-    # plan — the truth is a ≤25-row pair relation (r15)
-    truth = (
-        _REG["sim_knn"].fn(spark, sf_dir)
-        .filter(F.col("rn") <= 5)
-        .select("probe_id", "vec_id")
-        .persist()
-    )
+    sets: n_true, n_found, recall.  Scale: both members are
+    broadcast-probe shapes; the final semi-join is equi over two
+    ≤25-row pair relations."""
+    truth = _REG["sim_knn"].fn(spark, sf_dir).filter(F.col("rn") <= 5).select("probe_id", "vec_id")
     ivf = _REG["sim_ivf"].fn(spark, sf_dir).select(
         F.col("probe_id").alias("ip"), F.col("vec_id").alias("iv")
     )
-    found = truth.join(
-        ivf, (F.col("ip") == F.col("probe_id")) & (F.col("iv") == F.col("vec_id")), "left_semi"
-    )
-    n_true = truth.agg(F.count("*").cast("bigint").alias("n_true"))
-    return (
-        found.agg(F.count("*").cast("bigint").alias("n_found"))
-        .crossJoin(F.broadcast(n_true))
-        .select(
-            "n_true",
-            "n_found",
-            F.round(F.col("n_found") / F.col("n_true"), 4).alias("recall"),
-        )
-    )
-
-
-_REG["sim_ivf_recall"].oracle = f"""
-    WITH truth AS (
-      SELECT probe_id, vec_id FROM ({_REG["sim_knn"].oracle}) WHERE rn <= 5
-    ),
-    ivf AS (
-      SELECT probe_id, vec_id FROM ({_REG["sim_ivf"].oracle})
-    )
-    SELECT (SELECT cast(count(*) AS bigint) FROM truth) AS n_true,
-           cast(count(*) AS bigint) AS n_found,
-           round(count(*) * 1.0 / (SELECT count(*) FROM truth), 4) AS recall
-    FROM truth t
-    WHERE EXISTS (
-      SELECT 1 FROM ivf l WHERE l.probe_id = t.probe_id AND l.vec_id = t.vec_id
-    )
-"""
-_REG["sim_ivf_recall"].check = "oracle"
+    return _pair_recall(truth, ivf)
 
 
 @register(

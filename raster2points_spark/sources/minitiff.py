@@ -539,13 +539,15 @@ def _parse_header(path: str, buf, overview: int, mask: bool = False) -> MiniTiff
         if not offsets:
             raise ValueError(f"{path}: missing StripOffsets")
 
+    per_plane = ((height + block_h - 1) // block_h) * ((width + block_w - 1) // block_w)
+    n_blocks = per_plane * (spp if planar == 2 else 1)
+    if len(offsets) < n_blocks:
+        raise ValueError(f"{path}: {len(offsets)} block offsets listed, the grid needs {n_blocks}")
     if not byte_counts:
         if compression != 1:
             raise ValueError(f"{path}: compressed TIFF missing byte counts (tag 279/325)")
         # uncompressed: counts are implied by the layout
         byte_counts = []
-        blocks_down = (height + block_h - 1) // block_h
-        per_plane = blocks_down * ((width + block_w - 1) // block_w)
         row_samples = block_w * (spp if planar == 1 else 1)
         # sub-byte rows are bit-packed but byte-aligned per row
         row_bytes = (row_samples * bits + 7) // 8 if bits < 8 else row_samples * bps

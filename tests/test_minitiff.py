@@ -2428,3 +2428,23 @@ def test_truncated_fixtures_raise_value_error(tmp_path):
         f.write(data)
     with pytest.raises(ValueError, match="block 0: bad deflate data"):
         _read_window_array(read_header(cut), 0, 0, whole.width, whole.height, 0)
+    # one block offset (and byte count) fewer than the grid needs, for
+    # a tiled file (tags 324/325) and a stripped one (tags 273/279)
+    for name, tags, n_blocks in (("sparse_mask.tif", (324, 325), 4), ("pyramid.tif", (273, 279), 2)):
+        data = bytearray(open(os.path.join(repo, "fixtures", "tif", name), "rb").read())
+        bo = "<" if data[:2] == b"II" else ">"
+        ifd = struct.unpack_from(bo + "I", data, 4)[0]
+        patched = 0
+        for i in range(struct.unpack_from(bo + "H", data, ifd)[0]):
+            entry = ifd + 2 + 12 * i
+            if struct.unpack_from(bo + "H", data, entry)[0] in tags:
+                assert struct.unpack_from(bo + "I", data, entry + 4)[0] == n_blocks
+                struct.pack_into(bo + "I", data, entry + 4, n_blocks - 1)
+                patched += 1
+        assert patched == 2
+        with open(cut, "wb") as f:
+            f.write(data)
+        with pytest.raises(
+            ValueError, match=f"cut.tif: {n_blocks - 1} block offsets listed, the grid needs {n_blocks}"
+        ):
+            read_header(cut)

@@ -88,22 +88,28 @@ def test_mask_count_bounded_by_pixels(spark):
     assert 0 < valid <= total_px
 
 
-def test_functions_library_matches_query_exprs(spark):
-    """functions.vectors.dot / functions.text helpers must agree with
-    the raw SQL-expression twins the registered queries use."""
+def test_functions_library_matches_query_exprs(spark, tmp_path):
+    """The dot product, tokenizer, token hash, bag fingerprint and
+    shingle builder the registered queries use, checked on one row."""
     from pyspark.sql import functions as F
 
-    from raster2points_spark.functions import bag_fingerprint, dot, shingles, token_hash, tokens
+    from raster2points_spark.queries.llm import (
+        _SHINGLES_SPARK,
+        _TOKEN_HASH_SPARK,
+        TOKS_SPARK,
+        _dot,
+        text_fingerprint,
+    )
 
+    text = "Alpha beta  alpha gamma beta x"
     df = spark.createDataFrame(
-        [([1.0, 2.0, 3.0], [4.0, 5.0, 6.0], "Alpha beta  alpha gamma beta x")],
-        "a array<double>, b array<double>, text string",
+        [([1.0, 2.0, 3.0], [4.0, 5.0, 6.0], text, "hello")],
+        "a array<double>, b array<double>, text string, w string",
     )
     row = df.select(
-        dot("a", "b").alias("d"),
-        tokens("text").alias("tk"),
-        token_hash(F.lit("hello")).alias("h"),
-        bag_fingerprint(tokens("text")).alias("fp"),
+        F.expr(_dot("a", "b")).alias("d"),
+        F.expr(TOKS_SPARK).alias("tk"),
+        F.expr(_TOKEN_HASH_SPARK).alias("h"),
     ).first()
     assert row.d == 32.0
     assert row.tk == ["alpha", "beta", "alpha", "gamma", "beta", "x"]
@@ -113,9 +119,11 @@ def test_functions_library_matches_query_exprs(spark):
     import hashlib
 
     want = hashlib.md5(" ".join(sorted(set(row.tk))).encode()).hexdigest()
-    assert row.fp == want
+    sf = str(tmp_path)
+    df.select(F.lit(1).cast("long").alias("doc_id"), "text").write.parquet(f"{sf}/documents.parquet")
+    assert text_fingerprint(spark, sf).first().bag_fp == want
 
-    sh = df.withColumn("tk", tokens("text")).select(shingles("tk", 3).alias("s")).first().s
+    sh = df.withColumn("toks", F.expr(TOKS_SPARK)).select(F.expr(_SHINGLES_SPARK).alias("s")).first().s
     assert "alpha beta alpha" in sh and len(sh) == 4
 
 

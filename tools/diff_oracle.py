@@ -1,4 +1,4 @@
-"""Local replica of the driver's correctness gate.
+r"""Local replica of the driver's correctness gate.
 
 Runs every registered query's Spark plan AND its DuckDB oracle SQL on
 the same parquet (default sf0.01), then compares row-count + column
@@ -11,6 +11,11 @@ Each passing key's ``ok`` line ends with the sha256 of its canonical
 Spark rows, so two runs (before and after a refactor, say) compare by
 diffing those digests:
 ``grep ^ok run.txt | awk '{print $2, $NF}'``.
+Each ``ok`` and rows-only line also carries ``plan=``, the sha256 of
+the key's optimized logical plan text with session counters and the
+checkout path masked (see ``plan_digest``).  Equal digests in two runs
+mean the key does the same work:
+``sed -n 's/^\(ok\|--\) \([^:]*\):.* plan=\([0-9a-f]*\).*/\2 \3/p' run.txt``.
 
 Usage:
     python tools/diff_oracle.py [--sf /root/testdata/sf0.01] [keys...]
@@ -22,6 +27,7 @@ import argparse
 import hashlib
 import math
 import os
+import re
 import sys
 import time
 import traceback
@@ -31,7 +37,8 @@ from decimal import Decimal
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from raster2points_spark.io import TABLES
 from raster2points_spark.registry import load_all
@@ -102,6 +109,24 @@ def canon_rows(df: pd.DataFrame) -> list[tuple]:
     return out
 
 
+def plan_digest(df) -> str:
+    """sha256 of ``df``'s optimized logical plan, with what differs
+    between two runs of the same plan masked: expression ids (``#123``),
+    the session counters in Python lambdas' variable names
+    (``lambda x_12``) and common subexpression names
+    (``_common_expr_3``), ``plan_id`` tags, the checkout path, and the
+    metadata after a cached scan's column list, which Spark cuts at a
+    fixed length before the ids are masked."""
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    text = re.sub(r"(FileScan \w+ \[[^\]\n]*\]).*", r"\1", text)
+    text = re.sub(r"#\d+", "#", text)
+    text = re.sub(r"(lambda [xyz])_\d+", r"\1", text)
+    text = re.sub(r"_common_expr_\d+", "_common_expr_", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=", text)
+    text = text.replace(ROOT, "<root>")
+    return hashlib.sha256(text.encode()).hexdigest()
+
+
 def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[str]:
     problems = []
     if sorted(spark_df.columns) != sorted(oracle_df.columns):
@@ -158,16 +183,16 @@ def main() -> int:
         # rows-only/smoke keys still exercise the Spark side
         oracle = spec.check == "oracle" and spec.oracle is not None
         try:
-            action = (lambda df: df.toPandas()) if oracle else (lambda df: df.count())
-            r = run_key(spark, k, args.sf, action, cold=True)
+            collect = (lambda df: df.toPandas()) if oracle else (lambda df: df.count())
+            r = run_key(spark, k, args.sf, lambda df: (plan_digest(df), collect(df)), cold=True)
         except Exception:
             print(f"XX {k}: SPARK ERROR" + ("" if oracle else " (rows-only)"))
             traceback.print_exc()
             failed.append(k)
             continue
-        sdf, t_spark = r["result"], r["build_s"] + r["exec_s"]
+        (plan, sdf), t_spark = r["result"], r["build_s"] + r["exec_s"]
         if not oracle:
-            print(f"-- {k}: rows-only, spark rows={sdf} ({t_spark:.1f}s)")
+            print(f"-- {k}: rows-only, spark rows={sdf} ({t_spark:.1f}s) plan={plan}")
             skipped.append(k)
             continue
         try:
@@ -194,7 +219,7 @@ def main() -> int:
             digest = hashlib.sha256(repr(canon_rows(sdf)).encode()).hexdigest()
             print(
                 f"ok {k}: {len(sdf)} rows (spark {t_spark:.1f}s, duck {t_duck:.1f}s)"
-                f" sha256={digest}"
+                f" plan={plan} sha256={digest}"
             )
             passed.append(k)
 
