@@ -203,7 +203,15 @@ def _cogify(spark, tiles, args) -> None:
             f"mixed pixel scales across bands ({mixed} differ from "
             f"{(a, -e)}); COG-ify each resolution group separately"
         )
-    names = dict(zip(bands, args.col_names)) if args.col_names else {}
+    names = {}
+    if args.col_names:
+        # one output file per name: a repeated name would merge bands
+        if len(args.col_names) != len(bands):
+            raise ValueError("col_names must match bands")
+        repeated = sorted({n for n in args.col_names if args.col_names.count(n) > 1})
+        if repeated:
+            raise ValueError(f"col_names repeat {repeated}: each band needs its own file")
+        names = dict(zip(bands, args.col_names))
     # per-file dims: each band keeps ITS OWN raster's extent
     # (write_geotiffs' optional width/height origin columns) — a
     # smaller input must not roundtrip nodata-padded to the global max

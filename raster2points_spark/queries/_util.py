@@ -8,6 +8,11 @@ Determinism helpers implement SURVEY.md §7 risks:
   (epoch seconds as BIGINT).  Oracle-side twin:
   ``cast(floor(epoch(ts)) as bigint)``.
 - floats: round in BOTH engines before hashing (see each query).
+
+Each kernel that several query modules share — the time bucket, the
+per-type bucketed series, the daily rollup, the sessionization and
+the co-purchase pairs — is defined here once, as a Spark builder next
+to its DuckDB text.
 """
 
 from __future__ import annotations
@@ -153,7 +158,7 @@ def bucketed_prefix_sums(
     pv = rel.persist()
     mm = pv.agg(F.min(v).alias("_mn"), F.max(v).alias("_mx"))
     span = F.col("_mx") - F.col("_mn")
-    bucket = (
+    bid = (
         F.when(
             span > 0,
             F.least(F.lit(nb - 1), F.floor((F.col(v) - F.col("_mn")) / span * nb)),
@@ -161,7 +166,7 @@ def bucketed_prefix_sums(
         .otherwise(F.lit(0))
         .cast("int")
     )
-    pb = pv.crossJoin(F.broadcast(mm)).withColumn("_b", bucket)
+    pb = pv.crossJoin(F.broadcast(mm)).withColumn("_b", bid)
     end = -1 if preceding_only else 0
     wp = Window.partitionBy("_b").orderBy(v).rowsBetween(Window.unboundedPreceding, end)
     cum = pb.select(
@@ -205,9 +210,92 @@ def unix_secs(col: Column) -> Column:
 
     Session TZ is UTC, so NTZ→TZ cast is identity; unix_seconds
     truncates sub-second parts — matching the DuckDB oracle expression
-    ``cast(floor(epoch(ts)) as bigint)``.
+    ``TSEC``.
     """
     return F.unix_seconds(col.cast("timestamp"))
 
 
-ORACLE_TSEC = "cast(floor(epoch({c})) as bigint)"
+# events.ts in epoch seconds, DuckDB side (Spark side: unix_secs(ts))
+TSEC = "cast(floor(epoch(ts)) as bigint)"
+
+
+def bucket(n: int, tsec: Column | None = None) -> Column:
+    """Time bucket ``floor(tsec / n)`` as BIGINT; ``tsec`` defaults to
+    ``unix_secs(ts)``.  DuckDB twin: ``bucket_sql``."""
+    tsec = unix_secs(F.col("ts")) if tsec is None else tsec
+    return F.floor(tsec / n).cast("bigint")
+
+
+def bucket_sql(n: int, tsec: str = TSEC) -> str:
+    return f"cast(floor({tsec} / {n}) AS bigint)"
+
+
+def type_buckets(spark: SparkSession, sf_dir: str, n: int, name: str, *aggs: Column) -> DataFrame:
+    """``events`` grouped by (event_type, ``bucket(n)`` AS ``name``) —
+    the hourly bars and daily series of the time-series keys.  DuckDB
+    twin: ``type_buckets_sql``."""
+    return t(spark, sf_dir, "events").groupBy("event_type", bucket(n).alias(name)).agg(*aggs)
+
+
+def type_buckets_sql(n: int, name: str, aggs: str) -> str:
+    return f"""SELECT event_type, {bucket_sql(n)} AS {name}, {aggs}
+      FROM events GROUP BY 1, 2"""
+
+
+def daily_rollup(df: DataFrame) -> DataFrame:
+    """Per-(event_type, day) count ``n`` and value sum ``sv``: the
+    decomposable partials a standing daily MV stores and merges."""
+    return df.groupBy("event_type", "day").agg(F.count("*").alias("n"), F.sum("value").alias("sv"))
+
+
+# Gaps-and-islands sessionization at a 30-minute gap: ``numbered`` has
+# one row per event with its per-user ``session_no``.  Spark twin:
+# behavioral._sessions.
+SESSION_GAP_S = 1800
+SESSION_CTES = f"""e AS (
+      SELECT user_id, event_id, {TSEC} AS tsec FROM events
+    ), flagged AS (
+      SELECT user_id, event_id, tsec,
+             CASE WHEN tsec - lag(tsec) OVER w > {SESSION_GAP_S}
+                    OR lag(tsec) OVER w IS NULL
+                  THEN 1 ELSE 0 END AS new_s
+      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)
+    ), numbered AS (
+      SELECT user_id, tsec,
+             cast(sum(new_s) OVER (PARTITION BY user_id ORDER BY tsec, event_id
+                                   ROWS UNBOUNDED PRECEDING) AS bigint) AS session_no
+      FROM flagged
+    )"""
+
+
+def order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (order, part) pairs of ``lineitem``: the baskets."""
+    return t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+
+
+def copurchase_pairs(items: DataFrame, a: str, b: str, n: str) -> DataFrame:
+    """Part pairs ``a < b`` bought together in at least 3 orders, with
+    the order count ``n``.  The self-join keys on l_orderkey, so the
+    blowup is bounded by (lines-per-order choose 2) per order, never
+    corpus².  DuckDB twin: ``ITEMS_CTE`` + ``copurchase_pairs_sql``."""
+    x, y = items.alias("a"), items.alias("b")
+    return (
+        x.join(
+            y,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .groupBy(F.col("a.l_partkey").alias(a), F.col("b.l_partkey").alias(b))
+        .agg(F.count("*").alias(n))
+        .filter(F.col(n) >= 3)
+    )
+
+
+ITEMS_CTE = "items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)"
+
+
+def copurchase_pairs_sql(a: str, b: str, n: str) -> str:
+    return f"""SELECT a.l_partkey AS {a}, b.l_partkey AS {b}, count(*) AS {n}
+      FROM items a JOIN items b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      GROUP BY 1, 2 HAVING count(*) >= 3"""

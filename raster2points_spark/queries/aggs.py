@@ -13,7 +13,22 @@ from pyspark.sql import functions as F
 
 from raster2points_spark.io import register_views
 from raster2points_spark.registry import register
-from raster2points_spark.queries._util import ORACLE_TSEC, SCRATCH, t, t_fanout, unix_secs
+from raster2points_spark.queries._util import (
+    SCRATCH,
+    SESSION_CTES,
+    bucket,
+    bucket_sql,
+    daily_rollup,
+    t,
+    t_fanout,
+    type_buckets,
+    type_buckets_sql,
+    unix_secs,
+)
+
+# md5 → bigint hash of user_id (60 bits), the sketches' hash
+_USER_HASH_SPARK = "cast(conv(substring(md5(cast(user_id AS string)), 1, 15), 16, 10) AS bigint)"
+_USER_HASH_DUCK = "cast(concat('0x', substr(md5(cast(user_id AS varchar)), 1, 15)) AS bigint)"
 
 
 @register(
@@ -141,25 +156,19 @@ def agg_cube(spark, sf_dir):
     )
 
 
-@register(
-    "agg_grouping_sets",
-    oracle="""
+_GROUPING_SETS_SQL = """
     SELECT n_name, c_mktsegment, count(*) AS n, round(sum(c_acctbal), 2) AS sum_bal
     FROM customer JOIN nation ON c_nationkey = n_nationkey
     GROUP BY GROUPING SETS ((n_name), (c_mktsegment), ())
-    """,
-)
+    """
+
+
+@register("agg_grouping_sets", oracle=_GROUPING_SETS_SQL)
 def agg_grouping_sets(spark, sf_dir):
     """Explicit grouping sets via Spark SQL (same Catalyst Expand plan
     as rollup/cube)."""
     register_views(spark, sf_dir, ("customer", "nation"))
-    return spark.sql(
-        """
-        SELECT n_name, c_mktsegment, count(*) AS n, round(sum(c_acctbal), 2) AS sum_bal
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY GROUPING SETS ((n_name), (c_mktsegment), ())
-        """
-    )
+    return spark.sql(_GROUPING_SETS_SQL)
 
 
 @register(
@@ -252,9 +261,9 @@ def agg_collect_sorted(spark, sf_dir):
 
 @register(
     "agg_rollup_cascade",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
-        SELECT cast(floor(epoch(ts) / 86400) AS bigint) AS day_bkt,
+        SELECT {bucket_sql(86400)} AS day_bkt,
                event_type,
                cast(floor(value * 1000) AS bigint) AS vmilli
         FROM events
@@ -274,18 +283,16 @@ def agg_rollup_cascade(spark, sf_dir):
     would be order-sensitive across the two levels).  At 100 TB the
     second level shuffles |hours x types| rows, not |events|.
     """
-    from raster2points_spark.queries._util import unix_secs
-
     ev = t(spark, sf_dir, "events").select(
-        unix_secs(F.col("ts")).alias("tsec"),
         "event_type",
         F.floor(F.col("value") * 1000).cast("bigint").alias("vmilli"),
-    ).withColumn("hour_bkt", F.expr("cast(floor(tsec / 3600) AS bigint)"))
+        bucket(3600).alias("hour_bkt"),
+    )
     hourly = ev.groupBy("hour_bkt", "event_type").agg(
         F.count("*").alias("n"), F.sum("vmilli").alias("sum_vmilli")
     )
     return (
-        hourly.withColumn("day_bkt", F.expr("cast(floor(hour_bkt / 24) AS bigint)"))
+        hourly.withColumn("day_bkt", bucket(24, F.col("hour_bkt")))
         .groupBy("day_bkt", "event_type")
         .agg(F.sum("n").alias("n"), F.sum("sum_vmilli").alias("sum_vmilli"))
         .select("day_bkt", "event_type", "n", "sum_vmilli")
@@ -294,13 +301,12 @@ def agg_rollup_cascade(spark, sf_dir):
 
 @register(
     "agg_kmv_sketch",
-    oracle="""
+    oracle=f"""
     WITH du AS (
         SELECT DISTINCT event_type, user_id FROM events
     ),
     hashed AS (
-        SELECT event_type,
-               cast(concat('0x', substr(md5(cast(user_id AS varchar)), 1, 15)) AS bigint) AS h
+        SELECT event_type, {_USER_HASH_DUCK} AS h
         FROM du
     ),
     ranked AS (
@@ -333,12 +339,7 @@ def agg_kmv_sketch(spark, sf_dir):
     from pyspark.sql import Window
 
     du = t(spark, sf_dir, "events").select("event_type", "user_id").distinct()
-    hashed = du.select(
-        "event_type",
-        F.expr(
-            "cast(conv(substring(md5(cast(user_id AS string)), 1, 15), 16, 10) AS bigint)"
-        ).alias("h"),
-    )
+    hashed = du.select("event_type", F.expr(_USER_HASH_SPARK).alias("h"))
     w = Window.partitionBy("event_type").orderBy("h")
     wc = Window.partitionBy("event_type")
     ranked = hashed.select(
@@ -398,9 +399,9 @@ def agg_pivot(spark, sf_dir):
 
 @register(
     "ts_gapfill",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
-        SELECT event_type, cast(floor(epoch(ts) / 3600) AS bigint) AS h
+        SELECT event_type, {bucket_sql(3600)} AS h
         FROM events
     ),
     counts AS (SELECT event_type, h, count(*) AS n FROM ev GROUP BY 1, 2),
@@ -426,13 +427,7 @@ def ts_gapfill(spark, sf_dir):
     grid size is |types| · |hours|, independent of event count; the
     left join back to the counts is an equi-join on the grid key.
     """
-    from raster2points_spark.queries._util import unix_secs
-
-    ev = (
-        t(spark, sf_dir, "events")
-        .select("event_type", unix_secs(F.col("ts")).alias("tsec"))
-        .select("event_type", F.expr("cast(floor(tsec / 3600) AS bigint)").alias("h"))
-    )
+    ev = t(spark, sf_dir, "events").select("event_type", bucket(3600).alias("h"))
     # counts (|types|x|hours| rows) is the ONLY consumer of the event
     # scan: bounds and the type list derive from it exactly (min/max
     # over grouped h == over raw h; the distinct type set survives the
@@ -498,15 +493,14 @@ def agg_mode(spark, sf_dir):
     )
 
 
-@register(
-    "cte_recursive",
-    oracle="""
+# {div}: integer division, ``div`` in Spark SQL and ``//`` in DuckDB
+_RECURSIVE_SQL = """
     WITH RECURSIVE spine(i) AS (
       SELECT 0
       UNION ALL
       SELECT i + 1 FROM spine WHERE i < 23
     ), m AS (
-      SELECT cast(1995 + i // 12 AS int) AS yr, cast(1 + i % 12 AS int) AS mo FROM spine
+      SELECT cast(1995 + i {div} 12 AS int) AS yr, cast(1 + i % 12 AS int) AS mo FROM spine
     ), oc AS (
       SELECT cast(extract(year FROM o_orderdate) AS int) AS yr,
              cast(extract(month FROM o_orderdate) AS int) AS mo,
@@ -515,8 +509,10 @@ def agg_mode(spark, sf_dir):
     )
     SELECT m.yr, m.mo, coalesce(oc.n, 0) AS n, coalesce(oc.total, 0.0) AS total
     FROM m LEFT JOIN oc ON m.yr = oc.yr AND m.mo = oc.mo
-    """,
-)
+    """
+
+
+@register("cte_recursive", oracle=_RECURSIVE_SQL.format(div="//"))
 def cte_recursive(spark, sf_dir):
     """Recursive CTE (Spark 4 WITH RECURSIVE): generate a 24-month
     spine by recursion, then left-join monthly order rollups with
@@ -529,35 +525,13 @@ def cte_recursive(spark, sf_dir):
     IDENTICAL text modulo `//` vs `div` integer division.
     """
     register_views(spark, sf_dir, ("orders",))
-    return spark.sql(
-        """
-        WITH RECURSIVE spine(i) AS (
-          SELECT 0
-          UNION ALL
-          SELECT i + 1 FROM spine WHERE i < 23
-        ), m AS (
-          SELECT cast(1995 + i div 12 AS int) AS yr, cast(1 + i % 12 AS int) AS mo FROM spine
-        ), oc AS (
-          SELECT cast(extract(year FROM o_orderdate) AS int) AS yr,
-                 cast(extract(month FROM o_orderdate) AS int) AS mo,
-                 count(*) AS n, round(sum(o_totalprice), 2) AS total
-          FROM orders GROUP BY 1, 2
-        )
-        SELECT m.yr, m.mo, coalesce(oc.n, 0) AS n, coalesce(oc.total, 0.0) AS total
-        FROM m LEFT JOIN oc ON m.yr = oc.yr AND m.mo = oc.mo
-        """
-    )
+    return spark.sql(_RECURSIVE_SQL.format(div="div"))
 
 
 @register(
     "mv_incremental",
     oracle=f"""
-    SELECT event_type,
-           cast(floor({ORACLE_TSEC.format(c='ts')} / 86400) AS bigint) AS day,
-           count(*) AS n,
-           round(sum(value), 2) AS sum_value
-    FROM events
-    GROUP BY 1, 2
+    {type_buckets_sql(86400, "day", "count(*) AS n, round(sum(value), 2) AS sum_value")}
     """,
 )
 def mv_incremental(spark, sf_dir):
@@ -576,22 +550,12 @@ def mv_incremental(spark, sf_dir):
     """
     import os as _os
 
-    ev = t(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(unix_secs(F.col("ts")) / 86400).cast("bigint").alias("day"),
-        "value",
-    )
-
-    def rollup(df):
-        return df.groupBy("event_type", "day").agg(
-            F.count("*").alias("n"), F.sum("value").alias("sv")
-        )
-
+    ev = t(spark, sf_dir, "events").select("event_type", bucket(86400).alias("day"), "value")
     split_day = 19740
     path = _os.path.join(SCRATCH, "mv_incremental_base")
-    rollup(ev.filter(F.col("day") < split_day)).write.mode("overwrite").parquet(path)
+    daily_rollup(ev.filter(F.col("day") < split_day)).write.mode("overwrite").parquet(path)
     base = spark.read.parquet(path)  # the stored MV (history's partials)
-    delta = rollup(ev.filter(F.col("day") >= split_day))  # only new days scanned
+    delta = daily_rollup(ev.filter(F.col("day") >= split_day))  # only new days scanned
     return (
         base.unionByName(delta)
         .groupBy("event_type", "day")
@@ -735,25 +699,12 @@ def agg_salted_twophase(spark, sf_dir):
 @register(
     "agg_session_window",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_id, {ORACLE_TSEC.format(c='ts')} AS tsec FROM events
-    ), flagged AS (
-      SELECT user_id, tsec,
-             CASE WHEN tsec - lag(tsec) OVER w > 1800
-                    OR lag(tsec) OVER w IS NULL
-                  THEN 1 ELSE 0 END AS new_s
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)
-    ), numbered AS (
-      SELECT user_id, tsec,
-             sum(new_s) OVER (PARTITION BY user_id ORDER BY tsec
-                              ROWS UNBOUNDED PRECEDING) AS sid
-      FROM flagged
-    )
+    WITH {SESSION_CTES}
     SELECT user_id,
            min(tsec) AS session_start,
            max(tsec) + 1800 AS session_end,
            count(*) AS n_events
-    FROM numbered GROUP BY user_id, sid
+    FROM numbered GROUP BY user_id, session_no
     """,
 )
 def agg_session_window(spark, sf_dir):
@@ -1187,14 +1138,12 @@ def agg_exact_median_twopass(spark, sf_dir):
 
 @register(
     "agg_hll_oracle",
-    oracle="""
+    oracle=f"""
     WITH du AS (
         SELECT DISTINCT event_type, user_id FROM events
     ),
     hashed AS (
-        SELECT event_type,
-               cast(concat('0x', substr(md5(cast(user_id AS varchar)), 1, 15))
-                    AS bigint) AS h
+        SELECT event_type, {_USER_HASH_DUCK} AS h
         FROM du
     ),
     regs AS (
@@ -1259,12 +1208,7 @@ def agg_hll_oracle(spark, sf_dir):
     du = (
         t(spark, sf_dir, "events").select("event_type", "user_id").distinct().persist()
     )
-    hashed = du.select(
-        "event_type",
-        F.expr(
-            "cast(conv(substring(md5(cast(user_id AS string)), 1, 15), 16, 10) AS bigint)"
-        ).alias("h"),
-    )
+    hashed = du.select("event_type", F.expr(_USER_HASH_SPARK).alias("h"))
     # h // 64 in exact integer arithmetic (h >= 0).  Double division
     # loses bits beyond the 53-bit mantissa on a 60-bit hash and can
     # round w across a power-of-two boundary, flipping rho by 1 vs the
@@ -1403,12 +1347,9 @@ def agg_exact_p99_grouped(spark, sf_dir):
 
 @register(
     "agg_compound_product",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
-      SELECT event_type,
-             cast(floor(epoch(ts) / 86400) AS bigint) AS day,
-             sum(value) AS sv
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(86400, "day", "sum(value) AS sv")}
     ),
     rates AS (
       SELECT event_type, day,
@@ -1438,14 +1379,7 @@ def agg_compound_product(spark, sf_dir):
     after the exp.  Daily partial sums bound the term count and
     magnitude; one shuffle, |types|×|days| rows.
     """
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.floor(unix_secs(F.col("ts")) / 86400).cast("bigint").alias("day"),
-        )
-        .agg(F.sum("value").alias("sv"))
-    )
+    daily = type_buckets(spark, sf_dir, 86400, "day", F.sum("value").alias("sv"))
     rates = daily.select(
         "event_type",
         F.round(F.log(1.0 + F.col("sv") / 100000.0), 10).alias("lr"),

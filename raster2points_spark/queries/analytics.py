@@ -31,9 +31,17 @@ from pyspark.sql import functions as F
 from raster2points_spark.io import local_df
 from raster2points_spark.registry import register
 from raster2points_spark.queries._util import (
-    ORACLE_TSEC,
+    ITEMS_CTE,
+    TSEC,
+    bucket,
+    bucket_sql,
     bucketed_prefix_sums,
+    copurchase_pairs,
+    copurchase_pairs_sql,
+    order_items,
     t,
+    type_buckets,
+    type_buckets_sql,
     unix_secs,
 )
 
@@ -42,14 +50,23 @@ from raster2points_spark.queries._util import (
 # far below 2^63.  A single bigint key keeps min_by/arg_min semantics
 # identical across engines (no struct-vs-list ordering subtleties).
 _PACK_SPARK = "tsec * 10000000 + event_id"
-_PACK_DUCK = f"{ORACLE_TSEC.format(c='ts')} * 10000000 + event_id"
+_PACK_DUCK = f"{TSEC} * 10000000 + event_id"
+
+
+# The ts_* keys' hourly bars sum value in milli-units: every later sum
+# is then an exact bigint in any order.
+def _vm():
+    return F.sum(F.round(F.col("value") * 1000).cast("bigint")).alias("vm")
+
+
+_VM_SQL = "sum(cast(round(value * 1000) AS bigint)) AS vm"
 
 
 @register(
     "ts_resample",
     oracle=f"""
     SELECT event_type,
-           cast(floor({ORACLE_TSEC.format(c='ts')} / 300) AS bigint) AS bar,
+           {bucket_sql(300)} AS bar,
            round(arg_min(value, {_PACK_DUCK}), 4) AS open,
            round(arg_max(value, {_PACK_DUCK}), 4) AS close,
            round(min(value), 4) AS lo,
@@ -76,7 +93,7 @@ def ts_resample(spark, sf_dir):
     return (
         ev.groupBy(
             "event_type",
-            F.floor(F.col("tsec") / 300).cast("bigint").alias("bar"),
+            bucket(300, F.col("tsec")).alias("bar"),
         )
         .agg(
             F.round(F.min_by("value", pack), 4).alias("open"),
@@ -566,10 +583,7 @@ def rfm_segments(spark, sf_dir):
     "ts_pct_change",
     oracle=f"""
     WITH daily AS (
-      SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 86400) AS bigint) AS day,
-             round(sum(value), 2) AS total
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(86400, "day", "round(sum(value), 2) AS total")}
     )
     SELECT event_type, day, total,
            round((total - lag(total) OVER w)
@@ -591,11 +605,9 @@ def ts_pct_change(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.floor(unix_secs(F.col("ts")) / 86400).cast("bigint").alias("day"),
-    ).agg(F.round(F.sum("value"), 2).alias("total"))
+    daily = type_buckets(
+        spark, sf_dir, 86400, "day", F.round(F.sum("value"), 2).alias("total")
+    )
     w = Window.partitionBy("event_type").orderBy("day")
     prev = F.lag("total").over(w)
     return daily.select(
@@ -666,10 +678,7 @@ def pareto_customers(spark, sf_dir):
     "ts_spike_detect",
     oracle=f"""
     WITH b AS (
-      SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 300) AS bigint) AS bucket,
-             count(*) AS n
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(300, "bucket", "count(*) AS n")}
     ), stats AS (
       SELECT event_type, avg(n) AS mu, stddev_samp(n) AS sigma
       FROM b GROUP BY 1
@@ -691,11 +700,7 @@ def ts_spike_detect(spark, sf_dir):
     broadcast back.  Everything after the first rollup is
     volume-independent.
     """
-    ev = t(spark, sf_dir, "events")
-    b = ev.groupBy(
-        "event_type",
-        F.floor(unix_secs(F.col("ts")) / 300).cast("bigint").alias("bucket"),
-    ).agg(F.count("*").alias("n"))
+    b = type_buckets(spark, sf_dir, 300, "bucket", F.count("*").alias("n"))
     stats = b.groupBy("event_type").agg(
         F.avg("n").alias("mu"), F.stddev_samp("n").alias("sigma")
     )
@@ -709,14 +714,9 @@ def ts_spike_detect(spark, sf_dir):
 
 @register(
     "graph_triangle_count",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), edges AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 3
+    oracle=f"""
+    WITH {ITEMS_CTE}, edges AS (
+      {copurchase_pairs_sql("u", "v", "n_orders")}
     ), deg AS (
       SELECT node, count(*) AS d
       FROM (SELECT u AS node FROM edges UNION ALL SELECT v FROM edges)
@@ -746,21 +746,11 @@ def graph_triangle_count(spark, sf_dir):
     candidates instead of sum(deg^2), which a single hub would blow
     up quadratically.  The oracle states the naive a<b<c three-way
     join — same exact count, proving orientation changes the plan,
-    not the answer.  Edge building inherits basket_pairs' per-order
-    bound; all three relations shuffle on their join keys only.
+    not the answer.  Edges come from ``copurchase_pairs`` (bounded per
+    order); all three relations shuffle on their join keys only.
     """
-    li = t(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("n_orders"))
-        .filter(F.col("n_orders") >= 3)
+        copurchase_pairs(order_items(spark, sf_dir), "u", "v", "n_orders")
         .select("u", "v")
         .persist()
     )
@@ -820,10 +810,7 @@ def graph_triangle_count(spark, sf_dir):
     "ts_ewma",
     oracle=f"""
     WITH hr AS (
-      SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 3600) AS bigint) AS h,
-             sum(value) AS v
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(3600, "h", "sum(value) AS v")}
     )
     SELECT a.event_type, a.h,
            round(sum(b.v * pow(0.5, a.h - b.h)) / sum(pow(0.5, a.h - b.h)), 4)
@@ -854,11 +841,7 @@ def ts_ewma(spark, sf_dir):
     Scale: the window runs over |types|×|hours| rows — independent of
     event count; state per row is ≤24 structs.
     """
-    ev = t(spark, sf_dir, "events")
-    hr = ev.groupBy(
-        "event_type",
-        F.floor(unix_secs(F.col("ts")) / 3600).cast("bigint").alias("h"),
-    ).agg(F.sum("value").alias("v"))
+    hr = type_buckets(spark, sf_dir, 3600, "h", F.sum("value").alias("v"))
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy("h").rangeBetween(-23, 0)
@@ -984,10 +967,7 @@ def graph_shortest_hops(spark, sf_dir):
     "ts_seasonal_decompose",
     oracle=f"""
     WITH hr AS (
-      SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 3600) AS bigint) AS h,
-             sum(cast(round(value * 1000) AS bigint)) AS vm
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(3600, "h", _VM_SQL)}
     ),
     tr AS (
       SELECT event_type, h, vm,
@@ -1047,11 +1027,7 @@ def ts_seasonal_decompose(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    ev = t(spark, sf_dir, "events")
-    hr = ev.groupBy(
-        "event_type",
-        F.floor(unix_secs(F.col("ts")) / 3600).cast("bigint").alias("h"),
-    ).agg(F.sum(F.round(F.col("value") * 1000).cast("bigint")).alias("vm"))
+    hr = type_buckets(spark, sf_dir, 3600, "h", _vm())
     w = Window.partitionBy("event_type").orderBy("h").rangeBetween(-12, 12)
     tr = hr.withColumn(
         "s25",
@@ -1146,10 +1122,7 @@ def agg_benford_profile(spark, sf_dir):
     "ts_autocorr",
     oracle=f"""
     WITH hr AS (
-      SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 3600) AS bigint) AS h,
-             sum(cast(round(value * 1000) AS bigint)) AS vm
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(3600, "h", _VM_SQL)}
     ),
     lags AS (SELECT unnest(generate_series(1, 3)) AS k),
     pairs AS (
@@ -1188,11 +1161,7 @@ def ts_autocorr(spark, sf_dir):
     aggregate both key on (type, hour) — two shuffles over the tiny
     bar relation, corpus scanned once.
     """
-    ev = t(spark, sf_dir, "events")
-    hr = ev.groupBy(
-        "event_type",
-        F.floor(unix_secs(F.col("ts")) / 3600).cast("bigint").alias("h"),
-    ).agg(F.sum(F.round(F.col("value") * 1000).cast("bigint")).alias("vm"))
+    hr = type_buckets(spark, sf_dir, 3600, "h", _vm())
     lags = spark.range(1, 4).select(F.col("id").cast("int").alias("k"))
     a = hr.select(
         "event_type", "h", F.col("vm").alias("x")
@@ -1303,10 +1272,7 @@ def ab_test_proportions(spark, sf_dir):
     "ts_cusum_changepoint",
     oracle=f"""
     WITH hr AS (
-      SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 3600) AS bigint) AS h,
-             sum(cast(round(value * 1000) AS bigint)) AS vm
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(3600, "h", _VM_SQL)}
     ),
     base AS (
       SELECT event_type,
@@ -1354,11 +1320,7 @@ def ts_cusum_changepoint(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    ev = t(spark, sf_dir, "events")
-    hr = ev.groupBy(
-        "event_type",
-        F.floor(unix_secs(F.col("ts")) / 3600).cast("bigint").alias("h"),
-    ).agg(F.sum(F.round(F.col("value") * 1000).cast("bigint")).alias("vm"))
+    hr = type_buckets(spark, sf_dir, 3600, "h", _vm())
     base = hr.groupBy(F.col("event_type").alias("b_type")).agg(
         F.sum("vm").cast("bigint").alias("tot"),
         F.count("*").cast("bigint").alias("nbars"),
@@ -1671,10 +1633,7 @@ def agg_gini(spark, sf_dir):
     "ts_backtest_naive",
     oracle=f"""
     WITH hr AS (
-      SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 3600) AS bigint) AS h,
-             sum(cast(round(value * 1000) AS bigint)) AS vm
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(3600, "h", _VM_SQL)}
     ),
     horizon AS (SELECT event_type, max(h) AS hmax FROM hr GROUP BY 1),
     test AS (
@@ -1712,18 +1671,10 @@ def ts_backtest_naive(spark, sf_dir):
     guards the WAPE denominator symmetrically — the anomaly_mad
     discipline).
     """
-    ev = t(spark, sf_dir, "events")
     # hr (|types|x|hours| rows) feeds THREE consumers (horizon, test,
     # base) — persisted so the hourly rollup and its event scan run
     # once, not three times (r15 audit).
-    hr = (
-        ev.groupBy(
-            "event_type",
-            F.floor(unix_secs(F.col("ts")) / 3600).cast("bigint").alias("h"),
-        )
-        .agg(F.sum(F.round(F.col("value") * 1000).cast("bigint")).alias("vm"))
-        .persist()
-    )
+    hr = type_buckets(spark, sf_dir, 3600, "h", _vm()).persist()
     horizon = hr.groupBy(F.col("event_type").alias("h_type")).agg(
         F.max("h").alias("hmax")
     )
@@ -1759,7 +1710,7 @@ def ts_backtest_naive(spark, sf_dir):
     oracle=f"""
     WITH sparse AS (
       SELECT user_id, event_id,
-             {ORACLE_TSEC.format(c='ts')} AS tsec,
+             {TSEC} AS tsec,
              CASE WHEN event_id % 7 = 0 THEN round(value, 4) END AS obs
       FROM events
     ),
@@ -2088,7 +2039,7 @@ def corr_spearman(spark, sf_dir):
     oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id,
-             {ORACLE_TSEC.format(c='ts')} AS tsec,
+             {TSEC} AS tsec,
              round(value, 4) AS v
       FROM events
     )
@@ -2138,8 +2089,8 @@ def win_rolling_median(spark, sf_dir):
     oracle=f"""
     WITH ev AS (
       SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 3600) AS bigint) AS hour_bkt,
-             {ORACLE_TSEC.format(c='ts')} AS tsec,
+             {bucket_sql(3600)} AS hour_bkt,
+             {TSEC} AS tsec,
              event_id, round(value, 4) AS v
       FROM events
     )
@@ -2173,7 +2124,7 @@ def ts_ohlc(spark, sf_dir):
     """
     ev = t(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(unix_secs(F.col("ts")) / 3600).cast("bigint").alias("hour_bkt"),
+        bucket(3600).alias("hour_bkt"),
         unix_secs(F.col("ts")).alias("tsec"),
         "event_id",
         F.round("value", 4).alias("v"),
@@ -2519,7 +2470,7 @@ def ml_linreg_normal(spark, sf_dir):
     oracle=f"""
     WITH ev AS (
       SELECT event_type,
-             cast(floor({ORACLE_TSEC.format(c='ts')} / 3600) AS bigint) AS h
+             {bucket_sql(3600)} AS h
       FROM events WHERE event_type IN ('click', 'purchase')
     ),
     b AS (SELECT min(h) AS h0, max(h) AS h1 FROM ev),
@@ -2570,7 +2521,7 @@ def ts_cross_correlation(spark, sf_dir):
         F.col("event_type").isin("click", "purchase")
     ).select(
         "event_type",
-        F.floor(unix_secs(F.col("ts")) / 3600).cast("bigint").alias("h"),
+        bucket(3600).alias("h"),
     )
     counts = ev.groupBy("h").agg(
         F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("a"),

@@ -37,14 +37,16 @@ from pyspark.sql import functions as F
 
 from raster2points_spark.registry import register
 from raster2points_spark.queries._util import (
-    ORACLE_TSEC,
+    SESSION_CTES,
+    SESSION_GAP_S,
+    TSEC,
+    bucket,
+    bucket_sql,
     bucketed_prefix_sums,
     t,
     unix_secs,
 )
 
-_TSEC = ORACLE_TSEC.format(c="ts")
-_GAP_S = 1800  # 30-minute session timeout, both engines
 _WEEK_S = 7 * 86400
 
 
@@ -53,24 +55,33 @@ def _ev(spark, sf_dir):
     return ev.withColumn("tsec", unix_secs(F.col("ts")))
 
 
+def _sessions(spark, sf_dir):
+    """Events with their per-user ``session_no`` (gaps-and-islands at
+    a 30-minute gap): the lag flag and its running sum share the one
+    user_id exchange.  DuckDB twin: ``SESSION_CTES``."""
+    w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
+    flagged = _ev(spark, sf_dir).withColumn(
+        "new_s",
+        F.when(
+            (F.col("tsec") - F.lag("tsec").over(w) > SESSION_GAP_S)
+            | F.lag("tsec").over(w).isNull(),
+            1,
+        ).otherwise(0),
+    )
+    return flagged.withColumn(
+        "session_no", F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
+
+
+def _user_order():
+    """Each user's events in (epoch second, event_id) order."""
+    return Window.partitionBy("user_id").orderBy(unix_secs(F.col("ts")), F.col("event_id"))
+
+
 @register(
     "sessionize_batch",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_id, {_TSEC} AS tsec FROM events
-    ), flagged AS (
-      SELECT user_id, event_id, tsec,
-             CASE WHEN tsec - lag(tsec) OVER w > {_GAP_S}
-                    OR lag(tsec) OVER w IS NULL
-                  THEN 1 ELSE 0 END AS new_s
-      FROM e
-      WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)
-    ), numbered AS (
-      SELECT user_id, tsec,
-             cast(sum(new_s) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS bigint) AS session_no
-      FROM flagged
-    )
+    WITH {SESSION_CTES}
     SELECT user_id, session_no,
            min(tsec) AS session_start,
            max(tsec) AS session_end,
@@ -90,19 +101,7 @@ def sessionize_batch(spark, sf_dir):
     prefix), so Spark reuses the single hash exchange for all three —
     at 100 TB the event stream moves over the network exactly once.
     """
-    w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-    flagged = _ev(spark, sf_dir).withColumn(
-        "new_s",
-        F.when(
-            (F.col("tsec") - F.lag("tsec").over(w) > _GAP_S)
-            | F.lag("tsec").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    numbered = flagged.withColumn(
-        "session_no", F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    return numbered.groupBy("user_id", "session_no").agg(
+    return _sessions(spark, sf_dir).groupBy("user_id", "session_no").agg(
         F.min("tsec").alias("session_start"),
         F.max("tsec").alias("session_end"),
         (F.max("tsec") - F.min("tsec")).alias("duration_s"),
@@ -114,7 +113,7 @@ def sessionize_batch(spark, sf_dir):
     "cohort_retention",
     oracle=f"""
     WITH wk AS (
-      SELECT user_id, cast(floor({_TSEC} / {_WEEK_S}) AS bigint) AS week FROM events
+      SELECT user_id, {bucket_sql(_WEEK_S)} AS week FROM events
     ), first_touch AS (
       SELECT user_id, min(week) AS cohort_week FROM wk GROUP BY user_id
     )
@@ -134,9 +133,7 @@ def cohort_retention(spark, sf_dir):
     user_id and AQE runtime-broadcasts first_touch when it is small.
     The final cell grid is |cohorts|x|offsets| — tiny at any scale.
     """
-    wk = _ev(spark, sf_dir).select(
-        "user_id", F.floor(F.col("tsec") / _WEEK_S).cast("bigint").alias("week")
-    )
+    wk = t(spark, sf_dir, "events").select("user_id", bucket(_WEEK_S).alias("week"))
     first_touch = wk.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
     return (
         wk.join(first_touch, "user_id")
@@ -147,24 +144,51 @@ def cohort_retention(spark, sf_dir):
     )
 
 
+# funnel_batch and funnel_latency: ``s1`` is each user's first view;
+# a later stage's time is the user's first event of its type at or
+# after the previous stage's time
+_FUNNEL_CTES = f"""e AS (
+      SELECT user_id, event_type, {TSEC} AS tsec FROM events
+    ), s1 AS (
+      SELECT user_id, min(tsec) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1
+    )"""
+
+
+def _next_stage_sql(name, prev, etype):
+    """CTE ``name`` (user_id, t<n>) following stage ``prev`` (t<n-1>)."""
+    t_prev, t_new = f"t{prev[1:]}", f"t{name[1:]}"
+    return f"""{name} AS (
+      SELECT e.user_id, min(e.tsec) AS {t_new}
+      FROM e JOIN {prev} ON e.user_id = {prev}.user_id
+      WHERE e.event_type = '{etype}' AND e.tsec >= {prev}.{t_prev}
+      GROUP BY 1
+    )"""
+
+
+def _funnel_start(spark, sf_dir):
+    """(``e`` events, ``s1`` first view per user).  DuckDB twin:
+    ``_FUNNEL_CTES``."""
+    e = _ev(spark, sf_dir).select("user_id", "event_type", "tsec")
+    s1 = e.filter(F.col("event_type") == "view").groupBy("user_id").agg(F.min("tsec").alias("t1"))
+    return e, s1
+
+
+def _next_stage(e, prev, t_prev, etype, t_new):
+    """Per user, the first ``etype`` event at or after ``t_prev``.
+    DuckDB twin: ``_next_stage_sql``."""
+    return (
+        e.join(prev, "user_id")
+        .filter((F.col("event_type") == etype) & (F.col("tsec") >= F.col(t_prev)))
+        .groupBy("user_id")
+        .agg(F.min("tsec").alias(t_new))
+    )
+
+
 @register(
     "funnel_batch",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_type, {_TSEC} AS tsec FROM events
-    ), s1 AS (
-      SELECT user_id, min(tsec) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1
-    ), s2 AS (
-      SELECT e.user_id, min(e.tsec) AS t2
-      FROM e JOIN s1 ON e.user_id = s1.user_id
-      WHERE e.event_type = 'click' AND e.tsec >= s1.t1
-      GROUP BY 1
-    ), s3 AS (
-      SELECT e.user_id, min(e.tsec) AS t3
-      FROM e JOIN s2 ON e.user_id = s2.user_id
-      WHERE e.event_type = 'purchase' AND e.tsec >= s2.t2
-      GROUP BY 1
-    )
+    WITH {_FUNNEL_CTES}, {_next_stage_sql("s2", "s1", "click")},
+    {_next_stage_sql("s3", "s2", "purchase")}
     SELECT 1 AS stage, 'view' AS event_type, (SELECT count(*) FROM s1) AS users
     UNION ALL
     SELECT 2, 'click', (SELECT count(*) FROM s2)
@@ -188,26 +212,10 @@ def funnel_batch(spark, sf_dir):
     per stage.  The streaming twin is ``stream_funnel`` — same
     semantics, incremental.
     """
-    e = _ev(spark, sf_dir).select("user_id", "event_type", "tsec")
-    s1 = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("tsec").alias("t1"))
-        .persist()
-    )
-    s2 = (
-        e.join(s1, "user_id")
-        .filter((F.col("event_type") == "click") & (F.col("tsec") >= F.col("t1")))
-        .groupBy("user_id")
-        .agg(F.min("tsec").alias("t2"))
-        .persist()
-    )
-    s3 = (
-        e.join(s2, "user_id")
-        .filter((F.col("event_type") == "purchase") & (F.col("tsec") >= F.col("t2")))
-        .groupBy("user_id")
-        .agg(F.min("tsec").alias("t3"))
-    )
+    e, s1 = _funnel_start(spark, sf_dir)
+    s1 = s1.persist()
+    s2 = _next_stage(e, s1, "t1", "click", "t2").persist()
+    s3 = _next_stage(e, s2, "t2", "purchase", "t3")
 
     def stage(n, name, df):
         return df.agg(
@@ -227,7 +235,7 @@ def funnel_batch(spark, sf_dir):
     WITH s AS (
       SELECT event_type,
              lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY {_TSEC}, event_id) AS prev
+                                   ORDER BY {TSEC}, event_id) AS prev
       FROM events
     )
     SELECT prev, event_type AS next, count(*) AS n
@@ -258,11 +266,11 @@ def seq_transitions(spark, sf_dir):
     oracle=f"""
     WITH s AS (
       SELECT user_id, event_type,
-             {_TSEC} AS tsec,
+             {TSEC} AS tsec,
              row_number() OVER (PARTITION BY user_id
-                                ORDER BY {_TSEC}, event_id) AS rn,
+                                ORDER BY {TSEC}, event_id) AS rn,
              row_number() OVER (PARTITION BY user_id, event_type
-                                ORDER BY {_TSEC}, event_id) AS rnt
+                                ORDER BY {TSEC}, event_id) AS rnt
       FROM events
     )
     SELECT user_id, event_type,
@@ -396,16 +404,7 @@ def audience_overlap(spark, sf_dir):
 @register(
     "funnel_latency",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_type, {_TSEC} AS tsec FROM events
-    ), s1 AS (
-      SELECT user_id, min(tsec) AS t1 FROM e WHERE event_type = 'view' GROUP BY 1
-    ), s3 AS (
-      SELECT e.user_id, min(e.tsec) AS t3
-      FROM e JOIN s1 ON e.user_id = s1.user_id
-      WHERE e.event_type = 'purchase' AND e.tsec >= s1.t1
-      GROUP BY 1
-    ), lat AS (
+    WITH {_FUNNEL_CTES}, {_next_stage_sql("s3", "s1", "purchase")}, lat AS (
       SELECT s3.user_id, s3.t3 - s1.t1 AS secs
       FROM s3 JOIN s1 ON s3.user_id = s1.user_id
     )
@@ -422,23 +421,13 @@ def funnel_latency(spark, sf_dir):
     purchase): the latency percentiles behind every conversion SLA
     dashboard.
 
-    Same per-user stage minima as funnel_batch (|users|-row
-    aggregates, user_id-keyed joins), then ONE exact-percentile
+    Same per-user stage minima as funnel_batch (``_funnel_start`` and
+    ``_next_stage``: |users|-row aggregates, user_id-keyed joins), then ONE exact-percentile
     aggregate over the |converted-users| latency relation — tiny at
     any scale.  Percentiles rounded to whole seconds in both engines.
     """
-    e = _ev(spark, sf_dir).select("user_id", "event_type", "tsec")
-    s1 = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("tsec").alias("t1"))
-    )
-    s3 = (
-        e.join(s1, "user_id")
-        .filter((F.col("event_type") == "purchase") & (F.col("tsec") >= F.col("t1")))
-        .groupBy("user_id")
-        .agg(F.min("tsec").alias("t3"))
-    )
+    e, s1 = _funnel_start(spark, sf_dir)
+    s3 = _next_stage(e, s1, "t1", "purchase", "t3")
     lat = s3.join(s1, "user_id").select((F.col("t3") - F.col("t1")).alias("secs"))
     return lat.agg(
         F.count("*").alias("n_converted"),
@@ -452,20 +441,7 @@ def funnel_latency(spark, sf_dir):
 @register(
     "concurrency_peak",
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_id, {_TSEC} AS tsec FROM events
-    ), flagged AS (
-      SELECT user_id, event_id, tsec,
-             CASE WHEN tsec - lag(tsec) OVER w > {_GAP_S}
-                    OR lag(tsec) OVER w IS NULL
-                  THEN 1 ELSE 0 END AS new_s
-      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)
-    ), numbered AS (
-      SELECT user_id, tsec,
-             cast(sum(new_s) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-                                   ROWS UNBOUNDED PRECEDING) AS bigint) AS session_no
-      FROM flagged
-    ), sessions AS (
+    WITH {SESSION_CTES}, sessions AS (
       SELECT user_id, session_no, min(tsec) AS s, max(tsec) AS e
       FROM numbered GROUP BY 1, 2
     ), bounds AS (
@@ -496,22 +472,10 @@ def concurrency_peak(spark, sf_dir):
     the former single-partition global window; the boundary axis
     grows with |sessions|, so the one-task WindowExec was a real
     scale ceiling, unlike the constant-width allowlisted axes).
-    Sessionization itself reuses the single-exchange
-    gaps-and-islands shape of sessionize_batch.
+    Sessionization itself is ``_sessions``, sessionize_batch's
+    single-exchange gaps-and-islands.
     """
-    w = Window.partitionBy("user_id").orderBy("tsec", "event_id")
-    flagged = _ev(spark, sf_dir).withColumn(
-        "new_s",
-        F.when(
-            (F.col("tsec") - F.lag("tsec").over(w) > _GAP_S)
-            | F.lag("tsec").over(w).isNull(),
-            1,
-        ).otherwise(0),
-    )
-    numbered = flagged.withColumn(
-        "session_no", F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    sessions = numbered.groupBy("user_id", "session_no").agg(
+    sessions = _sessions(spark, sf_dir).groupBy("user_id", "session_no").agg(
         F.min("tsec").alias("s"), F.max("tsec").alias("e")
     )
     # both boundary rows (+1 at start, -1 after end) emit from ONE pass
@@ -541,7 +505,7 @@ def concurrency_peak(spark, sf_dir):
     "attribution_first_touch",
     oracle=f"""
     WITH ev AS (
-      SELECT event_id, user_id, event_type, {_TSEC} AS tsec,
+      SELECT event_id, user_id, event_type, {TSEC} AS tsec,
              CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS kind
       FROM events WHERE event_type IN ('view', 'purchase')
     )
@@ -594,7 +558,7 @@ def attribution_first_touch(spark, sf_dir):
     "seq_markov",
     oracle=f"""
     WITH s AS (
-      SELECT user_id, event_type, event_id, {_TSEC} AS tsec FROM events
+      SELECT user_id, event_type, event_id, {TSEC} AS tsec FROM events
     ),
     p AS (
       SELECT event_type,
@@ -642,7 +606,7 @@ def seq_markov(spark, sf_dir):
     "seq_pattern_detect",
     oracle=f"""
     WITH s AS (
-      SELECT user_id, event_id, event_type, {_TSEC} AS tsec FROM events
+      SELECT user_id, event_id, event_type, {TSEC} AS tsec FROM events
     ),
     led AS (
       SELECT user_id, event_id, event_type, tsec,
@@ -699,8 +663,8 @@ def seq_pattern_detect(spark, sf_dir):
     oracle=f"""
     WITH iv AS (
       SELECT user_id, event_id,
-             {ORACLE_TSEC.format(c='ts')} AS s,
-             {ORACLE_TSEC.format(c='ts')} + 300 AS e
+             {TSEC} AS s,
+             {TSEC} + 300 AS e
       FROM events
     ),
     flagged AS (
@@ -746,8 +710,6 @@ def interval_coverage(spark, sf_dir):
     state never leaves its partition (same contract as
     sessionize_batch).
     """
-    from pyspark.sql import Window
-
     ev = t(spark, sf_dir, "events")
     iv = ev.select(
         "user_id",
@@ -790,7 +752,7 @@ def interval_coverage(spark, sf_dir):
     WITH ranked AS (
       SELECT user_id, event_type,
              row_number() OVER (
-               PARTITION BY user_id ORDER BY {_TSEC}, event_id) AS rn
+               PARTITION BY user_id ORDER BY {TSEC}, event_id) AS rn
       FROM events
     ),
     paths AS (
@@ -819,13 +781,8 @@ def seq_top_paths(spark, sf_dir):
     |event_types|⁴, so the final aggregate is small at any corpus
     scale; per-user state never leaves its partition.
     """
-    from pyspark.sql import Window
-
     ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        unix_secs(F.col("ts")), F.col("event_id")
-    )
-    ranked = ev.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 4)
+    ranked = ev.withColumn("rn", F.row_number().over(_user_order())).filter(F.col("rn") <= 4)
     paths = ranked.groupBy("user_id").agg(
         F.concat_ws(
             " > ", F.expr("transform(array_sort(collect_list(struct(rn, event_type))), s -> s.event_type)")
@@ -839,15 +796,15 @@ def seq_top_paths(spark, sf_dir):
     )
 
 
-@register(
-    "seq_markov_eval",
-    oracle=f"""
-    WITH ordered AS (
+# seq_markov_eval and ml_confusion_matrix: each user's transitions
+# split 80/20 by next_id % 5; the model maps each type to the train
+# slice's most frequent next type, (count DESC, type) tiebreak
+_MARKOV_CTES = f"""ordered AS (
       SELECT user_id, event_id, event_type,
              lead(event_type) OVER w AS next_type,
              lead(event_id) OVER w AS next_id
       FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY {_TSEC}, event_id)
+      WINDOW w AS (PARTITION BY user_id ORDER BY {TSEC}, event_id)
     ),
     trans AS (
       SELECT event_type AS prev, next_type AS nxt, next_id
@@ -864,7 +821,41 @@ def seq_top_paths(spark, sf_dir):
                                   ORDER BY c DESC, nxt) AS rn
         FROM train
       ) WHERE rn = 1
+    )"""
+
+
+def _markov_split(spark, sf_dir):
+    """(``ordered`` transitions, ``model``): one user-keyed window builds
+    the transitions; the model is an aggregate of the train slice only.
+    DuckDB twin: ``_MARKOV_CTES``."""
+    w = _user_order()
+    ordered = (
+        t(spark, sf_dir, "events")
+        .select(
+            "event_type",
+            F.lead("event_type").over(w).alias("nxt"),
+            F.lead("event_id").over(w).alias("next_id"),
+        )
+        .filter(F.col("nxt").isNotNull())
     )
+    train = (
+        ordered.filter(F.col("next_id") % 5 != 0)
+        .groupBy(F.col("event_type").alias("prev"), "nxt")
+        .agg(F.count("*").alias("c"))
+    )
+    wm = Window.partitionBy("prev").orderBy(F.col("c").desc(), "nxt")
+    model = (
+        train.withColumn("rn", F.row_number().over(wm))
+        .filter(F.col("rn") == 1)
+        .select("prev", F.col("nxt").alias("predicted"))
+    )
+    return ordered, model
+
+
+@register(
+    "seq_markov_eval",
+    oracle=f"""
+    WITH {_MARKOV_CTES}
     SELECT t.prev,
            count(*) AS n_test,
            cast(sum(CASE WHEN t.nxt = m.predicted THEN 1 ELSE 0 END)
@@ -892,28 +883,7 @@ def seq_markov_eval(spark, sf_dir):
     user-keyed window builds transitions; counts and accuracy are
     exact integers.
     """
-    from pyspark.sql import Window
-
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        unix_secs(F.col("ts")), F.col("event_id")
-    )
-    ordered = ev.select(
-        "event_type",
-        F.lead("event_type").over(w).alias("nxt"),
-        F.lead("event_id").over(w).alias("next_id"),
-    ).filter(F.col("nxt").isNotNull())
-    train = (
-        ordered.filter(F.col("next_id") % 5 != 0)
-        .groupBy(F.col("event_type").alias("prev"), "nxt")
-        .agg(F.count("*").alias("c"))
-    )
-    wm = Window.partitionBy("prev").orderBy(F.col("c").desc(), "nxt")
-    model = (
-        train.withColumn("rn", F.row_number().over(wm))
-        .filter(F.col("rn") == 1)
-        .select("prev", F.col("nxt").alias("predicted"))
-    )
+    ordered, model = _markov_split(spark, sf_dir)
     test = ordered.filter(F.col("next_id") % 5 == 0)
     hit = F.when(F.col("nxt") == F.col("predicted"), 1).otherwise(0)
     return (
@@ -930,29 +900,7 @@ def seq_markov_eval(spark, sf_dir):
 @register(
     "ml_confusion_matrix",
     oracle=f"""
-    WITH ordered AS (
-      SELECT user_id, event_id, event_type,
-             lead(event_type) OVER w AS next_type,
-             lead(event_id) OVER w AS next_id
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY {_TSEC}, event_id)
-    ),
-    trans AS (
-      SELECT event_type AS prev, next_type AS nxt, next_id
-      FROM ordered WHERE next_type IS NOT NULL
-    ),
-    train AS (
-      SELECT prev, nxt, count(*) AS c FROM trans
-      WHERE next_id % 5 <> 0 GROUP BY 1, 2
-    ),
-    model AS (
-      SELECT prev, nxt AS predicted FROM (
-        SELECT prev, nxt,
-               row_number() OVER (PARTITION BY prev
-                                  ORDER BY c DESC, nxt) AS rn
-        FROM train
-      ) WHERE rn = 1
-    ),
+    WITH {_MARKOV_CTES},
     cm AS (
       SELECT t.nxt AS actual, m.predicted, count(*) AS n
       FROM trans t JOIN model m ON m.prev = t.prev
@@ -988,28 +936,7 @@ def ml_confusion_matrix(spark, sf_dir):
     precision/recall don't apply (nullable-double is safe: the column
     is double-typed in both engines).
     """
-    from pyspark.sql import Window
-
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        unix_secs(F.col("ts")), F.col("event_id")
-    )
-    ordered = ev.select(
-        "event_type",
-        F.lead("event_type").over(w).alias("nxt"),
-        F.lead("event_id").over(w).alias("next_id"),
-    ).filter(F.col("nxt").isNotNull())
-    train = (
-        ordered.filter(F.col("next_id") % 5 != 0)
-        .groupBy(F.col("event_type").alias("prev"), "nxt")
-        .agg(F.count("*").alias("c"))
-    )
-    wm = Window.partitionBy("prev").orderBy(F.col("c").desc(), "nxt")
-    model = (
-        train.withColumn("rn", F.row_number().over(wm))
-        .filter(F.col("rn") == 1)
-        .select("prev", F.col("nxt").alias("predicted"))
-    )
+    ordered, model = _markov_split(spark, sf_dir)
     # cm (≤|types|² rows) feeds THREE consumers (both marginals + the
     # final join) — unpersisted, the whole train/model/test spine
     # (two windows + a join over the event stream) re-ran per

@@ -13,13 +13,24 @@ Scale notes baked into each plan:
 from __future__ import annotations
 
 import os
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from raster2points_spark.io import register_views
 from raster2points_spark.registry import register
-from raster2points_spark.queries._util import ORACLE_TSEC, t, unix_secs
+from raster2points_spark.queries._util import (
+    ITEMS_CTE,
+    TSEC,
+    bucket,
+    copurchase_pairs,
+    copurchase_pairs_sql,
+    order_items,
+    t,
+    unix_secs,
+)
 
 
 @register(
@@ -167,13 +178,35 @@ def join_anti(spark, sf_dir):
     return c.join(big, c.c_custkey == big.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
-_TSEC = ORACLE_TSEC.format(c="ts")
+_EV_CTE = f"ev AS (SELECT event_id, user_id, event_type, {TSEC} AS tsec FROM events)"
+
+
+def _asof_events(spark, sf_dir, types, first):
+    """The as-of spine's input: the events of the two ``types`` with
+    their epoch second and ``kind`` 0 for ``first``, else 1 — the
+    tiebreak that sorts ``first`` before the other type at equal
+    seconds."""
+    return (
+        t(spark, sf_dir, "events")
+        .filter(F.col("event_type").isin(*types))
+        .select(
+            "event_id",
+            "user_id",
+            unix_secs(F.col("ts")).alias("tsec"),
+            F.when(F.col("event_type") == first, 0).otherwise(1).alias("kind"),
+        )
+    )
+
+
+def _asof_window(start, end):
+    """One user_id shuffle; (tsec, kind, event_id) totally orders it."""
+    return Window.partitionBy("user_id").orderBy("tsec", "kind", "event_id").rowsBetween(start, end)
 
 
 @register(
     "join_theta_range",
     oracle=f"""
-    WITH ev AS (SELECT event_id, user_id, {_TSEC} AS tsec FROM events)
+    WITH {_EV_CTE}
     SELECT e1.user_id, count(*) AS n_pairs
     FROM ev e1 JOIN ev e2
       ON e1.user_id = e2.user_id
@@ -219,7 +252,7 @@ def join_cross(spark, sf_dir):
 @register(
     "join_asof",
     oracle=f"""
-    WITH ev AS (SELECT event_id, user_id, event_type, {_TSEC} AS tsec FROM events)
+    WITH {_EV_CTE}
     SELECT p.event_id, p.user_id, p.tsec AS purchase_tsec,
            coalesce((SELECT max(v.tsec) FROM ev v
                      WHERE v.user_id = p.user_id AND v.event_type = 'view'
@@ -234,22 +267,8 @@ def join_asof(spark, sf_dir):
     last(ignoreNulls) window — O(n log n) per user, no join blowup.
     Views sort before purchases at equal timestamps so a simultaneous
     view is visible to the purchase (matches the oracle's <=)."""
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("view", "purchase"))
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            unix_secs(F.col("ts")).alias("tsec"),
-            F.when(F.col("event_type") == "view", 0).otherwise(1).alias("kind"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("tsec", "kind", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    ev = _asof_events(spark, sf_dir, ("view", "purchase"), "view")
+    w = _asof_window(Window.unboundedPreceding, Window.currentRow)
     view_ts = F.last(F.when(F.col("kind") == 0, F.col("tsec")), ignorenulls=True).over(w)
     return (
         ev.withColumn("last_view_tsec", F.coalesce(view_ts, F.lit(-1)))
@@ -260,10 +279,10 @@ def join_asof(spark, sf_dir):
     )
 
 
-@register(
-    "join_interval",
-    oracle=f"""
-    WITH ev AS (SELECT event_id, user_id, event_type, {_TSEC} AS tsec FROM events)
+# join_interval and join_interval_bucketed: each signup's count of the
+# user's other events in the hour from it
+_INTERVAL_SQL = f"""
+    WITH {_EV_CTE}
     SELECT s.event_id AS signup_event_id, s.user_id,
            count(e.event_id) AS n_in_hour
     FROM ev s LEFT JOIN ev e
@@ -272,22 +291,37 @@ def join_asof(spark, sf_dir):
      AND e.event_id <> s.event_id
     WHERE s.event_type = 'signup'
     GROUP BY s.event_id, s.user_id
-    """,
-)
-def join_interval(spark, sf_dir):
-    ev = t(spark, sf_dir, "events").select(
+    """
+
+
+def _interval_events(spark, sf_dir):
+    return t(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", unix_secs(F.col("ts")).alias("tsec")
     )
+
+
+def _in_hour(*extra):
+    """Join condition: ``e`` is another event of ``s``'s user in
+    [s.tsec, s.tsec + 3600); ``extra`` conjuncts follow the user key."""
+    return reduce(
+        and_,
+        [
+            F.col("e.user_id") == F.col("s.user_id"),
+            *extra,
+            F.col("e.tsec") >= F.col("s.tsec"),
+            F.col("e.tsec") < F.col("s.tsec") + 3600,
+            F.col("e.event_id") != F.col("s.event_id"),
+        ],
+    )
+
+
+@register("join_interval", oracle=_INTERVAL_SQL)
+def join_interval(spark, sf_dir):
+    ev = _interval_events(spark, sf_dir)
     s = ev.filter(F.col("event_type") == "signup").alias("s")
     e = ev.alias("e")
-    cond = (
-        (F.col("e.user_id") == F.col("s.user_id"))
-        & (F.col("e.tsec") >= F.col("s.tsec"))
-        & (F.col("e.tsec") < F.col("s.tsec") + 3600)
-        & (F.col("e.event_id") != F.col("s.event_id"))
-    )
     return (
-        s.join(e, cond, "left")
+        s.join(e, _in_hour(), "left")
         .groupBy(F.col("s.event_id").alias("signup_event_id"), F.col("s.user_id").alias("user_id"))
         .agg(F.count(F.col("e.event_id")).alias("n_in_hour"))
     )
@@ -381,20 +415,7 @@ def join_bucketed(spark, sf_dir):
     )
 
 
-@register(
-    "join_interval_bucketed",
-    oracle=f"""
-    WITH ev AS (SELECT event_id, user_id, event_type, {_TSEC} AS tsec FROM events)
-    SELECT s.event_id AS signup_event_id, s.user_id,
-           count(e.event_id) AS n_in_hour
-    FROM ev s LEFT JOIN ev e
-      ON e.user_id = s.user_id
-     AND e.tsec >= s.tsec AND e.tsec < s.tsec + 3600
-     AND e.event_id <> s.event_id
-    WHERE s.event_type = 'signup'
-    GROUP BY s.event_id, s.user_id
-    """,
-)
+@register("join_interval_bucketed", oracle=_INTERVAL_SQL)
 def join_interval_bucketed(spark, sf_dir):
     """Time-bucketed interval join — the SCALE path for join_interval
     (identical oracle, different physical strategy).
@@ -411,29 +432,17 @@ def join_interval_bucketed(spark, sf_dir):
     pairs is free: a pair can only match in one bucket of the probe
     (the event's own bucket is fixed).
     """
-    ev = t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", unix_secs(F.col("ts")).alias("tsec")
-    )
+    ev = _interval_events(spark, sf_dir)
     # The signup subset feeds BOTH the exploded probe side and the
     # LEFT-semantics base — persisted so the event scan + filter runs
     # once for the pair, not twice (r15 audit: 3 event scans → 2; the
     # full-stream build side keeps its own scan, as it must).
     signups = ev.filter(F.col("event_type") == "signup").persist()
-    s = (
-        signups
-        .withColumn("bkt", F.explode(F.array(F.expr("cast(floor(tsec / 3600) AS bigint)"), F.expr("cast(floor(tsec / 3600) AS bigint) + 1"))))
-        .alias("s")
-    )
-    e = ev.withColumn("bkt", F.expr("cast(floor(tsec / 3600) AS bigint)")).alias("e")
-    cond = (
-        (F.col("e.user_id") == F.col("s.user_id"))
-        & (F.col("e.bkt") == F.col("s.bkt"))
-        & (F.col("e.tsec") >= F.col("s.tsec"))
-        & (F.col("e.tsec") < F.col("s.tsec") + 3600)
-        & (F.col("e.event_id") != F.col("s.event_id"))
-    )
+    hour = bucket(3600, F.col("tsec"))
+    s = signups.withColumn("bkt", F.explode(F.array(hour, hour + 1))).alias("s")
+    e = ev.withColumn("bkt", hour).alias("e")
     matched = (
-        s.join(e, cond, "inner")
+        s.join(e, _in_hour(F.col("e.bkt") == F.col("s.bkt")), "inner")
         .groupBy(F.col("s.event_id").alias("signup_event_id"), F.col("s.user_id").alias("user_id"))
         .agg(F.count("*").alias("n_in_hour"))
     )
@@ -534,16 +543,16 @@ def merge_upsert(spark, sf_dir):
     )
 
 
-@register(
-    "join_lateral",
-    oracle="""
+_LATERAL_SQL = """
     SELECT n.n_name, t.c_custkey, t.c_acctbal
     FROM nation n, LATERAL (
       SELECT c_custkey, round(c_acctbal, 2) AS c_acctbal
       FROM customer c WHERE c.c_nationkey = n.n_nationkey
       ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-    """,
-)
+    """
+
+
+@register("join_lateral", oracle=_LATERAL_SQL)
 def join_lateral(spark, sf_dir):
     """Correlated LATERAL subquery — per-nation top-2 customers by
     balance, expressed as the SQL-standard lateral join both engines
@@ -556,21 +565,13 @@ def join_lateral(spark, sf_dir):
     the LIMIT deterministic (R2).
     """
     register_views(spark, sf_dir, ("nation", "customer"))
-    return spark.sql(
-        """
-        SELECT n.n_name, t.c_custkey, t.c_acctbal
-        FROM nation n, LATERAL (
-          SELECT c_custkey, round(c_acctbal, 2) AS c_acctbal
-          FROM customer c WHERE c.c_nationkey = n.n_nationkey
-          ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t
-        """
-    )
+    return spark.sql(_LATERAL_SQL)
 
 
 @register(
     "join_asof_forward",
     oracle=f"""
-    WITH ev AS (SELECT event_id, user_id, event_type, {_TSEC} AS tsec FROM events)
+    WITH {_EV_CTE}
     SELECT p.event_id, p.user_id, p.tsec AS purchase_tsec,
            coalesce((SELECT min(v.tsec) FROM ev v
                      WHERE v.user_id = p.user_id AND v.event_type = 'error'
@@ -583,27 +584,14 @@ def join_asof_forward(spark, sf_dir):
     the next error by the same user — the "what broke after checkout"
     direction, complementing join_asof's backward lookup.
 
-    Same single-shuffle shape mirrored in time: union both types,
-    shuffle ONCE on user_id, carry the next error timestamp BACKWARD
+    Same single-shuffle spine (``_asof_events`` + ``_asof_window``)
+    mirrored in time: shuffle ONCE on user_id, carry the next error timestamp BACKWARD
     with first(ignoreNulls) over a currentRow→unboundedFollowing
     frame.  Purchases sort before errors at equal timestamps so a
     simultaneous error is inside the frame (matches the oracle's >=).
     """
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("error", "purchase"))
-        .select(
-            "event_id",
-            "user_id",
-            unix_secs(F.col("ts")).alias("tsec"),
-            F.when(F.col("event_type") == "purchase", 0).otherwise(1).alias("kind"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("tsec", "kind", "event_id")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
+    ev = _asof_events(spark, sf_dir, ("error", "purchase"), "purchase")
+    w = _asof_window(Window.currentRow, Window.unboundedFollowing)
     err_ts = F.first(F.when(F.col("kind") == 1, F.col("tsec")), ignorenulls=True).over(w)
     return (
         ev.withColumn("next_error_tsec", F.coalesce(err_ts, F.lit(-1)))
@@ -616,16 +604,9 @@ def join_asof_forward(spark, sf_dir):
 
 @register(
     "basket_pairs",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    )
-    SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-           count(*) AS support
-    FROM items a JOIN items b
-      ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    GROUP BY 1, 2
-    HAVING count(*) >= 3
+    oracle=f"""
+    WITH {ITEMS_CTE}
+    {copurchase_pairs_sql("part_a", "part_b", "support")}
     """,
 )
 def basket_pairs(spark, sf_dir):
@@ -633,43 +614,22 @@ def basket_pairs(spark, sf_dir):
     ≥ 3 — the first step of association-rule mining (the co-view /
     co-purchase recommender signal).
 
-    The pair join keys on l_orderkey, so the blowup is bounded by
-    (lines-per-order choose 2) — a per-KEY constant (~7 lines in
-    TPC-H), never corpus² — and the distinct-items collapse runs
-    map-side first.  The support filter prunes before anything
+    ``copurchase_pairs`` keys the pair join on l_orderkey, so the
+    blowup is bounded by (lines-per-order choose 2) — a per-KEY
+    constant (~7 lines in TPC-H), never corpus² — and the
+    distinct-items collapse runs map-side first.  The support filter prunes before anything
     downstream; output is the co-occurrence graph's edge list.
     """
-    items = (
-        t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.alias("a")
-    b = items.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("part_a"), F.col("b.l_partkey").alias("part_b")
-        )
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= 3)
-    )
+    return copurchase_pairs(order_items(spark, sf_dir), "part_a", "part_b", "support")
 
 
 @register(
     "basket_rules",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), item_n AS (
+    oracle=f"""
+    WITH {ITEMS_CTE}, item_n AS (
       SELECT l_partkey, count(*) AS n FROM items GROUP BY 1
     ), pair_n AS (
-      SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, count(*) AS support
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 3
+      {copurchase_pairs_sql("part_a", "part_b", "support")}
     ), orders_n AS (SELECT count(DISTINCT l_orderkey) AS n_orders FROM items)
     SELECT p.part_a, p.part_b, p.support,
            round(p.support * 1.0 / na.n, 4) AS confidence_a_to_b,
@@ -685,25 +645,14 @@ def basket_rules(spark, sf_dir):
     P(b|a) = supp(ab)/supp(a) and lift = P(ab)/(P(a)P(b)) — the step
     that turns co-occurrence counts into a recommender signal.
 
-    Builds on basket_pairs' keyed self-join (blowup bounded per
+    The pairs come from ``copurchase_pairs`` (blowup bounded per
     order); the per-item supports and the 1-row order count are tiny
     relations broadcast back onto the ≥3-support pair list.  Lift > 1
     marks genuinely associated parts rather than merely popular ones.
     """
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct().persist()
+    items = order_items(spark, sf_dir).persist()
     item_n = items.groupBy("l_partkey").agg(F.count("*").alias("n"))
-    a = items.alias("a")
-    b = items.alias("b")
-    pair_n = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(F.col("a.l_partkey").alias("part_a"), F.col("b.l_partkey").alias("part_b"))
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= 3)
-    )
+    pair_n = copurchase_pairs(items, "part_a", "part_b", "support")
     orders_n = items.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     na = item_n.select(F.col("l_partkey").alias("part_a"), F.col("n").alias("na"))
     nb = item_n.select(F.col("l_partkey").alias("part_b"), F.col("n").alias("nb"))
@@ -899,12 +848,12 @@ def join_strategy_hints(spark, sf_dir):
 
 @register(
     "cdc_net_changes",
-    oracle="""
+    oracle=f"""
     WITH changes AS (
       SELECT user_id,
              CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
              value,
-             cast(floor(epoch(ts)) AS bigint) * 10000000 + event_id AS ver
+             {TSEC} * 10000000 + event_id AS ver
       FROM events
       WHERE event_type IN ('purchase', 'signup', 'error')
     )
@@ -1235,8 +1184,7 @@ def join_allen_relations(spark, sf_dir):
     "join_asof_tolerance",
     oracle=f"""
     WITH ev AS (
-      SELECT event_id, user_id, event_type,
-             cast(floor(epoch(ts)) AS bigint) AS tsec,
+      SELECT event_id, user_id, event_type, {TSEC} AS tsec,
              CASE WHEN event_type = 'view' THEN 0 ELSE 1 END AS kind
       FROM events WHERE event_type IN ('view', 'purchase')
     ),
@@ -1264,30 +1212,17 @@ def join_asof_tolerance(spark, sf_dir):
     MISSING (NULL), not silently joined — stale features are the
     classic training/serving skew bug.
 
-    Same single-shuffle spine as join_asof (union → one user_id
-    window carrying the latest view forward; a simultaneous view is
-    visible to the purchase), plus the tolerance predicate applied
+    Same single-shuffle spine as join_asof (``_asof_events`` +
+    ``_asof_window``: one user_id window carrying the latest view
+    forward; a simultaneous view is visible to the purchase), plus the tolerance predicate applied
     AFTER the carry — the match is nulled, not the row dropped, so
     downstream sees the gap explicitly (within_tolerance flag
     alongside).  NOTE the carry must be max-over-views (not
     last-non-null) for the oracle twin: both engines compute the
     same running max.  O(n log n) per user, no correlated probe.
     """
-    ev = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("view", "purchase"))
-        .select(
-            "event_id",
-            "user_id",
-            unix_secs(F.col("ts")).alias("tsec"),
-            F.when(F.col("event_type") == "view", 0).otherwise(1).alias("kind"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("tsec", "kind", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    ev = _asof_events(spark, sf_dir, ("view", "purchase"), "view")
+    w = _asof_window(Window.unboundedPreceding, Window.currentRow)
     last_view = F.max(F.when(F.col("kind") == 0, F.col("tsec"))).over(w)
     fresh = last_view.isNotNull() & (
         (F.col("tsec") - last_view) <= 3600

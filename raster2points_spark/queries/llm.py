@@ -41,7 +41,7 @@ import os
 from pyspark.sql import functions as F
 
 from raster2points_spark.registry import register
-from raster2points_spark.queries._util import t, t_fanout
+from raster2points_spark.queries._util import SCRATCH, bucket, bucket_sql, daily_rollup, t, t_fanout
 
 # Tokenizer twins — identical semantics, engine-native syntax.
 TOKS_SPARK = "filter(split(lower(text), ' '), x -> x != '')"
@@ -573,6 +573,31 @@ def _dot(a: str, b: str) -> str:
 
 
 _DOT_SPARK = _dot("pe", "ce")
+
+
+def _sq_norm(a: str) -> str:
+    """Squared L2 norm of an array<double> column, folded in index order."""
+    return f"aggregate(transform({a}, x -> x * x), cast(0.0 AS double), (a, z) -> a + z)"
+
+
+def _sq_norm_duck(a: str) -> str:
+    return f"list_sum(list_transform({a}, x -> x * x))"
+
+
+def _sq_dist(a: str, b: str) -> str:
+    """Squared L2 distance of two array<double> columns, folded in index order."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
+        "cast(0.0 AS double), (acc, z) -> acc + z)"
+    )
+
+
+def _sq_dist_duck(a: str, b: str) -> str:
+    """``_sq_dist`` over two 64-dim lists, folded in the same order."""
+    return (
+        f"list_sum(list_transform(generate_series(1, 64), "
+        f"j -> ({a}[j] - {b}[j]) * ({a}[j] - {b}[j])))"
+    )
 
 
 def _knn_pairs(spark, sf_dir, n_probes=5, k=10, prune_buckets=64, force_prune=None):
@@ -1196,7 +1221,7 @@ def mm_frame_sample(spark, sf_dir):
 
 # Sign-random-projection LSH for dedup_embed: md5-seeded integer
 # hyperplanes over the 64-dim embedding, arranged as an OR-construction
-# of _SRP_BANDS independent bands of _SRP_BAND_BITS bits each (the same
+# of _SRP_BANDS independent bands of 8 bits each at shipped sizes (the same
 # banding trick as dedup_near's 4×3 MinHash bands).  A pair is a
 # candidate iff it collides on ANY band's full bucket, so expected
 # bucket size is n/2^band_bits (2^8 = 256 buckets per band — quadratic
@@ -1221,7 +1246,7 @@ def mm_frame_sample(spark, sf_dir):
 # property-testable), components are quantized to integer milli-units,
 # and projection signs use exact bigint arithmetic — bucket ids are
 # bit-identical across engines with no float-sum-order risk.
-_SRP_BANDS, _SRP_BAND_BITS, _SRP_DIM = 3, 8, 64
+_SRP_BANDS, _SRP_DIM = 3, 64
 _SRP_MAX_BITS = 16  # sign bits materialized per band (dynamic fold cap)
 
 
@@ -1242,25 +1267,6 @@ def _srp_weights() -> list[list[list[int]]]:
         ]
         for band in range(_SRP_BANDS)
     ]
-
-
-def _srp_band_exprs_spark() -> list[str]:
-    """Per-band bucket expressions over a materialized bigint-array ``ei``.
-
-    Band b's bucket id is offset by b·2^bits so bucket keys never
-    collide across bands in the join.
-    """
-    out = []
-    for band, rows in enumerate(_srp_weights()):
-        bits = []
-        for k, row in enumerate(rows[:_SRP_BAND_BITS]):
-            arr = "array(" + ", ".join(f"{w}L" for w in row) + ")"
-            s = f"aggregate(zip_with(ei, {arr}, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-            bits.append(
-                f"CASE WHEN {s} >= 0 THEN {1 << (_SRP_BAND_BITS - 1 - k)} ELSE 0 END"
-            )
-        out.append(f"cast({band * (1 << _SRP_BAND_BITS)} + " + " + ".join(bits) + " AS bigint)")
-    return out
 
 
 def _srp_sign_exprs_spark() -> list[str]:
@@ -3070,14 +3076,13 @@ def text_url_domain(spark, sf_dir):
 
 @register(
     "embed_normalize",
-    oracle="""
+    oracle=f"""
     WITH q AS (
         SELECT vec_id, list_transform(embedding, x -> cast(x AS double)) AS e
         FROM embeddings
     ),
     n AS (
-        SELECT vec_id, e, len(e) AS dim,
-               sqrt(list_aggregate(list_transform(e, x -> x * x), 'sum')) AS nrm
+        SELECT vec_id, e, len(e) AS dim, sqrt({_sq_norm_duck("e")}) AS nrm
         FROM q
     )
     SELECT vec_id, dim, round(nrm, 4) AS l2,
@@ -3100,9 +3105,7 @@ def embed_normalize(spark, sf_dir):
         "vec_id",
         "e",
         F.size("e").alias("dim"),
-        F.sqrt(
-            F.expr("aggregate(transform(e, x -> x * x), cast(0.0 AS double), (a, v) -> a + v)")
-        ).alias("nrm"),
+        F.sqrt(F.expr(_sq_norm("e"))).alias("nrm"),
     )
     return n.select(
         "vec_id",
@@ -4292,10 +4295,6 @@ _EV_PROBES_DUCK = f"""
 # exact same fixpoint prefix — the graph_pagerank trick applied to an
 # ML training loop.
 _KM_ITERS = 3
-_KM_DIST_DUCK = (
-    "list_sum(list_transform(generate_series(1, 64), "
-    "j -> (e.v[j] - c.c[j]) * (e.v[j] - c.c[j])))"
-)
 
 
 def _kmeans_oracle() -> str:
@@ -4305,7 +4304,7 @@ def _kmeans_oracle() -> str:
     ]
     for i in range(_KM_ITERS):
         ctes.append(
-            f"d{i} AS (SELECT e.vec_id, c.cid, {_KM_DIST_DUCK} AS dist"
+            f"d{i} AS (SELECT e.vec_id, c.cid, {_sq_dist_duck('e.v', 'c.c')} AS dist"
             f" FROM ev e CROSS JOIN cent{i} c)"
         )
         ctes.append(
@@ -4329,9 +4328,9 @@ def _kmeans_oracle() -> str:
         + f"""
     SELECT a.cid, count(*) AS n,
            round(c.c[1], 4) AS c_head,
-           round(list_sum(list_transform(c.c, x -> x * x)), 4) AS c_sq
+           round({_sq_norm_duck("c.c")}, 4) AS c_sq
     FROM a{last} a JOIN cent{_KM_ITERS} c ON a.cid = c.cid
-    GROUP BY a.cid, c.c[1], list_sum(list_transform(c.c, x -> x * x))
+    GROUP BY a.cid, c.c[1], {_sq_norm_duck("c.c")}
     """
     )
 
@@ -4393,9 +4392,7 @@ def ml_kmeans_lloyd(spark, sf_dir):
     # cid) compares lexicographically, so array_min is exactly the
     # (dist, cid)-ordered argmin the oracle's row_number states.
     best = F.expr(
-        "array_min(transform(cents, s -> struct("
-        "aggregate(zip_with(v, s.c, (x, y) -> (x - y) * (x - y)), "
-        "cast(0.0 AS double), (acc, z) -> acc + z) AS dist, s.cid AS cid)))"
+        f"array_min(transform(cents, s -> struct({_sq_dist('v', 's.c')} AS dist, s.cid AS cid)))"
     )
     assign = None
     for _ in range(_KM_ITERS):
@@ -4426,10 +4423,7 @@ def ml_kmeans_lloyd(spark, sf_dir):
         "cid",
         "n",
         F.round(F.element_at("c", 1), 4).alias("c_head"),
-        F.round(
-            F.expr("aggregate(transform(c, x -> x * x), cast(0.0 AS double), (a, z) -> a + z)"),
-            4,
-        ).alias("c_sq"),
+        F.round(F.expr(_sq_norm("c")), 4).alias("c_sq"),
     )
 
 
@@ -4533,10 +4527,7 @@ def embed_power_iteration(spark, sf_dir):
             .select(
                 "gm",
                 "w",
-                F.expr(
-                    "sqrt(aggregate(transform(w, x -> x * x), "
-                    "cast(0.0 as double), (a, z) -> a + z))"
-                ).alias("nrm"),
+                F.sqrt(F.expr(_sq_norm("w"))).alias("nrm"),
             )
             .select("gm", F.expr("transform(w, x -> x / nrm)").alias("v"), "nrm")
             .localCheckpoint(eager=False)
@@ -4699,8 +4690,7 @@ def sim_mips(spark, sf_dir):
     ev = t_fanout(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    sqn = "aggregate(transform(v, x -> x * x), cast(0.0 AS double), (a, z) -> a + z)"
-    with_norm = ev.withColumn("sqnorm", F.expr(sqn))
+    with_norm = ev.withColumn("sqnorm", F.expr(_sq_norm("v")))
     mx = with_norm.agg(F.max("sqnorm").alias("m2"))
     aug = with_norm.crossJoin(F.broadcast(mx)).select(
         "vec_id",
@@ -4829,18 +4819,14 @@ def text_kn_smoothing(spark, sf_dir):
 
 
 _KC_K = 6
-_KC_DIST_DUCK = (
-    "list_sum(list_transform(generate_series(1, 64), "
-    "j -> ({a}.v[j] - {b}.v[j]) * ({a}.v[j] - {b}.v[j])))"
-)
 
 
 def _kcenter_oracle() -> str:
-    d = _KC_DIST_DUCK.format
+    d = _sq_dist_duck("e.v", "c.v")
     ctes = [
         _EV_DUCK,
         "c0 AS (SELECT vec_id, v FROM ev WHERE vec_id = 0)",
-        f"m0 AS (SELECT e.vec_id, {d(a='e', b='c')} AS dd"
+        f"m0 AS (SELECT e.vec_id, {d} AS dd"
         " FROM ev e CROSS JOIN c0 c)",
     ]
     for k in range(1, _KC_K):
@@ -4850,7 +4836,7 @@ def _kcenter_oracle() -> str:
         )
         ctes.append(f"c{k} AS (SELECT e.vec_id, e.v FROM ev e JOIN p{k} USING (vec_id))")
         ctes.append(
-            f"m{k} AS (SELECT m.vec_id, least(m.dd, {d(a='e', b='c')}) AS dd"
+            f"m{k} AS (SELECT m.vec_id, least(m.dd, {d}) AS dd"
             f" FROM m{k - 1} m JOIN ev e USING (vec_id) CROSS JOIN c{k} c)"
         )
     sel = " UNION ALL ".join(
@@ -4898,10 +4884,7 @@ def sample_kcenter(spark, sf_dir):
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .persist()
     )
-    dist = (
-        "aggregate(zip_with(v, cv, (x, y) -> (x - y) * (x - y)), "
-        "cast(0.0 AS double), (acc, z) -> acc + z)"
-    )
+    dist = _sq_dist("v", "cv")
     c = ev.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("c_id"), F.col("v").alias("cv")
     )
@@ -6180,12 +6163,12 @@ def dedup_semantic_cluster(spark, sf_dir):
 
 @register(
     "privacy_erasure_cascade",
-    oracle="""
+    oracle=f"""
     WITH keep AS (
       SELECT * FROM events WHERE user_id % 17 <> 3
     )
     SELECT event_type,
-           cast(floor(epoch(ts) / 86400) AS bigint) AS day,
+           {bucket_sql(86400)} AS day,
            cast(count(*) AS bigint) AS n,
            round(sum(value), 2) AS sum_value
     FROM keep
@@ -6211,26 +6194,13 @@ def privacy_erasure_cascade(spark, sf_dir):
     semi-join prunes it), the MV is |groups| rows; history stays
     cold.
     """
-    import os as _os
-
-    from raster2points_spark.queries._util import SCRATCH, unix_secs
-
     ev = t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.floor(unix_secs(F.col("ts")) / 86400).cast("bigint").alias("day"),
-        "value",
+        "user_id", "event_type", bucket(86400).alias("day"), "value"
     )
-
-    def rollup(df):
-        return df.groupBy("event_type", "day").agg(
-            F.count("*").alias("n"), F.sum("value").alias("sv")
-        )
-
-    path = _os.path.join(SCRATCH, "erasure_mv")
-    rollup(ev).write.mode("overwrite").parquet(path)
+    path = os.path.join(SCRATCH, "erasure_mv")
+    daily_rollup(ev).write.mode("overwrite").parquet(path)
     mv = spark.read.parquet(path)  # the standing aggregate (full corpus)
-    deleted = rollup(ev.filter(F.col("user_id") % 17 == 3)).select(
+    deleted = daily_rollup(ev.filter(F.col("user_id") % 17 == 3)).select(
         F.col("event_type").alias("d_type"),
         F.col("day").alias("d_day"),
         F.col("n").alias("dn"),

@@ -13,9 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from raster2points_spark.registry import register
-from raster2points_spark.queries._util import ORACLE_TSEC, t, unix_secs
-
-_TSEC = ORACLE_TSEC.format(c="ts")
+from raster2points_spark.queries._util import TSEC, t, type_buckets, type_buckets_sql, unix_secs
 
 
 @register(
@@ -67,7 +65,7 @@ def win_topk_group(spark, sf_dir):
 @register(
     "win_lag_lead",
     oracle=f"""
-    WITH ev AS (SELECT event_id, user_id, {_TSEC} AS tsec FROM events)
+    WITH ev AS (SELECT event_id, user_id, {TSEC} AS tsec FROM events)
     SELECT event_id, user_id, tsec,
            coalesce(lag(tsec) OVER w, -1) AS prev_tsec,
            coalesce(lead(tsec) OVER w, -1) AS next_tsec,
@@ -118,7 +116,7 @@ def win_running(spark, sf_dir):
 @register(
     "win_moving",
     oracle=f"""
-    WITH ev AS (SELECT event_id, user_id, value, {_TSEC} AS tsec FROM events)
+    WITH ev AS (SELECT event_id, user_id, value, {TSEC} AS tsec FROM events)
     SELECT event_id, user_id, tsec,
            round(avg(value) OVER (
                PARTITION BY user_id ORDER BY tsec
@@ -173,7 +171,7 @@ def win_analytic(spark, sf_dir):
     "scd2_build",
     oracle=f"""
     WITH ev AS (
-        SELECT event_id, user_id, value, {_TSEC} AS tsec FROM events
+        SELECT event_id, user_id, value, {TSEC} AS tsec FROM events
         WHERE event_type = 'purchase'
     ),
     ver AS (
@@ -268,7 +266,7 @@ def win_ntile(spark, sf_dir):
 @register(
     "win_rolling_z",
     oracle=f"""
-    WITH ev AS (SELECT event_id, user_id, value, {_TSEC} AS tsec FROM events)
+    WITH ev AS (SELECT event_id, user_id, value, {TSEC} AS tsec FROM events)
     SELECT event_id, user_id, tsec,
            round((value - avg(value) OVER w) / stddev_samp(value) OVER w, 3) AS z
     FROM ev
@@ -340,7 +338,7 @@ def win_ratio_share(spark, sf_dir):
     "scd2_asof_lookup",
     oracle=f"""
     WITH ev AS (
-      SELECT event_id, user_id, round(value, 2) AS value, {_TSEC} AS tsec
+      SELECT event_id, user_id, round(value, 2) AS value, {TSEC} AS tsec
       FROM events WHERE event_type = 'purchase'
     ), ver AS (
       SELECT user_id, event_id, value,
@@ -402,10 +400,10 @@ def scd2_asof_lookup(spark, sf_dir):
     "win_count_distinct",
     oracle=f"""
     WITH s AS (
-      SELECT user_id, event_id, event_type, {_TSEC} AS tsec,
+      SELECT user_id, event_id, event_type, {TSEC} AS tsec,
              CASE WHEN row_number() OVER (
                     PARTITION BY user_id, event_type
-                    ORDER BY {_TSEC}, event_id) = 1
+                    ORDER BY {TSEC}, event_id) = 1
                   THEN 1 ELSE 0 END AS first_seen
       FROM events
     )
@@ -554,10 +552,10 @@ def win_dist_rank(spark, sf_dir):
 
 @register(
     "win_range_frame",
-    oracle="""
+    oracle=f"""
     WITH ev AS (
       SELECT user_id, event_id,
-             cast(floor(epoch(ts)) AS bigint) AS tsec,
+             {TSEC} AS tsec,
              round(value, 4) AS v
       FROM events
     )
@@ -609,13 +607,9 @@ def win_range_frame(spark, sf_dir):
 
 @register(
     "win_groups_frame",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
-      SELECT event_type,
-             cast(floor(epoch(ts) / 86400) AS bigint) AS day,
-             cast(count(*) AS bigint) AS n,
-             sum(value) AS sv
-      FROM events GROUP BY 1, 2
+      {type_buckets_sql(86400, "day", "cast(count(*) AS bigint) AS n, sum(value) AS sv")}
     ),
     ranked AS (
       SELECT *, dense_rank() OVER (PARTITION BY event_type ORDER BY n) AS dr
@@ -655,15 +649,13 @@ def win_groups_frame(spark, sf_dir):
     relation is the COLLAPSED peer table, not the fact; both
     window and join share the event_type hash partitioning.
     """
-    from raster2points_spark.queries._util import unix_secs
-
-    daily = (
-        t(spark, sf_dir, "events")
-        .groupBy(
-            "event_type",
-            F.floor(unix_secs(F.col("ts")) / 86400).cast("bigint").alias("day"),
-        )
-        .agg(F.count("*").cast("bigint").alias("n"), F.sum("value").alias("sv"))
+    daily = type_buckets(
+        spark,
+        sf_dir,
+        86400,
+        "day",
+        F.count("*").cast("bigint").alias("n"),
+        F.sum("value").alias("sv"),
     )
     ranked = daily.withColumn(
         "dr", F.dense_rank().over(Window.partitionBy("event_type").orderBy("n"))

@@ -230,7 +230,9 @@ def test_srp_banded_recall_contains_single_band(spark):
     must be a superset of band 0 alone (band 0 is the legacy-seeded
     single 8-bit SRP band).  Guards the banding refactor — losing a
     band, or breaking the bucket-id band offset, shrinks recall and
-    fails here."""
+    fails here.  Buckets come from dedup_embed's own sign and
+    dynamic-width fold expressions at nbits = 8, the width every
+    shipped corpus gets (the fixed-width 8-bit partition)."""
     from pyspark.sql import functions as F
 
     from raster2points_spark.queries import llm
@@ -242,10 +244,12 @@ def test_srp_banded_recall_contains_single_band(spark):
         F.expr(
             "transform(embedding, x -> cast(round(cast(x AS double) * 1000) AS bigint))"
         ).alias("ei"),
+    ).select(
+        "vec_id",
+        *[F.expr(s).alias(f"sb{i}") for i, s in enumerate(llm._srp_sign_exprs_spark())],
     )
-    band0 = emb.select(
-        "vec_id", F.expr(llm._srp_band_exprs_spark()[0]).alias("bucket")
-    )
+    buckets = llm._srp_dyn_bucket_exprs_spark("8")
+    band0 = emb.select("vec_id", F.expr(buckets[0]).alias("bucket"))
     a, b = band0.alias("a"), band0.alias("b")
     single = {
         (r.vec_a, r.vec_b)
@@ -264,7 +268,7 @@ def test_srp_banded_recall_contains_single_band(spark):
     # containment is about blocking recall, not the similarity filter
     full_df = registry["dedup_embed"].fn(spark, SF0001)
     # re-derive the unthresholded candidate set the same way the op does
-    bands = "array(" + ", ".join(llm._srp_band_exprs_spark()) + ")"
+    bands = "array(" + ", ".join(buckets) + ")"
     bkt = emb.select("vec_id", F.explode(F.expr(bands)).alias("bucket"))
     a2, b2 = bkt.alias("a"), bkt.alias("b")
     banded = {
@@ -283,6 +287,37 @@ def test_srp_banded_recall_contains_single_band(spark):
     assert len(banded) >= len(single)
     # and the operator itself still runs green on the fixture
     assert full_df.count() >= 0
+
+
+def test_type_buckets_spark_matches_duckdb(spark):
+    """The shared time-bucket builders (``type_buckets`` in Spark,
+    ``type_buckets_sql`` in DuckDB) give the same per-(event_type,
+    bucket) rows at the 5-minute, hourly and daily widths the time
+    keys use — engine drift in the bucket or in the milli-unit sum
+    shows here without the full oracle run."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from raster2points_spark.queries._util import type_buckets, type_buckets_sql
+    from tests.conftest import SF0001
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF0001}/events.parquet')"
+    )
+    vm_sql = "sum(cast(round(value * 1000) AS bigint)) AS vm, count(*) AS n"
+    for n in (300, 3600, 86400):
+        got = type_buckets(
+            spark,
+            SF0001,
+            n,
+            "b",
+            F.sum(F.round(F.col("value") * 1000).cast("bigint")).alias("vm"),
+            F.count("*").alias("n"),
+        ).collect()
+        want = con.execute(type_buckets_sql(n, "b", vm_sql)).fetchall()
+        assert len(want) > 1
+        assert sorted(map(tuple, got)) == sorted(want), n
 
 
 def test_sessionize_conserves_events(spark, registry):

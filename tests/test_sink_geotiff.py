@@ -466,6 +466,24 @@ def test_cli_cogify_rejects_mixed_resolution(spark, capsys):
     assert "mixed pixel scales" in capsys.readouterr().err
 
 
+def test_cli_cogify_rejects_bad_col_names(spark, tmp_path, capsys):
+    """--col-names names each band's output file: a repeated name or a
+    count other than the bands' is a usage error, and nothing is
+    written (a repeated name used to merge both bands into one file)."""
+    from raster2points_spark.cli import main
+
+    ins = ["fixtures/tif/elev.tif", "fixtures/tif/slope.tif"]
+    for names, msg in ((["x", "x"], "col_names repeat ['x']"),
+                       (["x"], "col_names must match bands")):
+        out = tmp_path / "_".join(names)
+        with pytest.raises(SystemExit) as e:
+            main([*ins, str(out), "--format", "geotiff", "--tile-size", "16",
+                  "--col-names", *names])
+        assert e.value.code == 2
+        assert msg in capsys.readouterr().err
+        assert not list(tmp_path.rglob("*.tif"))
+
+
 def test_per_file_dims_from_origins(spark, tmp_path):
     from pyspark.sql import functions as F
 
